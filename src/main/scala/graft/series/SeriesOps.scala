@@ -1,6 +1,6 @@
 package graft.series
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,7 +26,9 @@ import org.apache.spark.sql.functions._
   * map-side partial aggregation (no window/sort shuffle); `applyDeletes` is a
   * broadcast nested-loop anti-join — correct because the delete-marker table
   * is tiny by construction (one row per delete *operation*, not per deleted
-  * record), so it is always broadcastable.
+  * record), so it is always broadcastable. A point lookup whose markers are
+  * already on the driver uses [[dropDeleted]] instead: the same rule
+  * ([[deletedBy]]) as a filter, with no join and no broadcast job.
   */
 object SeriesOps {
 
@@ -125,12 +127,31 @@ object SeriesOps {
     df.join(winners, keyCols :+ txidCol, "left_semi")
   }
 
+  /** One delete marker's fields, as columns: a joined marker row in
+    * [[applyDeletes]], one driver-held marker's literals in
+    * [[dropDeleted]].
+    */
+  final case class Marker(firstKey: Column, lastKey: Column, t0: Column,
+                          t1: Column, wildcard: Column, txid: Column)
+
+  /** THE delete rule, defined once for both marker paths: marker `m`
+    * suppresses a record iff the marker is a *later* transaction and
+    * covers the record's key and instant — `key ∈ [firstKey, lastKey)`
+    * (`lastKey = ""` unbounded), `key LIKE wildcard`, `ts ∈ [t0, t1)`.
+    * The txid condition is what lets a re-insert after a delete survive
+    * (ref `src/database_reader.rs:483-518`).
+    */
+  def deletedBy(key: Column, ts: Column, txid: Column, m: Marker): Column =
+    txid < m.txid &&
+      key >= m.firstKey &&
+      (m.lastKey === "" || key < m.lastKey) &&
+      ts >= m.t0 &&
+      ts < m.t1 &&
+      like(key, m.wildcard)
+
   /** Delete-marker anti-join. `deletes` schema:
     * `(firstKey, lastKey /* "" = unbounded, exclusive */, t0 /* incl */,
-    *   t1 /* excl */, wildcard, txid)`.
-    * A record is suppressed iff some marker with a *later* txid covers it
-    * (ref semantics incl. the txid condition — a re-insert after a delete
-    * survives, `src/database_reader.rs:483-518`).
+    *   t1 /* excl */, wildcard, txid)`; the condition is [[deletedBy]].
     * The marker table is rows-per-operation small → broadcast theta join.
     */
   def applyDeletes(records: DataFrame, deletes: DataFrame,
@@ -138,15 +159,61 @@ object SeriesOps {
                    txidCol: String = "txid"): DataFrame = {
     val r = records.alias("r")
     val d = deletes.alias("d")
-    val cond =
-      col(s"r.$txidCol") < col(s"d.txid") &&
-        col(s"r.$keyCol") >= col("d.firstKey") &&
-        (col("d.lastKey") === "" || col(s"r.$keyCol") < col("d.lastKey")) &&
-        col(s"r.$tsCol") >= col("d.t0") &&
-        col(s"r.$tsCol") < col("d.t1") &&
-        expr(s"r.$keyCol LIKE d.wildcard")
+    val cond = deletedBy(col(s"r.$keyCol"), col(s"r.$tsCol"),
+      col(s"r.$txidCol"), Marker(col("d.firstKey"), col("d.lastKey"),
+        col("d.t0"), col("d.t1"), col("d.wildcard"), col("d.txid")))
     r.join(broadcast(d), cond, "left_anti")
   }
+
+  /** [[applyDeletes]] for ONE key's records against marker rows already
+    * on the driver (same schema, as `Row`s): a plain filter, so the
+    * records keep their partitioning and the plan gets no join and no
+    * broadcast job. Only the markers whose key half of [[deletedBy]]
+    * holds for `key` enter the filter — decided here with Spark's own
+    * string order (`UTF8String` bytes) and LIKE, so the plan grows
+    * with the markers that cover the key, not with every marker. The
+    * filter itself re-applies the whole [[deletedBy]] rule per row, so it
+    * suppresses exactly the rows the anti-join would. A marker whose
+    * wildcard Spark cannot evaluate is kept and fails in the filter, as
+    * it would in the join.
+    */
+  def dropDeleted(records: DataFrame, markers: Seq[Row], key: String,
+                  keyCol: String = "key", tsCol: String = "ts",
+                  txidCol: String = "txid"): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Like, Literal}
+    import org.apache.spark.unsafe.types.UTF8String
+    val k = UTF8String.fromString(key)
+    def s(v: String) = UTF8String.fromString(v)
+    val covering = markers.filter { m =>
+      k.compareTo(s(m.getString(0))) >= 0 &&
+        (m.getString(1).isEmpty || k.compareTo(s(m.getString(1))) < 0) &&
+        (try Like(Literal(k), Literal(s(m.getString(4))), '\\')
+          .eval() == true
+        catch { case scala.util.control.NonFatal(_) => true })
+    }
+    if (covering.isEmpty) records
+    else {
+      // a null (key, ts, txid) never matches the join's condition, so it
+      // must not drop the row here either
+      val hits = covering.map { m =>
+        coalesce(deletedBy(col(keyCol), col(tsCol), col(txidCol),
+          Marker(lit(m.getString(0)), lit(m.getString(1)), lit(m.getLong(2)),
+            lit(m.getLong(3)), lit(m.getString(4)), lit(m.getLong(5)))),
+          lit(false))
+      }
+      records.filter(!balancedOr(hits))
+    }
+  }
+
+  /** OR of many predicates as a balanced tree: a left fold over thousands
+    * of markers would nest as deep as the marker count.
+    */
+  private def balancedOr(cs: Seq[Column]): Column =
+    if (cs.size == 1) cs.head
+    else {
+      val (a, b) = cs.splitAt(cs.size / 2)
+      balancedOr(a) || balancedOr(b)
+    }
 
   /** Global output order (key, ts) — the invariant every reference read
     * upholds. Range-partition sort; cheap when upstream is already

@@ -15,7 +15,8 @@ import graft.text.TextIngest
   *    text-protocol lines (no format column, nanos timestamps; `human`
   *    switches to the human layout) — reference `get()`. Exact patterns
   *    route through the point-lookup path like the reference's
-  *    `is_exact()` special case.
+  *    `is_exact()` special case: [[Db#Snapshot.get]], one single-task
+  *    Spark job over only the files whose key range holds the key.
   *  - `PUT /` with text-protocol lines (`key ts fmt vals…`) → ONE
   *    transaction, committed atomically, `201 ok` — reference `put()`.
   *    The reference external-sorts through a temp file; here the sort is
@@ -163,10 +164,28 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
       } finally ex.close()
     }
   })
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(
+  private val nWorkers =
     if (workers > 0) workers
-    else math.max(4, db.spark.sparkContext.defaultParallelism))
+    else math.max(4, db.spark.sparkContext.defaultParallelism)
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(nWorkers)
   server.setExecutor(pool)
+
+  /** The verbs' concurrent side branches (hybrid's lexical probe, stats'
+    * sketch reads) run here, never on `ExecutionContext.global`: they
+    * block on Spark jobs, and the global pool has one thread per core,
+    * so callers that hold those threads (any busy client in the same
+    * JVM) would starve the server's answers. Each request keeps one
+    * branch on its own worker thread and hands the rest here; a side
+    * branch never waits on another, so a full pool queues branches
+    * (latency) but cannot deadlock.
+    */
+  private val fanout = scala.concurrent.ExecutionContext.fromExecutorService(
+    java.util.concurrent.Executors.newFixedThreadPool(nWorkers,
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-serve-fanout")
+        t.setDaemon(true)
+        t
+      }))
 
   /** Ephemeral-port binding (port = 0) resolves here. */
   def boundPort: Int = server.getAddress.getPort
@@ -176,7 +195,7 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
   /** Stops the listener AND its worker pool — the pool's threads are
     * non-daemon, so leaving them running keeps the JVM alive after stop().
     */
-  def stop(): Unit = { server.stop(0); pool.shutdown() }
+  def stop(): Unit = { server.stop(0); pool.shutdown(); fanout.shutdown() }
 
   /** Version-keyed result cache for the `/_query` verbs: a warehouse's
     * contents are IMMUTABLE per manifest version (commits mint new
@@ -446,6 +465,8 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
       }
     }
     val snap = snapshot()
+    // an exact key is one Spark job with one task (Snapshot.get); a
+    // wildcard is the parallel read pipeline with its (key, ts) sort
     val df = if (w.isExact) snap.get(w.pattern) else snap.read(pattern)
     val lines = TextIngest.print(db.spark, TextIngest.asRecords(df),
       tsMode = if (human) TextIngest.TsHuman else TextIngest.TsNanos)
@@ -640,22 +661,19 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     // relational fusion would spend a whole job on <= 2*fetch rows
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val lexF = Future {
       graft.ops.Retrieval.bm25ProbeLiteral(db, Seq((-1L, terms)), fetch)
         .select(col("query_id"), col("doc_id"), col("rank"))
         .as[(Long, Long, Long)].collect().toSeq
-    }
-    val denseF = Future {
-      graft.ops.Similarity
-        .ivfPqProbePersisted(ann, qv, "vec_id", "embedding", fetch, m = m,
-          dim = dim, nProbe = nProbe)
-        .select(col("query_id"), col("nn_id").as("doc_id"),
-          col("rank").cast("long"))
-        .as[(Long, Long, Long)].collect().toSeq
-    }
+    }(fanout)
+    val dense = graft.ops.Similarity
+      .ivfPqProbePersisted(ann, qv, "vec_id", "embedding", fetch, m = m,
+        dim = dim, nProbe = nProbe)
+      .select(col("query_id"), col("nn_id").as("doc_id"),
+        col("rank").cast("long"))
+      .as[(Long, Long, Long)].collect().toSeq
     val hits = graft.ops.Retrieval.rrfFuseLocal(
-      Await.result(lexF, 600.seconds), Await.result(denseF, 600.seconds), k)
+      Await.result(lexF, 600.seconds), dense, k)
     (200, hits.map { case (_, d, s, r) => s"$d $s $r" }
       .mkString("", "\n", if (hits.isEmpty) "" else "\n"))
   }
@@ -973,7 +991,7 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     val snap = db.snapshot()
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
+    implicit val ec: scala.concurrent.ExecutionContext = fanout
     val distinctF = Future {
       graft.ops.SketchStore.storedKmvEstimateAt(db, snap, tag)
         .select(col("n_sketch"), col("est_distinct"))
@@ -984,14 +1002,11 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
         .select(col("qm"), col("n"), col("lo"), col("hi"))
         .as[(Long, Long, Long, Long)].collect().toSeq
     }
-    val heavyF = Future {
-      graft.ops.SketchStore.storedHeavyHittersAt(db, snap, tag)
-        .limit(heavyK)
-        .as[(String, Long, Long, Long)].collect().toSeq
-    }
+    val heavy = graft.ops.SketchStore.storedHeavyHittersAt(db, snap, tag)
+      .limit(heavyK)
+      .as[(String, Long, Long, Long)].collect().toSeq
     val (nSketch, estDistinct) = Await.result(distinctF, 600.seconds)
     val quants = Await.result(quantF, 600.seconds)
-    val heavy = Await.result(heavyF, 600.seconds)
     // mass rides every heavy row already; only an empty candidate list
     // (heavy=0, or a tie-heavy truncation) needs the dedicated mass
     // read — never report an occupied store as mass 0

@@ -27,6 +27,10 @@ import graft.series.SeriesOps
   * make key-range and wildcard-prefix reads prune to the few row groups that
   * can match — the distributed equivalent of sonnerie's segment binary search
   * (`src/segment_reader.rs:173-234`), with no driver-side index needed.
+  * Exact-key lookups ([[Db.Snapshot.get]]) go one step further: the driver
+  * caches each published transaction's file list and per-file footer key
+  * range ([[Db.txLayout]]), roots the scan at only the files whose range
+  * holds the key, and answers in one single-task Spark job.
   */
 final class Db(val spark: SparkSession, val warehouse: String) {
 
@@ -49,13 +53,20 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * discovery. Falls back to mergeSchema when the manifest predates
       * schema tracking or recorded a type conflict.
       */
-    private def readData(txids: Seq[Long]): DataFrame = {
-      val dirs = txids.map(t => s"$dataDir/txid=$t")
+    private def readData(txids: Seq[Long]): DataFrame =
+      readPaths(txids.map(t => s"$dataDir/txid=$t"))
+
+    /** Parsed once per snapshot, not once per planned read. */
+    private lazy val dataSchema: StructType =
+      StructType.fromDDL(manifest.schemaDdl)
+
+    /** Transaction directories, bucket directories or single data files
+      * under `data/`; partition columns come from the paths either way.
+      */
+    private def readPaths(paths: Seq[String]): DataFrame = {
       val base = spark.read.option("basePath", dataDir)
-      if (manifest.schemaDdl.nonEmpty)
-        base.schema(org.apache.spark.sql.types.StructType
-          .fromDDL(manifest.schemaDdl)).parquet(dirs: _*)
-      else base.option("mergeSchema", "true").parquet(dirs: _*)
+      if (manifest.schemaDdl.nonEmpty) base.schema(dataSchema).parquet(paths: _*)
+      else base.option("mergeSchema", "true").parquet(paths: _*)
     }
 
     def deletes: DataFrame =
@@ -71,27 +82,15 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       */
     def prunedDataTxids(pattern: String, after: Option[Long],
                         before: Option[Long]): Vector[Long] = {
-      import java.nio.charset.StandardCharsets.UTF_8
-      def bytes(s: String) = s.getBytes(UTF_8)
-      def cmp(a: Array[Byte], b: Array[Byte]): Int = {
-        val n = math.min(a.length, b.length)
-        var i = 0
-        while (i < n) {
-          val d = (a(i) & 0xff) - (b(i) & 0xff)
-          if (d != 0) return d
-          i += 1
-        }
-        a.length - b.length
-      }
       val w = graft.series.Wildcard(pattern)
       // key bounds implied by the pattern: [lo, hi) in byte order
       val lo: Option[Array[Byte]] =
-        if (w.prefix.isEmpty) None else Some(bytes(w.prefix))
+        if (w.prefix.isEmpty) None else Some(Db.utf8(w.prefix))
       val hi: Option[Array[Byte]] =
-        if (w.isExact) Some(bytes(w.pattern) :+ 0.toByte) // [k, k+0x00)
+        if (w.isExact) Some(Db.utf8(w.pattern) :+ 0.toByte) // [k, k+0x00)
         else if (w.prefix.isEmpty) None
         else {
-          val b = bytes(w.prefix)
+          val b = Db.utf8(w.prefix)
           var i = b.length - 1
           while (i >= 0 && b(i) == -1) i -= 1
           if (i < 0) None
@@ -101,8 +100,8 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       manifest.dataTxids.filter { t =>
         manifest.txStats.get(t).forall { st =>
           val keyOk =
-            lo.forall(l => cmp(bytes(st.maxKey), l) >= 0) &&
-              hi.forall(h => cmp(bytes(st.minKey), h) < 0)
+            lo.forall(l => Db.compareBytes(Db.utf8(st.maxKey), l) >= 0) &&
+              hi.forall(h => Db.compareBytes(Db.utf8(st.minKey), h) < 0)
           val timeOk =
             after.forall(a => st.maxTs >= a) &&
               before.forall(b => st.minTs < b)
@@ -160,7 +159,7 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * `tbucket IN (…)` predicate is derived alongside AND the scan is
       * rooted at exactly the matching `tbucket=` directories — constructed
       * from the manifest's txids and a cached one-readdir-per-txid bucket
-      * listing ([[Db.txBuckets]]) — so the probe never touches (or even
+      * listing ([[Db.txLayout]]) — so the probe never touches (or even
       * LISTS) a non-matching bucket directory, while the plan stays O(1)
       * in the instant count: probing 64 of 4096 index cells is one scan
       * over 64 directories with a 64-value IN-set, not a 64-way union and
@@ -188,18 +187,12 @@ final class Db(val spark: SparkSession, val warehouse: String) {
         if (w > 0) {
           val dirs = for {
             t <- txids
-            bs = Db.txBuckets(spark, warehouse, dataDir, t,
-              manifest.version)
+            bs = Db.txLayout(spark, warehouse, dataDir, t, manifest.version,
+              manifest.created).buckets
             b <- neededBuckets if bs.contains(b)
           } yield s"$dataDir/txid=$t/tbucket=$b"
           if (dirs.isEmpty) return emptyResult()
-          val rd = spark.read.option("basePath", dataDir)
-          val df =
-            if (manifest.schemaDdl.nonEmpty)
-              rd.schema(StructType.fromDDL(manifest.schemaDdl))
-                .parquet(dirs: _*)
-            else rd.option("mergeSchema", "true").parquet(dirs: _*)
-          SeriesOps.keyFilter(df, pattern)
+          SeriesOps.keyFilter(readPaths(dirs), pattern)
         } else SeriesOps.keyFilter(readData(txids), pattern)
       val bucketed =
         if (w > 0 && base.columns.contains("tbucket"))
@@ -242,39 +235,80 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * `src/database_reader.rs:168-175`). An exact string compare — NOT the
       * wildcard path: sonnerie wildcards have no escape syntax, so a key
       * containing a literal `%` is only reachable this way.
+      *
+      * Row-identical to [[read]] of the same key, planned as ONE Spark job
+      * with ONE task:
+      *  - transactions are pruned by their manifest key/time bounds, then
+      *    the scan is rooted at only the files whose footer key range
+      *    holds the key ([[Db.txLayout]], cached per transaction), so a
+      *    lookup opens about one file per live transaction, not all;
+      *  - the key-filtered scan is coalesced to one partition, so neither
+      *    last-wins nor the (key, ts) order needs an exchange (one key's
+      *    records; the parallel path for wide results stays [[read]]);
+      *  - delete markers come from the driver cache ([[Db.deleteRows]])
+      *    and apply as a filter ([[SeriesOps.dropDeleted]]) instead of a
+      *    broadcast join, whose build side is a job of its own; only a
+      *    marker set the cache refuses still takes the join.
+      *
+      * Measured and rejected, do not retry: answering from the driver
+      * with no Spark job at all (read the few footer-selected files
+      * in-process). On a 4-core box with the serving benchmark's two
+      * closed-loop GET clients, two busy-looping processes beside the
+      * server doubled both GET and PUT p50 (PUT ~980 → ~2080 ms, 3 of 3
+      * pairs): GETs that never wait on the Spark scheduler take about two
+      * cores from the writers.
       */
     def get(key: String, after: Option[Long] = None, before: Option[Long] = None): DataFrame = {
       // exact-match txid pruning by stats bounds (key may contain a
       // literal '%', so no Wildcard parse here — direct range check)
-      import java.nio.charset.StandardCharsets.UTF_8
-      val kb = key.getBytes(UTF_8)
-      def cmp(a: Array[Byte], b: Array[Byte]): Int = {
-        val n = math.min(a.length, b.length)
-        var i = 0
-        while (i < n) {
-          val d = (a(i) & 0xff) - (b(i) & 0xff)
-          if (d != 0) return d
-          i += 1
-        }
-        a.length - b.length
-      }
+      val kb = Db.utf8(key)
       val txids = manifest.dataTxids.filter { t =>
         manifest.txStats.get(t).forall { st =>
-          cmp(st.maxKey.getBytes(UTF_8), kb) >= 0 &&
-            cmp(st.minKey.getBytes(UTF_8), kb) <= 0 &&
+          Db.compareBytes(Db.utf8(st.maxKey), kb) >= 0 &&
+            Db.compareBytes(Db.utf8(st.minKey), kb) <= 0 &&
             after.forall(a => st.maxTs >= a) &&
             before.forall(b => st.minTs < b)
         }
       }
-      if (txids.isEmpty) emptyResult()
-      else pipeline(readData(txids).filter(col("key") === key), after, before,
-        // ONE key's records: a global range sort would pay a sampling
-        // job + shuffle as pure fixed cost per lookup — a coalesced
-        // single-partition sort yields the identical order without
-        // either (spill-safe for outsized series; the parallel path for
-        // wide results remains read(pattern))
-        pointLookup = true)
+      if (txids.isEmpty) return emptyResult()
+      val scan =
+        // a manifest without a schema reads through mergeSchema, whose
+        // columns depend on which footers it sees: keep whole directories
+        if (manifest.schemaDdl.isEmpty) readData(txids)
+        else {
+          val w = manifest.timeBucket
+          val files = for {
+            t <- txids
+            layout = Db.txLayout(spark, warehouse, dataDir, t,
+              manifest.version, manifest.created)
+            (f, keys) <- layout.files.zip(layout.fileKeys)
+            if keys.mayHold(kb) && f.bucket.forall(b => bucketMayHold(b, w, after, before))
+          } yield f.path
+          if (files.isEmpty) return emptyResult()
+          readPaths(files)
+        }
+      val one = SeriesOps.timeRange(scan.filter(col("key") === key),
+        after, before).coalesce(1)
+      val merged = SeriesOps.lastWins(one, Seq("key", "ts"), "txid")
+      val visible = Db.deleteRows(spark, warehouse, deleteDir,
+          manifest.created, manifest.deleteTxids) match {
+        case Some(markers) => SeriesOps.dropDeleted(merged, markers, key)
+        case None          => SeriesOps.applyDeletes(merged, deletes)
+      }
+      visible.drop("txid", "tbucket")
+        .sortWithinPartitions(col("key"), col("ts"))
     }
+
+    /** Whether bucket `b` (width `w`, `b = ts - ts % w` with the remainder
+      * taking the dividend's sign) can hold an instant in
+      * `[after, before)`. Bucket `b > 0` holds `[b, b + w)`, bucket 0
+      * holds `(-w, w)`, a negative bucket `(b - w, b]`; negative buckets
+      * are never pruned.
+      */
+    private def bucketMayHold(b: Long, w: Long, after: Option[Long],
+                              before: Option[Long]): Boolean =
+      b < 0 || (after.forall(a => a <= b || a - b < w) &&
+        before.forall(t => b == 0 || b < t))
 
     /** One committed transaction's records, (key, ts) ordered — the
       * single-tx dump surface (reference `examples/get.rs:5-46`).
@@ -322,7 +356,6 @@ final class Db(val spark: SparkSession, val warehouse: String) {
 
     private def pipeline(filtered0: DataFrame, after: Option[Long],
                          before: Option[Long],
-                         pointLookup: Boolean = false,
                          ordered: Boolean = true): DataFrame = {
       // time-bucketed warehouse: derive the partition-column predicate so
       // time ranges prune whole tbucket= directories before any IO
@@ -338,9 +371,7 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       val merged = SeriesOps.lastWins(filtered, Seq("key", "ts"), "txid")
       val visible = SeriesOps.applyDeletes(merged, deletes)
         .drop("txid").drop("tbucket")
-      if (pointLookup)
-        visible.coalesce(1).sortWithinPartitions(col("key"), col("ts"))
-      else if (ordered) SeriesOps.ordered(visible)
+      if (ordered) SeriesOps.ordered(visible)
       else visible
     }
   }
@@ -369,23 +400,112 @@ final class Db(val spark: SparkSession, val warehouse: String) {
 object Db {
   def apply(spark: SparkSession, warehouse: String): Db = new Db(spark, warehouse)
 
-  /** Per-transaction `tbucket=` directory sets, ONE readdir each, cached
-    * for the driver's life: a published transaction directory is
-    * immutable (writes claim fresh txids; compaction publishes new txids
-    * and only [[Compactor.vacuum]] removes dead dirs, which no live
-    * manifest references), so within one warehouse lifetime the listing
-    * cannot go stale. The one way it CAN: the warehouse is deleted and
-    * recreated at the same path — detected by the manifest-version
-    * watermark below (versions restart on recreation), which purges the
-    * warehouse's entries. This is what makes
-    * [[Db.Snapshot.readInstants]] O(probed cells) instead of
-    * O(all cells): the per-cell directory layout is discovered once per
-    * (warehouse, txid), not re-walked on every probe. Bounded: entries
-    * are one Long set per txid; cleared wholesale past a generous cap
-    * (re-listing is one readdir).
+  private[store] def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Unsigned lexicographic byte order — Spark's string order over UTF-8. */
+  private[store] def compareBytes(a: Array[Byte], b: Array[Byte]): Int =
+    java.util.Arrays.compareUnsigned(a, b)
+
+  /** One data file of a transaction; `bucket` is its `tbucket=` value on a
+    * time-bucketed warehouse.
     */
-  private val bucketCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), java.util.Set[java.lang.Long]]()
+  private[store] final case class TxFile(path: String, bucket: Option[Long])
+
+  /** The `key` range a data file's Parquet footer records, inclusive, in
+    * UTF-8 bytes. `lo == null` means some row group carries no usable
+    * statistics, so the file may hold any key.
+    */
+  private[store] final case class FileKeys(rows: Long, lo: Array[Byte],
+                                           hi: Array[Byte]) {
+    def mayHold(key: Array[Byte]): Boolean =
+      rows > 0 && (lo == null ||
+        (compareBytes(lo, key) <= 0 && compareBytes(key, hi) <= 0))
+  }
+
+  /** One published data transaction's physical layout, read from storage
+    * once per driver and then shared by every reader:
+    *  - `buckets`: its `tbucket=` directory names, from ONE readdir (what
+    *    [[Db.Snapshot.readInstants]] roots bucket probes at);
+    *  - `files` and `fileKeys`: every data file and its footer key range
+    *    (what [[Db.Snapshot.get]] roots point lookups at). Listed on first
+    *    use, so bucket probes over thousands of cells never list or open
+    *    the files, and footers are read once per file, not per lookup.
+    */
+  private[store] final class TxLayout(val created: String, dir: String,
+                                      fs: org.apache.hadoop.fs.FileSystem) {
+    private val path = new org.apache.hadoop.fs.Path(dir)
+    // Spark's own rule for which names under a table directory are data
+    private def isData(name: String) =
+      !name.startsWith("_") && !name.startsWith(".")
+    private val top = fs.listStatus(path)
+
+    val buckets: java.util.Set[java.lang.Long] = {
+      val out = new java.util.HashSet[java.lang.Long]()
+      top.foreach { st =>
+        val n = st.getPath.getName
+        if (st.isDirectory && n.startsWith("tbucket="))
+          out.add(java.lang.Long.valueOf(n.stripPrefix("tbucket=").toLong))
+      }
+      out
+    }
+
+    lazy val files: Vector[TxFile] = top.toVector.flatMap { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory && n.startsWith("tbucket=")) {
+        val b = Some(n.stripPrefix("tbucket=").toLong)
+        fs.listStatus(st.getPath).toVector
+          .filter(f => f.isFile && isData(f.getPath.getName))
+          .map(f => TxFile(f.getPath.toString, b))
+      } else if (st.isFile && isData(n)) Vector(TxFile(st.getPath.toString, None))
+      else Vector.empty
+    }
+
+    lazy val fileKeys: Vector[FileKeys] = files.map(f => footerKeys(f.path))
+
+    private def footerKeys(file: String): FileKeys = {
+      import scala.jdk.CollectionConverters._
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file), fs.getConf))
+      try {
+        var rows = 0L
+        var lo: Array[Byte] = null
+        var hi: Array[Byte] = null
+        var known = true
+        reader.getFooter.getBlocks.asScala.foreach { rg =>
+          rows += rg.getRowCount
+          val st = rg.getColumns.asScala
+            .find(_.getPath.toDotString == "key").map(_.getStatistics)
+            .orNull
+          if (st == null || !st.hasNonNullValue) known = known && rg.getRowCount == 0
+          else {
+            val (a, b) = (st.getMinBytes, st.getMaxBytes)
+            if (lo == null || compareBytes(a, lo) < 0) lo = a
+            if (hi == null || compareBytes(b, hi) > 0) hi = b
+          }
+        }
+        if (known) FileKeys(rows, lo, hi) else FileKeys(rows, null, null)
+      } finally reader.close()
+    }
+  }
+
+  /** Per-(warehouse, txid) [[TxLayout]]s, cached for the driver's life: a
+    * published transaction directory is immutable (writes claim fresh
+    * txids; compaction publishes new txids and only [[Compactor.vacuum]]
+    * removes dead dirs, which no live manifest references), so within one
+    * warehouse lifetime a layout cannot go stale. The one way it CAN: the
+    * warehouse is deleted and recreated at the same path. Two guards:
+    * each layout carries the manifest-minted identity it was listed
+    * under, and a caller whose manifest carries another identity relists;
+    * for callers without the identity, the manifest-version watermark
+    * below detects recreation (versions restart) and purges the
+    * warehouse's entries — blind only to a recreation that fast-forwards
+    * past the old version before any such read. Bounded: cleared
+    * wholesale past a generous cap (relisting is one readdir).
+    */
+  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long), TxLayout]()
 
   /** Highest manifest version observed per warehouse. A version BELOW
     * the watermark is only a trigger to look closer: it is either a
@@ -399,9 +519,7 @@ object Db {
     * snapshots no longer thrash the cache for every concurrent reader,
     * and the recreation purge stays correct. The id check costs one
     * readdir + stat and runs ONLY on regression (steady-state probes
-    * never pay it). Residual blind spot unchanged from the watermark
-    * design: a recreation that fast-forwards past the old version
-    * before any read is only caught once a regression exposes it.
+    * never pay it).
     */
   private val versionWatermark =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -412,21 +530,18 @@ object Db {
   private val creationIds =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private[store] def txBuckets(spark: SparkSession, warehouse: String,
-                               dataDir: String, txid: Long,
-                               manifestVersion: Long)
-      : java.util.Set[java.lang.Long] = {
-    if (bucketCache.size > 16384) { bucketCache.clear(); creationIds.clear() }
-    // tx dirs are immutable once published, so (warehouse, txid) is a
-    // valid key for the driver's life — EXCEPT when a warehouse is
-    // deleted and recreated at the same path; see versionWatermark
+  private[store] def txLayout(spark: SparkSession, warehouse: String,
+                              dataDir: String, txid: Long,
+                              manifestVersion: Long,
+                              created: String = ""): TxLayout = {
+    if (layoutCache.size > 16384) { layoutCache.clear(); creationIds.clear() }
     val seen = versionWatermark.get(warehouse)
     if (seen != null && manifestVersion < seen) {
       val cur = Manifest.identity(warehouse)
       val known = creationIds.get(warehouse)
       if (known == null || known.isEmpty || cur.isEmpty || cur != known) {
         // recreated (or identity unknowable): purge and rebase
-        bucketCache.keySet.removeIf(_._1 == warehouse)
+        layoutCache.keySet.removeIf(_._1 == warehouse)
         creationIds.put(warehouse, cur)
         versionWatermark.put(warehouse, manifestVersion)
       }
@@ -435,18 +550,23 @@ object Db {
     versionWatermark.merge(warehouse, manifestVersion,
       (a, b) => if (a >= b) a else b)
     creationIds.computeIfAbsent(warehouse, Manifest.identity)
-    bucketCache.computeIfAbsent((warehouse, txid), _ => {
-      val path = new org.apache.hadoop.fs.Path(s"$dataDir/txid=$txid")
-      val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = new java.util.HashSet[java.lang.Long]()
-      fs.listStatus(path).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("tbucket="))
-          out.add(java.lang.Long.valueOf(n.stripPrefix("tbucket=").toLong))
-      }
-      out
-    })
+    // the FileSystem instance is Hadoop's shared cached one, so a layout
+    // holds no configuration of its own
+    def list() = new TxLayout(created, s"$dataDir/txid=$txid",
+      new org.apache.hadoop.fs.Path(dataDir)
+        .getFileSystem(spark.sessionState.newHadoopConf()))
+    val hit = layoutCache.computeIfAbsent((warehouse, txid), _ => list())
+    if (created.isEmpty || hit.created.isEmpty || hit.created == created) hit
+    else layoutCache.compute((warehouse, txid), (_, old) =>
+      if (old != null && old.created == created) old else list())
   }
+
+  /** A transaction's `tbucket=` values ([[TxLayout.buckets]]). */
+  private[store] def txBuckets(spark: SparkSession, warehouse: String,
+                               dataDir: String, txid: Long,
+                               manifestVersion: Long)
+      : java.util.Set[java.lang.Long] =
+    txLayout(spark, warehouse, dataDir, txid, manifestVersion).buckets
 
   val deleteSchema: StructType = StructType(Seq(
     StructField("firstKey", StringType, nullable = false),
@@ -459,33 +579,35 @@ object Db {
   private val deleteSchemaWithTxid: StructType =
     deleteSchema.add(StructField("txid", LongType, nullable = false))
 
-  /** Delete markers as a driver-LOCAL relation, collected once per
-    * (warehouse identity, txid set) and cached. Rationale (guide §2.4,
-    * §5): the read pipeline BROADCASTS the marker table into every scan
-    * ([[graft.series.SeriesOps.applyDeletes]]) — with a parquet child
-    * that broadcast build is one extra Spark job (scan + collect) on
-    * EVERY execution of every read of a store that has ever folded or
-    * deleted, for a table that is one row per delete *operation* and
-    * already ends up on the driver per execution. A LocalRelation child
-    * makes the broadcast build job-free and reads the marker files once
-    * per txid set instead of once per executed plan. Sound for the same
-    * reason [[txBuckets]] is: published delete directories are
-    * immutable, and the key carries the manifest-minted warehouse
-    * identity so a deleted-and-recreated warehouse cannot alias a stale
-    * entry (identity-less legacy manifests skip the cache). Bounded: a
-    * txid-set key holds one Row per marker; oversized marker sets (ops
-    * count, not data) fall back to the parquet scan and are never
-    * cached.
+  /** Delete-marker rows on the driver, collected once per (warehouse
+    * identity, txid set) and cached. Sound for the same reason
+    * [[txLayout]] is: published delete directories are immutable, and
+    * the key carries the manifest-minted warehouse identity so a
+    * deleted-and-recreated warehouse cannot alias a stale entry
+    * (identity-less legacy manifests skip the cache). Bounded: a txid-set
+    * key holds one Row per marker; a set above [[DeletesCacheMaxRows]]
+    * (ops count, not data) is remembered as uncacheable (`None`) and
+    * stays on the parquet path.
+    *
+    * What the cache saves: reading the marker files (a parquet scan job)
+    * once per executed plan, and — for point lookups, which apply the
+    * rows as a filter ([[SeriesOps.dropDeleted]]) — the broadcast too.
+    * What it does NOT save: [[deletesFrame]] hands the rows to the
+    * broadcast anti-join of [[Db.Snapshot.read]]/`readMany` as a
+    * `LocalRelation`, and on Spark 4.1 broadcasting that still runs a
+    * job: `BroadcastExchangeExec` collects its child through
+    * `SparkPlan.executeCollectIterator`, which `LocalTableScanExec` does
+    * not override, so the build is a job with one task per marker row.
     */
   private val deletesCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Seq[Long]), Array[org.apache.spark.sql.Row]]()
+    (String, String, Seq[Long]), Option[Array[org.apache.spark.sql.Row]]]()
 
-  /** Marker sets handed out once already — the second request of the
-    * same set is the collect-and-cache trigger, so a set read exactly
-    * once (the common one-shot query) never pays a collect job it will
-    * not amortize: first use is lazy (one broadcast-build job at
-    * execution, exactly the pre-cache cost), the second use's collect
-    * REPLACES that set's broadcast job, and every later use is job-free.
+  /** Marker sets handed to [[deletesFrame]] once already — the second
+    * request of the same set is the collect-and-cache trigger, so a set
+    * read exactly once (the common one-shot query) never pays a collect
+    * job it will not amortize: first use is lazy (the marker scan runs
+    * inside the query, exactly the pre-cache cost), the second use's
+    * collect replaces that scan, and every later use reads no files.
     */
   private val deletesSeen =
     java.util.concurrent.ConcurrentHashMap.newKeySet[
@@ -497,40 +619,60 @@ object Db {
     */
   private val DeletesCacheMaxRows = 65536
 
-  private[store] def deletesFrame(spark: SparkSession, warehouse: String,
-                                  deleteDir: String, created: String,
-                                  txids: Seq[Long]): DataFrame = {
-    if (txids.isEmpty) return emptyDeletes(spark)
-    // explicit schema: markers have ONE fixed shape (writeDeleteMarker),
-    // so the reader must not pay a footer schema-inference job per
-    // constructed plan
-    def parquetFrame: DataFrame =
-      spark.read.schema(deleteSchema).option("basePath", deleteDir)
-        .parquet(txids.map(t => s"$deleteDir/txid=$t"): _*)
-        // partition-column discovery may type txid as INT; the local
-        // path pins LongType, so both paths expose one schema
-        .select(deleteSchemaWithTxid.fieldNames.map(f =>
-          col(f).cast(deleteSchemaWithTxid(f).dataType)): _*)
-    if (created.isEmpty) return parquetFrame // identity-less: no caching
+  /** Explicit schema: markers have ONE fixed shape (writeDeleteMarker), so
+    * the reader must not pay a footer schema-inference job per plan.
+    */
+  private def markerFiles(spark: SparkSession, deleteDir: String,
+                          txids: Seq[Long]): DataFrame =
+    spark.read.schema(deleteSchema).option("basePath", deleteDir)
+      .parquet(txids.map(t => s"$deleteDir/txid=$t"): _*)
+      // partition-column discovery may type txid as INT; the cached
+      // rows pin LongType, so both paths expose one schema
+      .select(deleteSchemaWithTxid.fieldNames.map(f =>
+        col(f).cast(deleteSchemaWithTxid(f).dataType)): _*)
+
+  /** The marker rows of `txids` (schema `deleteSchema` + `txid`) from the
+    * driver cache, collected now on a miss — or, with `eager = false`,
+    * only on the set's second request. `None` when the rows are not held:
+    * an identity-less warehouse, an oversized set, or a lazy first use.
+    */
+  private[store] def deleteRows(spark: SparkSession, warehouse: String,
+                                deleteDir: String, created: String,
+                                txids: Seq[Long], eager: Boolean = true)
+      : Option[Array[org.apache.spark.sql.Row]] = {
+    if (txids.isEmpty) return Some(Array.empty[org.apache.spark.sql.Row])
+    if (created.isEmpty) return None
     if (deletesCache.size > 16384) { deletesCache.clear(); deletesSeen.clear() }
     val key = (warehouse, created, txids)
     val hit = deletesCache.get(key)
-    val rows =
-      if (hit != null) hit
-      else if (deletesSeen.add(key)) null // first use: stay lazy
-      else {
-        val collected = parquetFrame.collect()
-        if (collected.length > DeletesCacheMaxRows) null
-        else { deletesCache.put(key, collected); collected }
-      }
-    if (rows == null) parquetFrame
-    else spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), deleteSchemaWithTxid)
+    if (hit != null) hit
+    else if (!eager && deletesSeen.add(key)) None
+    else {
+      val collected = markerFiles(spark, deleteDir, txids).collect()
+      val rows =
+        if (collected.length > DeletesCacheMaxRows) None else Some(collected)
+      deletesCache.put(key, rows)
+      rows
+    }
   }
+
+  /** Delete markers as a DataFrame for the broadcast anti-join: the cached
+    * rows as a local relation ([[deleteRows]], lazy on first use), else
+    * the marker files.
+    */
+  private[store] def deletesFrame(spark: SparkSession, warehouse: String,
+                                  deleteDir: String, created: String,
+                                  txids: Seq[Long]): DataFrame =
+    if (txids.isEmpty) emptyDeletes(spark)
+    else deleteRows(spark, warehouse, deleteDir, created, txids,
+        eager = false) match {
+      case Some(rows) => spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), deleteSchemaWithTxid)
+      case None => markerFiles(spark, deleteDir, txids)
+    }
 
   def emptyDeletes(spark: SparkSession): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      deleteSchema.add(StructField("txid", LongType, nullable = false))
-    )
+      deleteSchemaWithTxid)
 }

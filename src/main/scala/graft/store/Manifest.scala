@@ -81,7 +81,7 @@ final case class ManifestState(
       * forward by every later version (case-class copy), so it survives
       * history pruning and needs no filesystem introspection. Deleting
       * and recreating a warehouse at the same path mints a DIFFERENT id,
-      * which is how [[Db.txBuckets]] tells recreation (purge caches) from
+      * which is how [[Db.txLayout]] tells recreation (purge caches) from
       * time travel (keep them). "" on warehouses written before the field
       * existed — readers fall back to [[Manifest.creationId]]'s
       * file-identity heuristic via [[Manifest.identity]].
@@ -290,7 +290,7 @@ object Manifest {
     * warehouse at the same path replaces every manifest file, so the id
     * changes; committing, time-travel reads, and history pruning of
     * NEWER versions never touch the oldest file, so the id is stable for
-    * the warehouse's life. Used by [[Db.txBuckets]] to tell "this is an
+    * the warehouse's life. Used by [[Db.txLayout]] to tell "this is an
     * older snapshot of the same warehouse" (keep caches) from "the path
     * was recreated" (purge). "" when no manifest exists or the
     * filesystem exposes no file key.

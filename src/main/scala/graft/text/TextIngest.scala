@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 
 /** Distributed text-protocol ingest and output (reference S8/S9/S10).
   *
@@ -15,21 +15,25 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object TextIngest {
 
+  /** Derived once: `spark.implicits` builds a product encoder by
+    * reflection on every call (~7 ms each, paid by every served GET and
+    * PUT). Encoders are immutable, so one instance serves every call.
+    */
+  private val recordEncoder: Encoder[SeriesRecord] = Encoders.product[SeriesRecord]
+
   /** Parse lines with one fixed format string (`sonnerie add --format`). */
   def parse(spark: SparkSession, lines: Dataset[String], fmt: String,
             tsPattern: Option[String] = None): Dataset[SeriesRecord] = {
-    import spark.implicits._
     RowCodec.validate(fmt)
     lines.filter((l: String) => l.nonEmpty)
-      .map((l: String) => RowCodec.parseLine(l, fmt, tsPattern))
+      .map((l: String) => RowCodec.parseLine(l, fmt, tsPattern))(recordEncoder)
   }
 
   /** Parse lines with an embedded per-line format (`compact --gegnum` IO). */
   def parseWithFmt(spark: SparkSession, lines: Dataset[String],
                    tsPattern: Option[String] = None): Dataset[SeriesRecord] = {
-    import spark.implicits._
     lines.filter((l: String) => l.nonEmpty)
-      .map((l: String) => RowCodec.parseLineWithFmt(l, tsPattern))
+      .map((l: String) => RowCodec.parseLineWithFmt(l, tsPattern))(recordEncoder)
   }
 
   def toDF(records: Dataset[SeriesRecord]): DataFrame = records.toDF()
@@ -43,10 +47,9 @@ object TextIngest {
       columns: Option[Seq[Int]] = None,
       tsMode: TsMode = null
   ): Dataset[String] = {
-    import spark.implicits._
     val mode = Option(tsMode).getOrElse(if (tsAsNanos) TsNanos else TsHuman)
     records.map((r: SeriesRecord) =>
-      RowCodec.printRecordMode(r, mode, showFmt, columns))
+      RowCodec.printRecordMode(r, mode, showFmt, columns))(Encoders.STRING)
   }
 
   /** Timestamp output modes (reference `PrintTimestamp`,
@@ -62,8 +65,6 @@ object TextIngest {
   /** Read a canonical-schema DataFrame (e.g. a Db snapshot of union-struct
     * data) as typed records.
     */
-  def asRecords(df: DataFrame): Dataset[SeriesRecord] = {
-    import df.sparkSession.implicits._
-    df.select("key", "ts", "fmt", "vals").as[SeriesRecord]
-  }
+  def asRecords(df: DataFrame): Dataset[SeriesRecord] =
+    df.select("key", "ts", "fmt", "vals").as(recordEncoder)
 }

@@ -72,26 +72,57 @@ class PlanHygieneSpec extends SparkSpec {
   }
 
   test("point lookup plans no range-sort exchange: one key pays no sampling job") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val db = graft.store.Db(spark,
       java.nio.file.Files.createTempDirectory("graft-planpt").toString)
     graft.store.TxWriter.write(db,
       (1 to 500).map(i => (f"k$i%04d", i.toLong, i.toLong))
         .toDF("key", "ts", "v"))
+    graft.store.TxWriter.write(db,
+      Seq(("k0042", 42L, 420L), ("k0042", 43L, 430L)).toDF("key", "ts", "v"))
     graft.store.TxWriter.delete(db, wildcard = "nomatch%")
+    graft.store.TxWriter.delete(db, firstKey = "k0042", lastKey = "k0043",
+      t0 = 43L, t1 = 44L)
+    // the first lookup puts the marker rows in the driver cache
+    assert(db.snapshot().get("k0042").select("v").as[Long].collect().toSeq ==
+      Seq(420L))
     val df = db.snapshot().get("k0042")
-    assert(df.select("v").as[Long].collect().toSeq == Seq(42L))
+    // count the jobs of exactly this collect: its own job group, and a
+    // marker job in another group after it — the listener bus is FIFO,
+    // so once the marker's start arrives every earlier event has too
+    val group = s"planpt-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)         => jobs.incrementAndGet()
+          case Some("planpt-marker") => drained.countDown()
+          case _                     =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rows = try {
+      spark.sparkContext.setJobGroup(group, "point lookup")
+      val out = df.select("v").as[Long].collect().toSeq
+      spark.sparkContext.setJobGroup("planpt-marker", "drain")
+      spark.range(1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      out
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(rows == Seq(420L))
+    assert(jobs.get() == 1, s"point lookup ran ${jobs.get()} jobs")
     val plan = df.queryExecution.executedPlan.toString
-    // the r10 optimization under guard: a global orderBy here would
-    // re-introduce a range-sampling job + shuffle as pure per-lookup
-    // fixed cost (serial GET p50 regressed ~20% with it)
-    assert(!plan.contains("rangepartitioning"),
-      s"point lookup re-grew a range sort:\n${plan.take(2000)}")
-    // the one remaining wide op is the last-wins aggregate
-    val exchanges = "Exchange hashpartitioning".r
-      .findAllMatchIn(plan).length
-    assert(exchanges <= 1, s"unexpected exchanges ($exchanges):\n${plan.take(2000)}")
+    // one key's records need no exchange: the single-partition scan feeds
+    // last-wins and the (key, ts) order directly, and cached markers are
+    // a filter, not a broadcast join (whose build is a job of its own)
+    assert(!plan.contains("Exchange"), s"point lookup plans an exchange:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin"),
+      s"point lookup joins the markers:\n$plan")
   }
 
   test("tp_dup_spans reuses the window-hash exchange in the no-broadcast regime") {

@@ -1031,49 +1031,102 @@ class ServeSpec extends SparkSpec {
       val qs = qv.mkString(",")
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val bodies = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      val readers = (1 to 4).map { r =>
-        Future {
-          var i = 0
-          while (!done.get()) {
-            // nonce busts the version-keyed result cache so each probe
-            // really races the writer
-            val (c, b) = http("GET",
-              s"$base/_query/hybrid?q=alpha&vec=$qs&k=3&fetch=5&nonce=$r-$i")
-            assert(c == 200, s"$c $b")
-            bodies.add(b)
-            i += 1
+      // the clients' own pool: 4 busy readers + the writer would hold
+      // every thread of the one-per-core global pool on a 4-core machine
+      val clients = java.util.concurrent.Executors.newFixedThreadPool(5)
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(clients)
+      try {
+        val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+        val bodies = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+        val readers = (1 to 4).map { r =>
+          Future {
+            var i = 0
+            while (!done.get()) {
+              // nonce busts the version-keyed result cache so each probe
+              // really races the writer
+              val (c, b) = http("GET",
+                s"$base/_query/hybrid?q=alpha&vec=$qs&k=3&fetch=5&nonce=$r-$i")
+              assert(c == 200, s"$c $b")
+              bodies.add(b)
+              i += 1
+            }
           }
         }
-      }
-      val writer = Future {
-        docAppends.foreach { batch =>
+        val writer = Future {
+          docAppends.foreach { batch =>
+            Thread.sleep(150)
+            graft.ops.Retrieval.appendBm25Batch(db,
+              batch.toDF("doc_id", "text"), "doc_id", "text")
+          }
           Thread.sleep(150)
-          graft.ops.Retrieval.appendBm25Batch(db,
-            batch.toDF("doc_id", "text"), "doc_id", "text")
+          graft.ops.Similarity.appendToIndex(annDb,
+            annAppend.toDF("vec_id", "embedding"), "vec_id", "embedding",
+            m = 2, dim = 8)
+          Thread.sleep(150)
+          done.set(true)
         }
-        Thread.sleep(150)
-        graft.ops.Similarity.appendToIndex(annDb,
-          annAppend.toDF("vec_id", "embedding"), "vec_id", "embedding",
-          m = 2, dim = 8)
-        Thread.sleep(150)
-        done.set(true)
-      }
-      Await.result(Future.sequence(readers :+ writer), 300.seconds)
-      import scala.jdk.CollectionConverters._
-      val observed = bodies.asScala.toSet
-      assert(observed.nonEmpty)
-      val rogue = observed -- valid
-      assert(rogue.isEmpty,
-        s"responses mixing index generations observed:\n${rogue.mkString("---\n")}")
-      // after the writer settles, the served answer is the FINAL generation
-      val (_, settled) = http("GET",
-        s"$base/_query/hybrid?q=alpha&vec=$qs&k=3&fetch=5&nonce=final")
-      assert(settled == fuse(lexGens.last, denseGens.last),
-        s"settled answer must be the last generation:\n$settled")
+        Await.result(Future.sequence(readers :+ writer), 300.seconds)
+        import scala.jdk.CollectionConverters._
+        val observed = bodies.asScala.toSet
+        assert(observed.nonEmpty)
+        val rogue = observed -- valid
+        assert(rogue.isEmpty,
+          s"responses mixing index generations observed:\n${rogue.mkString("---\n")}")
+        // after the writer settles, the served answer is the FINAL generation
+        val (_, settled) = http("GET",
+          s"$base/_query/hybrid?q=alpha&vec=$qs&k=3&fetch=5&nonce=final")
+        assert(settled == fuse(lexGens.last, denseGens.last),
+          s"settled answer must be the last generation:\n$settled")
+      } finally clients.shutdownNow()
     } finally srv.stop()
+  }
+
+  test("hybrid verb answers while every global-pool thread is held") {
+    import spark.implicits._
+    def vec(xs: Double*): Seq[Float] = xs.map(_.toFloat)
+    val db = Db(spark, tmpDir("graft-serve-starve"))
+    val annDb = Db(spark, tmpDir("graft-serve-starve-ann"))
+    graft.ops.Retrieval.buildBm25Index(db,
+      Seq(0L -> "alpha beta", 1L -> "beta gamma").toDF("doc_id", "text"),
+      "doc_id", "text")
+    graft.ops.Similarity.buildIndex(annDb, Seq(
+        (0L, vec(1, 0, 0, 0, 0, 0, 0, 1)),
+        (1L, vec(0, 1, 0, 0, 0, 0, 1, 0))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", nCells = 2, m = 2, k = 2, dim = 8)
+    val srv = new Serve(db, annDb = Some(annDb)).start()
+    // occupy every thread of ExecutionContext.global with tasks that
+    // block outside `blocking {}` (so the pool adds no spare threads),
+    // the way busy client Futures in the same JVM would
+    val global = scala.concurrent.ExecutionContext.global
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holders = Runtime.getRuntime.availableProcessors
+    val held = new java.util.concurrent.CountDownLatch(holders)
+    val probeRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+    try {
+      (1 to holders).foreach(_ => global.execute { () =>
+        held.countDown(); release.await() })
+      assert(held.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "could not occupy the global pool")
+      global.execute(() => probeRan.set(true))
+      val q = vec(1, 0, 0, 0, 0, 0, 0, 1).mkString(",")
+      // bounded: a starved server must fail this test, not hang the suite
+      val c = new java.net.URL(s"http://localhost:${srv.boundPort}" +
+        s"/_query/hybrid?q=alpha&vec=$q&k=2&fetch=2").openConnection()
+        .asInstanceOf[java.net.HttpURLConnection]
+      c.setReadTimeout(120000)
+      val code = c.getResponseCode
+      val body = scala.io.Source.fromInputStream(c.getInputStream, "UTF-8")
+        .mkString
+      c.disconnect()
+      // doc 0 holds "alpha" and is the query vector itself: first in
+      // both rank lists, so first in the fused answer
+      assert(code == 200 && body.startsWith("0 "), s"$code $body")
+      assert(!probeRan.get(), "the global pool was not fully held")
+    } finally {
+      release.countDown()
+      srv.stop()
+    }
   }
 
   test("concurrent PUTs each commit atomically (manifest CAS under load)") {

@@ -1,0 +1,164 @@
+package graft.store
+
+import graft.SparkSpec
+import graft.series.SeriesOps
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+/** [[Db.Snapshot.get]] — the single-task point lookup over footer-selected
+  * files with driver-held delete markers — returns exactly what the general
+  * read pipeline returns for the key: `records` → key filter → time filter
+  * → `lastWins` → `applyDeletes` → (key, ts) order, row for row and in
+  * order, over generated warehouses.
+  */
+class PointLookupSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Keys where UTF-8 byte order and UTF-16 order disagree (U+FF5E sorts
+    * below a surrogate pair in UTF-8, above it in UTF-16), keys holding
+    * LIKE metacharacters, and plain ones.
+    */
+  private val keys = Seq("a", "a%b", "a_b", "a\\b", "ab", "b", "é",
+    "\uFF5E", "\uD83D\uDE00", "k1")
+  /** Marker wildcards, Spark LIKE with `\` as escape. */
+  private val wildcards = Seq("%", "a%", "a\\%b", "a_b", "a\\_b", "a\\\\b",
+    "%b", "_", "é%", "\uD83D\uDE00%", "\uFF5E", "k%")
+
+  private sealed trait Op
+  private final case class Put(rows: Seq[(String, Long)], files: Option[Int],
+                               extraColumn: Boolean) extends Op
+  private final case class Del(firstKey: String, lastKey: String, t0: Long,
+                               t1: Long, wildcard: String) extends Op
+
+  private val tsGen = Gen.choose(0L, 30L)
+  private val putGen: Gen[Put] = for {
+    n <- Gen.choose(1, 25)
+    rows <- Gen.listOfN(n, Gen.zip(Gen.oneOf(keys), tsGen))
+    files <- Gen.frequency(3 -> Gen.const(None), 1 -> Gen.const(Some(2)),
+      1 -> Gen.const(Some(3)))
+    extra <- Gen.frequency(4 -> false, 1 -> true)
+  } yield Put(rows.distinct, files, extra)
+  private val delGen: Gen[Del] = for {
+    lo <- Gen.frequency(2 -> Gen.const(""), 1 -> Gen.oneOf(keys))
+    hi <- Gen.frequency(2 -> Gen.const(""), 1 -> Gen.oneOf(keys))
+    t0 <- Gen.frequency(1 -> Gen.const(0L), 2 -> tsGen)
+    span <- Gen.frequency(1 -> Gen.const(Long.MaxValue / 2), 2 -> Gen.choose(1L, 15L))
+    w <- Gen.frequency(2 -> Gen.const("%"), 3 -> Gen.oneOf(wildcards))
+  } yield Del(lo, hi, t0, t0 + span, w)
+  private val scenarioGen: Gen[(Boolean, Seq[Op])] = for {
+    bucketed <- Gen.frequency(2 -> false, 1 -> true)
+    first <- putGen
+    n <- Gen.choose(3, 6)
+    rest <- Gen.listOfN(n, Gen.frequency(3 -> putGen, 2 -> delGen))
+  } yield (bucketed, first +: rest)
+  private val boundsGen: Gen[(Option[Long], Option[Long])] = for {
+    a <- Gen.option(tsGen)
+    b <- Gen.option(tsGen)
+  } yield (a, b)
+
+  private var nextV = 0L
+
+  private def build(wh: String, bucketed: Boolean, ops: Seq[Op]): Db = {
+    val db = Db(spark, wh)
+    ops.foreach {
+      case Put(rows, files, extra) =>
+        val df0 = rows.map { case (k, t) => nextV += 1; (k, t, nextV) }
+          .toDF("key", "ts", "v")
+        val df = if (extra) df0.withColumn("w", col("v") * 10) else df0
+        TxWriter.write(db, df, rangePartitions = files,
+          timeBucketNanos = if (bucketed) Some(10L) else None)
+      case Del(lo, hi, t0, t1, w) =>
+        TxWriter.delete(db, lo, hi, t0, t1, w)
+    }
+    db
+  }
+
+  /** The general read pipeline, spelled out: every transaction's records,
+    * the exact key, the time window, last-wins, the marker anti-join, the
+    * (key, ts) order.
+    */
+  private def pipeline(snap: Db#Snapshot, key: String, after: Option[Long],
+                       before: Option[Long]): DataFrame = {
+    val filtered = SeriesOps.timeRange(
+      snap.records.filter(col("key") === key), after, before)
+    val merged = SeriesOps.lastWins(filtered, Seq("key", "ts"), "txid")
+    SeriesOps.ordered(SeriesOps.applyDeletes(merged, snap.deletes)
+      .drop("txid", "tbucket"))
+  }
+
+  private def check(db: Db, bounds: Seq[(Option[Long], Option[Long])],
+                    what: String): Unit = {
+    val snap = db.snapshot()
+    for (k <- keys; (a, b) <- bounds) {
+      val got = snap.get(k, a, b)
+      val want = pipeline(snap, k, a, b)
+      assert(got.columns.toSeq == want.columns.toSeq, s"$what: columns")
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g == w, s"$what key '$k' after $a before $b:\n got $g\nwant $w")
+    }
+  }
+
+  private def sample[T](g: Gen[T], seed: Long): T =
+    g.pureApply(Gen.Parameters.default, Seed(seed))
+
+  test("get == records → key filter → lastWins → applyDeletes → order on generated warehouses") {
+    for (s <- 1L to 6L) {
+      val (bucketed, ops) = sample(scenarioGen, s)
+      val db = build(tmpDir("graft-ptgen"), bucketed, ops)
+      val bounds = (None, None) +: (1 to 2).map(i => sample(boundsGen, s * 10 + i))
+      check(db, bounds, s"seed $s (bucketed=$bucketed, ops=$ops)")
+    }
+  }
+
+  test("markers before and after a re-insert, a literal-% key, a column added later") {
+    val db = build(tmpDir("graft-ptfixed"), bucketed = false, Seq(
+      Put(Seq("a%b" -> 5L, "a" -> 5L, "aXb" -> 5L, "b" -> 1L), None, false),
+      Del("", "", 5L, 6L, "a\\%b"),   // the literal key only, not "aXb"
+      Del("a", "b", 0L, 10L, "%"),     // key range [a, b): a, a%b, aXb
+      Put(Seq("a%b" -> 5L, "b" -> 1L), None, extraColumn = true),
+      Del("", "", 0L, 3L, "b")))       // time window over b's re-insert
+    check(db, Seq((None, None), (Some(5L), None), (None, Some(5L))), "fixed")
+    val snap = db.snapshot()
+    assert(snap.get("a%b").select("v").as[Long].collect().toSeq.size == 1,
+      "the re-insert after the marker survives")
+    assert(snap.get("aXb").count() == 0 && snap.get("b").count() == 0)
+    assert(snap.get("a%b").columns.contains("w"))
+  }
+
+  test("a key split across two files of one transaction, time-bucketed") {
+    val rows = (0L until 40L).map(t => "a" -> t) ++ Seq("b" -> 3L)
+    val db = build(tmpDir("graft-ptsplit"), bucketed = true, Seq(
+      Put(rows, Some(2), false),
+      Put(Seq("a" -> 7L, "a" -> 33L), None, false),
+      Del("", "", 10L, 20L, "a")))
+    val snap = db.snapshot()
+    val tx0 = snap.manifest.dataTxids.head
+    val layout = Db.txLayout(spark, db.warehouse, db.dataDir, tx0,
+      snap.manifest.version, snap.manifest.created)
+    val holding = layout.fileKeys.count(_.mayHold(Db.utf8("a")))
+    assert(holding >= 2, s"key 'a' should span files: ${layout.files}")
+    check(db, Seq((None, None), (Some(12L), Some(35L)), (Some(25L), None)),
+      "split")
+  }
+
+  test("a warehouse deleted and recreated at the same path reads its own files") {
+    val wh = tmpDir("graft-ptrecreate")
+    val first = build(wh, bucketed = false, Seq(
+      Put(Seq("a" -> 1L, "b" -> 2L), None, false),
+      Put(Seq("a" -> 3L), None, false)))
+    check(first, Seq((None, None)), "before recreation")
+    import java.util.Comparator
+    java.nio.file.Files.walk(java.nio.file.Paths.get(wh))
+      .sorted(Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    // same txids, same manifest versions, different files
+    val second = build(wh, bucketed = false, Seq(
+      Put(Seq("a" -> 7L, "b" -> 8L), None, false),
+      Put(Seq("b" -> 9L), None, false)))
+    check(second, Seq((None, None)), "after recreation")
+    assert(second.snapshot().get("a").select("ts").as[Long].collect().toSeq ==
+      Seq(7L))
+  }
+}
