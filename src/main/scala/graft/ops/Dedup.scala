@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB regime:
@@ -501,23 +502,6 @@ object Dedup {
 
   // ── duplicate clusters ─────────────────────────────────────────────
 
-  /** Connected components over candidate-pair edges: every node mapped to
-    * the minimum id reachable from it (`comp`) — the canonical document of
-    * its duplicate cluster. This is the step that turns pairwise near-dup
-    * evidence into an actual keep/drop decision.
-    *
-    * Algorithm: min-label propagation with pointer jumping. Each round
-    * (a) pulls the minimum label from the 1-hop neighborhood and (b)
-    * compresses by adopting the label's own label — labels travel
-    * exponentially far per round, so convergence is O(log diameter)
-    * rounds (2-hop doubling, the Hash-to-Min family of CC algorithms)
-    * rather than O(diameter). Every round is three hash shuffles of the
-    * slim (id, comp) relation — never the document payloads — and each
-    * round's result is `localCheckpoint`ed so the plan stays O(1) deep
-    * instead of nesting every previous iteration (at cluster scale,
-    * substitute a reliable checkpoint dir for executor-loss tolerance).
-    * The driver only inspects the converged flag; no data is collected.
-    */
   /** Keep ONE document per near-duplicate cluster: label the candidate
     * pairs with [[connectedComponents]] (comp = min reachable id), drop
     * every labeled node except its cluster's minimum, keep everything
@@ -532,78 +516,178 @@ object Dedup {
     df.join(drop, Seq(idCol), "left_anti")
   }
 
+  /** Connected components over candidate-pair edges `(id1, id2)`: every
+    * node mapped to the minimum id reachable from it (`comp`) — the
+    * canonical document of its duplicate cluster. This is the step that
+    * turns pairwise near-dup evidence into an actual keep/drop decision.
+    * Ids are integral; `(id, comp)` keep the input's id type.
+    *
+    * Contraction first: one `mapPartitions` pass over `pairs`, in
+    * whatever partitioning they arrive, runs union-find over each task's
+    * own edges (smaller id as root) and emits `(node, root)` for every
+    * node the task saw — a star forest with exactly the input's
+    * components. A node's first label is the minimum of its roots. The
+    * labels and each node's distinct roots are materialized once, and the
+    * same pass counts the STRADDLING nodes (more than one distinct root)
+    * and sums the labels.
+    *
+    * No straddler: done, with no round. Every node then has one root r,
+    * and r's only root is r itself, so each star edge joins two equal
+    * labels; labels are constant on every component, and a component's
+    * minimum labels itself (each of its roots is at most its own id).
+    * Pairs partitioned by a component key — SemDeDup's pairs, partitioned
+    * by cell — always end here.
+    *
+    * Otherwise the straddlers' components are finished by min-label
+    * propagation with pointer jumping over the star edges (every node to
+    * each of its distinct roots), seeded with the contracted labels. Each
+    * round (a) pulls the minimum label from the 1-hop neighborhood and (b)
+    * compresses by adopting the label's own label — labels travel
+    * exponentially far per round, so convergence is O(log diameter)
+    * rounds (2-hop doubling, the Hash-to-Min family of CC algorithms)
+    * rather than O(diameter). Every round is three hash shuffles of the
+    * slim (id, comp) relation — never the document payloads — and each
+    * round's result is materialized ([[graft.core.Graft.pinLoop]]) so the
+    * plan stays O(1) deep instead of nesting every previous iteration.
+    * The driver only reads each materialization's metrics; no data is
+    * collected.
+    *
+    * Pre-partitioning the edges by node before the rounds was measured
+    * and rejected (one job more, no saving); fewer rounds is the lever.
+    */
   def connectedComponents(pairs: DataFrame): DataFrame = {
-    // Per-round materialization keeps the plan O(1) deep — the
-    // loop-shaped pin (lineage MUST cut per round; reliable checkpoint
-    // when the context has a dir, localCheckpoint otherwise).
-    def materialize(df: DataFrame): DataFrame =
-      graft.core.Graft.pinLoop(df)
-    val edges = materialize(
-      pairs.select(col("id1").as("a"), col("id2").as("b"))
-        .union(pairs.select(col("id2").as("a"), col("id1").as("b")))
-        .distinct())
-    var comp = materialize(
-      edges.select(col("a").as("id")).distinct()
-        .withColumn("comp", col("id")))
+    // the type the old symmetric edge union had: id1's and id2's, widened
+    val idType = pairs.select(col("id1").as("id"))
+      .union(pairs.select(col("id2").as("id"))).schema("id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"connectedComponents needs integral ids, got $idType")
+    val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val stars = pairs.select(col("id1").cast("long"), col("id2").cast("long"))
+      .as(longPair).mapPartitions(starForest)(longPair).toDF("id", "root")
     // labels are node ids and only ever decrease, so the label sum is a
-    // strictly decreasing potential function: cheap convergence detection.
-    // The sum is OBSERVED during each round's materialization job
-    // (guide §1.4 one-pass device — the standalone aggregate was one
-    // extra Spark job per round), decimal so an id-sum cannot overflow
-    // at any corpus size; sum over zero rows is NULL — treated as 0 so
-    // an empty edge set converges instead of NPEing.
-    def potential(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s
-    }
-    // Observation metrics are ACCUMULATOR-based: sound when the round's
+    // strictly decreasing potential function: cheap convergence detection,
+    // decimal so an id-sum cannot overflow at any corpus size; sum over
+    // zero rows is NULL — treated as 0 so an empty edge set converges
+    // instead of NPEing.
+    val potential = sum(col("comp").cast("decimal(38,0)")).as("pot")
+    def pot(m: Map[String, Any]): java.math.BigDecimal =
+      Option(m("pot").asInstanceOf[java.math.BigDecimal])
+        .getOrElse(java.math.BigDecimal.ZERO)
+    // Observation metrics are ACCUMULATOR-based: sound when the
     // materialization executes the lineage exactly once (localCheckpoint
     // — the default), but a RELIABLE checkpoint (dir set; pinLoop's
     // cluster mode) re-executes the lineage in the checkpoint write job
     // and double-counts the sum, while task retries could skew it
-    // arbitrarily — against the exactly-computed initial pot that could
-    // declare convergence early (2·S1 == S0) or late. In reliable mode
-    // the convergence sum is therefore computed with one exact aggregate
-    // per round (noise next to the per-round DFS write that mode pays).
+    // arbitrarily — against the previous pot that could declare
+    // convergence early (2·S1 == S0) or late. In reliable mode the metrics
+    // are therefore one exact aggregate over the checkpointed rows (noise
+    // next to the DFS write that mode pays per materialization), so the
+    // straddler count the no-round exit tests is exact there too.
     val reliable =
       pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    var pot = potential(comp)
-    var converged = false
-    while (!converged) {
-      // (a) minimum label in the 1-hop neighborhood (labels are node ids,
-      // so min(own, neighbors') is monotonically non-increasing)
-      val neighborMin = edges
-        .join(comp, edges("b") === comp("id"))
-        .groupBy(col("a").as("id")).agg(min(col("comp")).as("ncomp"))
-      val relaxed = comp.alias("c")
-        .join(neighborMin.alias("n"), Seq("id"), "left")
-        .select(col("id"),
-          least(col("c.comp"), coalesce(col("n.ncomp"), col("c.comp")))
-            .as("comp"))
-      // (b) pointer jumping: adopt the label's own current label
-      val jumped = relaxed.alias("m")
-        .join(relaxed.select(col("id").as("lid"), col("comp").as("lcomp"))
-          .alias("p"), col("m.comp") === col("p.lid"), "left")
-        .select(col("id"),
-          least(col("m.comp"), coalesce(col("p.lcomp"), col("m.comp")))
-            .as("comp"))
-      val (next, nextPot) =
-        if (reliable) {
-          val n = materialize(jumped)
-          (n, potential(n))
-        } else {
-          val obs = new org.apache.spark.sql.Observation(
-            s"cc-pot-${java.util.UUID.randomUUID()}")
-          val n = materialize(jumped
-            .observe(obs, sum(col("comp").cast("decimal(38,0)")).as("pot")))
-          val s = obs.get("pot").asInstanceOf[java.math.BigDecimal]
-          (n, if (s == null) java.math.BigDecimal.ZERO else s)
-        }
-      comp = next
-      converged = nextPot.compareTo(pot) == 0
-      pot = nextPot
+    def materialize(df: DataFrame, metrics: Column*)
+        : (DataFrame, Map[String, Any]) =
+      if (reliable) {
+        val pinned = graft.core.Graft.pinLoop(df)
+        val row = pinned.agg(metrics.head, metrics.tail: _*).head()
+        (pinned, row.getValuesMap[Any](row.schema.fieldNames.toSeq))
+      } else {
+        val obs = new Observation(s"cc-${java.util.UUID.randomUUID()}")
+        val pinned = graft.core.Graft.pinLoop(
+          df.observe(obs, metrics.head, metrics.tail: _*))
+        (pinned, obs.get)
+      }
+    val (seeded, seedMetrics) = materialize(
+      stars.groupBy("id").agg(min(col("root")).as("comp"),
+        collect_set(col("root")).as("roots")),
+      potential, count_if(size(col("roots")) > 1).as("straddlers"))
+    var comp = seeded.select(col("id"), col("comp"))
+    if (seedMetrics("straddlers").asInstanceOf[Long] > 0) {
+      val star = seeded.select(col("id").as("a"), explode(col("roots")).as("b"))
+        .filter(col("a") =!= col("b"))
+      val edges = star.union(star.select(col("b").as("a"), col("a").as("b")))
+      var p = pot(seedMetrics)
+      var converged = false
+      while (!converged) {
+        // (a) minimum label in the 1-hop neighborhood (labels are node
+        // ids, so min(own, neighbors') is monotonically non-increasing)
+        val neighborMin = edges
+          .join(comp, edges("b") === comp("id"))
+          .groupBy(col("a").as("id")).agg(min(col("comp")).as("ncomp"))
+        val relaxed = comp.alias("c")
+          .join(neighborMin.alias("n"), Seq("id"), "left")
+          .select(col("id"),
+            least(col("c.comp"), coalesce(col("n.ncomp"), col("c.comp")))
+              .as("comp"))
+        // (b) pointer jumping: adopt the label's own current label
+        val jumped = relaxed.alias("m")
+          .join(relaxed.select(col("id").as("lid"), col("comp").as("lcomp"))
+            .alias("p"), col("m.comp") === col("p.lid"), "left")
+          .select(col("id"),
+            least(col("m.comp"), coalesce(col("p.lcomp"), col("m.comp")))
+              .as("comp"))
+        val (next, metrics) = materialize(jumped, potential)
+        val nextPot = pot(metrics)
+        comp = next
+        converged = nextPot.compareTo(p) == 0
+        p = nextPot
+      }
     }
-    comp
+    comp.select(col("id").cast(idType).as("id"),
+      col("comp").cast(idType).as("comp"))
+  }
+
+  /** One task's share of the pairs contracted by union-find, the smaller
+    * id always the root: `(node, root)` for every node seen, so each star
+    * is one component of the share. State is two arrays over the share's
+    * distinct ids plus an open-addressing id → index table, ids unboxed.
+    */
+  private def starForest(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var ids = new Array[Long](64)     // index → id
+    var parent = new Array[Int](64)   // index → parent index
+    var slots = new Array[Int](128)   // hash slot → index + 1, 0 = free
+    var n = 0
+    def home(id: Long, mask: Int): Int = {
+      val h = id * 0x9E3779B97F4A7C15L
+      (h ^ (h >>> 32)).toInt & mask
+    }
+    def place(i: Int): Unit = {
+      val mask = slots.length - 1
+      var s = home(ids(i), mask)
+      while (slots(s) != 0) s = (s + 1) & mask
+      slots(s) = i + 1
+    }
+    def index(id: Long): Int = {
+      val mask = slots.length - 1
+      var s = home(id, mask)
+      while (slots(s) != 0) {
+        if (ids(slots(s) - 1) == id) return slots(s) - 1
+        s = (s + 1) & mask
+      }
+      if (n == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, 2 * n)
+        parent = java.util.Arrays.copyOf(parent, 2 * n)
+      }
+      ids(n) = id
+      parent(n) = n
+      n += 1
+      if (2 * n > slots.length) {
+        slots = new Array[Int](2 * slots.length)
+        (0 until n).foreach(place)
+      } else slots(s) = n
+      n - 1
+    }
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    edges.foreach { case (a, b) =>
+      val ra = find(index(a))
+      val rb = find(index(b))
+      if (ra != rb) { if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
   }
 
   // ── line-level dedup (boilerplate removal) ─────────────────────────

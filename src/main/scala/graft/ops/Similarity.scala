@@ -759,7 +759,9 @@ object Similarity {
     * deterministic first-N quantizer of the [[ivfKnn]] family); the pair
     * space is bounded by cells, never all-pairs ([[nearDupPairs]] with
     * the cell as the bucket); duplicate groups are
-    * [[Dedup.connectedComponents]] (O(log d) rounds over slim edges); the
+    * [[Dedup.connectedComponents]] over pairs that leave the within-cell
+    * join partitioned by cell, so no node straddles partitions and CC is
+    * one partition-local contraction with no label-propagation round; the
     * keep rule is one `min_by` partial aggregation; the final keep-set is
     * an anti-join shipping only the slim drop-list — the corpus is
     * scanned once. Every stage is map-only or shuffles reduced data:

@@ -179,10 +179,9 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       val txids = prunedDataTxids(pattern, Some(lo), Some(hi))
       if (txids.isEmpty) return emptyResult()
       val w = manifest.timeBucket
-      // same bucket formula the writer uses (ts - ts % w, Spark's
-      // dividend-sign remainder — consistent for negative reserved ts);
-      // only meaningful on a time-bucketed warehouse (w > 0)
-      lazy val neededBuckets = instants.map(t => t - t % w).distinct
+      // the writer's bucket of each instant; only meaningful on a
+      // time-bucketed warehouse (w > 0)
+      lazy val neededBuckets = instants.map(Db.bucketOf(_, w)).distinct
       val base =
         if (w > 0) {
           val dirs = for {
@@ -276,13 +275,14 @@ final class Db(val spark: SparkSession, val warehouse: String) {
         // columns depend on which footers it sees: keep whole directories
         if (manifest.schemaDdl.isEmpty) readData(txids)
         else {
-          val w = manifest.timeBucket
+          val (lo, hi) = Db.bucketRange(manifest.timeBucket, after, before)
           val files = for {
             t <- txids
             layout = Db.txLayout(spark, warehouse, dataDir, t,
               manifest.version, manifest.created)
             (f, keys) <- layout.files.zip(layout.fileKeys)
-            if keys.mayHold(kb) && f.bucket.forall(b => bucketMayHold(b, w, after, before))
+            if keys.mayHold(kb) &&
+              f.bucket.forall(b => lo.forall(b >= _) && hi.forall(b <= _))
           } yield f.path
           if (files.isEmpty) return emptyResult()
           readPaths(files)
@@ -298,17 +298,6 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       visible.drop("txid", "tbucket")
         .sortWithinPartitions(col("key"), col("ts"))
     }
-
-    /** Whether bucket `b` (width `w`, `b = ts - ts % w` with the remainder
-      * taking the dividend's sign) can hold an instant in
-      * `[after, before)`. Bucket `b > 0` holds `[b, b + w)`, bucket 0
-      * holds `(-w, w)`, a negative bucket `(b - w, b]`; negative buckets
-      * are never pruned.
-      */
-    private def bucketMayHold(b: Long, w: Long, after: Option[Long],
-                              before: Option[Long]): Boolean =
-      b < 0 || (after.forall(a => a <= b || a - b < w) &&
-        before.forall(t => b == 0 || b < t))
 
     /** One committed transaction's records, (key, ts) ordered — the
       * single-tx dump surface (reference `examples/get.rs:5-46`).
@@ -362,9 +351,9 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       val w = manifest.timeBucket
       val bucketed =
         if (w > 0 && filtered0.columns.contains("tbucket")) {
-          val preds =
-            after.map(a => col("tbucket") >= a - a % w).toSeq ++
-              before.map(b => col("tbucket") < b).toSeq
+          val (lo, hi) = Db.bucketRange(w, after, before)
+          val preds = lo.map(col("tbucket") >= _).toSeq ++
+            hi.map(col("tbucket") <= _).toSeq
           preds.reduceOption(_ && _).fold(filtered0)(filtered0.filter)
         } else filtered0
       val filtered = SeriesOps.timeRange(bucketed, after, before)
@@ -402,6 +391,27 @@ object Db {
 
   private[store] def utf8(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The writer's time bucket of `ts` at width `w`: `ts - ts % w`, the
+    * remainder taking the dividend's sign (Spark's `%`). So bucket `b > 0`
+    * holds `[b, b + w)`, bucket 0 holds `(-w, w)` and a negative bucket
+    * `(b - w, b]`.
+    */
+  private[store] def bucketOf(ts: Long, w: Long): Long = ts - ts % w
+
+  /** Inclusive bounds on the buckets that can hold an instant in
+    * `[after, before)`: [[bucketOf]] is monotone in `ts`, so they run
+    * from `after`'s bucket to the bucket of the last instant before
+    * `before`. The one pruning rule of every reader: `get` tests each
+    * file's bucket against it, `read` and `readMany` turn it into their
+    * `tbucket` partition predicate. No bounds when the warehouse is not
+    * time-bucketed (`w = 0`).
+    */
+  private[store] def bucketRange(w: Long, after: Option[Long],
+                                 before: Option[Long])
+      : (Option[Long], Option[Long]) =
+    if (w <= 0) (None, None)
+    else (after.map(bucketOf(_, w)), before.map(t => bucketOf(t - 1, w)))
 
   /** Unsigned lexicographic byte order — Spark's string order over UTF-8. */
   private[store] def compareBytes(a: Array[Byte], b: Array[Byte]): Int =

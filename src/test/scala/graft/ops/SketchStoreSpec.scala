@@ -16,6 +16,17 @@ class SketchStoreSpec extends SparkSpec {
 
   private def toks(xs: String*) = xs.toDF("t")
 
+  /** Runs `body` on a pool of its own (`threads` threads), shut down
+    * after: racing Futures must not queue on the global pool, whose
+    * one-thread-per-core size starves them on a small machine.
+    */
+  private def onPool[T](threads: Int)(
+      body: scala.concurrent.ExecutionContext => T): T = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try body(scala.concurrent.ExecutionContext.fromExecutorService(pool))
+    finally pool.shutdownNow()
+  }
+
   test("KMV: two registered batches == one sketch of the union, exactly") {
     val db = tmpDb()
     val a = (1 to 300).map(i => s"a$i")
@@ -269,7 +280,6 @@ class SketchStoreSpec extends SparkSpec {
       "one wins — the loser refuses loudly, never mixes in") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val db = tmpDb()
     // both sides pass the friendly pre-write check (empty manifest),
     // write their transactions, and meet at the publishing CAS — the
@@ -279,16 +289,18 @@ class SketchStoreSpec extends SparkSpec {
     // on interleaving the loser surfaces as PropertyConflict (lost the
     // CAS) or IllegalArgumentException (saw the winner's claim before
     // writing) — both loud, neither published.
-    val outcomes = Await.result(Future.sequence(Seq(16, 64).map(k =>
-      Future {
-        try {
-          SketchStore.registerKmv(db, toks("a", "b", "c"), col("t"), k = k)
-          None
-        } catch {
-          case e: graft.store.TxWriter.PropertyConflict => Some(e)
-          case e: IllegalArgumentException => Some(e)
-        }
-      })), 300.seconds)
+    val outcomes = onPool(2) { implicit ec =>
+      Await.result(Future.sequence(Seq(16, 64).map(k =>
+        Future {
+          try {
+            SketchStore.registerKmv(db, toks("a", "b", "c"), col("t"), k = k)
+            None
+          } catch {
+            case e: graft.store.TxWriter.PropertyConflict => Some(e)
+            case e: IllegalArgumentException => Some(e)
+          }
+        })), 300.seconds)
+    }
     assert(outcomes.count(_.isEmpty) == 1,
       s"exactly one geometry must win: $outcomes")
     val winnerK = SketchStore.storedKmvK(db)
@@ -385,17 +397,18 @@ class SketchStoreSpec extends SparkSpec {
   test("concurrent registrations: 8 racing writers, stored KMV == union sketch") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val db = tmpDb()
     val batches = (0 until 8).map(b =>
       (0 until 60).map(i => s"w${b * 40 + i}")) // overlapping ranges
-    Await.result(Future.sequence(batches.zipWithIndex.map { case (xs, b) =>
-      Future {
-        SketchStore.registerKmv(db, toks(xs: _*), col("t"), k = 32)
-        SketchStore.registerCountMin(db, toks(xs: _*), col("t"),
-          batchId = b.toLong)
-      }
-    }), 300.seconds)
+    onPool(8) { implicit ec =>
+      Await.result(Future.sequence(batches.zipWithIndex.map { case (xs, b) =>
+        Future {
+          SketchStore.registerKmv(db, toks(xs: _*), col("t"), k = 32)
+          SketchStore.registerCountMin(db, toks(xs: _*), col("t"),
+            batchId = b.toLong)
+        }
+      }), 300.seconds)
+    }
     // KMV: append-only last-wins rows — any interleaving lands on the
     // same union sketch
     val stored = SketchStore.storedKmvSketch(db)
@@ -430,21 +443,22 @@ class SketchStoreSpec extends SparkSpec {
   test("folds racing 8 registering writers never lose a count") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val db = tmpDb()
     // 8 writers × 3 batches each, while a maintenance thread folds
     // continuously — the conditional-claim fence means every registered
     // count survives whatever interleaving the scheduler produces
-    val writers = (0 until 8).map { wtr =>
-      Future {
-        for (b <- 0 until 3)
-          SketchStore.registerCountMin(db,
-            toks(Seq.fill(wtr + 1)("hot"): _*), col("t"),
-            batchId = (wtr * 3 + b).toLong)
+    onPool(9) { implicit ec =>
+      val writers = (0 until 8).map { wtr =>
+        Future {
+          for (b <- 0 until 3)
+            SketchStore.registerCountMin(db,
+              toks(Seq.fill(wtr + 1)("hot"): _*), col("t"),
+              batchId = (wtr * 3 + b).toLong)
+        }
       }
+      val folder = Future { for (_ <- 0 until 6) SketchStore.foldCountMin(db) }
+      Await.result(Future.sequence(writers :+ folder), 300.seconds)
     }
-    val folder = Future { for (_ <- 0 until 6) SketchStore.foldCountMin(db) }
-    Await.result(Future.sequence(writers :+ folder), 300.seconds)
     SketchStore.foldCountMin(db) // quiesced: one final fold
     val got = SketchStore.probeStoredCountMin(db, toks("hot"), "t")
       .as[(String, Long)].head()._2
@@ -482,13 +496,14 @@ class SketchStoreSpec extends SparkSpec {
     // a minimum (the fence re-reads and retries)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val extra = (0 until 6).map(b => (0 until 40).map(i => s"r${b * 25 + i}"))
-    val writers = extra.map(xs => Future {
-      SketchStore.registerKmv(db, toks(xs: _*), col("t"), k = 32)
-    })
-    val folder = Future { for (_ <- 0 until 4) SketchStore.foldKmv(db) }
-    Await.result(Future.sequence(writers :+ folder), 300.seconds)
+    onPool(7) { implicit ec =>
+      val writers = extra.map(xs => Future {
+        SketchStore.registerKmv(db, toks(xs: _*), col("t"), k = 32)
+      })
+      val folder = Future { for (_ <- 0 until 4) SketchStore.foldKmv(db) }
+      Await.result(Future.sequence(writers :+ folder), 300.seconds)
+    }
     SketchStore.foldKmv(db)
     val storedR = SketchStore.storedKmvSketch(db)
       .as[Long].collect().toSeq
@@ -526,15 +541,16 @@ class SketchStoreSpec extends SparkSpec {
     // folds interleave with registrations the total must be EXACT
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writers = (0 until 8).map { w =>
-      Future {
-        SketchStore.registerMg(db, toks(Seq.fill(w + 1)("hot"): _*),
-          col("t"), batchId = (100 + w).toLong)
+    onPool(9) { implicit ec =>
+      val writers = (0 until 8).map { w =>
+        Future {
+          SketchStore.registerMg(db, toks(Seq.fill(w + 1)("hot"): _*),
+            col("t"), batchId = (100 + w).toLong)
+        }
       }
+      val folder = Future { for (_ <- 0 until 5) SketchStore.foldMg(db) }
+      Await.result(Future.sequence(writers :+ folder), 300.seconds)
     }
-    val folder = Future { for (_ <- 0 until 5) SketchStore.foldMg(db) }
-    Await.result(Future.sequence(writers :+ folder), 300.seconds)
     SketchStore.foldMg(db)
     val mass = SketchStore.storedMgMass(db).as[Long].head()
     val exact = 4 * 100 + (1 to 8).sum
@@ -599,22 +615,23 @@ class SketchStoreSpec extends SparkSpec {
     // claim→publish window from double-counting the history
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val extra = (6 until 10).map(b => (1 to 80).map(i => (i % (15 + b) + 1).toLong))
-    val writer = Future {
-      extra.zipWithIndex.foreach { case (vals, i) =>
-        SketchStore.registerHist(db, vals.toDF("v"), col("v"),
-          batchId = (6 + i).toLong)
+    onPool(3) { implicit ec =>
+      val writer = Future {
+        extra.zipWithIndex.foreach { case (vals, i) =>
+          SketchStore.registerHist(db, vals.toDF("v"), col("v"),
+            batchId = (6 + i).toLong)
+        }
       }
+      val folder = Future { for (_ <- 0 until 4) SketchStore.foldHist(db) }
+      val compactor = Future {
+        for (_ <- 0 until 3)
+          try graft.store.Compactor.major(db)
+          catch { case e: IllegalStateException
+              if e.getMessage.contains("aborted") => () } // legal under race
+      }
+      Await.result(Future.sequence(Seq(writer, folder, compactor)), 600.seconds)
     }
-    val folder = Future { for (_ <- 0 until 4) SketchStore.foldHist(db) }
-    val compactor = Future {
-      for (_ <- 0 until 3)
-        try graft.store.Compactor.major(db)
-        catch { case e: IllegalStateException
-            if e.getMessage.contains("aborted") => () } // legal under race
-    }
-    Await.result(Future.sequence(Seq(writer, folder, compactor)), 600.seconds)
     SketchStore.foldHist(db)
     val stored = SketchStore.storedHistQuantiles(db)
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
@@ -830,7 +847,6 @@ class SketchStoreSpec extends SparkSpec {
       "any interleaving") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val db = tmpDb()
     // 6 single-tx trio registrations racing a continuous all-family
     // folder: the shared fence refuses a fold whenever anything moved,
@@ -839,16 +855,18 @@ class SketchStoreSpec extends SparkSpec {
     // is exactly what this pins
     val batches = (0 until 6).map(b =>
       Seq.fill(10)("hot") ++ (0 until 30).map(i => s"w${b * 17 + i}"))
-    val writers = batches.zipWithIndex.map { case (xs, b) =>
-      Future {
-        SketchStore.registerSketches(db, toks(xs: _*), col("t"),
-          batchId = b.toLong, k = 32)
+    onPool(7) { implicit ec =>
+      val writers = batches.zipWithIndex.map { case (xs, b) =>
+        Future {
+          SketchStore.registerSketches(db, toks(xs: _*), col("t"),
+            batchId = b.toLong, k = 32)
+        }
       }
+      val folder = Future {
+        for (_ <- 0 until 4) SketchStore.foldSketches(db)
+      }
+      Await.result(Future.sequence(writers :+ folder), 300.seconds)
     }
-    val folder = Future {
-      for (_ <- 0 until 4) SketchStore.foldSketches(db)
-    }
-    Await.result(Future.sequence(writers :+ folder), 300.seconds)
     SketchStore.foldSketches(db) // quiesced: one final fold
     val all = batches.flatten
     val storedKmv = SketchStore.storedKmvSketch(db)

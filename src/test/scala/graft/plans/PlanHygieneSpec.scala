@@ -125,6 +125,71 @@ class PlanHygieneSpec extends SparkSpec {
       s"point lookup joins the markers:\n$plan")
   }
 
+  test("connected components: cell-partitioned pairs run only the " +
+      "contraction, a path spread round-robin runs rounds") {
+    import spark.implicits._
+    // (jobs, SQL executions) of `body`, counted in a job group of its own
+    // and drained with a marker job as in the point-lookup guard; every
+    // materialization of the operator is one SQL execution
+    def jobsOf(body: => Unit): (Int, Int) = {
+      val group = s"plancc-${java.util.UUID.randomUUID()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val props = Option(j.properties)
+          props.map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`) =>
+              jobs.incrementAndGet()
+              executions.add(props.flatMap(p =>
+                Option(p.getProperty("spark.sql.execution.id")))
+                .getOrElse(s"job-${j.jobId}"))
+            case Some("plancc-marker") => drained.countDown()
+            case _                     =>
+          }
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        spark.sparkContext.setJobGroup(group, "connected components")
+        body
+        spark.sparkContext.setJobGroup("plancc-marker", "drain")
+        spark.range(1).count()
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      (jobs.get(), executions.size)
+    }
+    // the semDedupKeepset shape: pairs formed within a cell and
+    // hash-partitioned by it; each of the 16 cells is a 25-node path,
+    // which the round loop alone would need several rounds for
+    val cellPairs = (0L until 384L).map(i => (i, i + 16, i % 16))
+      .toDF("id1", "id2", "cell").repartition(8, $"cell").localCheckpoint()
+    var cellComp = Map.empty[Long, Long]
+    val (cellJobs, cellRuns) = jobsOf {
+      cellComp = graft.ops.Dedup.connectedComponents(cellPairs)
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(cellComp == (0L until 400L).map(i => i -> i % 16).toMap)
+    assert(cellRuns == 2, s"cell-partitioned CC ran $cellRuns SQL " +
+      s"executions ($cellJobs jobs), want the contraction's and the collect")
+    // a 41-node path spread round-robin: nodes straddle, rounds must run
+    val pathPairs = (0L until 40L).map(i => (i, i + 1)).toDF("id1", "id2")
+      .repartition(8).localCheckpoint()
+    var pathComp = Map.empty[Long, Long]
+    val (pathJobs, pathRuns) = jobsOf {
+      pathComp = graft.ops.Dedup.connectedComponents(pathPairs)
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(pathComp == (0L to 40L).map(_ -> 0L).toMap)
+    assert(pathRuns > cellRuns && pathJobs > cellJobs,
+      s"round-robin path ran $pathRuns executions ($pathJobs jobs): no round")
+  }
+
   test("tp_dup_spans reuses the window-hash exchange in the no-broadcast regime") {
     // at 100 TB neither side of the dup-window join broadcasts; the two
     // branches over the exploded window relation must collapse into one

@@ -45,11 +45,15 @@ class CompactConcurrencySpec extends SparkSpec {
     val db = Db(spark, tmpDir("graft-cc3"))
     (1 to 3).foreach(i =>
       TxWriter.write(db, Seq((s"k$i", i.toLong, i.toLong)).toDF("key", "ts", "v")))
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
+    // the compactors' own pool: the global one-per-core pool can be
+    // starved by other work on a small machine
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.sequence(Seq(
       Future(Compactor.minor(db)), Future(Compactor.minor(db)))), 180.seconds)
+    finally pool.shutdownNow()
     assert(db.read("%").count() == 3, "compaction raced into duplication")
   }
 
