@@ -43,13 +43,19 @@ object Cli {
 
     positional match {
       case "add" :: Nil =>
-        val lines = spark.createDataset(stdin.toSeq)
+        val input = stdin.toVector
+        val lines = spark.createDataset(input)
         val recs = flags.get("--format") match {
           case Some(fmt) =>
             TextIngest.parse(spark, lines, fmt, flags.get("--timestamp-format"))
           case None => TextIngest.parseWithFmt(spark, lines)
         }
-        TxWriter.write(db, recs.toDF())
+        // the collected lines' size (UTF-8 bytes plus one newline each,
+        // as they arrived) picks the one-job write for small inputs
+        val bytes = input.iterator
+          .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 1L).sum
+        TxWriter.write(db, recs.toDF(),
+          rangePartitions = TxWriter.boundedPartitions(spark, bytes))
 
       // `read <pattern>` or, as in the reference, a pure key range via
       // `read --after-key A --before-key B` (src/main.rs:113-121)

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * rounding absorbs sub-ULP drift while integer sums stay exact, so the
   * driver row hash-matches DuckDB.
   *
-  * Plan shape at 100 TB: one corpus scan builds postings and doc
-  * lengths; the query terms broadcast into the postings (never the
+  * Plan shape at 100 TB: postings and doc lengths come from the corpus
+  * scan (today three tokenizing passes over it, see the note at `dl` in
+  * [[bm25TopK]]); the query terms broadcast into the postings (never the
   * reverse); per-term document frequencies aggregate over the MATCHED
   * postings only and broadcast back; the only wide operations are the
   * postings aggregation and the per-query top-k window.
@@ -42,11 +43,20 @@ object Retrieval {
     val postings = toks.groupBy("doc_id", "term")
       .agg(count(lit(1)).as("f"))
     // doc length = Σ f over the doc's postings — the same number as
-    // counting the token stream, but derived FROM the postings aggregate
-    // so every branch of the plan (scoring, termDf, dl, corpus stats)
-    // hangs off ONE (doc_id, term) exchange that Spark's exchange reuse
-    // dedups at runtime; counting toks directly gave the plan four
-    // independent corpus scans + explodes (guide §2.4: share exchanges)
+    // counting the token stream. Deriving it from `postings` does NOT
+    // make every branch share one (doc_id, term) exchange: AQE's final
+    // plan (sf0.01 and the benchmark corpus) tokenizes the corpus THREE
+    // times:
+    //  - scoring: its postings exchange carries the `isnotnull(doc_id)`
+    //    filter inferred from the dl join, so no other branch's
+    //    exchange canonicalizes equal to it;
+    //  - termDf: only distinct (doc_id, term) pairs reach it, so column
+    //    pruning turns its aggregate into a count-less distinct, a
+    //    different exchange;
+    //  - corpus stats: a third explode and (doc_id, term) exchange
+    //    (only the round-robin scan below it is reused).
+    // The dl join side is the one ReusedExchange (of scoring's). A
+    // one-exchange plan is open on ROADMAP (BM25 tokenize once).
     val dl = postings.groupBy("doc_id").agg(sum(col("f")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val qterms = queries

@@ -55,6 +55,21 @@ object TxWriter {
     */
   val DefaultMaxNewBuckets = 16384
 
+  /** The `rangePartitions` for a write whose input size the caller knows
+    * before planning (a served PUT's spooled body, the CLI `add`'s stdin
+    * lines): `Some(1)` — one sorted partition, one Spark job — when
+    * `inputBytes` is at most
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize`, below
+    * which AQE coalesces the range exchange to one partition anyway;
+    * `None` (the range path) above it. See `writeDataDir`.
+    */
+  def boundedPartitions(spark: org.apache.spark.sql.SparkSession,
+                        inputBytes: Long): Option[Int] = {
+    val oneBelow = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    if (inputBytes <= oneBelow) Some(1) else None
+  }
+
   /** Append one data transaction; returns its txid.
     *
     * @param strict reject duplicate (key, ts) pairs within the transaction —
@@ -503,14 +518,31 @@ object TxWriter {
         Seq(col("ts") - col("ts") % width, col("key"), col("ts"))
       else Seq(col("key"), col("ts"))
     val ranged = rangePartitions match {
-      // single-partition transactions (bounded-by-contract writers: the
-      // ungrouped sketch registers/folds, whose row count is the store
-      // GEOMETRY, not the data) skip the range exchange entirely —
+      // single-partition transactions skip the range exchange entirely —
       // coalesce(1) + sort yields the identical one-sorted-file layout
       // without the RangePartitioner SAMPLING JOB, which re-executes the
       // whole upstream plan once before the write job runs it again
       // (guide §2.4: remove shuffles outright; §1 measured — the
-      // sampling pass was one of 3 fixed jobs per register transaction)
+      // sampling pass was one of 3 fixed jobs per register transaction).
+      // Two kinds of writer are bounded:
+      //  - by contract: the ungrouped sketch registers/folds, whose row
+      //    count is the store GEOMETRY, not the data;
+      //  - by measured input size ([[boundedPartitions]]): the served
+      //    PUT (spooled body bytes) and the CLI `add` (stdin line bytes).
+      //    Their threshold is AQE's minimum coalesced partition size
+      //    (1 MB by default): a range exchange of at most that many
+      //    bytes coalesces to one partition in either coalescing mode,
+      //    so below it the sampling job, the second parse of the body
+      //    and the shuffle buy nothing. One job instead of three per
+      //    PUT. Above it the default parallelism-first coalescing
+      //    splits the exchange across the cores, so larger inputs keep
+      //    the range path and its parallel sort and write.
+      // Layout difference: the text-byte count is only a proxy for the
+      // shuffle bytes AQE measures (a 40 KB benchmark PUT shuffled
+      // ~29 KB), so a body just under the threshold may now land as one
+      // file where the range path would have written two. Reads are
+      // unaffected: either way each file is key-sorted and carries
+      // exact (key, ts) bounds.
       case Some(1) => base.coalesce(1)
       case Some(n) => base.repartitionByRange(n, rangeCols: _*)
       case None    => base.repartitionByRange(rangeCols: _*)
@@ -719,12 +751,30 @@ object TxWriter {
     * footers, bounded by the one transaction's file count). None for an
     * empty or all-null transaction.
     */
-  private[store] def txStatsOf(db: Db, dir: String): Option[TxStats] = {
-    val r = db.spark.read.parquet(dir)
-      .agg(min(col("key")), max(col("key")), min(col("ts")), max(col("ts")))
-      .head()
-    if (r.isNullAt(0)) None
-    else Some(TxStats(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+  private[store] def txStatsOf(db: Db, dir: String): Option[TxStats] =
+    if (!holdsParquet(db, dir)) None
+    else {
+      val r = db.spark.read.parquet(dir)
+        .agg(min(col("key")), max(col("key")), min(col("ts")), max(col("ts")))
+        .head()
+      if (r.isNullAt(0)) None
+      else Some(TxStats(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    }
+
+  /** Whether `dir` holds a parquet file at any depth. A bucketed
+    * (`partitionBy`) write of zero rows leaves none — an unbucketed one
+    * still writes one empty file carrying the schema — and reading such
+    * a directory fails schema inference, so an empty PUT into a bucketed
+    * warehouse answered 500 instead of committing its empty transaction.
+    */
+  private def holdsParquet(db: Db, dir: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val files = path.getFileSystem(db.spark.sessionState.newHadoopConf())
+      .listFiles(path, true)
+    var found = false
+    while (!found && files.hasNext)
+      found = files.next().getPath.getName.endsWith(".parquet")
+    found
   }
 
   /** Append a range-delete marker transaction (reference `CreateTx::delete`,
