@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native nearest-centroid assignment: maps an `array<bigint>` vector to
   * the cell id of its highest-cosine centroid (guarded cosine rounded to
@@ -136,6 +136,73 @@ case class IvfCells(child: Expression, cents: Array[Long],
       Integer.valueOf(java.util.Arrays.hashCode(norms)))
 }
 
+/** [[IvfCell]]'s best-cosine sibling: the rounded guarded cosine to the
+  * assigned cell, `array_max` over the composed per-centroid array
+  * ([[graft.ops.Similarity.ivfCellCoss]]) in the same arithmetic as
+  * [[IvfCell.cosArray]]. With [[IvfCell]] it replaces the literal
+  * guarded-cosine array whenever a caller needs both the cell and its
+  * cosine (SemDeDup's keep rule).
+  */
+case class IvfBestCos(child: Expression, cents: Array[Long],
+                      norms: Array[Long], nCells: Int, dim: Int)
+    extends UnaryExpression {
+
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = DoubleType
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(LongType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"requires array<bigint> input, got $other")
+    }
+
+  override def nullSafeEval(v: Any): Any =
+    IvfCell.bestCos(v.asInstanceOf[ArrayData], cents, norms, nCells, dim)
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    val cRef = ctx.addReferenceObj("ivfCents", cents, "long[]")
+    val nRef = ctx.addReferenceObj("ivfNorms", norms, "long[]")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.IvfCell.bestCos($c, $cRef, $nRef, $nCells, $dim)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): IvfBestCos =
+    copy(child = newChild)
+
+  override def prettyName: String = "ivf_best_cos"
+
+  override def equals(other: Any): Boolean = other match {
+    case that: IvfBestCos =>
+      child == that.child && nCells == that.nCells && dim == that.dim &&
+        java.util.Arrays.equals(cents, that.cents) &&
+        java.util.Arrays.equals(norms, that.norms)
+    case _ => false
+  }
+
+  override def hashCode(): Int =
+    java.util.Objects.hash(child, Integer.valueOf(nCells),
+      Integer.valueOf(dim),
+      Integer.valueOf(java.util.Arrays.hashCode(cents)),
+      Integer.valueOf(java.util.Arrays.hashCode(norms)))
+}
+
+object IvfBestCos {
+  def apply(v: Column, cents: Array[Array[Long]]): Column = {
+    val dim = cents(0).length
+    val flat = cents.flatten
+    val norms = cents.map(cv => cv.map(x => x * x).sum)
+    ColumnBridge.column(IvfBestCos(ColumnBridge.expression(v), flat, norms,
+      cents.length, dim))
+  }
+}
+
 object IvfCells {
   def apply(v: Column, cents: Array[Array[Long]], nProbe: Int): Column = {
     val dim = cents(0).length
@@ -181,27 +248,57 @@ object IvfCell {
     */
   def cell(v: ArrayData, cents: Array[Long], norms: Array[Long],
            nCells: Int, dim: Int): Long = {
-    var vn = 0L
-    var i = 0
     val n = math.min(v.numElements(), dim)
-    while (i < n) { val x = v.getLong(i); vn += x * x; i += 1 }
+    val vn = sqNorm(v, n)
     var best = Double.NegativeInfinity
     var bestC = 0L
     var c = 0
     while (c < nCells) {
-      val off = c * dim
-      var dot = 0L
-      i = 0
-      while (i < n) { dot += v.getLong(i) * cents(off + i); i += 1 }
-      val cos =
-        if (vn == 0L || norms(c) == 0L) -1.0
-        else dot.toDouble / (math.sqrt(vn.toDouble) * math.sqrt(norms(c).toDouble))
-      val r = java.math.BigDecimal.valueOf(cos)
-        .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
+      val r = roundedCos(v, n, vn, cents, norms, c, dim)
       if (r > best) { best = r; bestC = c } // strict >: ties keep lower c
       c += 1
     }
     bestC
+  }
+
+  /** The best rounded guarded cosine over all cells — the value at
+    * [[cell]]'s choice, `array_max` of the composed per-centroid array —
+    * the kernel behind [[IvfBestCos]].
+    */
+  def bestCos(v: ArrayData, cents: Array[Long], norms: Array[Long],
+              nCells: Int, dim: Int): Double = {
+    val n = math.min(v.numElements(), dim)
+    val vn = sqNorm(v, n)
+    var best = Double.NegativeInfinity
+    var c = 0
+    while (c < nCells) {
+      best = math.max(best, roundedCos(v, n, vn, cents, norms, c, dim))
+      c += 1
+    }
+    best
+  }
+
+  private def sqNorm(v: ArrayData, n: Int): Long = {
+    var vn = 0L
+    var i = 0
+    while (i < n) { val x = v.getLong(i); vn += x * x; i += 1 }
+    vn
+  }
+
+  /** Cell `c`'s guarded cosine rounded to 9 places, over the first `n`
+    * components of `v` (square norm `vn`).
+    */
+  private def roundedCos(v: ArrayData, n: Int, vn: Long, cents: Array[Long],
+                         norms: Array[Long], c: Int, dim: Int): Double = {
+    val off = c * dim
+    var dot = 0L
+    var i = 0
+    while (i < n) { dot += v.getLong(i) * cents(off + i); i += 1 }
+    val cos =
+      if (vn == 0L || norms(c) == 0L) -1.0
+      else dot.toDouble / (math.sqrt(vn.toDouble) * math.sqrt(norms(c).toDouble))
+    java.math.BigDecimal.valueOf(cos)
+      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
   }
 
   /** The per-centroid rounded guarded cosines behind [[cell]] — the SAME

@@ -18,12 +18,15 @@ import org.apache.spark.sql.functions._
   * rounding absorbs sub-ULP drift while integer sums stay exact, so the
   * driver row hash-matches DuckDB.
   *
-  * Plan shape at 100 TB: postings and doc lengths come from the corpus
-  * scan (today three tokenizing passes over it, see the note at `dl` in
-  * [[bm25TopK]]); the query terms broadcast into the postings (never the
-  * reverse); per-term document frequencies aggregate over the MATCHED
-  * postings only and broadcast back; the only wide operations are the
-  * postings aggregation and the per-query top-k window.
+  * Plan shape at 100 TB: one tokenizing pass over the corpus
+  * ([[graft.functions.TermCounts]]) emits per-document term counts,
+  * hash-partitioned by `doc_id` once into postings that carry their
+  * document length, materialized once for every consumer (see the note
+  * in [[bm25TopK]]); the query terms broadcast into the postings (never
+  * the reverse); per-term document frequencies aggregate over the
+  * MATCHED postings only and broadcast back; the only wide operations
+  * are the `doc_id` exchange, the n_t and corpus-stat aggregations and
+  * the per-query top-k window.
   */
 object Retrieval {
   val K1 = 1.2
@@ -32,49 +35,55 @@ object Retrieval {
 
   /** Top-k BM25 documents per query. `queries` carries (query_id: Long,
     * qtext: String); terms tokenize like the corpus (single-space
-    * split).
+    * split). Rows sharing a `doc_id` are one document; a null `doc_id`
+    * is a document of the corpus statistics (`n_docs`, avgdl, `n_t`)
+    * that is never scored.
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queries: DataFrame, k: Int): DataFrame = {
-    val toks = graft.core.Graft.rebalance(docs)
-      .select(col(idCol).cast("long").as("doc_id"),
-        explode(split(col(textCol), " ")).as("term"))
-      .filter(length(col("term")) > 0)
-    val postings = toks.groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("f"))
-    // doc length = Σ f over the doc's postings — the same number as
-    // counting the token stream. Deriving it from `postings` does NOT
-    // make every branch share one (doc_id, term) exchange: AQE's final
-    // plan (sf0.01 and the benchmark corpus) tokenizes the corpus THREE
-    // times:
-    //  - scoring: its postings exchange carries the `isnotnull(doc_id)`
-    //    filter inferred from the dl join, so no other branch's
-    //    exchange canonicalizes equal to it;
-    //  - termDf: only distinct (doc_id, term) pairs reach it, so column
-    //    pruning turns its aggregate into a count-less distinct, a
-    //    different exchange;
-    //  - corpus stats: a third explode and (doc_id, term) exchange
-    //    (only the round-robin scan below it is reused).
-    // The dl join side is the one ReusedExchange (of scoring's). A
-    // one-exchange plan is open on ROADMAP (BM25 tokenize once).
-    val dl = postings.groupBy("doc_id").agg(sum(col("f")).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val qterms = queries
+    // the corpus is tokenized ONCE: per-row (term, f) partial counts,
+    // hash-partitioned by doc_id once, merged into postings with the
+    // document length beside every posting, and pinned, so postings,
+    // corpus stats, n_t and scoring all read one materialization. An
+    // explicit repartition(doc_id) of the token stream alone, unpinned,
+    // still tokenizes twice: the `isnotnull(doc_id)` inferred from the
+    // scoring side's doc_id join is pushed below the exchange and splits
+    // it from the other branches' (15 jobs on the benchmark corpus, two
+    // Generate nodes, one over a doc_id-filtered scan). The partition
+    // count is fixed, so AQE does not coalesce the exchange into one
+    // serial task.
+    val nParts = docs.sparkSession.sessionState.conf.numShufflePartitions
+    val postings = graft.core.Graft.pin(
+      graft.core.Graft.rebalance(docs)
+        .select(col(idCol).cast("long").as("doc_id"),
+          inline(graft.functions.TermCounts(col(textCol))))
+        .repartition(nParts, col("doc_id"))
+        .groupBy("doc_id", "term").agg(sum(col("f")).as("f"))
+        .withColumn("dl", sum(col("f")).over(Window.partitionBy("doc_id"))))
+    val stats = postings.groupBy("doc_id").agg(max(col("dl")).as("dl"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+    // the query set is broadcast into the postings, so it is small by
+    // contract: one partition holds it and its term distinct plans no
+    // exchange
+    val qterms = queries.coalesce(1)
       .select(col("query_id"), explode(split(col("qtext"), " ")).as("term"))
       .distinct()
-    val termDf = postings
-      .join(broadcast(qterms.select("term").distinct()), Seq("term"))
-      .groupBy("term").agg(count(lit(1)).as("nt"))
+    // n_t per (query, term): each distinct pair meets every posting of
+    // its term once, so the count is the term's document frequency and
+    // the query-term broadcast needs no second, term-only distinct
+    val termDf = postings.join(broadcast(qterms), Seq("term"))
+      .groupBy("query_id", "term").agg(count(lit(1)).as("nt"))
     val avgdl = col("sum_dl").cast("double") / col("n_docs")
     val idf = log(
       (col("n_docs") - col("nt") + 0.5) / (col("nt") + 0.5) + 1.0)
     val tfn = col("f") * (K1 + 1.0) /
       (col("f") + (col("dl") / avgdl * B + (1.0 - B)) * K1)
     val contrib = round(idf * tfn * MICRO.toDouble, 0).cast("long")
-    val scored = postings
+    // postings stay hash-partitioned by doc_id: the (query, doc) sum is
+    // partition-local
+    val scored = postings.filter(col("doc_id").isNotNull)
       .join(broadcast(qterms), Seq("term"))
-      .join(broadcast(termDf), Seq("term"))
-      .join(dl, Seq("doc_id"))
+      .join(broadcast(termDf), Seq("query_id", "term"))
       .crossJoin(broadcast(stats))
       .groupBy("query_id", "doc_id")
       .agg(sum(contrib).as("score_micro"))

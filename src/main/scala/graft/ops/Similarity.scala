@@ -23,9 +23,12 @@ object Similarity {
 
   val SCALE = 1000000L // 1e6: float32 mantissa fits losslessly after round
 
-  /** Float vector → exact integer vector. */
-  def veci(emb: Column): Column =
-    transform(emb, x => round(x.cast("double") * SCALE).cast("long"))
+  /** Float vector → exact integer vector: each element
+    * `CAST(round(CAST(x AS DOUBLE) * SCALE) AS BIGINT)`, computed by the
+    * native [[graft.functions.VecQuant]] kernel — one plain expression,
+    * so repeated uses over one row share a single evaluation.
+    */
+  def veci(emb: Column): Column = graft.functions.VecQuant(emb)
 
   def sqlVeci(embExpr: String): String =
     s"list_transform($embExpr, x -> CAST(round(CAST(x AS DOUBLE) * $SCALE) AS BIGINT))"
@@ -755,10 +758,11 @@ object Similarity {
     * cluster's outer shell), ties to the lower id.
     *
     * The Spark shape, stage by stage: centroid assignment is a
-    * broadcast-literal map-only projection ([[ivfCellCoss]], the
-    * deterministic first-N quantizer of the [[ivfKnn]] family); the pair
-    * space is bounded by cells, never all-pairs ([[nearDupPairs]] with
-    * the cell as the bucket); duplicate groups are
+    * map-only projection of two native kernels over one quantized vector
+    * ([[ivfCellLit]] for the cell, [[graft.functions.IvfBestCos]] for its
+    * cosine; the deterministic first-N quantizer of the [[ivfKnn]]
+    * family); the pair space is bounded by cells, never all-pairs
+    * ([[nearDupPairs]] with the cell as the bucket); duplicate groups are
     * [[Dedup.connectedComponents]] over pairs that leave the within-cell
     * join partitioned by cell, so no node straddles partitions and CC is
     * one partition-local contraction with no label-propagation round; the
@@ -783,12 +787,9 @@ object Similarity {
       df.orderBy(col(idCol)).limit(nCells)
         .select(veci(col(embCol)).as("cv")).collect()
         .map(_.getSeq[Long](0).toArray))
-    val pre = df
-      .select(col(idCol).as("id"), ivfCellCoss(veci(col(embCol)), cents).as("coss"))
-      .select(col("id"),
-        (array_position(col("coss"), array_max(col("coss"))) - 1)
-          .cast("long").as("cell"),
-        array_max(col("coss")).as("c2c"))
+    val v = veci(col(embCol))
+    val pre = df.select(col(idCol).as("id"), ivfCellLit(v, cents).as("cell"),
+      graft.functions.IvfBestCos(v, cents).as("c2c"))
     val pairs = nearDupPairs(df, idCol, embCol,
       ivfCellLit(veci(col(embCol)), cents), tau)
     val labeled = Dedup.connectedComponents(pairs).join(pre, Seq("id"))

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the codegen path of the native kernels. Round-2 regression: a
@@ -34,6 +35,12 @@ class CodegenSpec extends AnyFunSuite {
       "IvfCell.cell static forwarder missing — codegen will fall back")
     assert(statics(classOf[AdcDist]).contains("dist"),
       "AdcDist.dist static forwarder missing — codegen will fall back")
+    assert(statics(classOf[IvfCell]).contains("bestCos"),
+      "IvfCell.bestCos static forwarder missing — codegen will fall back")
+    assert(statics(classOf[VecQuant]).contains("quantizeArray"),
+      "VecQuant.quantizeArray static forwarder missing — codegen will fall back")
+    assert(statics(classOf[TermCounts]).contains("counts"),
+      "TermCounts.counts static forwarder missing — codegen will fall back")
     // Document the trap itself: `eval` can never be a forwarder here.
     assert(!statics(classOf[Md5Prefix60]).contains("eval"))
     assert(!statics(classOf[SimHash32]).contains("eval"))
@@ -92,5 +99,32 @@ class CodegenSpec extends AnyFunSuite {
     assert(row.getLong(0) == 0L, "vector must land on its own centroid")
     assert(row.getLong(1) == distE.eval(InternalRow.empty).asInstanceOf[Long])
     assert(row.getLong(1) == 50L)
+  }
+
+  test("VecQuant, IvfBestCos and TermCounts generated code agrees with eval") {
+    val floats = Literal.create(Seq(1.5f, null, -2.0e-7f, 0.0f), ArrayType(FloatType))
+    val doubles = Literal.create(Seq(2.5e-6, -1.0), ArrayType(DoubleType))
+    val vec = Literal.create(Seq(1L, 2L, 3L, 4L), ArrayType(LongType))
+    val exprs: Seq[Expression] = Seq(
+      VecQuant(floats, ansi = true), VecQuant(doubles, ansi = true),
+      IvfBestCos(vec, Array(1L, 2L, 3L, 4L, 4L, -3L, 2L, -1L), Array(30L, 30L),
+        nCells = 2, dim = 4),
+      TermCounts(Literal(" spark  merge spark ")))
+    val proj = GenerateUnsafeProjection.generate(exprs)
+    val row = proj(InternalRow.empty)
+    def longs(a: ArrayData): Seq[Any] =
+      (0 until a.numElements()).map(i => if (a.isNullAt(i)) null else a.getLong(i))
+    def interp(i: Int) = exprs(i).eval(InternalRow.empty)
+    assert(longs(row.getArray(0)) == longs(interp(0).asInstanceOf[ArrayData]))
+    assert(longs(row.getArray(0)) == Seq(1500000L, null, 0L, 0L))
+    assert(longs(row.getArray(1)) == longs(interp(1).asInstanceOf[ArrayData]))
+    assert(longs(row.getArray(1)) == Seq(3L, -1000000L))
+    assert(row.getDouble(2) == interp(2).asInstanceOf[Double])
+    assert(row.getDouble(2) == 1.0, "the vector is its own first centroid")
+    def terms(a: ArrayData): Seq[(String, Long)] = (0 until a.numElements()).map { i =>
+      val s = a.getStruct(i, 2); (s.getUTF8String(0).toString, s.getLong(1))
+    }
+    assert(terms(row.getArray(3)) == terms(interp(3).asInstanceOf[ArrayData]))
+    assert(terms(row.getArray(3)) == Seq("spark" -> 2L, "merge" -> 1L))
   }
 }

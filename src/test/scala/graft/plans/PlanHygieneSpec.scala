@@ -9,6 +9,80 @@ import graft.{SparkSpec, SparkEntry}
   */
 class PlanHygieneSpec extends SparkSpec {
 
+  /** What a body ran: its jobs, its SQL executions and the query
+    * executions the session reported for it.
+    */
+  private case class Ran(jobs: Int, executions: Int,
+                         plans: Seq[org.apache.spark.sql.execution.QueryExecution])
+
+  /** [[Ran]] of `body`, counted in a job group of its own and drained
+    * with a marker query after it: the listener bus delivers events in
+    * order, so once the marker's end arrives every earlier job start and
+    * query end has too. Every materialization of an operator is one SQL
+    * execution.
+    */
+  private def ran(body: => Unit): Ran = {
+    val group = s"planrun-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          executions.add(props.flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id")))
+            .getOrElse(s"job-${j.jobId}"))
+        }
+      }
+    }
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) drained.countDown()
+        else plans.add(qe)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
+    try {
+      spark.sparkContext.setJobGroup(group, "plan hygiene run")
+      body
+      spark.sparkContext.clearJobGroup()
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    import scala.jdk.CollectionConverters._
+    Ran(jobs.get(), executions.size, plans.asScala.toSeq)
+  }
+
+  /** Every node an executed plan runs, through adaptive query stages and
+    * subqueries (a reused exchange runs nothing of its own).
+    */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution._
+    val inner = p match {
+      case a: adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: adaptive.QueryStageExec        => Seq(q.plan)
+      case _: exchange.ReusedExchangeExec    => Nil
+      case other                             => other.children ++ other.subqueries
+    }
+    p +: inner.flatMap(nodes)
+  }
+
   test("no CartesianProduct in any driver query plan") {
     val sfDir = "/root/testdata/sf0.001"
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
@@ -128,49 +202,13 @@ class PlanHygieneSpec extends SparkSpec {
   test("connected components: cell-partitioned pairs run only the " +
       "contraction, a path spread round-robin runs rounds") {
     import spark.implicits._
-    // (jobs, SQL executions) of `body`, counted in a job group of its own
-    // and drained with a marker job as in the point-lookup guard; every
-    // materialization of the operator is one SQL execution
-    def jobsOf(body: => Unit): (Int, Int) = {
-      val group = s"plancc-${java.util.UUID.randomUUID()}"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val props = Option(j.properties)
-          props.map(_.getProperty("spark.jobGroup.id")) match {
-            case Some(`group`) =>
-              jobs.incrementAndGet()
-              executions.add(props.flatMap(p =>
-                Option(p.getProperty("spark.sql.execution.id")))
-                .getOrElse(s"job-${j.jobId}"))
-            case Some("plancc-marker") => drained.countDown()
-            case _                     =>
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.sparkContext.setJobGroup(group, "connected components")
-        body
-        spark.sparkContext.setJobGroup("plancc-marker", "drain")
-        spark.range(1).count()
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      (jobs.get(), executions.size)
-    }
     // the semDedupKeepset shape: pairs formed within a cell and
     // hash-partitioned by it; each of the 16 cells is a 25-node path,
     // which the round loop alone would need several rounds for
     val cellPairs = (0L until 384L).map(i => (i, i + 16, i % 16))
       .toDF("id1", "id2", "cell").repartition(8, $"cell").localCheckpoint()
     var cellComp = Map.empty[Long, Long]
-    val (cellJobs, cellRuns) = jobsOf {
+    val Ran(cellJobs, cellRuns, _) = ran {
       cellComp = graft.ops.Dedup.connectedComponents(cellPairs)
         .as[(Long, Long)].collect().toMap
     }
@@ -181,7 +219,7 @@ class PlanHygieneSpec extends SparkSpec {
     val pathPairs = (0L until 40L).map(i => (i, i + 1)).toDF("id1", "id2")
       .repartition(8).localCheckpoint()
     var pathComp = Map.empty[Long, Long]
-    val (pathJobs, pathRuns) = jobsOf {
+    val Ran(pathJobs, pathRuns, _) = ran {
       pathComp = graft.ops.Dedup.connectedComponents(pathPairs)
         .as[(Long, Long)].collect().toMap
     }
@@ -371,5 +409,57 @@ class PlanHygieneSpec extends SparkSpec {
     val plan = proj.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"projection must be scan-speed (basis rides as literals):\n${plan.take(2000)}")
+  }
+
+  test("ret_bm25 tokenizes the corpus once, in 16 jobs or fewer") {
+    var rows = 0
+    val run = ran {
+      rows = SparkEntry.queries("ret_bm25")(spark, "/root/testdata/sf0.001")
+        .collect().length
+    }
+    assert(rows > 0)
+    // Generate nodes reading the documents scan, over every execution of
+    // the query (the postings pin and the scoring query): the corpus is
+    // tokenized by exactly one of them
+    val tokenizers = run.plans.flatMap(qe => nodes(qe.executedPlan)).collect {
+      case g: org.apache.spark.sql.execution.GenerateExec
+          if nodes(g).exists(n => n.nodeName.startsWith("Scan") &&
+            n.toString.contains("documents")) => g
+    }
+    assert(tokenizers.size == 1, s"${tokenizers.size} tokenizations:\n" +
+      run.plans.map(_.executedPlan.toString.take(3000)).mkString("\n---\n"))
+    assert(run.jobs <= 16, s"ret_bm25 ran ${run.jobs} jobs")
+  }
+
+  test("dedup_semantic runs no higher-order function, projections compile " +
+      "in whole-stage codegen") {
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    val run = ran {
+      SparkEntry.queries("dedup_semantic")(spark, "/root/testdata/sf0.001")
+        .collect()
+    }
+    val all = run.plans.flatMap(qe => nodes(qe.executedPlan))
+    assert(all.nonEmpty)
+    val hofs = all.flatMap(_.expressions.flatMap(_.collect {
+      case h: org.apache.spark.sql.catalyst.expressions.HigherOrderFunction => h
+    }))
+    assert(hofs.isEmpty, s"higher-order functions in dedup_semantic: $hofs")
+    val wsc = all.collect { case w: WholeStageCodegenExec => w }
+    val inWsc = wsc.flatMap(w => nodes(w.child)).collect { case p: ProjectExec => p }.toSet
+    val projects = all.collect { case p: ProjectExec => p }
+    assert(projects.nonEmpty && projects.forall(inWsc.contains),
+      s"projections outside whole-stage codegen: ${projects.filterNot(inWsc.contains)}")
+    // whole-stage codegen falls back to interpreted evaluation at run time
+    // when a generated method exceeds the huge-method limit; compile each
+    // stage the way it does
+    val limit = spark.sessionState.conf.hugeMethodLimit
+    wsc.foreach { w =>
+      val (_, code) = w.doCodeGen()
+      val (_, stats) = org.apache.spark.sql.catalyst.expressions.codegen
+        .CodeGenerator.compile(code)
+      assert(stats.maxMethodCodeSize <= limit,
+        s"stage ${w.codegenStageId} method of ${stats.maxMethodCodeSize} bytes " +
+          s"falls back:\n${w.child.toString.take(1500)}")
+    }
   }
 }
