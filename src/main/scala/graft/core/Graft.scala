@@ -113,160 +113,45 @@ object Graft {
     else df
   }
 
-  /** Materialize-once-reuse-many pivot for the ingest hot paths (the
-    * quartet pre-aggregate, the incremental-dedup probe, fold and
-    * migration bases): the frame is computed eagerly ONCE and reused by
-    * several downstream branches/actions without re-running its
-    * lineage. The storage mode is the `spark.graft.reuse.mode` session
-    * conf — the preemption-tolerance knob:
+  /** The engine's one materialize-once rule: the frame is computed
+    * eagerly ONCE and its lineage cut, so several downstream branches or
+    * actions (the quartet pre-aggregate, the incremental-dedup probe and
+    * the register tx derived from it, fold and migration bases) and every
+    * round of an iterative loop (connected components, BPE merges) reuse
+    * it without re-running or nesting its plan. Durability follows the
+    * context's checkpoint dir ([[pinsReliably]]):
     *
-    *  - `local` (default): `localCheckpoint(eager)` — blocks pinned on
-    *    executors, lineage CUT. The fastest mode and the measured
-    *    default for dedicated clusters; the cost is availability on
-    *    spot/preemptible fleets, where losing an executor mid-batch
-    *    fails the whole micro-batch (correctness survives — the
-    *    exactly-once batch cursor makes the retry idempotent — but the
-    *    batch is re-paid).
-    *  - `cache`: persist(MEMORY_AND_DISK) + eager materialize, lineage
-    *    KEPT — an executor loss recomputes only the lost partitions
-    *    from the (immutable, snapshot-pinned) inputs instead of failing
-    *    the batch: the spot-cluster mode. `Dataset.persist` registers
-    *    in Spark's CacheManager, which holds entries until an explicit
-    *    unpersist — the ingest paths run under [[pinScope]], which
-    *    releases their pins at consumption end; unscoped pins are
-    *    tracked in a bounded FIFO whose oldest entry is unpersisted
-    *    once more than [[MaxLivePins]] are in flight (a pin is consumed
-    *    within its own micro-batch; by the time [[MaxLivePins]] newer
-    *    pins exist it is long done). Without scope or bound, a
-    *    long-running streaming ingest would grow cached blocks and
-    *    CacheManager entries linearly with batch count.
-    *  - `reliable`: `checkpoint(eager)` into
-    *    `sparkContext.checkpointDir` (must be set) — lineage cut AND
-    *    executor-loss-tolerant, at one distributed filesystem write per
-    *    pin: for fleets where recompute is pricier than the write. Set
-    *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` so the
-    *    ContextCleaner removes checkpoint files of dropped plans;
-    *    otherwise sweep the checkpoint dir on a cadence.
+    *  - no checkpoint dir (the default): `localCheckpoint(eager)`, blocks
+    *    held by the executors. The fastest form; losing an executor that
+    *    holds them fails the consuming action (a streaming batch's
+    *    exactly-once cursor makes its retry idempotent, but the batch is
+    *    re-paid).
+    *  - `sparkContext.setCheckpointDir` set: `checkpoint(eager)` into it,
+    *    surviving executor loss at one distributed-filesystem write per
+    *    pin. Set `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+    *    so the ContextCleaner removes the files of dropped plans, or sweep
+    *    the dir on a cadence.
     *
-    * All three modes are eager, so every downstream action sees one
-    * consistent materialization (the register tx can never re-plan the
-    * probe it was derived from).
+    * So a session with a checkpoint dir checkpoints EVERY pin reliably,
+    * ingest pins included, not only loop rounds: executor-loss tolerance
+    * is the one switch Spark already owns. The former
+    * `spark.graft.reuse.mode` key is retired and refuses loudly when set.
     */
-  def pin(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.reuse.mode", "local") match {
-      case "local" => df.localCheckpoint(true)
-      case "cache" =>
-        val p = df.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        livePins.synchronized {
-          livePins.addLast(p)
-          while (livePins.size > MaxLivePins) {
-            val old = livePins.removeFirst()
-            // eviction must never fail a LATER pin: a frame owned by a
-            // since-stopped session (embedded apps, test JVMs) throws
-            // from unpersist — drop it silently, its blocks died with
-            // the context
-            try { old.unpersist(false); () }
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
-        // a pin created under an open [[pinScope]] is released when the
-        // scope closes — the SCOPED release is the mechanism; the FIFO
-        // above is only the backstop for unscoped (query-shaped) pins
-        pinScopes.get.headOption.foreach(_ += p)
-        p
-      case "reliable" => df.checkpoint(true)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.reuse.mode must be local|cache|reliable, got '$other'")
-    }
-
-  /** Explicitly release one cache-mode pin: unpersist its blocks and
-    * drop it from the live-pin FIFO. A no-op for frames [[pin]] did not
-    * cache (`local`/`reliable` modes, or already evicted/released) —
-    * local-checkpointed frames must NOT be unpersisted (their blocks ARE
-    * the data once lineage is cut), and the identity check against the
-    * FIFO guarantees only cache-mode pins are ever touched. Releasing in
-    * cache mode is always safe: lineage is kept, so a late consumer of a
-    * released frame deterministically recomputes from snapshot-pinned
-    * inputs rather than failing.
-    */
-  def release(df: DataFrame): Unit = {
-    val owned = livePins.synchronized {
-      val it = livePins.iterator()
-      var found = false
-      while (!found && it.hasNext) if (it.next() eq df) {
-        it.remove(); found = true
-      }
-      found
-    }
-    if (owned)
-      try { df.unpersist(false); () }
-      catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  /** Scoped pin lifetime: every cache-mode [[pin]] created on this
-    * thread inside `body` is [[release]]d when `body` returns — the
-    * try/finally-at-consumption-end the ingest paths need, so a
-    * long-running streaming sink's pins are freed the moment their
-    * micro-batch is done instead of waiting for [[MaxLivePins]] FIFO
-    * eviction (which, with > ~MaxLivePins/2 co-resident sinks, could
-    * evict an IN-FLIGHT pin early and silently re-pay its lineage on
-    * the unlucky batch — exactly the fleet `cache` mode targets).
-    * Scopes nest (inner pins release at the inner boundary); pins whose
-    * frame outlives the creating function (query-shaped operators that
-    * RETURN a plan over the pin) must stay unscoped and rely on the
-    * backstop. `local`/`reliable` pins pass through untouched.
-    */
-  def pinScope[A](body: => A): A = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    pinScopes.set(buf :: pinScopes.get)
-    try body
-    finally {
-      pinScopes.set(pinScopes.get.tail)
-      buf.foreach(release)
-    }
-  }
-
-  private val pinScopes =
-    new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[DataFrame]]] {
-      override def initialValue
-          : List[scala.collection.mutable.ArrayBuffer[DataFrame]] = Nil
-    }
-
-  /** BACKSTOP bound on cache-mode pins kept persisted at once — the
-    * mechanism for ingest-path pins is [[pinScope]]'s release at
-    * consumption end; this FIFO only catches unscoped (query-shaped)
-    * pins and scope leaks. It is global and evicts by creation order,
-    * so it is sized for the JVM's CONCURRENT unscoped-pin population: a
-    * micro-batch holds at most ~2 pins, so [[MaxLivePins]] covers a
-    * dozen-plus co-resident sinks even if every one ran unscoped — and
-    * early eviction degrades to a lineage recompute over
-    * snapshot-pinned (immutable, so deterministic) inputs, never to a
-    * wrong answer. Small enough that a year of batches cannot grow the
-    * CacheManager.
-    */
-  val MaxLivePins = 32
-
-  private val livePins = new java.util.ArrayDeque[DataFrame]()
-
-  /** Per-round materialization for ITERATIVE loops (connected
-    * components' pointer-jumping rounds, BPE merge rounds): these must
-    * CUT lineage every round — kept lineage would nest the logical plan
-    * once per iteration, which is exactly what the materialization
-    * exists to prevent — so [[pin]]'s `cache` mode (lineage kept) does
-    * not apply here. Reliable checkpoint when the context has a
-    * checkpoint dir (cluster: rounds survive executor loss),
-    * localCheckpoint otherwise. Consequence for spot fleets: loop-shaped
-    * operators keep preemption tolerance ONLY via a checkpoint dir —
-    * `reuse.mode=cache` cannot help a loop, so set
-    * `sparkContext.setCheckpointDir` on preemptible clusters that run
-    * CC/BPE at scale.
-    */
-  def pinLoop(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(true)
+  def pin(df: DataFrame): DataFrame = {
+    if (df.sparkSession.conf.getOption(RetiredReuseMode).isDefined)
+      throw new IllegalArgumentException(s"$RetiredReuseMode is retired: " +
+        "pins checkpoint reliably when sparkContext.setCheckpointDir is " +
+        "set and locally otherwise; unset the key")
+    if (pinsReliably(df.sparkSession)) df.checkpoint(true)
     else df.localCheckpoint(true)
+  }
+
+  /** Whether [[pin]] writes reliable checkpoints: the context has a
+    * checkpoint dir. */
+  def pinsReliably(spark: SparkSession): Boolean =
+    spark.sparkContext.getCheckpointDir.isDefined
+
+  private val RetiredReuseMode = "spark.graft.reuse.mode"
 
   /** Map a timestamp-typed column onto the engine's canonical Long
     * epoch-nanos, leaving an already-Long column untouched. The session

@@ -547,7 +547,7 @@ object Dedup {
     * rounds (2-hop doubling, the Hash-to-Min family of CC algorithms)
     * rather than O(diameter). Every round is three hash shuffles of the
     * slim (id, comp) relation — never the document payloads — and each
-    * round's result is materialized ([[graft.core.Graft.pinLoop]]) so the
+    * round's result is materialized ([[graft.core.Graft.pin]]) so the
     * plan stays O(1) deep instead of nesting every previous iteration.
     * The driver only reads each materialization's metrics; no data is
     * collected.
@@ -575,25 +575,24 @@ object Dedup {
         .getOrElse(java.math.BigDecimal.ZERO)
     // Observation metrics are ACCUMULATOR-based: sound when the
     // materialization executes the lineage exactly once (localCheckpoint
-    // — the default), but a RELIABLE checkpoint (dir set; pinLoop's
-    // cluster mode) re-executes the lineage in the checkpoint write job
-    // and double-counts the sum, while task retries could skew it
+    // — the default), but a RELIABLE checkpoint (checkpoint dir set, see
+    // Graft.pin) re-executes the lineage in the checkpoint write job and
+    // double-counts the sum, while task retries could skew it
     // arbitrarily — against the previous pot that could declare
-    // convergence early (2·S1 == S0) or late. In reliable mode the metrics
-    // are therefore one exact aggregate over the checkpointed rows (noise
-    // next to the DFS write that mode pays per materialization), so the
-    // straddler count the no-round exit tests is exact there too.
-    val reliable =
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
+    // convergence early (2·S1 == S0) or late. Under reliable pins the
+    // metrics are therefore one exact aggregate over the checkpointed rows
+    // (noise next to the DFS write each pin then pays), so the straddler
+    // count the no-round exit tests is exact there too.
+    val reliable = graft.core.Graft.pinsReliably(pairs.sparkSession)
     def materialize(df: DataFrame, metrics: Column*)
         : (DataFrame, Map[String, Any]) =
       if (reliable) {
-        val pinned = graft.core.Graft.pinLoop(df)
+        val pinned = graft.core.Graft.pin(df)
         val row = pinned.agg(metrics.head, metrics.tail: _*).head()
         (pinned, row.getValuesMap[Any](row.schema.fieldNames.toSeq))
       } else {
         val obs = new Observation(s"cc-${java.util.UUID.randomUUID()}")
-        val pinned = graft.core.Graft.pinLoop(
+        val pinned = graft.core.Graft.pin(
           df.observe(obs, metrics.head, metrics.tail: _*))
         (pinned, obs.get)
       }

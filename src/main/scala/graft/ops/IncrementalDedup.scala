@@ -63,9 +63,7 @@ object IncrementalDedup {
       return hashed(batch, idCol, textCol).drop("_h")
     // pinned: the hashed batch feeds THREE consumers (the distinct-count
     // job, the bloom build, the anti-join) — unpinned, the batch was
-    // hashed and re-scanned once per consumer (guide §5). Query-shaped
-    // (the returned plan reads the pin), so the pin stays unscoped and
-    // relies on the MaxLivePins backstop, like the other probe pins.
+    // hashed and re-scanned once per consumer (guide §5).
     val b = graft.core.Graft.pin(hashed(batch, idCol, textCol))
     val seen = snap.read("h/%")
     // a warehouse can hold the near store (or other data) without one
@@ -104,13 +102,7 @@ object IncrementalDedup {
                   onFresh: DataFrame => Unit = _ => (),
                   cursor: Option[(String, Long)] = None,
                   sinkProps: Map[String, String] = Map.empty,
-                  fuse: Boolean = false): DataFrame =
-    // pinScope: the probe pin is consumed in-call (forward + register)
-    // and released at return. A cache-mode caller that re-reads the
-    // RETURNED frame recomputes it from the snapshot-pinned store —
-    // deterministic (the register tx is already committed and invisible
-    // to the probe's snapshot), just unmaterialized.
-    graft.core.Graft.pinScope {
+                  fuse: Boolean = false): DataFrame = {
     val fresh = dropSeenBefore(db, batch, idCol, textCol)
       .transform(graft.core.Graft.pin) // the register tx must not re-plan the probe
     onFresh(fresh)
@@ -303,9 +295,7 @@ object IncrementalDedup {
                       onFresh: DataFrame => Unit = _ => (),
                       cursor: Option[(String, Long)] = None,
                       sinkProps: Map[String, String] = Map.empty,
-                      fuse: Boolean = false): DataFrame =
-    // pinScope: same consumed-in-call contract as [[ingestBatch]]
-    graft.core.Graft.pinScope {
+                      fuse: Boolean = false): DataFrame = {
     val fresh = dropNearSeenBefore(db, batch, idCol, textCol, minAgree)
       .transform(graft.core.Graft.pin) // the register tx must not re-plan the probe
     onFresh(fresh)

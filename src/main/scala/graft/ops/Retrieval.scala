@@ -159,8 +159,7 @@ object Retrieval {
                          textCol: String, v2: Boolean,
                          cursor: Option[(String, Long)] = None,
                          sinkProps: Map[String, String] = Map.empty,
-                         fuse: Boolean = false): Long =
-      graft.core.Graft.pinScope {
+                         fuse: Boolean = false): Long = {
     val toks = graft.core.Graft.rebalance(docs)
       .select(col(idCol).cast("long").as("doc_id"),
         explode(split(col(textCol), " ")).as("term"))
@@ -195,13 +194,12 @@ object Retrieval {
             col("sum_dl"))
         body.unionByName(stats, allowMissingColumns = true)
       }
-    // materialize the batch rows ONCE (Graft.pin, scope-released after
-    // the commit): the write's range exchange SAMPLES its input before
-    // the write job runs it — unpinned, the whole tokenize → aggregate →
-    // join pipeline executed twice per transaction (guide §5: cache when
-    // an intermediate is consumed twice and recomputing costs more than
-    // holding it — here the pinned frame is exactly the batch's
-    // index-rows, bytes the write materializes anyway)
+    // materialize the batch rows ONCE (Graft.pin): the write's range exchange
+    // SAMPLES its input before the write job runs it — unpinned, the whole
+    // tokenize → aggregate → join pipeline executed twice per transaction
+    // (guide §5: cache when an intermediate is consumed twice and recomputing
+    // costs more than holding it — here the pinned frame is exactly the
+    // batch's index-rows, bytes the write materializes anyway)
     val pinned = graft.core.Graft.pin(all)
     // the layout property rides IN the publishing commit — atomic with
     // the rows becoming visible, so no reader can ever observe the flag
@@ -314,10 +312,8 @@ object Retrieval {
       val all = postings.unionByName(stats, allowMissingColumns = true)
       // pin: same consumed-twice argument as writeBatch (range sampling
       // + write job), applied to the index-sized migration rewrite
-      graft.core.Graft.pinScope {
-        Some(graft.store.TxWriter.write(db, graft.core.Graft.pin(all),
-          props = Map(LayoutProp -> "2")))
-      }
+      Some(graft.store.TxWriter.write(db, graft.core.Graft.pin(all),
+        props = Map(LayoutProp -> "2")))
     }
   }
 

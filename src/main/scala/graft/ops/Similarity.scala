@@ -1901,10 +1901,7 @@ object Similarity {
     val indexProps = Map(GeomMProp -> m.toString,
       GeomDimProp -> dim.toString,
       ResidualProp -> (if (byResidual) "1" else "0"))
-    graft.core.Graft.pinScope {
-    // pinned (scope-released after the commit — created INSIDE the
-    // pinScope, like appendToIndex, so cache mode actually registers it
-    // to the scope): the bucket-major range exchange SAMPLES its input
+    // pinned: the bucket-major range exchange SAMPLES its input
     // before the write job — unpinned, the whole corpus PQ-encode ran
     // twice per build/rebuild (guide §5; the pinned frame is the
     // ~20×-compressed codes, bytes the write materializes anyway)
@@ -1957,7 +1954,6 @@ object Similarity {
         }
       }
       done
-    }
     }
   }
 
@@ -2295,16 +2291,14 @@ object Similarity {
         col("cell").as("ts"),
         col("nn_id"), lit(-1L).as("sub"),
         pqCodesLit(encV, cb, subDim).as("codes"))
-    // cursor/props/fuse: the streaming-sink riders — an index append
-    // then costs ONE manifest commit with no replay window. The batch's
-    // codes are pinned (scope-released) so the range exchange's sampling
-    // pass doesn't re-encode the batch before the write job does.
-    graft.core.Graft.pinScope {
-      graft.store.TxWriter.write(db, graft.core.Graft.pin(codes),
-        timeBucketNanos = Some(1L),
-        bucketMajor = true, props = sinkProps, streamCursor = cursor,
-        fuse = fuse)
-    }
+    // cursor/props/fuse: the streaming-sink riders — an index append then
+    // costs ONE manifest commit with no replay window. The batch's codes are
+    // pinned so the range exchange's sampling pass doesn't re-encode the
+    // batch before the write job does.
+    graft.store.TxWriter.write(db, graft.core.Graft.pin(codes),
+      timeBucketNanos = Some(1L),
+      bucketMajor = true, props = sinkProps, streamCursor = cursor,
+      fuse = fuse)
   }
 
   /** ADC probe over a [[buildIndex]] warehouse: the train artifacts are

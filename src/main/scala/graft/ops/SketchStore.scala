@@ -366,17 +366,15 @@ object SketchStore {
       s"grouped KMV k for tag '$tag'")(kmvByPrefix(tag) + "%")
     val hashed = batch
       .select(grp.as("grp"), PortableHash.h60(elem).as("h"))
-    // the written rows are pinned (scope-released at return): the
-    // write's range exchange SAMPLES its input before the write job —
-    // unpinned, every branch aggregation executed twice per register
-    // transaction (guide §5: the pinned frame is the batch's own
-    // group-bounded output, bytes the write materializes anyway)
-    graft.core.Graft.pinScope {
-      graft.store.TxWriter.write(db,
-        graft.core.Graft.pin(kmvByRows(tag, hashed, k)),
-        props = sinkProps, propsClaim = Map(kmvByKProp(tag) -> k.toString),
-        streamCursor = cursor, fuse = fuse)
-    }
+    // the written rows are pinned: the write's range exchange SAMPLES its
+    // input before the write job — unpinned, every branch aggregation
+    // executed twice per register transaction (guide §5: the pinned frame is
+    // the batch's own group-bounded output, bytes the write materializes
+    // anyway)
+    graft.store.TxWriter.write(db,
+      graft.core.Graft.pin(kmvByRows(tag, hashed, k)),
+      props = sinkProps, propsClaim = Map(kmvByKProp(tag) -> k.toString),
+      streamCursor = cursor, fuse = fuse)
   }
 
   /** ONE copy of the grouped-KMV row shape, shared by the standalone
@@ -515,10 +513,7 @@ object SketchStore {
                        histW: Long = Sketches.HIST_W, origin: Long = 0L,
                        cursor: Option[(String, Long)] = None,
                        sinkProps: Map[String, String] = Map.empty,
-                       fuse: Boolean = false): Long = graft.core.Graft.pinScope {
-    // pinScope: the elems pin below (valueCol mode) is fully consumed by
-    // the register tx inside this call — released at return instead of
-    // lingering for FIFO eviction (scoped-release contract, Graft.pin)
+                       fuse: Boolean = false): Long = {
     require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
     requireCmGrid(db, tag, d, w)
     requireIntGeom(db, kmvKProp(tag), k, s"KMV k for tag '$tag'")(
@@ -607,11 +602,10 @@ object SketchStore {
         if (snap.manifest.dataTxids.isEmpty) empty
         else {
           // ONE key-pruned scan of all the tag's families, materialized
-          // once (guide §2.4) — the family readers each re-scanned the
-          // store, and the replacement plan executed the scans again in
-          // the write job; branches are local prefix filters over the
-          // pinned pass (released at fold-iteration end). The old
-          // hist/mass `isEmpty` probes (a Spark job each, per fold) are
+          // once (guide §2.4) — the family readers each re-scanned the store,
+          // and the replacement plan executed the scans again in the write
+          // job; branches are local prefix filters over the pinned pass. The
+          // old hist/mass `isEmpty` probes (a Spark job each, per fold) are
           // gone: branch aggregations below are per-key-group, so an
           // absent family contributes zero rows by itself.
           val all = Some(graft.core.Graft.pin(snap.readMany(prefixes)))
@@ -673,8 +667,7 @@ object SketchStore {
                          cursor: Option[(String, Long)] = None,
                          sinkProps: Map[String, String] = Map.empty,
                          fuse: Boolean = false)
-      : Long = graft.core.Graft.pinScope {
-    // pinScope: the pins below are consumed by the register tx in-call
+      : Long = {
     require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
     requireCmByGrid(db, tag, d, cmW)
     requireIntGeom(db, kmvByKProp(tag), k,
@@ -717,11 +710,11 @@ object SketchStore {
         Sketches.histSketchBy(base, col("grp"), col("v"), b, w, origin),
         batchId),
       allowMissingColumns = true))
-    // the written rows are pinned (scope-released at return): the
-    // write's range exchange SAMPLES its input before the write job —
-    // unpinned, every branch aggregation executed twice per register
-    // transaction (guide §5: the pinned frame is the batch's own
-    // group-bounded output, bytes the write materializes anyway)
+    // the written rows are pinned: the write's range exchange SAMPLES its
+    // input before the write job — unpinned, every branch aggregation
+    // executed twice per register transaction (guide §5: the pinned frame is
+    // the batch's own group-bounded output, bytes the write materializes
+    // anyway)
     graft.store.TxWriter.write(db, graft.core.Graft.pin(rows),
       props = sinkProps,
       propsClaim = cmByGridClaim(tag, d, cmW) ++
@@ -754,11 +747,10 @@ object SketchStore {
           // ONE key-pruned scan of all five grouped families,
           // materialized once (guide §2.4): the per-family readers each
           // re-scanned the store and re-paid last-wins + the delete
-          // anti-join; branches are now local prefix filters over the
-          // pinned pass (released at fold-iteration end — foldStore's
-          // pinScope covers this block). The per-family `isEmpty`
-          // probes are gone: every branch aggregates per group, so an
-          // absent family contributes zero rows by itself.
+          // anti-join; branches are now local prefix filters over the pinned
+          // pass. The per-family `isEmpty` probes are gone: every branch
+          // aggregates per group, so an absent family contributes zero rows
+          // by itself.
           val all = Some(graft.core.Graft.pin(snap.readMany(prefixes)))
           val kmv = kmvFoldRowsBy(db, snap, tag, all)
           val withMg = mgByFoldRows(db, snap, tag, all).fold(kmv)(mg =>
@@ -935,19 +927,17 @@ object SketchStore {
                          fuse: Boolean = false): Long = {
     require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
     requireCmByGrid(db, tag, d, w)
-    // the written rows are pinned (scope-released at return): the
-    // write's range exchange SAMPLES its input before the write job —
-    // unpinned, every branch aggregation executed twice per register
-    // transaction (guide §5: the pinned frame is the batch's own
-    // group-bounded output, bytes the write materializes anyway)
-    graft.core.Graft.pinScope {
-      graft.store.TxWriter.write(db,
-        graft.core.Graft.pin(
-          cmByRows(tag, Sketches.countMinSketchBy(batch, grp, elem, d, w),
-            batchId)),
-        props = sinkProps, propsClaim = cmByGridClaim(tag, d, w),
-        streamCursor = cursor, fuse = fuse)
-    }
+    // the written rows are pinned: the write's range exchange SAMPLES its
+    // input before the write job — unpinned, every branch aggregation
+    // executed twice per register transaction (guide §5: the pinned frame is
+    // the batch's own group-bounded output, bytes the write materializes
+    // anyway)
+    graft.store.TxWriter.write(db,
+      graft.core.Graft.pin(
+        cmByRows(tag, Sketches.countMinSketchBy(batch, grp, elem, d, w),
+          batchId)),
+      props = sinkProps, propsClaim = cmByGridClaim(tag, d, w),
+      streamCursor = cursor, fuse = fuse)
   }
 
   /** The grouped grids' first-writer-wins geometry claim. */
@@ -1123,7 +1113,7 @@ object SketchStore {
                  c: Int = Sketches.MG_C,
                  cursor: Option[(String, Long)] = None,
                  sinkProps: Map[String, String] = Map.empty,
-                 fuse: Boolean = false): Long = graft.core.Graft.pinScope {
+                 fuse: Boolean = false): Long = {
     require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
     // c is the store's identity like the other geometries: partials
     // truncated at different capacities merged under one key family
@@ -1233,10 +1223,9 @@ object SketchStore {
                                           tag: String = "t"): DataFrame = {
     val c = intProp(snap.manifest, mgCProp(tag), Sketches.MG_C)
     // ONE scan of both key families, materialized once (guide §2.4):
-    // candidates and mass each re-scanned the store (two parquet scans
-    // + two last-wins passes in one report plan); the branches are now
-    // local prefix filters. Unscoped pin: the report frame outlives
-    // this call (cache mode relies on the MaxLivePins backstop).
+    // candidates and mass each re-scanned the store (two parquet scans + two
+    // last-wins passes in one report plan); the branches are now local prefix
+    // filters.
     val pre =
       if (snap.manifest.dataTxids.isEmpty) None
       else Some(graft.core.Graft.pin(snap.readMany(
@@ -1318,7 +1307,7 @@ object SketchStore {
                    c: Int = Sketches.MG_C,
                    cursor: Option[(String, Long)] = None,
                    sinkProps: Map[String, String] = Map.empty,
-                   fuse: Boolean = false): Long = graft.core.Graft.pinScope {
+                   fuse: Boolean = false): Long = {
     require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
     // materialized once — partial + per-group mass are two subtrees
     requireIntGeom(db, mgByCProp(tag), c,
@@ -1330,11 +1319,11 @@ object SketchStore {
       .filter(col("grp").isNotNull && col("item").isNotNull)
       .groupBy("grp", "item").agg(count(lit(1)).as("cnt"))
       .transform(graft.core.Graft.pin)
-    // the written rows are pinned (scope-released at return): the
-    // write's range exchange SAMPLES its input before the write job —
-    // unpinned, every branch aggregation executed twice per register
-    // transaction (guide §5: the pinned frame is the batch's own
-    // group-bounded output, bytes the write materializes anyway)
+    // the written rows are pinned: the write's range exchange SAMPLES its
+    // input before the write job — unpinned, every branch aggregation
+    // executed twice per register transaction (guide §5: the pinned frame is
+    // the batch's own group-bounded output, bytes the write materializes
+    // anyway)
     graft.store.TxWriter.write(db,
       graft.core.Graft.pin(mgByRows(tag, counts, batchId, c)),
       props = sinkProps, propsClaim = Map(mgByCProp(tag) -> c.toString),
@@ -1479,8 +1468,7 @@ object SketchStore {
       : DataFrame = {
     val c = intProp(snap.manifest, mgByCProp(tag), Sketches.MG_C)
     // ONE scan of both grouped families, materialized once (guide
-    // §2.4) — same device as [[storedHeavyHittersAt]]; unscoped pin,
-    // MaxLivePins backstop in cache mode.
+    // §2.4) — same device as [[storedHeavyHittersAt]].
     val pre =
       if (snap.manifest.dataTxids.isEmpty) None
       else Some(graft.core.Graft.pin(snap.readMany(
@@ -1747,18 +1735,16 @@ object SketchStore {
     require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
     requireHistByGrid(db, tag, b, w, origin)
     val hist = Sketches.histSketchBy(batch, grp, value, b, w, origin)
-    // the written rows are pinned (scope-released at return): the
-    // write's range exchange SAMPLES its input before the write job —
-    // unpinned, every branch aggregation executed twice per register
-    // transaction (guide §5: the pinned frame is the batch's own
-    // group-bounded output, bytes the write materializes anyway)
-    graft.core.Graft.pinScope {
-      graft.store.TxWriter.write(db,
-        graft.core.Graft.pin(histByRowsOf(tag, hist, batchId)),
-        props = sinkProps,
-        propsClaim = histByGridClaim(tag, b, w, origin),
-        streamCursor = cursor, fuse = fuse)
-    }
+    // the written rows are pinned: the write's range exchange SAMPLES its
+    // input before the write job — unpinned, every branch aggregation
+    // executed twice per register transaction (guide §5: the pinned frame is
+    // the batch's own group-bounded output, bytes the write materializes
+    // anyway)
+    graft.store.TxWriter.write(db,
+      graft.core.Graft.pin(histByRowsOf(tag, hist, batchId)),
+      props = sinkProps,
+      propsClaim = histByGridClaim(tag, b, w, origin),
+      streamCursor = cursor, fuse = fuse)
   }
 
   /** ONE copy of the grouped-hist row shape (over a prebuilt
@@ -1929,8 +1915,7 @@ object SketchStore {
         val snap = db.snapshot()
         if (snap.manifest.dataTxids.isEmpty) empty
         else {
-          // one scan of both families, materialized once (guide §2.4);
-          // released at fold-iteration end by foldStore's pinScope
+          // one scan of both families, materialized once (guide §2.4)
           val all = Some(graft.core.Graft.pin(snap.readMany(prefixes)))
           val mass = famRows(snap, mgMassKey(tag), all)
           if (!mass.columns.contains("n_items")) empty
@@ -2017,11 +2002,9 @@ object SketchStore {
         attempt += 1
         Thread.sleep(math.min(100L * attempt, 2000L))
       } else {
-        // pinScope covers the `stored` evaluation (pins created by a
-        // fused read release at iteration end); Some(-1) = nothing
-        // stored to migrate, None = fence refused
-        val res: Option[Long] = graft.core.Graft.pinScope {
-          val cur = stored
+        // Some(-1) = nothing stored to migrate, None = fence refused
+        val cur = stored
+        val res: Option[Long] =
           if (singlePartition) {
             if (cur.isEmpty) Some(-1L)
             else graft.store.TxWriter.supersedeIf(db, baseline,
@@ -2040,7 +2023,6 @@ object SketchStore {
               props = Map(wProp -> newW.toString,
                 oProp -> origin.toString))
           }
-        }
         res match {
           case Some(tx) => return tx // -1 = nothing stored to migrate
           case None     =>
@@ -2134,11 +2116,9 @@ object SketchStore {
         attempt += 1
         Thread.sleep(math.min(100L * attempt, 2000L))
       } else {
-        // pinScope covers the `stored` evaluation too: fold bases that
-        // pin their single fused store scan release it at iteration
-        // end. Some(-1) = nothing to fold, None = fence refused.
-        val res: Option[Long] = graft.core.Graft.pinScope {
-          val cur = stored
+        // Some(-1) = nothing to fold, None = fence refused
+        val cur = stored
+        val res: Option[Long] =
           if (singlePartition) {
             // bounded-by-geometry replacement: one compute, inside the
             // write job (no pin, no range-sampling job)
@@ -2158,7 +2138,6 @@ object SketchStore {
               folded,
               dynProps = tx => foldProp.map(_ -> tx.toString).toMap)
           }
-        }
         res match {
           case Some(tx) => return tx // -1 = nothing to fold
           case None     => // a commit raced in (or is in flight) — refold

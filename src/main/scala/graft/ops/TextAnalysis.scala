@@ -300,9 +300,7 @@ object TextAnalysis {
         // bound the lazy plan at 2 replaces × 4 rounds between
         // materializations — a large nMerges must not accrete an
         // unboundedly deep expression tree over the vocab relation
-        // loop-shaped pin: lineage must CUT per round (Graft.pinLoop),
-        // or cache-mode reuse would nest the plan once per merge
-        if (rank % 4 == 0) vocab = vocab.transform(graft.core.Graft.pinLoop)
+        if (rank % 4 == 0) vocab = vocab.transform(graft.core.Graft.pin)
       }
     }
     (merges.result(), vocab)

@@ -11,4 +11,14 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `f` with a fresh reliable checkpoint dir on the JVM-wide
+    * context, unsetting it afterwards: a dir left behind would turn every
+    * later suite's pins into reliable checkpoints.
+    */
+  def withCheckpointDir[A](f: String => A): A = {
+    val dir = tmpDir("graft-ckpt")
+    spark.sparkContext.setCheckpointDir(dir)
+    try f(dir) finally spark.sparkContext.setCheckpointDir(null)
+  }
 }

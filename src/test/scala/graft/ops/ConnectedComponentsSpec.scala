@@ -110,12 +110,10 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("a reliable checkpoint dir gives the same components, rounds included") {
     val edges = sample(graphGen, 21L)
     val want = reference(edges)
-    val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    sc.setCheckpointDir(dir)
-    try for ((name, pairs) <- layouts(edges, want))
-      check(pairs, want, s"reliable, $name")
-    finally sc.setCheckpointDir(null)
+    withCheckpointDir { _ =>
+      for ((name, pairs) <- layouts(edges, want))
+        check(pairs, want, s"reliable, $name")
+    }
   }
 
   test("empty input: no rows, the input's id types") {

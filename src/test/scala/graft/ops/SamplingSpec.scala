@@ -104,10 +104,7 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("connectedComponents honors a configured reliable checkpoint dir") {
-    val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    sc.setCheckpointDir(dir)
-    try {
+    withCheckpointDir { dir =>
       val comp = Dedup.connectedComponents(
         Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2"))
         .as[(Long, Long)].collect().toMap
@@ -115,7 +112,7 @@ class SamplingSpec extends SparkSpec {
       // checkpoint data actually landed in the reliable dir
       assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir))
         .count() > 0, "no reliable checkpoint written")
-    } finally sc.setCheckpointDir(null)
+    }
   }
 
   test("connectedComponents on an empty pair set returns empty (no NPE)") {

@@ -130,35 +130,6 @@ class StreamIngestSpec extends SparkSpec {
       s"streamed duplicate should rank 1 on the residual index: ${r.toSeq}")
   }
 
-  test("streaming dedup under spark.graft.reuse.mode=cache: the " +
-      "spot-fleet pin mode forwards and registers identically") {
-    implicit val sc = spark.sqlContext
-    spark.conf.set("spark.graft.reuse.mode", "cache")
-    try {
-      val db = Db(spark, tmpDir("graft-dedupcache"))
-      val mem = MemoryStream[(Long, String)]
-      val stream = mem.toDF().toDF("doc_id", "text")
-      val cp = tmpDir("graft-dedupcachecp")
-      val forwarded = scala.collection.mutable.ArrayBuffer[(Long, String)]()
-      def run(): Unit = {
-        val q = StreamIngest.dedupWriter(db, stream, "doc_id", "text",
-            onFresh = f => forwarded ++=
-              f.as[(Long, String)](implicitly).collect())
-          .option("checkpointLocation", cp).start()
-        q.awaitTermination()
-      }
-      mem.addData(1L -> "alpha", 2L -> "beta")
-      run()
-      mem.addData(3L -> "alpha", 4L -> "gamma")
-      run()
-      assert(forwarded.toSet ==
-        Set(1L -> "alpha", 2L -> "beta", 4L -> "gamma"),
-        "cache-mode pins must forward exactly the fresh rows")
-      assert(db.read("h/%").count() == 3,
-        "one fingerprint per distinct content under cache-mode pins")
-    } finally spark.conf.unset("spark.graft.reuse.mode")
-  }
-
   test("durable streaming dedup: warehouse-backed seen-set across micro-batches") {
     implicit val sc = spark.sqlContext
     val db = Db(spark, tmpDir("graft-dedupstream"))
