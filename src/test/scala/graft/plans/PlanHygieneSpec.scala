@@ -462,4 +462,88 @@ class PlanHygieneSpec extends SparkSpec {
           s"falls back:\n${w.child.toString.take(1500)}")
     }
   }
+
+  test("sketch stores: each register, read, fold and trio on both sides " +
+      "runs no more jobs than its pinned count") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.ops.SketchStore
+    def tmpDb() = graft.store.Db(spark,
+      java.nio.file.Files.createTempDirectory("graft-planjobs").toString)
+    val df = (1 to 400)
+      .map(i => (s"g/${i % 5}~", s"w${i % 37}", (i % 90).toLong))
+      .toDF("g", "e", "v")
+    val items = Seq("w1", "w2", "nope").toDF("e")
+    val grpItems = Seq(("g/1~", "w1"), ("g/2~", "w2")).toDF("g", "e")
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def count(name: String)(body: => Any): Unit =
+      jobs(name) = ran { body; () }.jobs
+    val u = tmpDb()
+    count("registerKmv")(SketchStore.registerKmv(u, df, col("e")))
+    count("registerCountMin")(
+      SketchStore.registerCountMin(u, df, col("e"), batchId = 0L))
+    count("registerMg")(SketchStore.registerMg(u, df, col("e"), batchId = 0L))
+    count("registerHist")(
+      SketchStore.registerHist(u, df, col("v"), batchId = 0L))
+    count("registerSketches")(SketchStore.registerSketches(u, df, col("e"),
+      batchId = 1L, valueCol = Some(col("v"))))
+    count("storedKmvEstimate")(SketchStore.storedKmvEstimate(u).collect())
+    count("probeStoredCountMin")(
+      SketchStore.probeStoredCountMin(u, items, "e").collect())
+    count("storedHeavyHitters")(SketchStore.storedHeavyHitters(u).collect())
+    count("storedMgMass")(SketchStore.storedMgMass(u).collect())
+    count("storedHistQuantiles")(SketchStore.storedHistQuantiles(u).collect())
+    count("foldKmv")(SketchStore.foldKmv(u))
+    count("foldCountMin")(SketchStore.foldCountMin(u))
+    count("foldMg")(SketchStore.foldMg(u))
+    count("foldHist")(SketchStore.foldHist(u))
+    count("registerSketches again")(SketchStore.registerSketches(u, df,
+      col("e"), batchId = 2L, valueCol = Some(col("v"))))
+    count("foldSketches")(SketchStore.foldSketches(u))
+    val g = tmpDb()
+    count("registerKmvBy")(
+      SketchStore.registerKmvBy(g, df, col("g"), col("e")))
+    count("registerCountMinBy")(SketchStore.registerCountMinBy(g, df,
+      col("g"), col("e"), batchId = 0L))
+    count("registerMgBy")(
+      SketchStore.registerMgBy(g, df, col("g"), col("e"), batchId = 0L))
+    count("registerHistBy")(
+      SketchStore.registerHistBy(g, df, col("g"), col("v"), batchId = 0L))
+    count("registerSketchesBy")(SketchStore.registerSketchesBy(g, df,
+      col("g"), col("e"), batchId = 1L, valueCol = Some(col("v"))))
+    count("storedKmvEstimateBy")(SketchStore.storedKmvEstimateBy(g).collect())
+    count("probeStoredCountMinBy")(
+      SketchStore.probeStoredCountMinBy(g, grpItems, "g", "e").collect())
+    count("storedHeavyHittersBy")(
+      SketchStore.storedHeavyHittersBy(g).collect())
+    count("storedMgMassBy")(SketchStore.storedMgMassBy(g).collect())
+    count("storedHistQuantilesBy")(
+      SketchStore.storedHistQuantilesBy(g).collect())
+    count("foldKmvBy")(SketchStore.foldKmvBy(g))
+    count("foldCountMinBy")(SketchStore.foldCountMinBy(g))
+    count("foldMgBy")(SketchStore.foldMgBy(g))
+    count("foldHistBy")(SketchStore.foldHistBy(g))
+    count("registerSketchesBy again")(SketchStore.registerSketchesBy(g, df,
+      col("g"), col("e"), batchId = 2L, valueCol = Some(col("v"))))
+    count("foldSketchesBy")(SketchStore.foldSketchesBy(g))
+    // measured on the two-implementation stores; a lower count needs no
+    // edit here
+    val atMost = Map(
+      "registerKmv" -> 2, "registerCountMin" -> 3, "registerMg" -> 6,
+      "registerHist" -> 3, "registerSketches" -> 9, "storedKmvEstimate" -> 3,
+      "probeStoredCountMin" -> 6, "storedHeavyHitters" -> 10,
+      "storedMgMass" -> 4, "storedHistQuantiles" -> 5, "foldKmv" -> 7,
+      "foldCountMin" -> 8, "foldMg" -> 12, "foldHist" -> 8,
+      "registerSketches again" -> 9, "foldSketches" -> 16,
+      "registerKmvBy" -> 5, "registerCountMinBy" -> 6, "registerMgBy" -> 9,
+      "registerHistBy" -> 6, "registerSketchesBy" -> 13,
+      "storedKmvEstimateBy" -> 8, "probeStoredCountMinBy" -> 6,
+      "storedHeavyHittersBy" -> 10, "storedMgMassBy" -> 4,
+      "storedHistQuantilesBy" -> 5, "foldKmvBy" -> 11, "foldCountMinBy" -> 9,
+      "foldMgBy" -> 14, "foldHistBy" -> 9, "registerSketchesBy again" -> 13,
+      "foldSketchesBy" -> 16)
+    assert(jobs.keySet == atMost.keySet)
+    val over = jobs.filter { case (op, n) => n > atMost(op) }
+    assert(over.isEmpty, s"more jobs than pinned: $over (all: $jobs)")
+  }
 }
