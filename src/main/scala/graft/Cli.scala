@@ -259,8 +259,9 @@ object Cli {
             // rows and the exactness threshold come from ONE snapshot —
             // the claimed k, not the default capacity
             val snap = db.snapshot()
-            val kClaim = graft.ops.SketchStore.storedKmvByKAt(snap, tag)
-            graft.ops.SketchStore.storedKmvEstimateByAt(db, snap, tag)
+            val kClaim =
+              graft.ops.SketchStore.storedKmvByK(db, tag, Some(snap))
+            graft.ops.SketchStore.storedKmvEstimateBy(db, tag, Some(snap))
               .select("grp", "n_sketch", "est_distinct")
               .as[(String, Long, Long)].toLocalIterator()
               .forEachRemaining { case (grp, ns, est) =>
@@ -291,7 +292,8 @@ object Cli {
               .map(_.split(',').toSeq.filter(_.nonEmpty))
               .getOrElse(sys.error("--kind cm needs --items tok1,tok2"))
             val snap = db.snapshot()
-            val grid = graft.ops.SketchStore.storedCountMinByAt(db, snap, tag)
+            val grid =
+              graft.ops.SketchStore.storedCountMinBy(db, tag, Some(snap))
             // the group set is BOUNDED like the serving twin: without
             // --grp, the first --groups (default 100) groups probe — a
             // collect of every group name (and a groups×items driver
@@ -308,9 +310,10 @@ object Cli {
             // a default-(d, w) probe against a non-default grid would
             // hash into the wrong cells silently
             val est = if (gsel.isEmpty) Map.empty[(String, String), Long]
-              else graft.ops.SketchStore.probeStoredCountMinByAt(db, snap,
+              else graft.ops.SketchStore.probeStoredCountMinBy(db,
                   gsel.flatMap(g => items.map(i => (g, i)))
-                    .toDF("grp", "item"), "grp", "item", tag)
+                    .toDF("grp", "item"), "grp", "item", tag,
+                  Some(snap))
                 .as[(String, String, Long)].collect()
                 .map { case (g, i, e) => (g, i) -> e }.toMap
             gsel.foreach(g => items.foreach(i =>

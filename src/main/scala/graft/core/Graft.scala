@@ -136,14 +136,20 @@ object Graft {
     * ingest pins included, not only loop rounds: executor-loss tolerance
     * is the one switch Spark already owns. The former
     * `spark.graft.reuse.mode` key is retired and refuses loudly when set.
+    *
+    * `eager` is Spark's own flag. `false` defers the local checkpoint to
+    * the frame's first action, for a frame whose consumers may never all
+    * run (Pipeline's branch materializations). With a checkpoint dir the
+    * pin is eager either way: a lazy reliable checkpoint recomputes the
+    * lineage in a job of its own after the first action.
     */
-  def pin(df: DataFrame): DataFrame = {
+  def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
     if (df.sparkSession.conf.getOption(RetiredReuseMode).isDefined)
       throw new IllegalArgumentException(s"$RetiredReuseMode is retired: " +
         "pins checkpoint reliably when sparkContext.setCheckpointDir is " +
         "set and locally otherwise; unset the key")
     if (pinsReliably(df.sparkSession)) df.checkpoint(true)
-    else df.localCheckpoint(true)
+    else df.localCheckpoint(eager)
   }
 
   /** Whether [[pin]] writes reliable checkpoints: the context has a
@@ -152,6 +158,13 @@ object Graft {
     spark.sparkContext.getCheckpointDir.isDefined
 
   private val RetiredReuseMode = "spark.graft.reuse.mode"
+
+  /** The engine's one log, for events a monitor tails: skipped or
+    * failing auto-maintenance (WARN, ERROR once a failure streak
+    * escalates) and failures after a response started streaming.
+    */
+  private[graft] val log: org.apache.logging.log4j.Logger =
+    org.apache.logging.log4j.LogManager.getLogger("graft")
 
   /** Map a timestamp-typed column onto the engine's canonical Long
     * epoch-nanos, leaving an already-Long column untouched. The session

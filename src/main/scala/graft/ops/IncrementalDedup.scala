@@ -104,7 +104,7 @@ object IncrementalDedup {
                   sinkProps: Map[String, String] = Map.empty,
                   fuse: Boolean = false): DataFrame = {
     val fresh = dropSeenBefore(db, batch, idCol, textCol)
-      .transform(graft.core.Graft.pin) // the register tx must not re-plan the probe
+      .transform(graft.core.Graft.pin(_)) // the register tx must not re-plan the probe
     onFresh(fresh)
     if (!fresh.isEmpty)
       registerBatch(db, fresh, idCol, textCol, cursor, sinkProps, fuse)
@@ -297,7 +297,7 @@ object IncrementalDedup {
                       sinkProps: Map[String, String] = Map.empty,
                       fuse: Boolean = false): DataFrame = {
     val fresh = dropNearSeenBefore(db, batch, idCol, textCol, minAgree)
-      .transform(graft.core.Graft.pin) // the register tx must not re-plan the probe
+      .transform(graft.core.Graft.pin(_)) // the register tx must not re-plan the probe
     onFresh(fresh)
     if (!fresh.isEmpty) {
       // register at the store's CLAIMED shingle size, read as late as

@@ -70,7 +70,7 @@ object Pipeline {
         // the scored subtree feeds FOUR consumers here (corpus side, two
         // seed slices, join-back) — materialize once, same device as the
         // DSIR branch below
-        val hk = heuristicKept.localCheckpoint(false)
+        val hk = graft.core.Graft.pin(heuristicKept, eager = false)
         val pos = hk.filter(posPred)
         val neg = hk.filter(negPred)
         require(!pos.isEmpty && !neg.isEmpty,
@@ -80,11 +80,11 @@ object Pipeline {
           .filter(col("nb_label") === 1L).select("doc_id")
         // the NB-gated corpus now also feeds the near-dup and contam
         // stages below — checkpoint so nbScore runs once, not per consumer
-        hk.join(lbl, "doc_id").localCheckpoint(false)
+        graft.core.Graft.pin(hk.join(lbl, "doc_id"), eager = false)
       // kept feeds FOUR consumers (canon, near-dup pairs, contam,
       // clean-join) and Catalyst does not CSE across join branches —
       // without the checkpoint the quality/lang-id scoring scan runs 4×
-      case None => heuristicKept.localCheckpoint(false)
+      case None => graft.core.Graft.pin(heuristicKept, eager = false)
     }
     val canon = kept.groupBy(md5(col("text")).as("_h"))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
@@ -108,10 +108,8 @@ object Pipeline {
         // corpus side, its target side, and the keep-join back), and the
         // cleaning subtree above it is the expensive half of the plan —
         // materialize it once instead of recomputing per consumer
-        // (measured 4.5× on the e2e stress run). Same lazy-localCheckpoint
-        // device as the connected-components loop; on a real cluster swap
-        // in a reliable checkpoint / intermediate table.
-        val ct = cleanText.localCheckpoint(false)
+        // (measured 4.5× on the e2e stress run)
+        val ct = graft.core.Graft.pin(cleanText, eager = false)
         // slim k-row id set; the join back is broadcastable by construction
         val keep = Selection
           .dsirTopK(ct, ct.filter(pred), "doc_id", "text", dsirK)

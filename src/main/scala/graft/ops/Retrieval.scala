@@ -587,9 +587,9 @@ object Retrieval {
     // ranking computation per reference — the lists are slim
     // (query_id, doc_id, rank), bounded by queries × corpus
     val lexFull = lexFull0.select("query_id", "doc_id", "rank")
-      .transform(graft.core.Graft.pin)
+      .transform(graft.core.Graft.pin(_))
     val denseFull = denseFull0.select("query_id", "doc_id", "rank")
-      .transform(graft.core.Graft.pin)
+      .transform(graft.core.Graft.pin(_))
     val truth = rrfFuse(lexFull, denseFull, k).select("query_id", "doc_id")
     val hyb = rrfFuse(lexFull.filter(col("rank") <= cutK),
         denseFull.filter(col("rank") <= cutK), k)

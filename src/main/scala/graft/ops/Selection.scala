@@ -367,7 +367,7 @@ object Selection {
                       w: Long = 16384L): DataFrame = {
     val scored = lmScore(corpus, train, idCol, textCol)
       .filter(col("n_trans") > 0)
-      .transform(graft.core.Graft.pin)
+      .transform(graft.core.Graft.pin(_))
     val nm = round(col("nll") * MICRO.toDouble, 0).cast("long")
     val env = Sketches.histQuantilesOf(scored.select(nm.as("v")),
       col("v"), qms = Seq(333, 667), b = b, w = w)

@@ -1,98 +1,195 @@
 package graft.ops
 
+import graft.store.{Db, ManifestState, TxWriter}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Incremental sketches backed by the engine's own warehouse — the
-  * streaming-corpus counterpart of [[Sketches]]: per-batch registration
-  * keeps running cardinality/frequency state WITHOUT rescanning history,
-  * because both sketches are mergeable and the warehouse's (key, ts)
-  * last-wins merge is exactly the right fold:
+  * streaming-corpus counterpart of [[Sketches]]. Per-batch registration
+  * keeps running cardinality / point-frequency / frequent-item /
+  * quantile state WITHOUT rescanning history: all four summaries are
+  * mergeable, and the warehouse's (key, ts) last-wins merge is exactly
+  * the right fold. Every family exists on two sides — ungrouped and per
+  * group — and both sides share one implementation; only a private
+  * [[Side]] value chooses keys, claims, grouping columns and write
+  * policy. The stored layout (a persistence contract — warehouses on
+  * disk are read by these keys and claims; `SketchLayoutSpec` pins it):
   *
-  *  - KMV: one row per sketch minimum, `key = "k/<tag>"`, `ts = h`. The
-  *    union law (k smallest of A∪B ⊆ k-min(A) ∪ k-min(B)) means a batch
-  *    only ever writes its OWN ≤ k minima; duplicate minima across
-  *    batches collapse to the same (key, ts) record; the read-side top-k
-  *    over the prefix IS the exact sketch of everything ever registered.
-  *    No read-modify-write, ever.
-  *  - count-min: counters add across batches, so cells are per-batch
-  *    rows — `key = "c/<tag>/<row>/<bucket>"`, `ts = batchId`, summed at
-  *    read time. Re-registering a batchId overwrites the same (key, ts)
-  *    records: registration is idempotent under streaming retries, the
-  *    same exactly-once contract as
-  *    [[graft.streaming.StreamIngest]]'s batch-id guard.
+  * {{{
+  * family side  key                               ts      columns              claims (…/<tag>)           fold.last/
+  * KMV    flat  k/<tag>                           h       h                    kmv.k                      kmv
+  * KMV    group kg/<tag>/<grp>                    h       grp h                kmvg.k                     kmvby
+  * cm     flat  c/<tag>/<row>/<bucket:06>         batch   sk_row bucket c      cm.d cm.w                  cm
+  * cm     group cg/<tag>/<esc grp>/<row>/<b:06>   batch   grp sk_row bucket c  cmg.d cmg.w                cmby
+  * MG     flat  m/<tag>/<item> + mn/<tag>         batch   item est | n_items   mg.c                       mg
+  * MG     group mg/<tag>/<esc grp>/<item>         batch   grp item est         mgg.c                      mgby
+  *              + mgn/<tag>/<esc grp>                     grp n_items
+  * hist   flat  h/<tag>/<bin:06>                  batch   bin cnt              hist.w hist.origin hist.b  hist
+  * hist   group hg/<tag>/<grp>/<bin:06>           batch   grp bin cnt          histg.w histg.origin histg.b histby
+  * trio   flat  the KMV, cm, MG and hist rows above, one transaction          sketches
+  * trio   group the grouped KMV, cm, MG and hist rows, one transaction        sketchesby
+  * }}}
   *
-  * Both stores are ordinary warehouse rows: compaction, time travel and
-  * transactional publish apply unchanged, and they can share a warehouse
-  * with the dedup fingerprint stores (distinct key prefixes).
+  *  - KMV rows are the batch's ≤ k hash minima: duplicate minima across
+  *    batches land on the same (key, ts = h), and the k smallest stored
+  *    minima ARE the sketch of everything registered (union law).
+  *  - count-min, MG and hist rows are per-batch partials at
+  *    `ts = batchId`, summed (MG: summed and re-truncated) at read time;
+  *    re-registering a batchId rewrites the same (key, ts) rows, so
+  *    registration is idempotent under streaming retries.
+  *  - A fold supersedes a family's history with its merged rows at
+  *    `ts = FOLD_TS` (KMV keeps `ts = h`) and records its txid under
+  *    `fold.last/<family>/<tag>`.
+  *  - `esc grp` replaces `~` by `~t` and `/` by `~s`, so the group
+  *    segment holds no `/` where an item or cell tail follows it; grp and
+  *    item are also stored as columns and no key is ever parsed back.
+  *    Null groups and null elements are never stored.
+  *  - The geometry claims are first-writer-wins table properties checked
+  *    inside the publishing commit: rows from a different geometry are
+  *    not mergeable, so a mismatched registration refuses, and readers
+  *    take the geometry from the claim, never from a caller.
   */
 object SketchStore {
-  /** Reserved count-min batchId for [[foldCountMin]] rewrites; normal
-    * registrations must use batchId ≥ 0.
-    */
+  /** Reserved `ts` of folded rows; registrations use batchId ≥ 0. */
   val FOLD_TS: Long = -1L
 
-  private def kmvKey(tag: String) = s"k/$tag"
-  private def kmvByPrefix(tag: String) = s"kg/$tag/"
-  private def cmPrefix(tag: String) = s"c/$tag/"
-  private def cmByPrefix(tag: String) = s"cg/$tag/"
-  private def mgPrefix(tag: String) = s"m/$tag/"
-  private def mgMassKey(tag: String) = s"mn/$tag"
-  private def mgByPrefix(tag: String) = s"mg/$tag/"
-  private def mgByMassPrefix(tag: String) = s"mgn/$tag/"
+  /** How long a fold (or grid migration) keeps waiting out concurrent
+    * writers before giving up loudly. Time-based: the fence refuses
+    * while ANY claim is in flight, and a fold is maintenance, always
+    * safe to retry later, so the budget errs long.
+    */
+  val FOLD_WAIT_MILLIS: Long = 10 * 60 * 1000L
 
-  /** Injective group escape for keys that carry BOTH a group and an
-    * arbitrary item segment (`mg/<tag>/<escGrp>/<item>`): the escaped
-    * group contains no '/', so the first '/' after the prefix is an
-    * unambiguous separator whatever characters the raw group or item
-    * hold — without it, (grp "a/b", item "c") and (grp "a", item "b/c")
-    * would collide on one key and last-wins would silently drop a cell.
-    * grp and item are ALSO stored as columns; nothing ever parses the
-    * key back.
+  /** One side of every family: what differs between an ungrouped store
+    * and its per-group twin. Every operation below is written once and
+    * takes a Side.
+    */
+  private final case class Side(grouped: Boolean) {
+    private val g = if (grouped) "g" else ""
+    /** The grouping columns: none, or `grp`. */
+    val keyNames: Seq[String] = if (grouped) Seq("grp") else Nil
+    val keys: Seq[Column] = keyNames.map(col)
+    val label: String = if (grouped) "grouped " else ""
+    val by: String = if (grouped) "By" else ""
+
+    def kmvK(tag: String) = s"kmv$g.k/$tag"
+    def mgC(tag: String) = s"mg$g.c/$tag"
+    def cmD(tag: String) = s"cm$g.d/$tag"
+    def cmW(tag: String) = s"cm$g.w/$tag"
+    def histW(tag: String) = s"hist$g.w/$tag"
+    def histO(tag: String) = s"hist$g.origin/$tag"
+    def histB(tag: String) = s"hist$g.b/$tag"
+
+    def kmvPat(tag: String) = if (grouped) s"kg/$tag/%" else s"k/$tag"
+    def cmPat(tag: String) = s"c$g/$tag/%"
+    def mgPat(tag: String) = s"m$g/$tag/%"
+    def massPat(tag: String) = if (grouped) s"mgn/$tag/%" else s"mn/$tag"
+    def histPat(tag: String) = s"h$g/$tag/%"
+
+    def kmvKey(tag: String): Column =
+      if (grouped) concat(lit(s"kg/$tag/"), col("grp")) else lit(s"k/$tag")
+    def cmKey(tag: String): Column =
+      if (grouped) concat(lit(s"cg/$tag/"), escGrp(col("grp")),
+        format_string("/%d/%06d", col("sk_row"), col("bucket")))
+      else format_string(s"c/$tag/%d/%06d", col("sk_row"), col("bucket"))
+    def mgKey(tag: String): Column =
+      if (grouped)
+        concat(lit(s"mg/$tag/"), escGrp(col("grp")), lit("/"), col("item"))
+      else concat(lit(s"m/$tag/"), col("item"))
+    def massKey(tag: String): Column =
+      if (grouped) concat(lit(s"mgn/$tag/"), escGrp(col("grp")))
+      else lit(s"mn/$tag")
+    def histKey(tag: String): Column =
+      if (grouped) format_string(s"hg/$tag/%s/%06d", col("grp"), col("bin"))
+      else format_string(s"h/$tag/%06d", col("bin"))
+
+    /** `df` without rows whose group (or any of `cs`) is null. */
+    def nonNull(df: DataFrame, cs: String*): DataFrame = {
+      val all = keys ++ cs.map(col)
+      if (all.isEmpty) df else df.filter(all.map(_.isNotNull).reduce(_ && _))
+    }
+
+    /** The write policy. Ungrouped rows are bounded by the store's
+      * geometry (≤ k, d·w, c+1 or b rows per family), so they take the
+      * single-partition write path: no range exchange, no sampling job,
+      * the rows computed once inside the write job. Grouped rows scale
+      * with the group count: range-partitioned, and pinned first because
+      * the range exchange samples its input (unpinned, every branch
+      * aggregation would run twice).
+      */
+    def write(db: Db, rows: DataFrame, claim: Map[String, String],
+              cursor: Option[(String, Long)], sinkProps: Map[String, String],
+              fuse: Boolean): Long =
+      TxWriter.write(db, if (grouped) graft.core.Graft.pin(rows) else rows,
+        rangePartitions = if (grouped) None else Some(1), props = sinkProps,
+        propsClaim = claim, streamCursor = cursor, fuse = fuse)
+  }
+
+  private val Flat = Side(grouped = false)
+  private val ByGroup = Side(grouped = true)
+  private def sideOf(grp: Option[Column]) = if (grp.isDefined) ByGroup else Flat
+
+  /** Injective group escape for keys where an item or cell tail follows
+    * the group segment: (grp "a/b", item "c") and (grp "a", item "b/c")
+    * would otherwise share a key and last-wins would drop a cell.
     */
   private def escGrp(grp: Column): Column =
     regexp_replace(regexp_replace(grp, "~", "~t"), "/", "~s")
-  private def histPrefix(tag: String) = s"h/$tag/"
-  private def histWProp(tag: String) = s"hist.w/$tag"
-  private def histOriginProp(tag: String) = s"hist.origin/$tag"
-  private def histByPrefix(tag: String) = s"hg/$tag/"
-  private def histByWProp(tag: String) = s"histg.w/$tag"
-  private def histByOriginProp(tag: String) = s"histg.origin/$tag"
-  private def histBProp(tag: String) = s"hist.b/$tag"
-  private def histByBProp(tag: String) = s"histg.b/$tag"
-  private def cmDProp(tag: String) = s"cm.d/$tag"
-  private def cmWProp(tag: String) = s"cm.w/$tag"
-  private def cmByDProp(tag: String) = s"cmg.d/$tag"
-  private def cmByWProp(tag: String) = s"cmg.w/$tag"
-  private def kmvKProp(tag: String) = s"kmv.k/$tag"
-  private def kmvByKProp(tag: String) = s"kmvg.k/$tag"
-  private def mgCProp(tag: String) = s"mg.c/$tag"
-  private def mgByCProp(tag: String) = s"mgg.c/$tag"
 
-  /** One int-valued geometry property off a manifest state (defaulting
-    * when the store predates geometry tracking or is empty) — shared by
-    * every k/c/d read-back.
-    */
-  private def intProp(m: graft.store.ManifestState, prop: String,
-                      dflt: Int): Int =
+  /** `(key, ts, grp?, values…)` — the one row shape of every family. */
+  private def shape(s: Side, key: Column, ts: Column, values: String*)(
+      df: DataFrame): DataFrame =
+    df.select(Seq(key.as("key"), ts.as("ts")) ++ s.keys ++ values.map(col): _*)
+
+  private def kmvShape(s: Side, tag: String) =
+    shape(s, s.kmvKey(tag), col("h"), "h") _
+  private def cmShape(s: Side, tag: String, ts: Long) =
+    shape(s, s.cmKey(tag), lit(ts), "sk_row", "bucket", "c") _
+  private def mgShape(s: Side, tag: String, ts: Long) =
+    shape(s, s.mgKey(tag), lit(ts), "item", "est") _
+  private def massShape(s: Side, tag: String, ts: Long) =
+    shape(s, s.massKey(tag), lit(ts), "n_items") _
+  private def histShape(s: Side, tag: String, ts: Long) =
+    shape(s, s.histKey(tag), lit(ts), "bin", "cnt") _
+
+  // ── geometry claims ────────────────────────────────────────────────
+
+  private def intProp(m: ManifestState, prop: String, dflt: Int): Int =
     m.props.get(prop).map(_.toInt).getOrElse(dflt)
 
-  /** Shared friendly pre-write mismatch error for the single-int
-    * geometry claims (k, c) — the propsClaim inside the CAS stays the
-    * authority, exactly like the hist/cm grids. `preexisting` is the
-    * family's rows-already-exist probe, evaluated ONLY when the claim
-    * is absent: a PRE-CLAIM store (rows written by an engine version
-    * before geometry tracking) must not accept a fresh claim at face
-    * value — the claimed value would be trusted over rows whose true
-    * geometry nobody recorded, and a later fold at a wrongly-claimed
-    * smaller k would truncate data permanently. The operator states
-    * the true geometry with [[stampGeometry]] first.
+  private def cmGridOf(m: ManifestState, s: Side, tag: String): (Int, Long) =
+    (intProp(m, s.cmD(tag), Sketches.CM_D),
+      m.props.get(s.cmW(tag)).map(_.toLong).getOrElse(Sketches.CM_W))
+
+  private def histGridOf(m: ManifestState, s: Side,
+                         tag: String): (Long, Long) =
+    (m.props.get(s.histW(tag)).map(_.toLong).getOrElse(Sketches.HIST_W),
+      m.props.get(s.histO(tag)).map(_.toLong).getOrElse(0L))
+
+  private def cmClaim(s: Side, tag: String, d: Int,
+                      w: Long): Map[String, String] =
+    Map(s.cmD(tag) -> d.toString, s.cmW(tag) -> w.toString)
+
+  /** `b` is part of the grid: the top bin CLAMPS at b−1, so batches
+    * binned at different b put their clamped mass at different bins.
     */
-  private def requireIntGeom(db: graft.store.Db, prop: String, v: Int,
+  private def histClaim(s: Side, tag: String, b: Int, w: Long,
+                        origin: Long): Map[String, String] =
+    Map(s.histW(tag) -> w.toString, s.histO(tag) -> origin.toString,
+      s.histB(tag) -> b.toString)
+
+  /** Friendly pre-write mismatch error for a single-int geometry (KMV k,
+    * MG c); the claim inside the publishing CAS stays the authority.
+    * With the claim absent, rows already under `pattern` mean a
+    * PRE-CLAIM store: a fresh claim must not be trusted over rows whose
+    * geometry nobody recorded (a later fold at a wrongly claimed smaller
+    * k would truncate data for good), so it refuses until
+    * [[stampGeometry]] states the true geometry. Claim and row existence
+    * come from one snapshot, so a concurrent first registration cannot
+    * make a valid same-geometry writer refuse.
+    */
+  private def requireIntGeom(db: Db, prop: String, v: Int,
                              what: String)(pattern: String): Unit = {
-    // claim AND row-existence come from ONE snapshot: a second, later
-    // read could see a concurrent first registration's rows without
-    // its claim and spuriously refuse a valid same-geometry writer
     val snap = db.snapshot()
     val ex = snap.manifest.props.get(prop)
     require(ex.forall(_ == v.toString),
@@ -102,16 +199,52 @@ object SketchStore {
       throw new IllegalStateException(unclaimedMsg(prop, what))
   }
 
+  private def requireCmGrid(s: Side, db: Db, tag: String, d: Int,
+                            w: Long): Unit = {
+    val snap = db.snapshot()
+    val exD = snap.manifest.props.get(s.cmD(tag))
+    val exW = snap.manifest.props.get(s.cmW(tag))
+    require(exD.forall(_ == d.toString) && exW.forall(_ == w.toString),
+      s"count-min geometry mismatch for ${s.label}tag '$tag': stored " +
+        s"(d=${exD.getOrElse("-")}, w=${exW.getOrElse("-")}) " +
+        s"vs registration (d=$d, w=$w)")
+    if (exD.isEmpty && exW.isEmpty && familyNonEmpty(snap, s.cmPat(tag)))
+      throw new IllegalStateException(unclaimedMsg(s.cmD(tag),
+        s"${s.label}count-min geometry for tag '$tag'"))
+  }
+
+  /** Fully unclaimed OR partially claimed (b joined the grid claim after
+    * (w, origin): a pre-b store's rows clamp at an unrecorded cap) grids
+    * refuse over existing rows until stamped.
+    */
+  private def requireHistGrid(s: Side, db: Db, tag: String, b: Int, w: Long,
+                              origin: Long): Unit = {
+    val snap = db.snapshot()
+    val m = snap.manifest
+    val exW = m.props.get(s.histW(tag))
+    val exO = m.props.get(s.histO(tag))
+    val exB = m.props.get(s.histB(tag))
+    require(exW.forall(_ == w.toString) &&
+        exO.forall(_ == origin.toString) && exB.forall(_ == b.toString),
+      s"histogram grid mismatch for ${s.label}tag '$tag': stored " +
+        s"(b=${exB.getOrElse("-")}, w=${exW.getOrElse("-")}, " +
+        s"origin=${exO.getOrElse("-")}) " +
+        s"vs registration (b=$b, w=$w, origin=$origin)")
+    if ((exW.isEmpty || exB.isEmpty) && familyNonEmpty(snap, s.histPat(tag)))
+      throw new IllegalStateException(unclaimedMsg(
+        if (exW.isEmpty) s.histW(tag) else s.histB(tag),
+        s"${s.label}histogram grid for tag '$tag'"))
+  }
+
+  private def requireBatchId(batchId: Long): Unit =
+    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
+
   /** Per-(warehouse identity, manifest version) memo for the pre-claim
     * emptiness probes: an UNCLAIMED store's guard costs one Spark job
-    * per manifest version TOTAL, not one per call, so the stamp
-    * transition window (probing a legacy store before its geometry
-    * claim lands) is free after the first probe. Sound because
-    * warehouse contents are immutable per manifest version — any
-    * commit, including the stamp itself, mints a new version and a
-    * fresh probe; the identity component keeps a warehouse deleted and
-    * recreated at the same path from aliasing a stale entry. Claimed
-    * steady state never consults it.
+    * per manifest version TOTAL, not one per call. Sound because
+    * warehouse contents are immutable per manifest version; the identity
+    * component keeps a warehouse recreated at the same path from
+    * aliasing a stale entry. Claimed steady state never consults it.
     */
   private[ops] object EmptinessMemo {
     private val memo = new java.util.LinkedHashMap[
@@ -123,17 +256,11 @@ object SketchStore {
     private val runs = new java.util.concurrent.atomic.AtomicLong(0L)
     /** How many probes actually executed (spec observability). */
     def probeRuns: Long = runs.get()
-    def cached(m: graft.store.ManifestState, key: String)
-              (probe: => Boolean): Boolean = {
-      // a manifest that predates the identity UUID (created == "")
-      // cannot be distinguished from another such warehouse at a
-      // coinciding version — never memoize those: they pay one probe
-      // per call, the pre-memo behavior, because a cross-warehouse
-      // aliased guard verdict would be the silent-wrong-answer class
-      // this whole family exists to kill. The one-job-per-version
-      // bound therefore applies to identity-bearing manifests (every
-      // warehouse this engine ever created); a truly pre-UUID external
-      // store keeps the conservative per-call cost until stamped.
+    def cached(m: ManifestState, key: String)(probe: => Boolean): Boolean = {
+      // a manifest that predates the identity UUID (created == "") cannot
+      // be told apart from another such warehouse at a coinciding
+      // version: never memoize those (one probe per call), because a
+      // cross-warehouse aliased verdict would be a silent wrong answer
       if (m.created.isEmpty) return probe
       val k = (m.created, m.version, key)
       val hit = memo.synchronized(memo.get(k))
@@ -147,24 +274,15 @@ object SketchStore {
     }
   }
 
-  /** True iff the snapshot already holds rows under `pattern` — the
-    * claim-absent pre-existence probe, off the SAME snapshot the claim
-    * was read from. Cheap: fresh warehouses short-circuit on the
-    * manifest (no job at all); an unclaimed NON-fresh warehouse pays
-    * one key-pruned emptiness probe per manifest version
-    * ([[EmptinessMemo]]).
+  /** True iff the snapshot already holds rows under `pattern`: free on a
+    * fresh warehouse, one key-pruned probe per manifest version
+    * otherwise ([[EmptinessMemo]]).
     */
-  private def familyNonEmpty(snap: graft.store.Db#Snapshot,
-                             pattern: String): Boolean =
+  private def familyNonEmpty(snap: Db#Snapshot, pattern: String): Boolean =
     snap.manifest.dataTxids.nonEmpty &&
       EmptinessMemo.cached(snap.manifest, s"fam:$pattern")(
         !snap.read(pattern).isEmpty)
 
-  /** The loud pre-claim-store error every reader and registration
-    * shares: reading (or claiming over) rows whose geometry nobody
-    * recorded would be the silent-wrong-answer hazard the claims exist
-    * to kill — refuse and point at the operator escape hatch.
-    */
   private def unclaimedMsg(prop: String, what: String): String =
     s"$what unclaimed for a NON-EMPTY store: rows exist but property " +
       s"'$prop' is absent (written by a pre-claim engine version). " +
@@ -173,293 +291,598 @@ object SketchStore {
       "SketchStore.stampGeometry(db, tag, ...)"
 
   /** Reader-side guard for pre-claim stores: a geometry-dependent read
-    * of rows whose claim is absent refuses loudly instead of decoding
-    * at the defaults (which could under-count, mis-certify or report a
-    * full sketch as exact). Costs nothing on claimed stores; the
-    * emptiness probe runs only for unclaimed ones.
+    * of rows whose claim is absent refuses instead of decoding at the
+    * defaults. Free on claimed stores.
     */
-  private def requireClaimedOrEmpty(snap: graft.store.Db#Snapshot,
-                                    prop: String, rows: DataFrame,
-                                    what: String): Unit =
+  private def requireClaimedOrEmpty(snap: Db#Snapshot, prop: String,
+                                    rows: DataFrame, what: String): Unit =
     if (!snap.manifest.props.contains(prop) &&
         EmptinessMemo.cached(snap.manifest, s"read:$prop")(!rows.isEmpty))
       throw new IllegalStateException(unclaimedMsg(prop, what))
 
-  /** One key family's visible rows: a local prefix filter over a fused
-    * pre-read when the caller already scanned the union of families
-    * ([[graft.store.Db.Snapshot.readMany]] — guide §2.4: one store scan
-    * instead of one per family), else a direct key-pruned read. The
-    * filter is THE SAME predicate a direct read applies
-    * ([[graft.series.SeriesOps.keyFilter]]), and last-wins/deletes act
-    * per key, so the two paths are row-identical for the disjoint
-    * sketch key families.
-    */
-  private def famRows(snap: graft.store.Db#Snapshot, pattern: String,
-                      pre: Option[DataFrame]): DataFrame =
-    pre.fold(snap.read(pattern))(
-      graft.series.SeriesOps.keyFilter(_, pattern))
-
   /** Operator escape hatch for PRE-CLAIM stores: record the geometry a
     * legacy store was ACTUALLY written with, so its claim-checked reads
-    * and registrations proceed. First-writer-wins like the claims
-    * themselves — a stamp that disagrees with an existing property
-    * refuses ([[graft.store.TxWriter.PropertyConflict]]); each Option
-    * stamps one family (ungrouped / grouped KMV k, MG c, count-min
-    * (d, w), histogram (b, w, origin)).
+    * and registrations proceed. First-writer-wins like the claims — a
+    * stamp that disagrees with an existing property refuses
+    * ([[graft.store.TxWriter.PropertyConflict]]); each Option stamps one
+    * family (ungrouped / grouped KMV k, MG c, count-min (d, w),
+    * histogram (b, w, origin)).
     */
-  def stampGeometry(db: graft.store.Db, tag: String = "t",
+  def stampGeometry(db: Db, tag: String = "t",
                     kmvK: Option[Int] = None, kmvByK: Option[Int] = None,
                     mgC: Option[Int] = None, mgByC: Option[Int] = None,
                     cm: Option[(Int, Long)] = None,
                     cmBy: Option[(Int, Long)] = None,
                     hist: Option[(Int, Long, Long)] = None,
                     histBy: Option[(Int, Long, Long)] = None): Unit = {
-    val claims: Map[String, String] =
-      kmvK.map(v => kmvKProp(tag) -> v.toString).toMap ++
-        kmvByK.map(v => kmvByKProp(tag) -> v.toString) ++
-        mgC.map(v => mgCProp(tag) -> v.toString) ++
-        mgByC.map(v => mgByCProp(tag) -> v.toString) ++
-        cm.toSeq.flatMap { case (d, w) => cmGridClaim(tag, d, w) } ++
-        cmBy.toSeq.flatMap { case (d, w) => cmByGridClaim(tag, d, w) } ++
-        hist.toSeq.flatMap { case (b, w, o) => histGridClaim(tag, b, w, o) } ++
-        histBy.toSeq.flatMap { case (b, w, o) =>
-          histByGridClaim(tag, b, w, o) }
+    val claims = Seq((Flat, kmvK, mgC, cm, hist),
+        (ByGroup, kmvByK, mgByC, cmBy, histBy)).flatMap {
+      case (s, k, c, grid, h) =>
+        k.map(s.kmvK(tag) -> _.toString) ++ c.map(s.mgC(tag) -> _.toString) ++
+          grid.toSeq.flatMap { case (d, w) => cmClaim(s, tag, d, w) } ++
+          h.toSeq.flatMap { case (b, w, o) => histClaim(s, tag, b, w, o) }
+    }.toMap
     require(claims.nonEmpty, "stampGeometry: nothing to stamp")
     graft.store.Manifest.stampProps(db.warehouse, claims)
   }
 
-  // ── KMV ────────────────────────────────────────────────────────────
+  // ── registration ───────────────────────────────────────────────────
 
-  /** Registers a batch's ≤ k hash minima as ONE transaction. The batch
-    * prices one [[Sketches.kmvSketch]] fold (bounded-buffer aggregation)
-    * plus a ≤ k-row write — store size and history never enter the cost.
-    *
-    * `k` is the store's IDENTITY, claimed first-writer-wins like the
-    * cm/hist geometries: minima from different k merged under one key
-    * family (or a fold at a smaller k) would permanently lose minima
-    * and — sharper — an estimator reading at k' > k_stored sees
-    * `n_sketch < k'` and certifies the sketch as the EXACT distinct
-    * set, a silently wrong answer. Reads and folds take k from the
-    * claim, never from a caller's guess.
+  private def withGrp(batch: DataFrame, grp: Option[Column],
+                      cols: Column*): DataFrame =
+    batch.select(grp.map(_.as("grp")).toSeq ++ cols: _*)
+
+  /** A batch's ≤ k minima per group (KmvAgg: partial buffers merge
+    * map-side, a group's shuffle traffic is k longs per partition).
+    * Null hashes (null elements) are excluded here, the single
+    * enforcement point: the primitive-Long udaf would unbox them to a
+    * spurious h = 0 minimum.
     */
-  def registerKmv(db: graft.store.Db, batch: DataFrame, elem: Column,
-                  tag: String = "t", k: Int = Sketches.KMV_K): Long = {
-    requireIntGeom(db, kmvKProp(tag), k, s"KMV k for tag '$tag'")(
-      kmvKey(tag))
-    val rows = Sketches.kmvSketch(batch, elem, k)
-      .select(lit(kmvKey(tag)).as("key"), col("h").as("ts"), col("h"))
-    // rangePartitions=Some(1): the transaction is bounded by the store
-    // GEOMETRY (≤ k rows), so the single-partition write path applies —
-    // it skips the range exchange and the RangePartitioner sampling job
-    // that would re-run the sketch aggregation once more (guide §2.4;
-    // measured: 3 fixed jobs per register → 1)
-    graft.store.TxWriter.write(db, rows, rangePartitions = Some(1),
-      propsClaim = Map(kmvKProp(tag) -> k.toString))
+  private def kmvRows(s: Side, tag: String, hashed: DataFrame,
+                      k: Int): DataFrame =
+    s.nonNull(hashed, "h").groupBy(s.keys: _*)
+      .agg(graft.functions.KmvAgg.kmv(k)(col("h")).as("hs"))
+      .select(s.keys :+ explode(col("hs")).as("h"): _*)
+      .transform(kmvShape(s, tag))
+
+  /** Exact (grp?, item, cnt) counts: the multiset KMV, count-min and MG
+    * are all pure functions of.
+    */
+  private def itemCounts(s: Side, items: DataFrame): DataFrame =
+    s.nonNull(items, "item").groupBy(s.keys :+ col("item"): _*)
+      .agg(count(lit(1)).as("cnt"))
+
+  /** MG partial (truncate-over-exact-counts) plus mass rows at `ts`.
+    * The ungrouped mass is a global aggregate: one row, 0 for an empty
+    * batch.
+    */
+  private def mgRows(s: Side, tag: String, counts: DataFrame, ts: Long,
+                     c: Int): DataFrame = {
+    val partial = truncate(s,
+        counts.select(s.keys ++ Seq(col("item"), col("cnt").as("f")): _*), c)
+      .transform(mgShape(s, tag, ts))
+    val mass =
+      if (s.grouped) counts.groupBy("grp").agg(sum(col("cnt")).as("n_items"))
+      else counts.agg(coalesce(sum(col("cnt")), lit(0L)).as("n_items"))
+    partial.unionByName(mass.transform(massShape(s, tag, ts)),
+      allowMissingColumns = true)
   }
 
-  /** The store's claimed k (default when unclaimed/empty). */
-  def storedKmvK(db: graft.store.Db, tag: String = "t"): Int =
-    intProp(graft.store.Manifest.current(db.warehouse), kmvKProp(tag),
-      Sketches.KMV_K)
+  private def truncate(s: Side, summed: DataFrame, c: Int): DataFrame =
+    if (s.grouped) Sketches.mgTruncateBy(summed, c)
+    else Sketches.mgTruncate(summed, c)
 
-  /** [[storedKmvK]] off an already-held snapshot — for consumers that
-    * must pair the k with same-generation rows (the serving tier's
-    * "exact below k" claim would otherwise compare a claimed-k sketch
-    * against the default capacity and mislabel a FULL small-k sketch
-    * as exact).
+  private def histOf(df: DataFrame, grp: Option[Column], v: Column, b: Int,
+                     w: Long, origin: Long): DataFrame =
+    grp.fold(Sketches.histSketch(df, v, b, w, origin))(
+      Sketches.histSketchBy(df, _, v, b, w, origin))
+
+  private def regKmv(db: Db, batch: DataFrame, grp: Option[Column],
+                     elem: Column, tag: String, k: Int,
+                     cursor: Option[(String, Long)],
+                     sinkProps: Map[String, String], fuse: Boolean): Long = {
+    val s = sideOf(grp)
+    requireIntGeom(db, s.kmvK(tag), k, s"${s.label}KMV k for tag '$tag'")(
+      s.kmvPat(tag))
+    s.write(db,
+      kmvRows(s, tag, withGrp(batch, grp, PortableHash.h60(elem).as("h")), k),
+      Map(s.kmvK(tag) -> k.toString), cursor, sinkProps, fuse)
+  }
+
+  private def regCountMin(db: Db, batch: DataFrame, grp: Option[Column],
+                          elem: Column, batchId: Long, tag: String, d: Int,
+                          w: Long, cursor: Option[(String, Long)],
+                          sinkProps: Map[String, String],
+                          fuse: Boolean): Long = {
+    val s = sideOf(grp)
+    requireBatchId(batchId)
+    requireCmGrid(s, db, tag, d, w)
+    val grid = grp.fold(Sketches.countMinSketch(batch, elem, d, w))(
+      Sketches.countMinSketchBy(batch, _, elem, d, w))
+    s.write(db, grid.transform(cmShape(s, tag, batchId)),
+      cmClaim(s, tag, d, w), cursor, sinkProps, fuse)
+  }
+
+  private def regMg(db: Db, batch: DataFrame, grp: Option[Column],
+                    elem: Column, batchId: Long, tag: String, c: Int,
+                    cursor: Option[(String, Long)],
+                    sinkProps: Map[String, String], fuse: Boolean): Long = {
+    val s = sideOf(grp)
+    requireBatchId(batchId)
+    requireIntGeom(db, s.mgC(tag), c, s"${s.label}MG c for tag '$tag'")(
+      s.mgPat(tag))
+    // partial and mass both derive from the exact counts: aggregate once
+    // and materialize the vocabulary-sized result, not the raw stream
+    val counts = graft.core.Graft.pin(
+      itemCounts(s, withGrp(batch, grp, elem.as("item"))))
+    s.write(db, mgRows(s, tag, counts, batchId, c),
+      Map(s.mgC(tag) -> c.toString), cursor, sinkProps, fuse)
+  }
+
+  private def regHist(db: Db, batch: DataFrame, grp: Option[Column],
+                      value: Column, batchId: Long, tag: String, b: Int,
+                      w: Long, origin: Long, cursor: Option[(String, Long)],
+                      sinkProps: Map[String, String], fuse: Boolean): Long = {
+    val s = sideOf(grp)
+    requireBatchId(batchId)
+    requireHistGrid(s, db, tag, b, w, origin)
+    s.write(db, histOf(batch, grp, value, b, w, origin)
+        .transform(histShape(s, tag, batchId)),
+      histClaim(s, tag, b, w, origin), cursor, sinkProps, fuse)
+  }
+
+  /** The trio (+ hist rider) as ONE transaction: one claim, one publish,
+    * atomic across the families. KMV, count-min and MG are pure
+    * functions of the batch's exact (grp?, item) counts, so ONE
+    * aggregation feeds all three; it is not pinned — its exchange
+    * subtree is byte-identical in every branch and the write job computes
+    * it once through exchange reuse. With a `valueCol` the projection is
+    * pinned instead, so the hist bins and the counts don't run the batch
+    * lineage twice. Each family's rows are exactly its standalone
+    * registration's.
     */
-  private[graft] def storedKmvKAt(snap: graft.store.Db#Snapshot,
-                                  tag: String = "t"): Int =
-    intProp(snap.manifest, kmvKProp(tag), Sketches.KMV_K)
+  private def regTrio(db: Db, batch: DataFrame, grp: Option[Column],
+                      elem: Column, batchId: Long, tag: String, k: Int,
+                      d: Int, cmW: Long, c: Int, valueCol: Option[Column],
+                      b: Int, w: Long, origin: Long,
+                      cursor: Option[(String, Long)],
+                      sinkProps: Map[String, String], fuse: Boolean): Long = {
+    val s = sideOf(grp)
+    requireBatchId(batchId)
+    requireCmGrid(s, db, tag, d, cmW)
+    requireIntGeom(db, s.kmvK(tag), k, s"${s.label}KMV k for tag '$tag'")(
+      s.kmvPat(tag))
+    requireIntGeom(db, s.mgC(tag), c, s"${s.label}MG c for tag '$tag'")(
+      s.mgPat(tag))
+    valueCol.foreach(_ => requireHistGrid(s, db, tag, b, w, origin))
+    val base0 = withGrp(batch, grp,
+      elem.as("item") +: valueCol.map(_.as("v")).toSeq: _*)
+    val base = valueCol.fold(base0)(_ => graft.core.Graft.pin(base0))
+    val counts = itemCounts(s, base.select(s.keys :+ col("item"): _*))
+    val kmv = kmvRows(s, tag,
+      counts.select(s.keys :+ PortableHash.h60(col("item")).as("h"): _*), k)
+    val cm = (if (s.grouped) Sketches.countMinSketchByCounts(counts, d, cmW)
+      else Sketches.countMinSketchCounts(counts, d, cmW))
+      .transform(cmShape(s, tag, batchId))
+    val mg = mgRows(s, tag, counts, batchId, c)
+    val hist = valueCol.map(_ =>
+      histOf(base, grp.map(_ => col("grp")), col("v"), b, w, origin)
+        .transform(histShape(s, tag, batchId)))
+    val fams = (if (s.grouped) Seq(kmv, mg, cm) else Seq(kmv, cm, mg)) ++ hist
+    s.write(db, fams.reduce(_.unionByName(_, allowMissingColumns = true)),
+      cmClaim(s, tag, d, cmW) ++
+        Map(s.kmvK(tag) -> k.toString, s.mgC(tag) -> c.toString) ++
+        valueCol.fold(Map.empty[String, String])(_ =>
+          histClaim(s, tag, b, w, origin)),
+      cursor, sinkProps, fuse)
+  }
 
-  /** The grouped store's claimed k, off one snapshot. */
-  private[graft] def storedKmvByKAt(snap: graft.store.Db#Snapshot,
-                                    tag: String = "t"): Int =
-    intProp(snap.manifest, kmvByKProp(tag), Sketches.KMV_K)
+  // ── reads ──────────────────────────────────────────────────────────
 
-  /** The MG stores' claimed capacities, off one snapshot — for serving
-    * bodies that report the geometry next to the data it bounds.
+  private def snapOf(db: Db, at: Option[Db#Snapshot]): Db#Snapshot =
+    at.getOrElse(db.snapshot())
+
+  /** One family's visible rows, None when the warehouse is empty or has
+    * never held the family's columns. `pre` is a fused pre-read of
+    * several families ([[graft.store.Db.Snapshot.readMany]]: one store
+    * scan instead of one per family), filtered by the same predicate a
+    * direct read applies; last-wins and deletes act per key, so both
+    * paths are row-identical for the disjoint key families.
     */
-  private[graft] def storedMgCAt(snap: graft.store.Db#Snapshot,
-                                 tag: String = "t"): Int =
-    intProp(snap.manifest, mgCProp(tag), Sketches.MG_C)
+  private def famRows(s: Side, snap: Db#Snapshot, pattern: String,
+                      pre: Option[DataFrame], need: String*)
+      : Option[DataFrame] =
+    if (snap.manifest.dataTxids.isEmpty) None
+    else Some(pre.fold(snap.read(pattern))(
+        graft.series.SeriesOps.keyFilter(_, pattern)))
+      .filter(r => (s.keyNames ++ need).forall(r.columns.contains))
 
-  private[graft] def storedMgByCAt(snap: graft.store.Db#Snapshot,
-                                   tag: String = "t"): Int =
-    intProp(snap.manifest, mgByCProp(tag), Sketches.MG_C)
+  private def emptyOf(db: Db, s: Side, cols: (String, String)*): DataFrame =
+    db.spark.range(0).select(
+      (s.keyNames.map(_ -> "string") ++ cols).map { case (n, t) =>
+        col("id").cast(t).as(n) }: _*)
 
-  /** The count-min stores' claimed geometries, off one snapshot. */
-  private[graft] def storedCmGridAt(snap: graft.store.Db#Snapshot,
-                                    tag: String = "t"): (Int, Long) =
-    cmGridOf(snap.manifest, cmDProp(tag), cmWProp(tag))
+  private def fusedRead(snap: Db#Snapshot,
+                        patterns: Seq[String]): Option[DataFrame] =
+    if (snap.manifest.dataTxids.isEmpty) None
+    else Some(graft.core.Graft.pin(snap.readMany(patterns)))
 
-  private[graft] def storedCmByGridAt(snap: graft.store.Db#Snapshot,
-                                      tag: String = "t"): (Int, Long) =
-    cmGridOf(snap.manifest, cmByDProp(tag), cmByWProp(tag))
-
-  /** The merged sketch of every batch ever registered: the k smallest
-    * distinct stored minima (k from the store's own claim) — a
-    * key-pruned read of ≤ k·batches slim rows, then a driver-side
-    * top-k. Empty (0-row) sketch if nothing is registered under `tag`.
+  /** The k smallest distinct stored minima (k from the claim) per group.
+    * Ungrouped: a driver-side top-k; grouped: a window PARTITIONED by
+    * group, never a single-partition stage.
     */
-  def storedKmvSketch(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedKmvSketchAt(db, db.snapshot(), tag)
-
-  private def storedKmvSketchAt(db: graft.store.Db,
-                                snap: graft.store.Db#Snapshot,
-                                tag: String,
-                                pre: Option[DataFrame] = None): DataFrame = {
-    val spark = db.spark
-    val k = intProp(snap.manifest, kmvKProp(tag), Sketches.KMV_K)
-    val empty = spark.range(0).select(col("id").as("h"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, kmvKey(tag), pre)
-      if (!rows.columns.contains("h")) empty
-      else {
-        requireClaimedOrEmpty(snap, kmvKProp(tag), rows,
-          s"KMV k for tag '$tag'")
-        rows.select(col("h")).orderBy("h").limit(k)
+  private def kmvSketch(s: Side, db: Db, snap: Db#Snapshot, tag: String,
+                        pre: Option[DataFrame] = None): DataFrame = {
+    val k = intProp(snap.manifest, s.kmvK(tag), Sketches.KMV_K)
+    famRows(s, snap, s.kmvPat(tag), pre, "h")
+      .fold(emptyOf(db, s, "h" -> "bigint")) { rows =>
+        requireClaimedOrEmpty(snap, s.kmvK(tag), rows,
+          s"${s.label}KMV k for tag '$tag'")
+        if (!s.grouped) rows.select(col("h")).orderBy("h").limit(k)
+        else rows.select(col("grp"), col("h"))
+          .withColumn("rk", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy("grp")
+              .orderBy("h")))
+          .filter(col("rk") <= k).drop("rk")
       }
+  }
+
+  /** Estimates via THE shared estimator column; the estimator's k is
+    * the claim off the same snapshot as the rows (an estimator k above
+    * the stored one would read a full sketch as the exact set).
+    */
+  private def kmvEstimate(s: Side, db: Db, snap: Db#Snapshot,
+                          tag: String): DataFrame = {
+    val k = intProp(snap.manifest, s.kmvK(tag), Sketches.KMV_K)
+    val est = kmvSketch(s, db, snap, tag).groupBy(s.keys: _*)
+      .agg(count(lit(1)).as("n_sketch"), max(col("h")).as("kth_hash"))
+      .select(s.keys ++ Seq(col("n_sketch"), col("kth_hash"),
+        Sketches.kmvEstimateCol(col("n_sketch"), col("kth_hash"), k)
+          .as("est_distinct")): _*)
+    if (s.grouped) est.orderBy("grp") else est
+  }
+
+  private def cmGrid(s: Side, db: Db, snap: Db#Snapshot, tag: String,
+                     pre: Option[DataFrame] = None): DataFrame =
+    famRows(s, snap, s.cmPat(tag), pre, "c")
+      .fold(emptyOf(db, s, "sk_row" -> "int", "bucket" -> "bigint",
+        "c" -> "bigint"))(
+        _.groupBy(s.keys ++ Seq(col("sk_row"), col("bucket")): _*)
+          .agg(sum(col("c")).as("c")))
+
+  /** Probes at the CLAIMED geometry off the grid's own snapshot: a
+    * guessed (d, w) would hash items into the wrong cells silently.
+    * Ungrouped, the ≤ d·w grid broadcasts; grouped, it joins on
+    * (grp, cell).
+    */
+  private def probeCm(s: Side, db: Db, snap: Db#Snapshot, items: DataFrame,
+                      grpCol: Option[String], elemCol: String,
+                      tag: String): DataFrame = {
+    val grid = cmGrid(s, db, snap, tag)
+    requireClaimedOrEmpty(snap, s.cmD(tag), grid,
+      s"${s.label}count-min geometry for tag '$tag'")
+    val (d, w) = cmGridOf(snap.manifest, s, tag)
+    grpCol.fold(Sketches.countMinProbe(items, grid, elemCol, d, w))(
+      Sketches.countMinProbeBy(items, grid, _, elemCol, d, w))
+  }
+
+  /** Per-(grp?, item) sums re-truncated to ≤ c: a valid MG(c) summary of
+    * the concatenated stream — every truncation retires ≥ (c+1)× its
+    * own error, so `true − n/(c+1) ≤ est ≤ true` survives the merge.
+    */
+  private def mgCandidates(s: Side, db: Db, snap: Db#Snapshot, tag: String,
+                           pre: Option[DataFrame] = None): DataFrame = {
+    val c = intProp(snap.manifest, s.mgC(tag), Sketches.MG_C)
+    famRows(s, snap, s.mgPat(tag), pre, "est")
+      .fold(emptyOf(db, s, "item" -> "string", "est" -> "bigint")) { rows =>
+        requireClaimedOrEmpty(snap, s.mgC(tag), rows,
+          s"${s.label}MG c for tag '$tag'")
+        truncate(s, rows.groupBy(s.keys :+ col("item"): _*)
+          .agg(sum(col("est")).as("f")), c)
+      }
+  }
+
+  /** Registered mass: one row (0 when empty) ungrouped, one per group. */
+  private def mgMass(s: Side, db: Db, snap: Db#Snapshot, tag: String,
+                     pre: Option[DataFrame] = None): DataFrame =
+    famRows(s, snap, s.massPat(tag), pre, "n_items") match {
+      case None if s.grouped => emptyOf(db, s, "n" -> "bigint")
+      case None => db.spark.range(1).select(lit(0L).as("n"))
+      case Some(rows) if s.grouped =>
+        rows.groupBy("grp").agg(sum(col("n_items")).as("n"))
+      case Some(rows) =>
+        rows.agg(coalesce(sum(col("n_items")), lit(0L)).as("n"))
+    }
+
+  /** Candidates with their mass `n` and a 0/1 `certain` column:
+    * `est·(c+1) > n` means even the LOWER bound clears n/(c+1). Both
+    * come from ONE snapshot and one fused, pinned scan — a registration
+    * between two reads could pair one generation's counts with the
+    * other's smaller mass and falsely certify an item. Ungrouped, the
+    * one mass row is broadcast; grouped, the join is keyed by group.
+    */
+  private def heavyHitters(s: Side, db: Db, snap: Db#Snapshot,
+                           tag: String): DataFrame = {
+    val c = intProp(snap.manifest, s.mgC(tag), Sketches.MG_C)
+    val pre = fusedRead(snap, Seq(s.mgPat(tag), s.massPat(tag)))
+    val cands = mgCandidates(s, db, snap, tag, pre)
+    val mass = mgMass(s, db, snap, tag, pre)
+    (if (s.grouped) cands.join(mass, Seq("grp"))
+     else cands.crossJoin(broadcast(mass)))
+      .select(s.keys ++ Seq(col("item"), col("est"), col("n"),
+        (col("est") * (c + 1) > col("n")).cast("long").as("certain")): _*)
+  }
+
+  private def hist(s: Side, db: Db, snap: Db#Snapshot, tag: String,
+                   pre: Option[DataFrame] = None): DataFrame =
+    famRows(s, snap, s.histPat(tag), pre, "cnt")
+      .fold(emptyOf(db, s, "bin" -> "bigint", "cnt" -> "bigint"))(rows =>
+        s.nonNull(rows).groupBy(s.keys :+ col("bin"): _*)
+          .agg(sum(col("cnt")).as("cnt")))
+
+  /** Quantiles decoded at the claimed grid off the rows' own snapshot:
+    * since grids migrate, a two-phase read could decode re-binned rows
+    * at a stale width.
+    */
+  private def histQuantiles(s: Side, db: Db, snap: Db#Snapshot,
+                            qms: Seq[Int], tag: String): DataFrame = {
+    val h = hist(s, db, snap, tag)
+    requireClaimedOrEmpty(snap, s.histW(tag), h,
+      s"${s.label}histogram grid for tag '$tag'")
+    val (w, origin) = histGridOf(snap.manifest, s, tag)
+    if (s.grouped) Sketches.histQuantilesFromBy(h, qms, w, origin)
+    else Sketches.histQuantiles(h, qms, w, origin)
+  }
+
+  // ── folds and grid migration ───────────────────────────────────────
+
+  /** The key under which a fold records its own published txid, in the
+    * same commit (supersedeIf's dynProps rider): a serving tier reports
+    * which fold generation a body reflects for zero extra jobs.
+    */
+  private[graft] def foldLastProp(family: String, tag: String): String =
+    s"fold.last/$family/$tag"
+
+  /** Runs `attempt` until it publishes (Some(tx), -1 = nothing to do) or
+    * the wait budget runs out.
+    */
+  private def retrying(what: String, verb: String, waitMillis: Long,
+                       hint: String)(attempt: => Option[Long]): Long = {
+    val deadline = System.nanoTime() + waitMillis * 1000000L
+    var n = 0
+    while (System.nanoTime() < deadline) {
+      attempt match {
+        case Some(tx) => return tx
+        case None =>
+          n += 1
+          Thread.sleep(math.min(100L * n, 2000L))
+      }
+    }
+    throw new IllegalStateException(s"$what: could not $verb within " +
+      s"${waitMillis / 1000} s of registration contention$hint")
+  }
+
+  /** Publishes `project(raw)` as the superseding generation of
+    * `wildcards` — marker and rows in ONE manifest commit, and only if
+    * nothing moved since `baseline` ([[graft.store.TxWriter.supersedeIf]];
+    * None = refused). Ungrouped replacements are geometry-bounded: an
+    * emptiness probe on `raw`, then one compute inside the
+    * single-partition write job. Grouped ones are pinned BEFORE the
+    * emptiness probe, which would otherwise compute them a second time.
+    */
+  private def publish(s: Side, db: Db, baseline: ManifestState,
+                      wildcards: Seq[String], raw: DataFrame,
+                      project: DataFrame => DataFrame,
+                      props: Map[String, String] = Map.empty,
+                      dynProps: Long => Map[String, String] = _ => Map.empty)
+      : Option[Long] =
+    if (s.grouped) {
+      val rows = graft.core.Graft.pin(project(raw))
+      if (rows.isEmpty) Some(-1L)
+      else TxWriter.supersedeIf(db, baseline, wildcards, rows, props = props,
+        dynProps = dynProps)
+    } else if (raw.isEmpty) Some(-1L)
+    else TxWriter.supersedeIf(db, baseline, wildcards, project(raw),
+      props = props, dynProps = dynProps, rangePartitions = Some(1))
+
+  /** THE fold fence: read the merged rows off one snapshot and publish
+    * them at `FOLD_TS` over the superseded history, atomically, only if
+    * no claim is in flight and nothing published since the read (a
+    * racing registration's rows would be erased by the marker; on
+    * refusal the fold re-reads and includes them). Later folds re-fold
+    * the fold.
+    */
+  private def fold(s: Side, db: Db, op: String, family: String, tag: String,
+                   waitMillis: Long, wildcards: Seq[String])(
+      raw: Db#Snapshot => DataFrame,
+      project: DataFrame => DataFrame = identity): Long =
+    retrying(s"fold$op${s.by}($tag)", "fold", waitMillis,
+        " (a crashed writer's pending claim needs Compactor.vacuum)") {
+      val snap = db.snapshot()
+      if (snap.manifest.pending.nonEmpty) None
+      else publish(s, db, snap.manifest, wildcards, raw(snap), project,
+        dynProps = tx => Map(foldLastProp(
+          family + (if (s.grouped) "by" else ""), tag) -> tx.toString))
+    }
+
+  private def emptyFold(db: Db): DataFrame =
+    db.spark.range(0).select(col("id").cast("string").as("key"),
+      col("id").as("ts"))
+
+  /** Merged MG candidates + summed masses at FOLD_TS. None = nothing
+    * registered (no mass rows): every branch aggregates per group, so
+    * the ungrouped mass sums per synthetic group, which yields ZERO rows
+    * on an empty family where a global aggregate would mint one.
+    */
+  private def mgFoldRows(s: Side, db: Db, snap: Db#Snapshot, tag: String,
+                         pre: Option[DataFrame]): Option[DataFrame] =
+    famRows(s, snap, s.massPat(tag), pre, "n_items").map { mass =>
+      val total =
+        if (s.grouped)
+          mass.groupBy("grp").agg(sum(col("n_items")).as("n_items"))
+        else mass.groupBy(lit(1).as("_g"))
+          .agg(coalesce(sum(col("n_items")), lit(0L)).as("n_items"))
+      mgCandidates(s, db, snap, tag, pre).transform(mgShape(s, tag, FOLD_TS))
+        .unionByName(total.transform(massShape(s, tag, FOLD_TS)),
+          allowMissingColumns = true)
+    }
+
+  private def kmvFold(s: Side, db: Db, tag: String, waitMillis: Long): Long =
+    fold(s, db, "Kmv", "kmv", tag, waitMillis, Seq(s.kmvPat(tag)))(
+      kmvSketch(s, db, _, tag), kmvShape(s, tag))
+
+  private def cmFold(s: Side, db: Db, tag: String, waitMillis: Long): Long =
+    fold(s, db, "CountMin", "cm", tag, waitMillis, Seq(s.cmPat(tag)))(
+      cmGrid(s, db, _, tag), cmShape(s, tag, FOLD_TS))
+
+  private def histFold(s: Side, db: Db, tag: String, waitMillis: Long): Long =
+    fold(s, db, "Hist", "hist", tag, waitMillis, Seq(s.histPat(tag)))(
+      hist(s, db, _, tag), histShape(s, tag, FOLD_TS))
+
+  /** Candidates and mass delete under ONE marker, so no interleaving
+    * observes candidates without their mass. Lossless whenever the
+    * merged candidates are within capacity; past it, exactly one more
+    * valid truncation step.
+    */
+  private def mgFold(s: Side, db: Db, tag: String, waitMillis: Long): Long = {
+    val pats = Seq(s.mgPat(tag), s.massPat(tag))
+    fold(s, db, "Mg", "mg", tag, waitMillis, pats)(snap =>
+      fusedRead(snap, pats).flatMap(pre => mgFoldRows(s, db, snap, tag,
+        Some(pre))).getOrElse(emptyFold(db)))
+  }
+
+  /** Every family of the side under one marker and one commit, from ONE
+    * snapshot and one fused, pinned scan. Families with no rows under
+    * the tag contribute none: every branch aggregates per key group.
+    */
+  private def trioFold(s: Side, db: Db, tag: String, waitMillis: Long): Long = {
+    val pats =
+      if (s.grouped) Seq(s.kmvPat(tag), s.mgPat(tag), s.massPat(tag),
+        s.histPat(tag), s.cmPat(tag))
+      else Seq(s.kmvPat(tag), s.cmPat(tag), s.mgPat(tag), s.massPat(tag),
+        s.histPat(tag))
+    fold(s, db, "Sketches", "sketches", tag, waitMillis, pats)(snap =>
+      fusedRead(snap, pats).fold(emptyFold(db)) { all =>
+        val pre = Some(all)
+        val kmv = kmvSketch(s, db, snap, tag, pre).transform(kmvShape(s, tag))
+        val cm =
+          cmGrid(s, db, snap, tag, pre).transform(cmShape(s, tag, FOLD_TS))
+        val h =
+          hist(s, db, snap, tag, pre).transform(histShape(s, tag, FOLD_TS))
+        val mg = mgFoldRows(s, db, snap, tag, pre).toSeq
+        val fams =
+          if (s.grouped) Seq(kmv) ++ mg ++ Seq(cm, h) else Seq(kmv, cm, h) ++ mg
+        fams.reduce(_.unionByName(_, allowMissingColumns = true))
+      })
+  }
+
+  /** Re-bins the stored histogram to a COARSER width in place
+    * (`newBin = oldBin DIV newW/w` per group): exact for positive
+    * multiples, except mass the old grid already clamped into its top
+    * bin, which stays at the old clamp point. Rows, the superseding
+    * marker AND the flipped width property publish in ONE conditional
+    * commit, so no reader pairs the new grid with old rows; a
+    * registration at the old width that publishes first aborts the
+    * attempt (re-read and re-bin), one that publishes after is refused
+    * by its own grid claim. Index-sized, never corpus-sized.
+    */
+  private def migrate(s: Side, db: Db, newW: Long, tag: String,
+                      waitMillis: Long): Long = {
+    val what = s"migrateHistGrid${s.by}($tag)"
+    retrying(what, "migrate", waitMillis, "") {
+      val snap = db.snapshot()
+      val baseline = snap.manifest
+      // decoding at a guessed default and then CLAIMING the new width
+      // would mislabel a pre-claim store's grid for good: refuse
+      if (!baseline.props.contains(s.histW(tag)) &&
+          familyNonEmpty(snap, s.histPat(tag)))
+        throw new IllegalStateException(
+          unclaimedMsg(s.histW(tag), s"$what: stored grid width"))
+      val (w, origin) = histGridOf(baseline, s, tag)
+      require(newW >= w && newW % w == 0,
+        s"new width $newW must be a positive multiple of stored width $w")
+      if (newW == w) Some(-1L) // already at this grid (driver-side, free)
+      else if (baseline.pending.nonEmpty) None
+      else publish(s, db, baseline, Seq(s.histPat(tag)), hist(s, db, snap, tag),
+        _.select(s.keys ++ Seq(expr(s"bin DIV ${newW / w}").as("bin"),
+            col("cnt")): _*)
+          .groupBy(s.keys :+ col("bin"): _*).agg(sum(col("cnt")).as("cnt"))
+          .transform(histShape(s, tag, FOLD_TS)),
+        props = Map(s.histW(tag) -> newW.toString,
+          s.histO(tag) -> origin.toString))
     }
   }
 
-  /** One-row estimate from the stored sketch ([[Sketches.kmvEstimate]]
-    * on [[storedKmvSketch]]) — by the union law, EXACTLY the estimate a
-    * single full-history sketch would produce. The estimator's k comes
-    * from the SAME snapshot as the rows (the claimed value): an
-    * estimator k above the stored one would read a full sketch as
-    * below-capacity and report it as the exact distinct set.
+  // ── KMV ────────────────────────────────────────────────────────────
+
+  /** Registers a batch's ≤ k hash minima as ONE transaction: one
+    * bounded-buffer aggregation plus a ≤ k-row write; store size and
+    * history never enter the cost. `k` is the store's identity (claimed
+    * first-writer-wins): an estimator reading at k' > k_stored would
+    * certify a full sketch as the EXACT distinct set.
     */
-  def storedKmvEstimate(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedKmvEstimateAt(db, db.snapshot(), tag)
+  def registerKmv(db: Db, batch: DataFrame, elem: Column,
+                  tag: String = "t", k: Int = Sketches.KMV_K): Long =
+    regKmv(db, batch, None, elem, tag, k, None, Map.empty, fuse = false)
 
-  private[graft] def storedKmvEstimateAt(db: graft.store.Db,
-                                         snap: graft.store.Db#Snapshot,
-                                         tag: String = "t"): DataFrame =
-    Sketches.kmvEstimate(storedKmvSketchAt(db, snap, tag),
-      intProp(snap.manifest, kmvKProp(tag), Sketches.KMV_K))
+  /** The store's claimed k (default when unclaimed/empty). */
+  def storedKmvK(db: Db, tag: String = "t",
+                 at: Option[Db#Snapshot] = None): Int =
+    intProp(snapOf(db, at).manifest, Flat.kmvK(tag), Sketches.KMV_K)
 
-  // ── grouped KMV ────────────────────────────────────────────────────
-  //
-  // Per-group distinct-count maintenance (vocabulary per source /
-  // language off a running corpus). Rows: key = "kg/<tag>/<grp>",
-  // ts = h → (grp, h): one row per group minimum, same union-law
-  // last-wins collapse as the ungrouped store — a batch writes only
-  // its own ≤ k minima PER GROUP, duplicate minima across batches
-  // land on the same (key, ts). Null groups are excluded (a null
-  // would become part of a malformed key), matching the grouped hist
-  // store.
-
-  /** Registers a batch's per-group ≤ k hash minima as ONE transaction
-    * — a grouped [[graft.functions.KmvAgg]] aggregation (partial
-    * buffers merge map-side; a group's shuffle traffic is k longs per
-    * partition touching it, never its distinct cardinality).
+  /** The merged sketch: the k smallest distinct stored minima, EXACTLY
+    * the sketch of everything ever registered. 0 rows when empty.
     */
-  def registerKmvBy(db: graft.store.Db, batch: DataFrame, grp: Column,
+  def storedKmvSketch(db: Db, tag: String = "t",
+                      at: Option[Db#Snapshot] = None): DataFrame =
+    kmvSketch(Flat, db, snapOf(db, at), tag)
+
+  /** One-row estimate from the stored sketch — by the union law,
+    * exactly the estimate one full-history sketch would produce.
+    */
+  def storedKmvEstimate(db: Db, tag: String = "t",
+                        at: Option[Db#Snapshot] = None): DataFrame =
+    kmvEstimate(Flat, db, snapOf(db, at), tag)
+
+  /** Collapses the superseded minima to the k smallest: lossless for
+    * every report; bounds the store at k + k·(batches since last fold).
+    */
+  def foldKmv(db: Db, tag: String = "t",
+              waitMillis: Long = FOLD_WAIT_MILLIS): Long =
+    kmvFold(Flat, db, tag, waitMillis)
+
+  /** Per-group ≤ k minima (vocabulary per source off a running corpus)
+    * as ONE transaction.
+    */
+  def registerKmvBy(db: Db, batch: DataFrame, grp: Column,
                     elem: Column, tag: String = "t",
                     k: Int = Sketches.KMV_K,
                     cursor: Option[(String, Long)] = None,
                     sinkProps: Map[String, String] = Map.empty,
-                    fuse: Boolean = false): Long = {
-    requireIntGeom(db, kmvByKProp(tag), k,
-      s"grouped KMV k for tag '$tag'")(kmvByPrefix(tag) + "%")
-    val hashed = batch
-      .select(grp.as("grp"), PortableHash.h60(elem).as("h"))
-    // the written rows are pinned: the write's range exchange SAMPLES its
-    // input before the write job — unpinned, every branch aggregation
-    // executed twice per register transaction (guide §5: the pinned frame is
-    // the batch's own group-bounded output, bytes the write materializes
-    // anyway)
-    graft.store.TxWriter.write(db,
-      graft.core.Graft.pin(kmvByRows(tag, hashed, k)),
-      props = sinkProps, propsClaim = Map(kmvByKProp(tag) -> k.toString),
-      streamCursor = cursor, fuse = fuse)
-  }
+                    fuse: Boolean = false): Long =
+    regKmv(db, batch, Some(grp), elem, tag, k, cursor, sinkProps, fuse)
 
-  /** ONE copy of the grouped-KMV row shape, shared by the standalone
-    * registration and the trio — the two must write byte-identical
-    * rows or migrating a pipeline between them silently changes the
-    * stored sketches. Null groups AND null hashes (null elements) are
-    * excluded here, the single enforcement point: a null element would
-    * otherwise unbox to a spurious h=0 minimum in the primitive-Long
-    * udaf.
+  /** The grouped store's claimed k. */
+  private[graft] def storedKmvByK(db: Db, tag: String = "t",
+                                  at: Option[Db#Snapshot] = None): Int =
+    intProp(snapOf(db, at).manifest, ByGroup.kmvK(tag), Sketches.KMV_K)
+
+  /** Each group's k smallest distinct stored minima. */
+  def storedKmvSketchBy(db: Db, tag: String = "t",
+                        at: Option[Db#Snapshot] = None): DataFrame =
+    kmvSketch(ByGroup, db, snapOf(db, at), tag)
+
+  /** Per-group estimates (grp, n_sketch, kth_hash, est_distinct),
+    * ordered by group — [[Sketches.kmvDistinctBy]] minus the exact count
+    * the store never kept.
     */
-  private def kmvByRows(tag: String, hashed: DataFrame, k: Int): DataFrame =
-    hashed.filter(col("grp").isNotNull && col("h").isNotNull)
-      .groupBy("grp")
-      .agg(graft.functions.KmvAgg.kmv(k)(col("h")).as("hs"))
-      .select(col("grp"), explode(col("hs")).as("h"))
-      .select(concat(lit(kmvByPrefix(tag)), col("grp")).as("key"),
-        col("h").as("ts"), col("grp"), col("h"))
+  def storedKmvEstimateBy(db: Db, tag: String = "t",
+                          at: Option[Db#Snapshot] = None): DataFrame =
+    kmvEstimate(ByGroup, db, snapOf(db, at), tag)
 
-  /** The merged per-group sketches: the k smallest distinct stored
-    * minima of each group — a key-pruned read plus a window
-    * PARTITIONED by group (no single-partition stage; a million groups
-    * spread across the cluster). By the union law, EXACTLY each
-    * group's sketch of everything ever registered.
-    */
-  def storedKmvSketchBy(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedKmvSketchByAt(db, db.snapshot(), tag)
-
-  private def storedKmvSketchByAt(db: graft.store.Db,
-                                  snap: graft.store.Db#Snapshot,
-                                  tag: String,
-                                  pre: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = db.spark
-    val k = intProp(snap.manifest, kmvByKProp(tag), Sketches.KMV_K)
-    val empty = spark.range(0).select(col("id").cast("string").as("grp"),
-      col("id").as("h"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, kmvByPrefix(tag) + "%", pre)
-      if (!rows.columns.contains("grp") || !rows.columns.contains("h"))
-        empty
-      else {
-        requireClaimedOrEmpty(snap, kmvByKProp(tag), rows,
-          s"grouped KMV k for tag '$tag'")
-        import org.apache.spark.sql.expressions.Window
-        rows.select(col("grp"), col("h"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("grp").orderBy("h")))
-          .filter(col("rk") <= k).drop("rk")
-      }
-    }
-  }
-
-  /** Per-group estimates from the stored sketches — the store-side
-    * twin of [[Sketches.kmvDistinctBy]] (minus the exact count the
-    * store, by design, never kept), via THE shared estimator column
-    * [[Sketches.kmvEstimateCol]]. Ordered by group.
-    */
-  def storedKmvEstimateBy(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedKmvEstimateByAt(db, db.snapshot(), tag)
-
-  private[graft] def storedKmvEstimateByAt(db: graft.store.Db,
-                                           snap: graft.store.Db#Snapshot,
-                                           tag: String = "t")
-      : DataFrame = {
-    val k = intProp(snap.manifest, kmvByKProp(tag), Sketches.KMV_K)
-    storedKmvSketchByAt(db, snap, tag)
-      .groupBy("grp")
-      .agg(count(lit(1)).as("n_sketch"), max(col("h")).as("kth_hash"))
-      .select(col("grp"), col("n_sketch"), col("kth_hash"),
-        Sketches.kmvEstimateCol(col("n_sketch"), col("kth_hash"), k)
-          .as("est_distinct"))
-      .orderBy("grp")
-  }
-
-  /** [[foldKmv]] per group: keep each group's k smallest minima (k from
-    * the store's claim — a fold at a guessed smaller k would LOSE
-    * minima permanently), drop what they superseded (lossless by the
-    * union law), atomic like every fold.
-    */
-  def foldKmvBy(db: graft.store.Db, tag: String = "t",
+  def foldKmvBy(db: Db, tag: String = "t",
                 waitMillis: Long = FOLD_WAIT_MILLIS): Long =
-    foldStore(db, s"foldKmvBy($tag)", Seq(kmvByPrefix(tag) + "%"),
-      waitMillis, foldProp = Some(foldLastProp("kmvby", tag)))(
-      kmvFoldRowsBy(db, db.snapshot(), tag), identity)
+    kmvFold(ByGroup, db, tag, waitMillis)
 
   /** DuckDB twin of the grouped store over `documents` tokens by
     * `source` — [[Sketches.sqlKmvTokensBySource]] minus the exact
@@ -480,31 +903,16 @@ object SketchStore {
        |FROM topk WHERE rk <= $k
        |GROUP BY grp ORDER BY grp""".stripMargin
 
-  // ── single-tx multi-store registration ─────────────────────────────
-  //
-  // The measured cost driver of sketch maintenance is the manifest
-  // commit, not the sketch math (~0.44 s/commit at micro-batch sizes,
-  // SCALE.md fold economics) — so the streaming trio must not pay it
-  // three times. The three stores' key families are disjoint prefixes
-  // in one warehouse; a batch's KMV minima, count-min cells and MG
-  // partial union into ONE transaction, and the trio becomes atomic:
-  // no interleaving (or crash) can observe a batch's counters without
-  // its minima.
+  // ── trio ───────────────────────────────────────────────────────────
 
-  /** Registers one batch into the KMV + count-min + MG stores as ONE
-    * transaction (one claim, one publish — 3× fewer commits than three
-    * registrations, and atomic across the trio). Each family's rows
-    * are exactly what its standalone registration writes, so every
-    * stored report is unchanged. `cursor`/`sinkProps` ride the
-    * publishing commit for streaming sinks
-    * ([[graft.store.TxWriter.write]]'s streamCursor rider).
+  /** Registers one batch into the KMV + count-min + MG stores (plus the
+    * histogram store when `valueCol` names a numeric column) as ONE
+    * transaction: one claim and one publish instead of one per family —
+    * the manifest commit, not the sketch math, is the measured cost of
+    * sketch maintenance — and atomic across the families. `cursor` and
+    * `sinkProps` ride the publishing commit for streaming sinks.
     */
-  /** `valueCol` is the hist rider (the grouped trio's contract): a
-    * batch that also carries a numeric column registers its histogram
-    * bins under the SAME transaction and grid claim — four families,
-    * one commit, instead of paying a second `histWriter` sink's.
-    */
-  def registerSketches(db: graft.store.Db, batch: DataFrame, elem: Column,
+  def registerSketches(db: Db, batch: DataFrame, elem: Column,
                        batchId: Long, tag: String = "t",
                        k: Int = Sketches.KMV_K, d: Int = Sketches.CM_D,
                        w: Long = Sketches.CM_W, c: Int = Sketches.MG_C,
@@ -513,151 +921,22 @@ object SketchStore {
                        histW: Long = Sketches.HIST_W, origin: Long = 0L,
                        cursor: Option[(String, Long)] = None,
                        sinkProps: Map[String, String] = Map.empty,
-                       fuse: Boolean = false): Long = {
-    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
-    requireCmGrid(db, tag, d, w)
-    requireIntGeom(db, kmvKProp(tag), k, s"KMV k for tag '$tag'")(
-      kmvKey(tag))
-    requireIntGeom(db, mgCProp(tag), c, s"MG c for tag '$tag'")(
-      mgPrefix(tag) + "%")
-    valueCol.foreach(_ => requireHistGrid(db, tag, b, histW, origin))
-    // the families aggregate the SAME element stream — and three of
-    // them (KMV, count-min, MG) are pure functions of the batch's
-    // per-item COUNT multiset: KMV of the distinct items (KmvAgg keeps
-    // distinct minima), count-min by counter additivity, MG's batch
-    // summary by definition (exact counts, one truncation). So ONE
-    // exact (item, cnt) aggregation feeds all three, and the stream is
-    // scanned/shuffled once instead of once per family; each branch
-    // then reads vocabulary-sized local blocks. Only the hist rider
-    // bins the raw `v` stream (not count-derivable) — with a valueCol
-    // the projection is materialized so hist and the counts aggregate
-    // don't re-run the batch lineage twice.
-    val elems0 = batch.select(
-      Seq(elem.as("item")) ++ valueCol.map(_.as("v")).toSeq: _*)
-    val elems = valueCol.fold(elems0)(_ => elems0.transform(graft.core.Graft.pin))
-    // the counts aggregate is NOT pinned: its exchange subtree is
-    // byte-identical in every branch below, so the single write-job
-    // plan computes it once via exchange reuse (guide §2.4 — verified
-    // in the plan: one ReusedExchange per extra branch); a pin here was
-    // one whole extra action per register transaction
-    val counts = elems.select(col("item")).filter(col("item").isNotNull)
-      .groupBy("item").agg(count(lit(1)).as("cnt"))
-    val kmv = Sketches.kmvSketch(counts, col("item"), k)
-      .select(lit(kmvKey(tag)).as("key"), col("h").as("ts"), col("h"))
-    val cm = Sketches.countMinSketchCounts(counts, d, w)
-      .select(
-        format_string(cmPrefix(tag) + "%d/%06d", col("sk_row"), col("bucket"))
-          .as("key"),
-        lit(batchId).as("ts"), col("sk_row"), col("bucket"), col("c"))
-    val mg = Sketches.mgTruncate(
-        counts.select(col("item"), col("cnt").as("f")), c)
-      .select(concat(lit(mgPrefix(tag)), col("item")).as("key"),
-        lit(batchId).as("ts"), col("item"), col("est"))
-    val mass = counts.agg(coalesce(sum(col("cnt")), lit(0L)).as("n_items"))
-      .select(lit(mgMassKey(tag)).as("key"), lit(batchId).as("ts"),
-        col("n_items"))
-    val base = kmv
-      .unionByName(cm, allowMissingColumns = true)
-      .unionByName(mg, allowMissingColumns = true)
-      .unionByName(mass, allowMissingColumns = true)
-    val rows = valueCol.fold(base)(_ => base.unionByName(
-      histRowsOf(tag, Sketches.histSketch(elems, col("v"), b, histW, origin),
-        batchId),
-      allowMissingColumns = true))
-    // bounded by the four geometries (≤ k + d·w + c+1 + b rows):
-    // single-partition write path — one job computes every branch once
-    graft.store.TxWriter.write(db, rows, rangePartitions = Some(1),
-      props = sinkProps,
-      propsClaim = cmGridClaim(tag, d, w) ++
-        Map(kmvKProp(tag) -> k.toString, mgCProp(tag) -> c.toString) ++
-        valueCol.fold(Map.empty[String, String])(_ =>
-          histGridClaim(tag, b, histW, origin)),
-      streamCursor = cursor, fuse = fuse)
-  }
+                       fuse: Boolean = false): Long =
+    regTrio(db, batch, None, elem, batchId, tag, k, d, w, c, valueCol, b,
+      histW, origin, cursor, sinkProps, fuse)
 
-  /** [[foldKmv]] + [[foldCountMin]] + [[foldMg]] as ONE atomic
-    * supersede: all four key families delete under one marker and
-    * their folded replacements publish in the same manifest commit —
-    * 3× fewer fold rounds than three standalone folds, and no
-    * interleaving can see one store folded and another not. Each
-    * family's replacement rows are exactly its standalone fold's, so
-    * every report is preserved by the same laws.
+  /** [[foldKmv]] + [[foldCountMin]] + [[foldMg]] + [[foldHist]] as ONE
+    * atomic supersede of all five key families.
     */
-  def foldSketches(db: graft.store.Db, tag: String = "t",
-                   waitMillis: Long = FOLD_WAIT_MILLIS): Long = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").cast("string").as("key"),
-      col("id").as("ts"))
-    val prefixes = Seq(kmvKey(tag), cmPrefix(tag) + "%",
-      mgPrefix(tag) + "%", mgMassKey(tag), histPrefix(tag) + "%")
-    foldStore(db, s"foldSketches($tag)", prefixes, waitMillis,
-      foldProp = Some(foldLastProp("sketches", tag)),
-      singlePartition = true)({
-        // ONE snapshot for every family's read: all four key families
-        // fold from the same store generation (the same-generation
-        // argument of [[storedHeavyHittersAt]], applied to the fold);
-        // each family's geometry (k, c) reads back off that snapshot's
-        // claims inside the At-readers
-        val snap = db.snapshot()
-        if (snap.manifest.dataTxids.isEmpty) empty
-        else {
-          // ONE key-pruned scan of all the tag's families, materialized
-          // once (guide §2.4) — the family readers each re-scanned the store,
-          // and the replacement plan executed the scans again in the write
-          // job; branches are local prefix filters over the pinned pass. The
-          // old hist/mass `isEmpty` probes (a Spark job each, per fold) are
-          // gone: branch aggregations below are per-key-group, so an
-          // absent family contributes zero rows by itself.
-          val all = Some(graft.core.Graft.pin(snap.readMany(prefixes)))
-          val kmv = storedKmvSketchAt(db, snap, tag, all)
-            .select(lit(kmvKey(tag)).as("key"), col("h").as("ts"), col("h"))
-          val cm = storedCountMinAt(db, snap, tag, all)
-            .select(
-              format_string(cmPrefix(tag) + "%d/%06d", col("sk_row"),
-                col("bucket")).as("key"),
-              lit(FOLD_TS).as("ts"), col("sk_row"), col("bucket"), col("c"))
-          val base0 = kmv.unionByName(cm, allowMissingColumns = true)
-          // the hist family folds whenever it has rows under the tag
-          // (the valueCol rider, or a sibling registerHist sink) — the
-          // same lossless per-bin sum as foldHist
-          val base = base0.unionByName(
-            histRowsOf(tag, storedHistAt(db, snap, tag, all), FOLD_TS),
-            allowMissingColumns = true)
-          // MG's emptiness signal is its mass rows (see foldMg) — a tag
-          // that never registered MG contributes nothing rather than a
-          // spurious zero-mass row: the total is aggregated per
-          // synthetic group, which yields ZERO rows on an empty mass
-          // family (a global aggregate would mint one)
-          val massRows = famRows(snap, mgMassKey(tag), all)
-          if (!massRows.columns.contains("n_items")) base
-          else {
-            val cands = storedMgCandidatesAt(db, snap, tag, all)
-              .select(concat(lit(mgPrefix(tag)), col("item")).as("key"),
-                lit(FOLD_TS).as("ts"), col("item"), col("est"))
-            val total = massRows
-              .groupBy(lit(1).as("_g"))
-              .agg(coalesce(sum(col("n_items")), lit(0L)).as("n_items"))
-              .select(lit(mgMassKey(tag)).as("key"), lit(FOLD_TS).as("ts"),
-                col("n_items"))
-            base
-              .unionByName(cands, allowMissingColumns = true)
-              .unionByName(total, allowMissingColumns = true)
-          }
-        }
-      }, identity)
-  }
+  def foldSketches(db: Db, tag: String = "t",
+                   waitMillis: Long = FOLD_WAIT_MILLIS): Long =
+    trioFold(Flat, db, tag, waitMillis)
 
-  /** The GROUPED counterpart of [[registerSketches]]: one batch's
-    * per-group KMV minima, MG partials (+ masses) AND count-min grids
-    * union into ONE transaction — the grouped sketch sink's micro-batch
-    * shape. A stream that ALSO carries a numeric column rides its
-    * grouped histogram rows under the SAME transaction and grid claim
-    * via `valueCol` (one fused commit for all four grouped families).
-    * Each family's rows come from the same builders the standalone
-    * registrations use ([[kmvByRows]]/[[mgByRows]]/[[cmByRows]]/
-    * [[histByRowsOf]]), so every stored report is unchanged either way.
+  /** The grouped [[registerSketches]]: per-group KMV minima, MG partials
+    * (+ masses), count-min grids and, with `valueCol`, histogram bins in
+    * ONE transaction.
     */
-  def registerSketchesBy(db: graft.store.Db, batch: DataFrame, grp: Column,
+  def registerSketchesBy(db: Db, batch: DataFrame, grp: Column,
                          elem: Column, batchId: Long, tag: String = "t",
                          k: Int = Sketches.KMV_K, c: Int = Sketches.MG_C,
                          d: Int = Sketches.CM_D, cmW: Long = Sketches.CM_W,
@@ -667,377 +946,92 @@ object SketchStore {
                          cursor: Option[(String, Long)] = None,
                          sinkProps: Map[String, String] = Map.empty,
                          fuse: Boolean = false)
-      : Long = {
-    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
-    requireCmByGrid(db, tag, d, cmW)
-    requireIntGeom(db, kmvByKProp(tag), k,
-      s"grouped KMV k for tag '$tag'")(kmvByPrefix(tag) + "%")
-    requireIntGeom(db, mgByCProp(tag), c,
-      s"grouped MG c for tag '$tag'")(mgByPrefix(tag) + "%")
-    valueCol.foreach(_ => requireHistByGrid(db, tag, b, w, origin))
-    // ONE exact (grp, item, cnt) aggregation feeds KMV, MG AND
-    // count-min — the same count-derivability argument as
-    // [[registerSketches]], per group: KmvAgg keeps distinct minima,
-    // MG's batch summary IS truncate-over-exact-counts, and the grids
-    // add counters. One shuffle of the element stream instead of three;
-    // the branches then aggregate the (grp, item)-sized counts. With
-    // valueCol the hist branch bins the raw `v` stream exactly as the
-    // standalone registerHistBy would (null groups excluded inside
-    // histSketchBy) — the projection is materialized so hist and the
-    // counts aggregate don't re-run the batch lineage twice.
-    val base0 = batch.select(
-      Seq(grp.as("grp"), elem.as("item")) ++
-        valueCol.map(_.as("v")).toSeq: _*)
-    val base = valueCol.fold(base0)(_ => base0.transform(graft.core.Graft.pin))
-    // counts is NOT pinned (same exchange-reuse argument as
-    // [[registerSketches]]): the pinned `rows` union materializes every
-    // branch in ONE job, and the branches' identical counts exchange
-    // dedups inside that plan — the pin was an extra action per
-    // register transaction
-    val counts = base.select(col("grp"), col("item"))
-      .filter(col("grp").isNotNull && col("item").isNotNull)
-      .groupBy("grp", "item").agg(count(lit(1)).as("cnt"))
-    val kmv = kmvByRows(tag,
-      counts.select(col("grp"), PortableHash.h60(col("item")).as("h")), k)
-    val cm = cmByRows(tag, Sketches.countMinSketchByCounts(counts, d, cmW),
-      batchId)
-    val quartetBase = kmv
-      .unionByName(mgByRows(tag, counts, batchId, c),
-        allowMissingColumns = true)
-      .unionByName(cm, allowMissingColumns = true)
-    val rows = valueCol.fold(quartetBase)(_ => quartetBase.unionByName(
-      histByRowsOf(tag,
-        Sketches.histSketchBy(base, col("grp"), col("v"), b, w, origin),
-        batchId),
-      allowMissingColumns = true))
-    // the written rows are pinned: the write's range exchange SAMPLES its
-    // input before the write job — unpinned, every branch aggregation
-    // executed twice per register transaction (guide §5: the pinned frame is
-    // the batch's own group-bounded output, bytes the write materializes
-    // anyway)
-    graft.store.TxWriter.write(db, graft.core.Graft.pin(rows),
-      props = sinkProps,
-      propsClaim = cmByGridClaim(tag, d, cmW) ++
-        Map(kmvByKProp(tag) -> k.toString, mgByCProp(tag) -> c.toString) ++
-        valueCol.fold(Map.empty[String, String])(_ =>
-          histByGridClaim(tag, b, w, origin)),
-      streamCursor = cursor, fuse = fuse)
-  }
+      : Long =
+    regTrio(db, batch, Some(grp), elem, batchId, tag, k, d, cmW, c, valueCol,
+      b, w, origin, cursor, sinkProps, fuse)
 
-  /** [[foldKmvBy]] + [[foldMgBy]] + [[foldCountMinBy]] + [[foldHistBy]]
-    * as ONE atomic supersede over all five grouped key families — the
-    * grouped twin of [[foldSketches]]. The cg/ and hg/ families fold
-    * whenever they have rows under the tag (whether from the trio's
-    * riders or sibling standalone sinks sharing the tag — the folds are
-    * the same lossless per-cell/per-bin sums either way).
-    */
-  def foldSketchesBy(db: graft.store.Db, tag: String = "t",
-                     waitMillis: Long = FOLD_WAIT_MILLIS): Long = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").cast("string").as("key"),
-      col("id").as("ts"))
-    val prefixes = Seq(kmvByPrefix(tag) + "%", mgByPrefix(tag) + "%",
-      mgByMassPrefix(tag) + "%", histByPrefix(tag) + "%",
-      cmByPrefix(tag) + "%")
-    foldStore(db, s"foldSketchesBy($tag)", prefixes, waitMillis,
-      foldProp = Some(foldLastProp("sketchesby", tag)))({
-        val snap = db.snapshot()
-        if (snap.manifest.dataTxids.isEmpty) empty
-        else {
-          // ONE key-pruned scan of all five grouped families,
-          // materialized once (guide §2.4): the per-family readers each
-          // re-scanned the store and re-paid last-wins + the delete
-          // anti-join; branches are now local prefix filters over the pinned
-          // pass. The per-family `isEmpty` probes are gone: every branch
-          // aggregates per group, so an absent family contributes zero rows
-          // by itself.
-          val all = Some(graft.core.Graft.pin(snap.readMany(prefixes)))
-          val kmv = kmvFoldRowsBy(db, snap, tag, all)
-          val withMg = mgByFoldRows(db, snap, tag, all).fold(kmv)(mg =>
-            kmv.unionByName(mg, allowMissingColumns = true))
-          val withCm = withMg.unionByName(
-            cmByRows(tag, storedCountMinByAt(db, snap, tag, all), FOLD_TS),
-            allowMissingColumns = true)
-          withCm.unionByName(
-            histByRowsOf(tag, storedHistByAt(db, snap, tag, all), FOLD_TS),
-            allowMissingColumns = true)
-        }
-      }, identity)
-  }
-
-  /** The grouped-KMV FOLD replacement (each group's k smallest minima
-    * re-keyed), shared by [[foldKmvBy]] and [[foldSketchesBy]].
-    */
-  private def kmvFoldRowsBy(db: graft.store.Db,
-                            snap: graft.store.Db#Snapshot,
-                            tag: String,
-                            pre: Option[DataFrame] = None): DataFrame =
-    storedKmvSketchByAt(db, snap, tag, pre)
-      .select(concat(lit(kmvByPrefix(tag)), col("grp")).as("key"),
-        col("h").as("ts"), col("grp"), col("h"))
+  /** The grouped [[foldSketches]]: all five grouped key families. */
+  def foldSketchesBy(db: Db, tag: String = "t",
+                     waitMillis: Long = FOLD_WAIT_MILLIS): Long =
+    trioFold(ByGroup, db, tag, waitMillis)
 
   // ── count-min ──────────────────────────────────────────────────────
 
-  /** Registers a batch's counter grid (≤ d·w cells) as ONE transaction
-    * under `batchId`. Idempotent: re-running the same batchId rewrites
-    * the same (key, ts) records and last-wins keeps one copy — safe
-    * under streaming retries.
-    *
-    * The (d, w) GEOMETRY is the store's identity, claimed
-    * first-writer-wins in the publishing commit exactly like the
-    * histogram grid ([[registerHist]]'s geometry note): cells from a
-    * different geometry summed under the same keys would break
-    * count-min's overestimate guarantee — a probe could return
-    * estimates BELOW the true count with no error at all — so a
-    * mismatched registration refuses loudly instead, and probes read
-    * the geometry back off the manifest rather than trusting a caller.
+  /** Registers a batch's counter grid (≤ d·w cells) under `batchId`.
+    * The (d, w) geometry is claimed first-writer-wins: cells from a
+    * different geometry summed under the same keys would break the
+    * overestimate guarantee with no error at all.
     */
-  def registerCountMin(db: graft.store.Db, batch: DataFrame, elem: Column,
+  def registerCountMin(db: Db, batch: DataFrame, elem: Column,
                        batchId: Long, tag: String = "t",
                        d: Int = Sketches.CM_D,
-                       w: Long = Sketches.CM_W): Long = {
-    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
-    requireCmGrid(db, tag, d, w)
-    val rows = Sketches.countMinSketch(batch, elem, d, w)
-      .select(
-        format_string(cmPrefix(tag) + "%d/%06d", col("sk_row"), col("bucket"))
-          .as("key"),
-        lit(batchId).as("ts"), col("sk_row"), col("bucket"), col("c"))
-    // bounded by the grid (≤ d·w rows): single-partition write path
-    graft.store.TxWriter.write(db, rows, rangePartitions = Some(1),
-      propsClaim = cmGridClaim(tag, d, w))
-  }
+                       w: Long = Sketches.CM_W): Long =
+    regCountMin(db, batch, None, elem, batchId, tag, d, w, None, Map.empty,
+      fuse = false)
 
-  /** The ungrouped grid's first-writer-wins geometry claim (checked
-    * inside the publishing CAS, like [[registerHist]]'s grid claim).
+  /** The claimed (d, w) (defaults when unclaimed or empty). */
+  def storedCmGrid(db: Db, tag: String = "t",
+                   at: Option[Db#Snapshot] = None): (Int, Long) =
+    cmGridOf(snapOf(db, at).manifest, Flat, tag)
+
+  /** The running grid (sk_row, bucket, c): per-cell sums over every
+    * registered batch and fold.
     */
-  private def cmGridClaim(tag: String, d: Int,
-                          w: Long): Map[String, String] =
-    Map(cmDProp(tag) -> d.toString, cmWProp(tag) -> w.toString)
+  def storedCountMin(db: Db, tag: String = "t",
+                     at: Option[Db#Snapshot] = None): DataFrame =
+    cmGrid(Flat, db, snapOf(db, at), tag)
 
-  /** Friendly pre-write geometry-mismatch error for the ungrouped grid
-    * (the propsClaim inside the CAS is the authority), shared by
-    * [[registerCountMin]] and [[registerSketches]].
+  /** Frequency estimates for `items` against the running grid, at the
+    * store's claimed geometry.
     */
-  private def requireCmGrid(db: graft.store.Db, tag: String, d: Int,
-                            w: Long): Unit = {
-    val snap = db.snapshot()
-    val m = snap.manifest
-    val exD = m.props.get(cmDProp(tag))
-    val exW = m.props.get(cmWProp(tag))
-    require(exD.forall(_ == d.toString) && exW.forall(_ == w.toString),
-      s"count-min geometry mismatch for tag '$tag': stored " +
-        s"(d=${exD.getOrElse("-")}, w=${exW.getOrElse("-")}) " +
-        s"vs registration (d=$d, w=$w)")
-    if (exD.isEmpty && exW.isEmpty &&
-        familyNonEmpty(snap, cmPrefix(tag) + "%"))
-      throw new IllegalStateException(
-        unclaimedMsg(cmDProp(tag), s"count-min geometry for tag '$tag'"))
-  }
+  def probeStoredCountMin(db: Db, items: DataFrame,
+                          elemCol: String, tag: String = "t",
+                          at: Option[Db#Snapshot] = None): DataFrame =
+    probeCm(Flat, db, snapOf(db, at), items, None, elemCol, tag)
 
-  /** The ungrouped grid's geometry, read back from the properties the
-    * first registration claimed (defaults when the store predates
-    * geometry tracking or is empty).
+  /** One folded generation of per-cell sums (counter addition is exact,
+    * so every probe is preserved); bounds the store at
+    * d·w + d·w·(batches since last fold) rows.
     */
-  def storedCmGrid(db: graft.store.Db, tag: String = "t"): (Int, Long) =
-    cmGridOf(graft.store.Manifest.current(db.warehouse), cmDProp(tag),
-      cmWProp(tag))
+  def foldCountMin(db: Db, tag: String = "t",
+                   waitMillis: Long = FOLD_WAIT_MILLIS): Long =
+    cmFold(Flat, db, tag, waitMillis)
 
-  /** The (d, w) recorded in one manifest state's properties. */
-  private def cmGridOf(m: graft.store.ManifestState, dProp: String,
-                       wProp: String): (Int, Long) =
-    (m.props.get(dProp).map(_.toInt).getOrElse(Sketches.CM_D),
-      m.props.get(wProp).map(_.toLong).getOrElse(Sketches.CM_W))
-
-  /** The running grid: per-cell sums over every registered batch (and
-    * fold) — a key-pruned read of ≤ d·w·batches slim rows into a d·w
-    * aggregation. Drop-in for [[Sketches.countMinProbe]]'s sketch side.
+  /** Per-group counter grids (≤ d·w·groups cells) under `batchId`: point
+    * frequency of ANY item in ANY group, with the group's own
+    * N_grp·e/w error bound. Its own `cmg.*` claim, independent of the
+    * ungrouped grid under the same tag.
     */
-  def storedCountMin(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedCountMinAt(db, db.snapshot(), tag)
-
-  private def storedCountMinAt(db: graft.store.Db,
-                               snap: graft.store.Db#Snapshot,
-                               tag: String,
-                               pre: Option[DataFrame] = None): DataFrame = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").cast("int").as("sk_row"),
-      col("id").as("bucket"), col("id").as("c"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, cmPrefix(tag) + "%", pre)
-      if (!rows.columns.contains("c")) empty
-      else rows.groupBy("sk_row", "bucket").agg(sum(col("c")).as("c"))
-    }
-  }
-
-  /** Frequency estimates for `items` against the running grid. The
-    * geometry comes from the store's OWN claimed properties, never from
-    * the caller — probing a stored grid at a guessed (d, w) would hash
-    * items into the wrong cells and report garbage (possibly
-    * under-true) counts with no error. Grid and geometry derive from
-    * ONE snapshot (the same one-snapshot reasoning as
-    * [[storedHistQuantiles]]).
-    */
-  def probeStoredCountMin(db: graft.store.Db, items: DataFrame,
-                          elemCol: String, tag: String = "t"): DataFrame =
-    probeStoredCountMinAt(db, db.snapshot(), items, elemCol, tag)
-
-  private[graft] def probeStoredCountMinAt(db: graft.store.Db,
-                                           snap: graft.store.Db#Snapshot,
-                                           items: DataFrame, elemCol: String,
-                                           tag: String = "t")
-      : DataFrame = {
-    val grid = storedCountMinAt(db, snap, tag)
-    requireClaimedOrEmpty(snap, cmDProp(tag), grid,
-      s"count-min geometry for tag '$tag'")
-    val (d, w) = storedCmGridAt(snap, tag)
-    Sketches.countMinProbe(items, grid, elemCol, d, w)
-  }
-
-  // ── grouped count-min ──────────────────────────────────────────────
-  //
-  // Per-group frequency probes — the quadrant that closes the grouped
-  // family (hist = quantiles, KMV = cardinality, MG = frequent items,
-  // count-min = POINT frequency of ANY item, not just the heavy ones;
-  // MG certifies per-group frequent items but cannot answer "how often
-  // did THIS token appear in THIS source" for an arbitrary token — the
-  // per-group grid can, with the group's own N_grp·e/w error bound).
-  // Rows: key = "cg/<tag>/<escGrp>/<row>/<bucket>", ts = batchId →
-  // (grp, sk_row, bucket, c). escGrp keeps the group segment
-  // '/'-free so the fixed row/bucket tail parses unambiguously — grp
-  // is ALSO a column; nothing ever parses the key back. Counters add
-  // across batches like the ungrouped grid: per-batch rows summed at
-  // read, idempotent under replays, folded by per-(grp, cell) sums.
-
-  /** Registers one batch's per-group counter grids (≤ d·w·groups cells)
-    * as ONE transaction under `batchId` — idempotent under streaming
-    * retries like [[registerCountMin]], and under the same
-    * first-writer-wins (d, w) geometry claim (its own `cmg.*`
-    * properties, so the grouped and ungrouped grids under one tag stay
-    * independent): per-group cells from a mismatched geometry summed
-    * under the same `cg/` keys would silently break the per-group
-    * overestimate bound.
-    */
-  def registerCountMinBy(db: graft.store.Db, batch: DataFrame, grp: Column,
+  def registerCountMinBy(db: Db, batch: DataFrame, grp: Column,
                          elem: Column, batchId: Long, tag: String = "t",
                          d: Int = Sketches.CM_D, w: Long = Sketches.CM_W,
                          cursor: Option[(String, Long)] = None,
                          sinkProps: Map[String, String] = Map.empty,
-                         fuse: Boolean = false): Long = {
-    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
-    requireCmByGrid(db, tag, d, w)
-    // the written rows are pinned: the write's range exchange SAMPLES its
-    // input before the write job — unpinned, every branch aggregation
-    // executed twice per register transaction (guide §5: the pinned frame is
-    // the batch's own group-bounded output, bytes the write materializes
-    // anyway)
-    graft.store.TxWriter.write(db,
-      graft.core.Graft.pin(
-        cmByRows(tag, Sketches.countMinSketchBy(batch, grp, elem, d, w),
-          batchId)),
-      props = sinkProps, propsClaim = cmByGridClaim(tag, d, w),
-      streamCursor = cursor, fuse = fuse)
-  }
+                         fuse: Boolean = false): Long =
+    regCountMin(db, batch, Some(grp), elem, batchId, tag, d, w, cursor,
+      sinkProps, fuse)
 
-  /** The grouped grids' first-writer-wins geometry claim. */
-  private def cmByGridClaim(tag: String, d: Int,
-                            w: Long): Map[String, String] =
-    Map(cmByDProp(tag) -> d.toString, cmByWProp(tag) -> w.toString)
+  def storedCmByGrid(db: Db, tag: String = "t",
+                     at: Option[Db#Snapshot] = None): (Int, Long) =
+    cmGridOf(snapOf(db, at).manifest, ByGroup, tag)
 
-  /** Friendly pre-write geometry-mismatch error for the grouped grids,
-    * shared by [[registerCountMinBy]] and [[registerSketchesBy]].
+  /** The running per-group grids (grp, sk_row, bucket, c). */
+  def storedCountMinBy(db: Db, tag: String = "t",
+                       at: Option[Db#Snapshot] = None): DataFrame =
+    cmGrid(ByGroup, db, snapOf(db, at), tag)
+
+  /** Estimates for (`grpCol`, `elemCol`) items: a (grp, cell)-keyed
+    * join, never a broadcast of the data-sized grid relation.
     */
-  private def requireCmByGrid(db: graft.store.Db, tag: String, d: Int,
-                              w: Long): Unit = {
-    val snap = db.snapshot()
-    val m = snap.manifest
-    val exD = m.props.get(cmByDProp(tag))
-    val exW = m.props.get(cmByWProp(tag))
-    require(exD.forall(_ == d.toString) && exW.forall(_ == w.toString),
-      s"count-min geometry mismatch for grouped tag '$tag': stored " +
-        s"(d=${exD.getOrElse("-")}, w=${exW.getOrElse("-")}) " +
-        s"vs registration (d=$d, w=$w)")
-    if (exD.isEmpty && exW.isEmpty &&
-        familyNonEmpty(snap, cmByPrefix(tag) + "%"))
-      throw new IllegalStateException(
-        unclaimedMsg(cmByDProp(tag),
-          s"grouped count-min geometry for tag '$tag'"))
-  }
-
-  /** The grouped grids' geometry, from their own claimed properties. */
-  def storedCmByGrid(db: graft.store.Db, tag: String = "t"): (Int, Long) =
-    cmGridOf(graft.store.Manifest.current(db.warehouse), cmByDProp(tag),
-      cmByWProp(tag))
-
-  /** ONE copy of the grouped-cm row shape (over a prebuilt
-    * (grp, sk_row, bucket, c) grid at `ts`), shared by the standalone
-    * registration, the trio rider and both folds.
-    */
-  private def cmByRows(tag: String, grid: DataFrame, ts: Long): DataFrame =
-    grid.select(
-      concat(lit(cmByPrefix(tag)), escGrp(col("grp")),
-        format_string("/%d/%06d", col("sk_row"), col("bucket"))).as("key"),
-      lit(ts).as("ts"), col("grp"), col("sk_row"), col("bucket"),
-      col("c"))
-
-  /** The running per-group grids: per-(grp, cell) sums over a
-    * key-pruned read — drop-in for [[Sketches.countMinProbeBy]]'s
-    * sketch side.
-    */
-  def storedCountMinBy(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedCountMinByAt(db, db.snapshot(), tag)
-
-  private[graft] def storedCountMinByAt(db: graft.store.Db,
-                                        snap: graft.store.Db#Snapshot,
-                                        tag: String,
-                                        pre: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").cast("string").as("grp"),
-      col("id").cast("int").as("sk_row"), col("id").as("bucket"),
-      col("id").as("c"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, cmByPrefix(tag) + "%", pre)
-      if (!rows.columns.contains("grp") || !rows.columns.contains("c")) empty
-      else rows.groupBy("grp", "sk_row", "bucket").agg(sum(col("c")).as("c"))
-    }
-  }
-
-  /** Frequency estimates for (`grpCol`, `elemCol`) items against the
-    * running grouped grids — a (grp, cell)-keyed join, never a
-    * broadcast of the data-sized grid relation. Geometry comes from the
-    * store's own claimed `cmg.*` properties, same contract as
-    * [[probeStoredCountMin]]; grid and geometry from ONE snapshot.
-    */
-  def probeStoredCountMinBy(db: graft.store.Db, items: DataFrame,
+  def probeStoredCountMinBy(db: Db, items: DataFrame,
                             grpCol: String, elemCol: String,
-                            tag: String = "t"): DataFrame =
-    probeStoredCountMinByAt(db, db.snapshot(), items, grpCol, elemCol, tag)
+                            tag: String = "t",
+                            at: Option[Db#Snapshot] = None): DataFrame =
+    probeCm(ByGroup, db, snapOf(db, at), items, Some(grpCol), elemCol, tag)
 
-  private[graft] def probeStoredCountMinByAt(db: graft.store.Db,
-                                             snap: graft.store.Db#Snapshot,
-                                             items: DataFrame,
-                                             grpCol: String, elemCol: String,
-                                             tag: String = "t"): DataFrame = {
-    val grid = storedCountMinByAt(db, snap, tag)
-    requireClaimedOrEmpty(snap, cmByDProp(tag), grid,
-      s"grouped count-min geometry for tag '$tag'")
-    val (d, w) = storedCmByGridAt(snap, tag)
-    Sketches.countMinProbeBy(items, grid, grpCol, elemCol, d, w)
-  }
-
-  /** [[foldCountMin]] per group: one folded generation of per-(grp,
-    * cell) sums — counter addition is exact, so every probe is
-    * preserved verbatim.
-    */
-  def foldCountMinBy(db: graft.store.Db, tag: String = "t",
+  def foldCountMinBy(db: Db, tag: String = "t",
                      waitMillis: Long = FOLD_WAIT_MILLIS): Long =
-    foldStore(db, s"foldCountMinBy($tag)", Seq(cmByPrefix(tag) + "%"),
-      waitMillis, foldProp = Some(foldLastProp("cmby", tag)))(
-      storedCountMinBy(db, tag),
-      cmByRows(tag, _, FOLD_TS))
+    cmFold(ByGroup, db, tag, waitMillis)
 
   /** DuckDB twin of the grouped count-min store over `documents` tokens
     * by `source`: per-source grids summed over the whole corpus (two
@@ -1087,155 +1081,53 @@ object SketchStore {
   }
 
   // ── Misra–Gries frequent items ─────────────────────────────────────
-  //
-  // The third mergeable summary the warehouse folds for free. Rows:
-  //   key = "m/<tag>/<item>"   ts = batchId  →  item, est   (per-batch
-  //                                             MG partial, ≤ c rows)
-  //   key = "mn/<tag>"         ts = batchId  →  n_items     (batch mass)
-  // Partials are the DETERMINISTIC [[Sketches.mgSummary]] (exact counts
-  // + one truncation), so unlike the order-dependent streaming fold the
-  // stored rows — and everything derived from them — are a pure
-  // function of the batch multisets and hash-match a DuckDB oracle.
-  // Merging k partials in one step (sum per item, subtract the (c+1)-th
-  // largest, keep positives) is a valid MG merge tree: every truncation
-  // retires ≥ (c+1)× its own error from a total mass of n, so the
-  // global bound `true − n/(c+1) ≤ est ≤ true` survives — the 1000-case
-  // SketchPropertySpec law. Re-registering a batchId rewrites the same
-  // (key, ts) rows: idempotent under streaming retries like count-min.
 
   /** Registers one batch's deterministic MG partial (≤ c item rows +
-    * one mass row) as ONE transaction. Cost: the batch's own exact
-    * aggregation + a ≤ (c+1)-row write; store size and history never
-    * enter.
+    * one mass row) as ONE transaction. Partials are exact counts plus
+    * one truncation, so the stored rows — and every report — are a pure
+    * function of the batch multisets. Nulls are excluded from the
+    * summary and the mass. `c` is claimed first-writer-wins: the
+    * n/(c+1) certification threshold is only sound at one uniform c.
     */
-  def registerMg(db: graft.store.Db, batch: DataFrame, elem: Column,
+  def registerMg(db: Db, batch: DataFrame, elem: Column,
                  batchId: Long, tag: String = "t",
                  c: Int = Sketches.MG_C,
                  cursor: Option[(String, Long)] = None,
                  sinkProps: Map[String, String] = Map.empty,
-                 fuse: Boolean = false): Long = {
-    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
-    // c is the store's identity like the other geometries: partials
-    // truncated at different capacities merged under one key family
-    // still under-estimate, but the report's n/(c+1) CERTIFICATION
-    // threshold (and a fold's re-truncation) are only sound at one
-    // uniform c — claimed first-writer-wins, read back by reports/folds
-    requireIntGeom(db, mgCProp(tag), c, s"MG c for tag '$tag'")(
-      mgPrefix(tag) + "%")
-    // nulls are excluded from the summary AND the mass, matching
-    // [[Sketches.heavyHitters]] (a null item would also become a null
-    // store key). The partial IS truncate-over-exact-counts and the
-    // mass is the counts' sum, so ONE aggregation feeds both — and the
-    // materialized intermediate is the vocabulary-sized counts, not
-    // the raw stream.
-    val counts = batch.select(elem.as("item")).filter(col("item").isNotNull)
-      .groupBy("item").agg(count(lit(1)).as("cnt"))
-      .transform(graft.core.Graft.pin)
-    val partial = Sketches.mgTruncate(
-        counts.select(col("item"), col("cnt").as("f")), c)
-      .select(concat(lit(mgPrefix(tag)), col("item")).as("key"),
-        lit(batchId).as("ts"), col("item"), col("est"))
-    val mass = counts.agg(coalesce(sum(col("cnt")), lit(0L)).as("n_items"))
-      .select(lit(mgMassKey(tag)).as("key"), lit(batchId).as("ts"),
-        col("n_items"))
-    // bounded by the capacity (≤ c+1 rows): single-partition write path
-    graft.store.TxWriter.write(db,
-      partial.unionByName(mass, allowMissingColumns = true),
-      rangePartitions = Some(1),
-      props = sinkProps, propsClaim = Map(mgCProp(tag) -> c.toString),
-      streamCursor = cursor, fuse = fuse)
-  }
+                 fuse: Boolean = false): Long =
+    regMg(db, batch, None, elem, batchId, tag, c, cursor, sinkProps, fuse)
 
-  /** The merged summary of every batch ever registered: per-item sums
-    * over the stored partials (a key-pruned read of ≤ c·batches slim
-    * rows), re-truncated to ≤ c entries by the same deterministic rule.
-    * A valid MG(c) summary of the CONCATENATED stream — candidates
-    * provably contain every item above n/(c+1).
+  /** The MG store's claimed capacity. */
+  private[graft] def storedMgC(db: Db, tag: String = "t",
+                               at: Option[Db#Snapshot] = None): Int =
+    intProp(snapOf(db, at).manifest, Flat.mgC(tag), Sketches.MG_C)
+
+  /** The merged ≤ c candidates (item, est): a valid MG(c) summary of the
+    * concatenated stream.
     */
-  def storedMgCandidates(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedMgCandidatesAt(db, db.snapshot(), tag)
+  def storedMgCandidates(db: Db, tag: String = "t",
+                         at: Option[Db#Snapshot] = None): DataFrame =
+    mgCandidates(Flat, db, snapOf(db, at), tag)
 
-  private def storedMgCandidatesAt(db: graft.store.Db,
-                                   snap: graft.store.Db#Snapshot,
-                                   tag: String,
-                                   pre: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = db.spark
-    val c = intProp(snap.manifest, mgCProp(tag), Sketches.MG_C)
-    val empty = spark.range(0)
-      .select(col("id").cast("string").as("item"), col("id").as("est"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, mgPrefix(tag) + "%", pre)
-      if (!rows.columns.contains("est")) empty
-      else {
-        requireClaimedOrEmpty(snap, mgCProp(tag), rows,
-          s"MG c for tag '$tag'")
-        Sketches.mgTruncate(
-          rows.groupBy("item").agg(sum(col("est")).as("f")), c)
-      }
-    }
-  }
+  /** Total element mass ever registered, one row `n` (0 when empty). */
+  def storedMgMass(db: Db, tag: String = "t",
+                   at: Option[Db#Snapshot] = None): DataFrame =
+    mgMass(Flat, db, snapOf(db, at), tag)
 
-  /** Total element mass ever registered to the MG store — readable on
-    * its own so an empty candidate set (nothing certified frequent, or
-    * a tie-heavy truncation) can still report how much stream it
-    * summarizes.
+  /** The frequent-items report (item, est, n, certain), heaviest first:
+    * `certain` = 1 when the item is GUARANTEED frequent.
     */
-  def storedMgMass(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedMgMassAt(db, db.snapshot(), tag)
-
-  private[graft] def storedMgMassAt(db: graft.store.Db,
-                                    snap: graft.store.Db#Snapshot,
-                                    tag: String,
-                                    pre: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = db.spark
-    val empty = spark.range(1).select(lit(0L).as("n"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, mgMassKey(tag), pre)
-      if (!rows.columns.contains("n_items")) empty
-      else rows.agg(coalesce(sum(col("n_items")), lit(0L)).as("n"))
-    }
-  }
-
-  /** The store's frequent-items report: every merged candidate with its
-    * lower-bound count, the total registered mass `n`, and a 0/1
-    * `certain` column — `est·(c+1) > n` means even the LOWER bound
-    * clears the n/(c+1) threshold, so the item is GUARANTEED frequent
-    * (the one-sided MG bound turns the sketch into a sound certifier,
-    * not just a candidate generator; the uncertain band is where an
-    * exact pass over the raw stream would be needed — which the store,
-    * by design, never kept). Heaviest first; deterministic end to end.
-    */
-  def storedHeavyHitters(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedHeavyHittersAt(db, db.snapshot(), tag)
-
-  /** [[storedHeavyHitters]] against ONE snapshot: candidates and mass
-    * must come from the same store generation — a registration
-    * committing between two independent snapshot reads could pair one
-    * generation's candidate counts with the other's mass and falsely
-    * certify an item (`est·(c+1) > n` against a stale smaller n).
-    */
-  private[graft] def storedHeavyHittersAt(db: graft.store.Db,
-                                          snap: graft.store.Db#Snapshot,
-                                          tag: String = "t"): DataFrame = {
-    val c = intProp(snap.manifest, mgCProp(tag), Sketches.MG_C)
-    // ONE scan of both key families, materialized once (guide §2.4):
-    // candidates and mass each re-scanned the store (two parquet scans + two
-    // last-wins passes in one report plan); the branches are now local prefix
-    // filters.
-    val pre =
-      if (snap.manifest.dataTxids.isEmpty) None
-      else Some(graft.core.Graft.pin(snap.readMany(
-        Seq(mgPrefix(tag) + "%", mgMassKey(tag)))))
-    storedMgCandidatesAt(db, snap, tag, pre)
-      .crossJoin(broadcast(storedMgMassAt(db, snap, tag, pre)))
-      .select(col("item"), col("est"), col("n"),
-        (col("est") * (c + 1) > col("n")).cast("long").as("certain"))
+  def storedHeavyHitters(db: Db, tag: String = "t",
+                         at: Option[Db#Snapshot] = None): DataFrame =
+    heavyHitters(Flat, db, snapOf(db, at), tag)
       .orderBy(col("est").desc, col("item"))
-  }
+
+  /** Collapses the per-batch partials to ONE merged summary: the ≤ c
+    * re-truncated candidates plus one summed mass row, at FOLD_TS.
+    */
+  def foldMg(db: Db, tag: String = "t",
+             waitMillis: Long = FOLD_WAIT_MILLIS): Long =
+    mgFold(Flat, db, tag, waitMillis)
 
   /** DuckDB twin of the MG store over the head+tail token stream of
     * `documents`, registered as two half-corpus batches split at
@@ -1287,215 +1179,52 @@ object SketchStore {
        |ORDER BY est DESC, item""".stripMargin
   }
 
-  // ── grouped Misra–Gries store ──────────────────────────────────────
-  //
-  // Per-group frequent items (the per-source token watchlist) — the
-  // fourth quadrant of the grouped family (hist, KMV, MG; count-min is
-  // already grouped by construction, its cells ARE the keys). Rows:
-  //   key = "mg/<tag>/<escGrp>/<item>"  ts = batchId → grp, item, est
-  //   key = "mgn/<tag>/<escGrp>"        ts = batchId → grp, n_items
-  // Same deterministic-partial / merge-retruncate / idempotent-replay /
-  // fenced-fold laws as the ungrouped store, with every rank computed
-  // inside the group's own window ([[Sketches.mgTruncateBy]]) — no
-  // single-partition stage anywhere.
-
-  /** Registers one batch's per-group deterministic MG partials (≤ c
-    * item rows + one mass row per group) as ONE transaction.
+  /** Per-group MG partials (≤ c item rows + one mass row per group) as
+    * ONE transaction, every rank computed inside the group's own window.
     */
-  def registerMgBy(db: graft.store.Db, batch: DataFrame, grp: Column,
+  def registerMgBy(db: Db, batch: DataFrame, grp: Column,
                    elem: Column, batchId: Long, tag: String = "t",
                    c: Int = Sketches.MG_C,
                    cursor: Option[(String, Long)] = None,
                    sinkProps: Map[String, String] = Map.empty,
-                   fuse: Boolean = false): Long = {
-    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
-    // materialized once — partial + per-group mass are two subtrees
-    requireIntGeom(db, mgByCProp(tag), c,
-      s"grouped MG c for tag '$tag'")(mgByPrefix(tag) + "%")
-    // the partial and the mass rows both derive from the exact
-    // (grp, item) counts — aggregate once, materialize the
-    // vocabulary-sized result instead of the raw stream
-    val counts = batch.select(grp.as("grp"), elem.as("item"))
-      .filter(col("grp").isNotNull && col("item").isNotNull)
-      .groupBy("grp", "item").agg(count(lit(1)).as("cnt"))
-      .transform(graft.core.Graft.pin)
-    // the written rows are pinned: the write's range exchange SAMPLES its
-    // input before the write job — unpinned, every branch aggregation
-    // executed twice per register transaction (guide §5: the pinned frame is
-    // the batch's own group-bounded output, bytes the write materializes
-    // anyway)
-    graft.store.TxWriter.write(db,
-      graft.core.Graft.pin(mgByRows(tag, counts, batchId, c)),
-      props = sinkProps, propsClaim = Map(mgByCProp(tag) -> c.toString),
-      streamCursor = cursor, fuse = fuse)
-  }
+                   fuse: Boolean = false): Long =
+    regMg(db, batch, Some(grp), elem, batchId, tag, c, cursor, sinkProps, fuse)
 
-  /** ONE copy of the grouped-MG row shapes (per-group deterministic
-    * partial + per-group mass row, both at `ts`), shared by the
-    * standalone registration and the trio. `counts` must be the
-    * null-filtered exact (grp, item, cnt) aggregation, already
-    * materialized — the partial is [[Sketches.mgSummaryBy]]'s
-    * truncate-over-exact-counts by definition, and the mass is the
-    * counts' per-group sum.
+  /** The grouped MG store's claimed capacity. */
+  private[graft] def storedMgByC(db: Db, tag: String = "t",
+                                 at: Option[Db#Snapshot] = None): Int =
+    intProp(snapOf(db, at).manifest, ByGroup.mgC(tag), Sketches.MG_C)
+
+  /** The merged per-group candidates (grp, item, est). */
+  def storedMgCandidatesBy(db: Db, tag: String = "t",
+                           at: Option[Db#Snapshot] = None): DataFrame =
+    mgCandidates(ByGroup, db, snapOf(db, at), tag)
+
+  /** Per-group registered mass (grp, n), one row per group. */
+  def storedMgMassBy(db: Db, tag: String = "t",
+                     at: Option[Db#Snapshot] = None): DataFrame =
+    mgMass(ByGroup, db, snapOf(db, at), tag)
+
+  /** [[storedHeavyHitters]] per group, certified against the group's own
+    * mass, ordered (grp, heaviest first).
     */
-  private def mgByRows(tag: String, counts: DataFrame, ts: Long,
-                       c: Int): DataFrame = {
-    val partial = Sketches.mgTruncateBy(
-        counts.select(col("grp"), col("item"), col("cnt").as("f")), c)
-      .select(concat(lit(mgByPrefix(tag)), escGrp(col("grp")), lit("/"),
-          col("item")).as("key"),
-        lit(ts).as("ts"), col("grp"), col("item"), col("est"))
-    val mass = counts.groupBy("grp").agg(sum(col("cnt")).as("n_items"))
-      .select(concat(lit(mgByMassPrefix(tag)), escGrp(col("grp"))).as("key"),
-        lit(ts).as("ts"), col("grp"), col("n_items"))
-    partial.unionByName(mass, allowMissingColumns = true)
-  }
-
-  /** ONE copy of the grouped-MG FOLD replacement (merged candidates +
-    * summed per-group masses at FOLD_TS), shared by [[foldMgBy]] and
-    * [[foldSketchesBy]]. None = nothing registered (the mass-row
-    * emptiness signal).
-    */
-  private def mgByFoldRows(db: graft.store.Db,
-                           snap: graft.store.Db#Snapshot,
-                           tag: String,
-                           pre: Option[DataFrame] = None)
-      : Option[DataFrame] = {
-    val mass = famRows(snap, mgByMassPrefix(tag) + "%", pre)
-    // schema-level absence check only (driver-side, free): every
-    // aggregation below is per-group, so a present-but-row-empty family
-    // contributes zero rows on its own — the old `mass.isEmpty` probe
-    // was a full Spark job per fold that decided nothing (guide §1.4)
-    if (!mass.columns.contains("n_items")) None
-    else {
-      val cands = storedMgCandidatesByAt(db, snap, tag, pre)
-        .select(concat(lit(mgByPrefix(tag)), escGrp(col("grp")),
-            lit("/"), col("item")).as("key"),
-          lit(FOLD_TS).as("ts"), col("grp"), col("item"), col("est"))
-      val total = mass.groupBy("grp")
-        .agg(sum(col("n_items")).as("n_items"))
-        .select(concat(lit(mgByMassPrefix(tag)), escGrp(col("grp")))
-            .as("key"),
-          lit(FOLD_TS).as("ts"), col("grp"), col("n_items"))
-      Some(cands.unionByName(total, allowMissingColumns = true))
-    }
-  }
-
-  /** The merged per-group candidate sets: per-(grp, item) sums over the
-    * stored partials, re-truncated to ≤ c entries inside each group's
-    * window — each group's result is a valid MG(c) summary of its
-    * concatenated stream.
-    */
-  def storedMgCandidatesBy(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedMgCandidatesByAt(db, db.snapshot(), tag)
-
-  private def storedMgCandidatesByAt(db: graft.store.Db,
-                                     snap: graft.store.Db#Snapshot,
-                                     tag: String,
-                                     pre: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = db.spark
-    val c = intProp(snap.manifest, mgByCProp(tag), Sketches.MG_C)
-    val empty = spark.range(0).select(col("id").cast("string").as("grp"),
-      col("id").cast("string").as("item"), col("id").as("est"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, mgByPrefix(tag) + "%", pre)
-      if (!rows.columns.contains("est")) empty
-      else {
-        requireClaimedOrEmpty(snap, mgByCProp(tag), rows,
-          s"grouped MG c for tag '$tag'")
-        Sketches.mgTruncateBy(
-          rows.groupBy("grp", "item").agg(sum(col("est")).as("f")), c)
-      }
-    }
-  }
-
-  /** Per-group registered mass — (grp, n), one row per group ever
-    * registered.
-    */
-  def storedMgMassBy(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedMgMassByAt(db, db.snapshot(), tag)
-
-  private[graft] def storedMgMassByAt(db: graft.store.Db,
-                                      snap: graft.store.Db#Snapshot,
-                                      tag: String,
-                                      pre: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").cast("string").as("grp"),
-      col("id").as("n"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, mgByMassPrefix(tag) + "%", pre)
-      if (!rows.columns.contains("n_items")) empty
-      else rows.groupBy("grp").agg(sum(col("n_items")).as("n"))
-    }
-  }
-
-  /** The grouped frequent-items report: each group's merged candidates
-    * with lower-bound counts, the group's own mass `n`, and the 0/1
-    * `certain` certification against the group's n/(c+1) threshold —
-    * [[storedHeavyHitters]] per group. The mass join is keyed (and
-    * shuffled) by group — both sides are ≤ (c+1)·groups rows, never
-    * corpus-sized, and nothing is forced through one partition.
-    * Ordered (grp, heaviest first) for report stability.
-    */
-  def storedHeavyHittersBy(db: graft.store.Db, tag: String = "t"): DataFrame =
-    heavyHittersByUnordered(db, tag)
+  def storedHeavyHittersBy(db: Db, tag: String = "t",
+                           at: Option[Db#Snapshot] = None): DataFrame =
+    heavyHittersByUnordered(db, tag, at)
       .orderBy(col("grp"), col("est").desc, col("item"))
 
-  /** [[storedHeavyHittersBy]] without the total order — for consumers
-    * that impose their own (the serving tier's per-group rank window):
-    * stacking a range exchange under a hash-partitioned window would
-    * sort the report only to immediately re-shuffle it.
+  /** [[storedHeavyHittersBy]] without the total order, for consumers
+    * that impose their own (a range exchange under a hash-partitioned
+    * rank window would sort only to re-shuffle).
     */
-  private[graft] def heavyHittersByUnordered(db: graft.store.Db,
-                                             tag: String = "t")
+  private[graft] def heavyHittersByUnordered(db: Db, tag: String = "t",
+                                             at: Option[Db#Snapshot] = None)
       : DataFrame =
-    heavyHittersByUnorderedAt(db, db.snapshot(), tag)
+    heavyHitters(ByGroup, db, snapOf(db, at), tag)
 
-  /** The grouped report against ONE snapshot — same same-generation
-    * argument as [[storedHeavyHittersAt]], sharper here because the
-    * inconsistency would be intra-group (an item's est certified
-    * against ITS OWN group's stale n). The serving tier threads its
-    * snapshot through this so the mass list and the heavy items it
-    * renders next to each other come from one store generation.
-    */
-  private[graft] def heavyHittersByUnorderedAt(db: graft.store.Db,
-                                               snap: graft.store.Db#Snapshot,
-                                               tag: String = "t")
-      : DataFrame = {
-    val c = intProp(snap.manifest, mgByCProp(tag), Sketches.MG_C)
-    // ONE scan of both grouped families, materialized once (guide
-    // §2.4) — same device as [[storedHeavyHittersAt]].
-    val pre =
-      if (snap.manifest.dataTxids.isEmpty) None
-      else Some(graft.core.Graft.pin(snap.readMany(
-        Seq(mgByPrefix(tag) + "%", mgByMassPrefix(tag) + "%"))))
-    storedMgCandidatesByAt(db, snap, tag, pre)
-      .join(storedMgMassByAt(db, snap, tag, pre), Seq("grp"))
-      .select(col("grp"), col("item"), col("est"), col("n"),
-        (col("est") * (c + 1) > col("n")).cast("long").as("certain"))
-  }
-
-  /** [[foldMg]] per group: candidates + per-group mass rewrite as ONE
-    * folded generation under one atomic supersede over both key
-    * families.
-    */
-  def foldMgBy(db: graft.store.Db, tag: String = "t",
-               waitMillis: Long = FOLD_WAIT_MILLIS): Long = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").cast("string").as("key"),
-      col("id").as("ts"))
-    foldStore(db, s"foldMgBy($tag)",
-      Seq(mgByPrefix(tag) + "%", mgByMassPrefix(tag) + "%"), waitMillis,
-      foldProp = Some(foldLastProp("mgby", tag)))({
-        val snap = db.snapshot()
-        if (snap.manifest.dataTxids.isEmpty) empty
-        else mgByFoldRows(db, snap, tag).getOrElse(empty)
-      }, identity)
-  }
+  def foldMgBy(db: Db, tag: String = "t",
+               waitMillis: Long = FOLD_WAIT_MILLIS): Long =
+    mgFold(ByGroup, db, tag, waitMillis)
 
   /** DuckDB twin of the grouped MG store over the head+tail token
     * stream of `documents` grouped by `source`, registered as two
@@ -1551,624 +1280,99 @@ object SketchStore {
   }
 
   // ── fixed-grid histogram quantiles ─────────────────────────────────
-  //
-  // The fourth mergeable summary (cardinality / frequency / frequent
-  // items / QUANTILES). Rows: key = "h/<tag>/<bin, zero-padded>",
-  // ts = batchId → (bin, cnt) — histogram merge is plain counter
-  // addition, so like count-min the store is per-batch rows summed at
-  // read time, idempotent under replays (same (key, ts) rewritten), and
-  // the merged report is EXACTLY the one-shot sketch of the
-  // concatenated stream — which is what lets the incremental driver row
-  // share the one-shot oracle SQL verbatim. The training-pipeline use
-  // is threshold picking over running corpora: sequence-length
-  // percentiles for packing (Sequencing) and score-distribution cuts
-  // (Selection) without rescanning history.
 
   /** Registers one batch's histogram (≤ b bin rows) as ONE transaction.
-    * Cost: the batch's own scan + a ≤ b-row write; store size and
-    * history never enter.
+    * Histogram merge is plain counter addition, so the merged report is
+    * EXACTLY the one-shot sketch of the concatenated stream. The grid
+    * (b, w, origin) is claimed first-writer-wins inside the publishing
+    * CAS: two concurrent FIRST registrations with different grids
+    * cannot both publish ([[graft.store.TxWriter.PropertyConflict]]).
     */
-  def registerHist(db: graft.store.Db, batch: DataFrame, value: Column,
+  def registerHist(db: Db, batch: DataFrame, value: Column,
                    batchId: Long, tag: String = "t",
                    b: Int = Sketches.HIST_B,
                    w: Long = Sketches.HIST_W,
                    origin: Long = 0L,
                    cursor: Option[(String, Long)] = None,
                    sinkProps: Map[String, String] = Map.empty,
-                   fuse: Boolean = false): Long = {
-    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
-    // the grid IS the store's geometry: bins from a different (w,
-    // origin) are not mergeable with what's stored, and a reader
-    // guessing the grid would report silently shifted envelopes — so
-    // the grid rides the publishing commit as CLAIMED table properties
-    // (the ANN-geometry pattern): the claim is checked inside the
-    // manifest CAS, so two concurrent FIRST registrations with
-    // different grids cannot both publish — the loser's tx is refused
-    // ([[graft.store.TxWriter.PropertyConflict]]), never mixed in. The
-    // early require is only the friendly pre-write error message; the
-    // claim is the authority.
-    requireHistGrid(db, tag, b, w, origin)
-    // bounded by the grid (≤ b bin rows): single-partition write path
-    graft.store.TxWriter.write(db,
-      histRowsOf(tag, Sketches.histSketch(batch, value, b, w, origin),
-        batchId),
-      rangePartitions = Some(1),
-      props = sinkProps,
-      propsClaim = histGridClaim(tag, b, w, origin),
-      streamCursor = cursor, fuse = fuse)
-  }
+                   fuse: Boolean = false): Long =
+    regHist(db, batch, None, value, batchId, tag, b, w, origin, cursor,
+      sinkProps, fuse)
 
-  /** ONE copy of the ungrouped-hist row shape (over a prebuilt
-    * (bin, cnt) histogram at `ts`), shared by the standalone
-    * registration and the trio's `valueCol` rider.
+  /** The claimed (w, origin) (defaults when unclaimed or empty). */
+  def storedHistGrid(db: Db, tag: String = "t",
+                     at: Option[Db#Snapshot] = None): (Long, Long) =
+    histGridOf(snapOf(db, at).manifest, Flat, tag)
+
+  /** The merged (bin, cnt) histogram of every batch registered. */
+  def storedHist(db: Db, tag: String = "t",
+                 at: Option[Db#Snapshot] = None): DataFrame =
+    hist(Flat, db, snapOf(db, at), tag)
+
+  /** Quantile report over everything ever registered — the one-shot
+    * [[Sketches.histQuantiles]] algebra, at the claimed grid.
     */
-  private def histRowsOf(tag: String, hist: DataFrame, ts: Long): DataFrame =
-    hist.select(
-      format_string(histPrefix(tag) + "%06d", col("bin")).as("key"),
-      lit(ts).as("ts"), col("bin"), col("cnt"))
-
-  /** The ungrouped store's first-writer-wins grid claim. `b` joins the
-    * (w, origin) pair (r16): the top bin CLAMPS at b−1, so batches
-    * binned at different b put their clamped mass at different bins —
-    * the merged histogram's top envelope silently shifts. Same
-    * first-writer-wins rule; readers never need b back (they read the
-    * stored bins), so there is no read-back half.
-    */
-  private def histGridClaim(tag: String, b: Int, w: Long,
-                            origin: Long): Map[String, String] =
-    Map(histWProp(tag) -> w.toString,
-      histOriginProp(tag) -> origin.toString,
-      histBProp(tag) -> b.toString)
-
-  /** Friendly pre-write grid-mismatch error for the ungrouped store —
-    * shared by [[registerHist]] and the trio's `valueCol` rider.
-    */
-  private def requireHistGrid(db: graft.store.Db, tag: String, b: Int,
-                              w: Long, origin: Long): Unit = {
-    val snap = db.snapshot()
-    val m = snap.manifest
-    val exW = m.props.get(histWProp(tag))
-    val exO = m.props.get(histOriginProp(tag))
-    val exB = m.props.get(histBProp(tag))
-    require(exW.forall(_ == w.toString) &&
-        exO.forall(_ == origin.toString) && exB.forall(_ == b.toString),
-      s"histogram grid mismatch for tag '$tag': stored " +
-        s"(b=${exB.getOrElse("-")}, w=${exW.getOrElse("-")}, " +
-        s"origin=${exO.getOrElse("-")}) " +
-        s"vs registration (b=$b, w=$w, origin=$origin)")
-    // fully unclaimed OR partially claimed (the b cap joined the grid
-    // claim after (w, origin) — a pre-b store's rows clamp at an
-    // unrecorded cap, and claiming any b over them would silently
-    // shift the merged top envelope): refuse with rows until stamped
-    if ((exW.isEmpty || exB.isEmpty) &&
-        familyNonEmpty(snap, histPrefix(tag) + "%"))
-      throw new IllegalStateException(
-        unclaimedMsg(if (exW.isEmpty) histWProp(tag) else histBProp(tag),
-          s"histogram grid for tag '$tag'"))
-  }
-
-  /** The store's grid geometry, read back from the manifest properties
-    * the first registration committed ((w, origin); defaults when the
-    * store predates grid tracking or is empty).
-    */
-  def storedHistGrid(db: graft.store.Db, tag: String = "t"): (Long, Long) = {
-    val m = graft.store.Manifest.current(db.warehouse)
-    (m.props.get(histWProp(tag)).map(_.toLong).getOrElse(Sketches.HIST_W),
-      m.props.get(histOriginProp(tag)).map(_.toLong).getOrElse(0L))
-  }
-
-  /** The merged histogram of every batch ever registered: per-bin sums
-    * over a key-pruned read of ≤ b·batches slim rows.
-    */
-  def storedHist(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedHistAt(db, db.snapshot(), tag)
-
-  private def storedHistAt(db: graft.store.Db, snap: graft.store.Db#Snapshot,
-                           tag: String,
-                           pre: Option[DataFrame] = None): DataFrame = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").as("bin"), col("id").as("cnt"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, histPrefix(tag) + "%", pre)
-      if (!rows.columns.contains("cnt")) empty
-      else rows.groupBy("bin").agg(sum(col("cnt")).as("cnt"))
-    }
-  }
-
-  /** The grid recorded in one manifest state's properties. */
-  private def gridOf(m: graft.store.ManifestState, wProp: String,
-                     oProp: String): (Long, Long) =
-    (m.props.get(wProp).map(_.toLong).getOrElse(Sketches.HIST_W),
-      m.props.get(oProp).map(_.toLong).getOrElse(0L))
-
-  /** Quantile report over everything ever registered — identical
-    * algebra to the one-shot [[Sketches.histQuantiles]], because
-    * histogram merge is exact. The grid (w, origin) comes from the
-    * store's OWN properties, never from the caller: a guessed grid
-    * would decode the stored bins into the wrong value domain with no
-    * error at all. Grid and rows come from ONE snapshot — since
-    * [[migrateHistGrid]] made the grid mutable, a two-phase read
-    * (props now, rows later) could interleave with a migration and
-    * decode re-binned rows at the stale width, silently shifting every
-    * envelope.
-    */
-  def storedHistQuantiles(db: graft.store.Db,
+  def storedHistQuantiles(db: Db,
                           qms: Seq[Int] = Sketches.HIST_QMS,
-                          tag: String = "t"): DataFrame =
-    storedHistQuantilesAt(db, db.snapshot(), qms, tag)
+                          tag: String = "t",
+                          at: Option[Db#Snapshot] = None): DataFrame =
+    histQuantiles(Flat, db, snapOf(db, at), qms, tag)
 
-  private[graft] def storedHistQuantilesAt(db: graft.store.Db,
-                                           snap: graft.store.Db#Snapshot,
-                                           qms: Seq[Int] = Sketches.HIST_QMS,
-                                           tag: String = "t"): DataFrame = {
-    val hist = storedHistAt(db, snap, tag)
-    requireClaimedOrEmpty(snap, histWProp(tag), hist,
-      s"histogram grid for tag '$tag'")
-    val (w, origin) = gridOf(snap.manifest, histWProp(tag), histOriginProp(tag))
-    Sketches.histQuantiles(hist, qms, w, origin)
-  }
+  /** One folded grid; bounds the store at b + b·(batches since fold). */
+  def foldHist(db: Db, tag: String = "t",
+               waitMillis: Long = FOLD_WAIT_MILLIS): Long =
+    histFold(Flat, db, tag, waitMillis)
 
-  // ── grouped histogram store ────────────────────────────────────────
-  //
-  // The per-group twin of the histogram store — per-source / per-
-  // language sequence-length envelopes off a RUNNING corpus (what
-  // `/_query/stats?by` serves). Rows: key = "hg/<tag>/<grp>/<bin>",
-  // ts = batchId → (grp, bin, cnt). The bin is always the LAST
-  // "/"-segment (%06d), so keys are unique for any grp string — grp is
-  // carried as a column and never parsed back out of the key. Same
-  // mergeability, idempotent-replay, grid-claim and fold laws as the
-  // ungrouped store; grid props are its own (histg.*) so the two
-  // stores under one tag stay independent.
-
-  /** Registers one batch's per-group histogram (≤ b·groups rows) as ONE
-    * transaction under the grid claim.
+  /** Re-bins the stored grid to a coarser width `newW` (a positive
+    * multiple of the stored one) in place; -1 when already there or
+    * empty. Later registrations must claim the NEW width.
     */
-  def registerHistBy(db: graft.store.Db, batch: DataFrame, grp: Column,
+  def migrateHistGrid(db: Db, newW: Long,
+                      tag: String = "t",
+                      waitMillis: Long = FOLD_WAIT_MILLIS): Long =
+    migrate(Flat, db, newW, tag, waitMillis)
+
+  /** Per-group histograms (≤ b·groups rows) as ONE transaction under the
+    * grouped grid claim (`histg.*`, independent of the ungrouped one).
+    */
+  def registerHistBy(db: Db, batch: DataFrame, grp: Column,
                      value: Column, batchId: Long, tag: String = "t",
                      b: Int = Sketches.HIST_B,
                      w: Long = Sketches.HIST_W,
                      origin: Long = 0L,
                      cursor: Option[(String, Long)] = None,
                      sinkProps: Map[String, String] = Map.empty,
-                     fuse: Boolean = false): Long = {
-    require(batchId >= 0, s"batchId must be >= 0 ($FOLD_TS is reserved)")
-    requireHistByGrid(db, tag, b, w, origin)
-    val hist = Sketches.histSketchBy(batch, grp, value, b, w, origin)
-    // the written rows are pinned: the write's range exchange SAMPLES its
-    // input before the write job — unpinned, every branch aggregation
-    // executed twice per register transaction (guide §5: the pinned frame is
-    // the batch's own group-bounded output, bytes the write materializes
-    // anyway)
-    graft.store.TxWriter.write(db,
-      graft.core.Graft.pin(histByRowsOf(tag, hist, batchId)),
-      props = sinkProps,
-      propsClaim = histByGridClaim(tag, b, w, origin),
-      streamCursor = cursor, fuse = fuse)
-  }
+                     fuse: Boolean = false): Long =
+    regHist(db, batch, Some(grp), value, batchId, tag, b, w, origin, cursor,
+      sinkProps, fuse)
 
-  /** ONE copy of the grouped-hist row shape (over a prebuilt
-    * (grp, bin, cnt) histogram at `ts`), shared by the standalone
-    * registration and the trio's `valueCol` rider — same
-    * identical-by-construction contract as [[kmvByRows]]/[[mgByRows]].
-    */
-  private def histByRowsOf(tag: String, hist: DataFrame,
-                           ts: Long): DataFrame =
-    hist.select(
-      format_string(histByPrefix(tag) + "%s/%06d", col("grp"), col("bin"))
-        .as("key"),
-      lit(ts).as("ts"), col("grp"), col("bin"), col("cnt"))
-
-  /** The grouped store's first-writer-wins grid claim (checked inside
-    * the publishing CAS — see [[registerHist]]'s geometry note).
-    */
-  private def histByGridClaim(tag: String, b: Int, w: Long,
-                              origin: Long): Map[String, String] =
-    Map(histByWProp(tag) -> w.toString,
-      histByOriginProp(tag) -> origin.toString,
-      histByBProp(tag) -> b.toString)
-
-  /** Friendly pre-write grid-mismatch error for the grouped store (the
-    * propsClaim inside the CAS is the authority — this just refuses
-    * before pricing the write job), shared by [[registerHistBy]] and
-    * the trio's `valueCol` rider.
-    */
-  private def requireHistByGrid(db: graft.store.Db, tag: String, b: Int,
-                                w: Long, origin: Long): Unit = {
-    val snap = db.snapshot()
-    val m = snap.manifest
-    val exW = m.props.get(histByWProp(tag))
-    val exO = m.props.get(histByOriginProp(tag))
-    val exB = m.props.get(histByBProp(tag))
-    require(exW.forall(_ == w.toString) &&
-        exO.forall(_ == origin.toString) && exB.forall(_ == b.toString),
-      s"histogram grid mismatch for grouped tag '$tag': stored " +
-        s"(b=${exB.getOrElse("-")}, w=${exW.getOrElse("-")}, " +
-        s"origin=${exO.getOrElse("-")}) " +
-        s"vs registration (b=$b, w=$w, origin=$origin)")
-    if ((exW.isEmpty || exB.isEmpty) &&
-        familyNonEmpty(snap, histByPrefix(tag) + "%"))
-      throw new IllegalStateException(
-        unclaimedMsg(
-          if (exW.isEmpty) histByWProp(tag) else histByBProp(tag),
-          s"grouped histogram grid for tag '$tag'"))
-  }
-
-  /** The grouped store's grid, from its own claimed properties. */
-  def storedHistByGrid(db: graft.store.Db, tag: String = "t"): (Long, Long) = {
-    val m = graft.store.Manifest.current(db.warehouse)
-    (m.props.get(histByWProp(tag)).map(_.toLong).getOrElse(Sketches.HIST_W),
-      m.props.get(histByOriginProp(tag)).map(_.toLong).getOrElse(0L))
-  }
+  def storedHistByGrid(db: Db, tag: String = "t",
+                       at: Option[Db#Snapshot] = None): (Long, Long) =
+    histGridOf(snapOf(db, at).manifest, ByGroup, tag)
 
   /** The merged (grp, bin, cnt) histogram of every batch registered. */
-  def storedHistBy(db: graft.store.Db, tag: String = "t"): DataFrame =
-    storedHistByAt(db, db.snapshot(), tag)
+  def storedHistBy(db: Db, tag: String = "t",
+                   at: Option[Db#Snapshot] = None): DataFrame =
+    hist(ByGroup, db, snapOf(db, at), tag)
 
-  private def storedHistByAt(db: graft.store.Db,
-                             snap: graft.store.Db#Snapshot,
-                             tag: String,
-                             pre: Option[DataFrame] = None): DataFrame = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").cast("string").as("grp"),
-      col("id").as("bin"), col("id").as("cnt"))
-    if (snap.manifest.dataTxids.isEmpty) empty
-    else {
-      val rows = famRows(snap, histByPrefix(tag) + "%", pre)
-      if (!rows.columns.contains("grp") || !rows.columns.contains("cnt"))
-        empty
-      else rows.filter(col("grp").isNotNull)
-        .groupBy("grp", "bin").agg(sum(col("cnt")).as("cnt"))
-    }
-  }
-
-  /** Per-group quantile envelopes over everything ever registered —
-    * the same distributed rank algebra as the one-shot
-    * [[Sketches.histQuantilesBy]] (windows partitioned by group, no
-    * single-partition stage). UNORDERED, like the one-shot form. Grid
-    * and rows come from ONE snapshot, same migration-interleave
-    * reasoning as [[storedHistQuantiles]].
+  /** Per-group quantile envelopes, UNORDERED like the one-shot
+    * [[Sketches.histQuantilesBy]] (windows partitioned by group).
     */
-  def storedHistQuantilesBy(db: graft.store.Db,
+  def storedHistQuantilesBy(db: Db,
                             qms: Seq[Int] = Sketches.HIST_QMS,
-                            tag: String = "t"): DataFrame =
-    storedHistQuantilesByAt(db, db.snapshot(), qms, tag)
+                            tag: String = "t",
+                            at: Option[Db#Snapshot] = None): DataFrame =
+    histQuantiles(ByGroup, db, snapOf(db, at), qms, tag)
 
-  private[graft] def storedHistQuantilesByAt(db: graft.store.Db,
-                                             snap: graft.store.Db#Snapshot,
-                                             qms: Seq[Int] =
-                                               Sketches.HIST_QMS,
-                                             tag: String = "t"): DataFrame = {
-    val hist = storedHistByAt(db, snap, tag)
-    requireClaimedOrEmpty(snap, histByWProp(tag), hist,
-      s"grouped histogram grid for tag '$tag'")
-    val (w, origin) =
-      gridOf(snap.manifest, histByWProp(tag), histByOriginProp(tag))
-    Sketches.histQuantilesFromBy(hist, qms, w, origin)
-  }
-
-  /** [[foldHist]] for the grouped store: one folded generation of
-    * ≤ b·groups rows.
-    */
-  def foldHistBy(db: graft.store.Db, tag: String = "t",
+  def foldHistBy(db: Db, tag: String = "t",
                  waitMillis: Long = FOLD_WAIT_MILLIS): Long =
-    foldStore(db, s"foldHistBy($tag)", Seq(histByPrefix(tag) + "%"),
-      waitMillis, foldProp = Some(foldLastProp("histby", tag)))(
-      storedHistBy(db, tag),
-      _.select(
-        format_string(histByPrefix(tag) + "%s/%06d", col("grp"), col("bin"))
-          .as("key"),
-        lit(FOLD_TS).as("ts"), col("grp"), col("bin"), col("cnt")))
+    histFold(ByGroup, db, tag, waitMillis)
 
-  /** Collapses the per-batch histogram history to one folded grid (the
-    * shared [[foldStore]] fence). Bounds the store at
-    * b + b·(batches since last fold) rows.
+  /** [[migrateHistGrid]] for the grouped store, every group re-binned in
+    * the same atomic supersede.
     */
-  def foldHist(db: graft.store.Db, tag: String = "t",
-               waitMillis: Long = FOLD_WAIT_MILLIS): Long =
-    foldStore(db, s"foldHist($tag)", Seq(histPrefix(tag) + "%"), waitMillis,
-      foldProp = Some(foldLastProp("hist", tag)), singlePartition = true)(
-      storedHist(db, tag),
-      _.select(format_string(histPrefix(tag) + "%06d", col("bin")).as("key"),
-        lit(FOLD_TS).as("ts"), col("bin"), col("cnt")))
-
-  /** Collapses the KMV store's superseded minima: keep the k smallest
-    * ([[storedKmvSketch]] — by the union law, exactly the state any
-    * future merge needs), drop everything they superseded. Lossless for
-    * every report by construction; bounds the store at
-    * k + k·(batches since last fold) rows.
-    */
-  def foldKmv(db: graft.store.Db, tag: String = "t",
-              waitMillis: Long = FOLD_WAIT_MILLIS): Long =
-    foldStore(db, s"foldKmv($tag)", Seq(kmvKey(tag)), waitMillis,
-      foldProp = Some(foldLastProp("kmv", tag)), singlePartition = true)(
-      storedKmvSketch(db, tag),
-      _.select(lit(kmvKey(tag)).as("key"), col("h").as("ts"), col("h")))
-
-  /** Collapses the MG store's per-batch partials to ONE merged summary:
-    * the ≤ c re-truncated candidates ([[storedMgCandidates]] — the
-    * merged truncation is itself a valid MG(c) summary, so the global
-    * error bound survives the fold; the SketchPropertySpec merge law)
-    * plus one summed mass row, all at the reserved `ts = FOLD_TS`. The
-    * fold is LOSSLESS for [[storedHeavyHitters]] whenever the merged
-    * candidate set is within capacity at fold time (re-truncation is
-    * then the identity — in particular, always, after a single batch);
-    * past capacity it applies exactly one more valid truncation step.
-    * Bounds the store at (c+1) + (c+1)·(batches since last fold) rows.
-    * Both key families (candidates + mass) delete under ONE fenced
-    * marker transaction ([[graft.store.TxWriter.deleteManyIf]]) so no
-    * interleaving can observe candidates without their mass.
-    */
-  def foldMg(db: graft.store.Db, tag: String = "t",
-             waitMillis: Long = FOLD_WAIT_MILLIS): Long = {
-    val spark = db.spark
-    val empty = spark.range(0).select(col("id").cast("string").as("key"),
-      col("id").as("ts"))
-    val prefixes = Seq(mgPrefix(tag) + "%", mgMassKey(tag))
-    foldStore(db, s"foldMg($tag)", prefixes, waitMillis,
-      foldProp = Some(foldLastProp("mg", tag)), singlePartition = true)({
-        // emptiness signal: registerMg writes one mass row per batch,
-        // so this tag has mass rows iff anything was ever registered —
-        // checked at the SCHEMA level (free) plus a per-synthetic-group
-        // mass aggregate that yields zero rows on an empty family,
-        // replacing the old per-fold `mass.isEmpty` Spark job
-        val snap = db.snapshot()
-        if (snap.manifest.dataTxids.isEmpty) empty
-        else {
-          // one scan of both families, materialized once (guide §2.4)
-          val all = Some(graft.core.Graft.pin(snap.readMany(prefixes)))
-          val mass = famRows(snap, mgMassKey(tag), all)
-          if (!mass.columns.contains("n_items")) empty
-          else {
-            val cands = storedMgCandidatesAt(db, snap, tag, all)
-              .select(concat(lit(mgPrefix(tag)), col("item")).as("key"),
-                lit(FOLD_TS).as("ts"), col("item"), col("est"))
-            val total = mass
-              .groupBy(lit(1).as("_g"))
-              .agg(coalesce(sum(col("n_items")), lit(0L)).as("n_items"))
-              .select(lit(mgMassKey(tag)).as("key"), lit(FOLD_TS).as("ts"),
-                col("n_items"))
-            cands.unionByName(total, allowMissingColumns = true)
-          }
-        }
-      }, identity)
-  }
-
-  /** Grid evolution for the histogram store: re-bin the stored grid to
-    * a COARSER width — the layout-migration device (the BM25 v1→v2
-    * in-place migration, [[Retrieval.migrateBm25Layout]]) applied to
-    * the sketch family. EXACT when `newW` is a positive multiple of the
-    * stored width (every old bin maps whole into one new bin:
-    * `newBin = oldBin DIV k`); the one caveat is mass the OLD grid
-    * already clamped into its top bin — it stays at the old clamp
-    * point, where a one-shot sketch at the new (wider-domain) grid
-    * would have resolved it higher. For in-domain data the migrated
-    * store equals the one-shot sketch at the new grid, which is what
-    * the spec pins. The re-binned rows, the history-superseding marker
-    * AND the rewritten `hist.w` property publish in ONE manifest commit
-    * ([[graft.store.TxWriter.supersedeIf]]'s props rider), so no reader
-    * can ever pair the new grid with old rows or vice versa; the
-    * operation is index-sized (≤ b rows), never corpus-sized, and later
-    * registrations must claim the NEW width.
-    */
-  def migrateHistGrid(db: graft.store.Db, newW: Long,
-                      tag: String = "t",
-                      waitMillis: Long = FOLD_WAIT_MILLIS): Long =
-    migrateGrid(db, s"migrateHistGrid($tag)", newW, histPrefix(tag) + "%",
-      histWProp(tag), histOriginProp(tag), waitMillis,
-      singlePartition = true)(
-      storedHist(db, tag),
-      (cur, k) => cur
-        .select(expr(s"bin DIV $k").as("bin"), col("cnt"))
-        .groupBy("bin").agg(sum(col("cnt")).as("cnt"))
-        .select(format_string(histPrefix(tag) + "%06d", col("bin"))
-          .as("key"), lit(FOLD_TS).as("ts"), col("bin"), col("cnt")))
-
-  /** ONE copy of the grid-migration fence both histogram stores share
-    * (the [[foldStore]] factoring applied to migrations): read the grid
-    * from the SAME manifest state the fence checks, re-bin via the
-    * store's own `rebin`, and publish rows + flipped props in one
-    * conditional supersede. supersedeIf's CONDITIONAL publish is what
-    * makes the property flip safe under concurrent old-grid
-    * registrations: one that publishes in our window aborts the
-    * migration (we re-read and re-bin it); one that publishes after us
-    * re-checks its grid claim inside its own publishing CAS and is
-    * refused (PropertyConflict) — no interleaving mixes widths.
-    */
-  private def migrateGrid(db: graft.store.Db, what: String, newW: Long,
-                          wildcard: String, wProp: String, oProp: String,
-                          waitMillis: Long, singlePartition: Boolean = false)
-                         (stored: => DataFrame,
-                          rebin: (DataFrame, Long) => DataFrame): Long = {
-    val deadline = System.nanoTime() + waitMillis * 1000000L
-    var attempt = 0
-    while (System.nanoTime() < deadline) {
-      val snap0 = db.snapshot()
-      val baseline = snap0.manifest
-      // a migration DECODES the stored bins at the claimed width and
-      // then publishes the NEW width as a confident claim — on a
-      // PRE-CLAIM store it would re-bin at a guessed default and
-      // permanently mislabel the grid (worse than a guarded read: the
-      // wrong geometry becomes claimed). Refuse until stamped.
-      if (!baseline.props.contains(wProp) &&
-          familyNonEmpty(snap0, wildcard))
-        throw new IllegalStateException(
-          unclaimedMsg(wProp, s"$what: stored grid width"))
-      val (w, origin) = gridOf(baseline, wProp, oProp)
-      require(newW >= w && newW % w == 0,
-        s"new width $newW must be a positive multiple of stored width $w")
-      if (newW == w) return -1L // already at this grid (driver-side, free)
-      if (baseline.pending.nonEmpty) {
-        attempt += 1
-        Thread.sleep(math.min(100L * attempt, 2000L))
-      } else {
-        // Some(-1) = nothing stored to migrate, None = fence refused
-        val cur = stored
-        val res: Option[Long] =
-          if (singlePartition) {
-            if (cur.isEmpty) Some(-1L)
-            else graft.store.TxWriter.supersedeIf(db, baseline,
-              Seq(wildcard), rebin(cur, newW / w), // ≤ b rows: one pass
-              props = Map(wProp -> newW.toString,
-                oProp -> origin.toString),
-              rangePartitions = Some(1))
-          } else {
-            // pin BEFORE the emptiness probe — same one-compute
-            // argument as foldStore (re-binning preserves emptiness)
-            val rebinned =
-              rebin(cur, newW / w).transform(graft.core.Graft.pin)
-            if (rebinned.isEmpty) Some(-1L)
-            else graft.store.TxWriter.supersedeIf(db, baseline,
-              Seq(wildcard), rebinned,
-              props = Map(wProp -> newW.toString,
-                oProp -> origin.toString))
-          }
-        res match {
-          case Some(tx) => return tx // -1 = nothing stored to migrate
-          case None     =>
-            attempt += 1
-            Thread.sleep(math.min(100L * attempt, 2000L))
-        }
-      }
-    }
-    throw new IllegalStateException(
-      s"$what: could not migrate within " +
-        s"${waitMillis / 1000} s of registration contention")
-  }
-
-  /** [[migrateHistGrid]] for the GROUPED store: re-bin every group's
-    * grid to a coarser width in place (`newBin = oldBin DIV k` inside
-    * each group — exact for multiples, same clamped-top-bin caveat),
-    * flipping `histg.w` in the SAME atomic supersede so no reader can
-    * pair the new grid with old rows. Index-sized (≤ b·groups rows),
-    * never corpus-sized; later registrations must claim the NEW width.
-    */
-  def migrateHistGridBy(db: graft.store.Db, newW: Long,
+  def migrateHistGridBy(db: Db, newW: Long,
                         tag: String = "t",
                         waitMillis: Long = FOLD_WAIT_MILLIS): Long =
-    migrateGrid(db, s"migrateHistGridBy($tag)", newW,
-      histByPrefix(tag) + "%", histByWProp(tag), histByOriginProp(tag),
-      waitMillis)(
-      storedHistBy(db, tag),
-      (cur, k) => cur
-        .select(col("grp"), expr(s"bin DIV $k").as("bin"), col("cnt"))
-        .groupBy("grp", "bin").agg(sum(col("cnt")).as("cnt"))
-        .select(
-          format_string(histByPrefix(tag) + "%s/%06d", col("grp"),
-            col("bin")).as("key"),
-          lit(FOLD_TS).as("ts"), col("grp"), col("bin"), col("cnt")))
-
-  /** ONE copy of the fold fence every per-batch store shares: read the
-    * current sums, then publish the tag's history-superseding delete
-    * marker AND the folded replacement rows (at the reserved
-    * `ts = FOLD_TS`, one txid above the marker so they survive it) in a
-    * SINGLE manifest commit ([[graft.store.TxWriter.supersedeIf]]) —
-    * atomic, so no crash or reader can observe the history deleted
-    * without its replacement. The claim lands only if NOTHING moved
-    * since the sums were read — not just `nextTxid`: a pre-baseline
-    * claim that published after our read (published sets changed) or is
-    * still in flight (pending non-empty) holds rows these sums never
-    * saw, which the marker would erase (caught by the foldKmv
-    * racing-writers case). On refusal the fold re-reads, so a racing
-    * registration's counts are INCLUDED. Subsequent folds re-fold the
-    * fold. Multi-prefix stores (MG) delete all their key families in
-    * the one marker tx.
-    */
-  /** How long a fold (or grid migration) keeps waiting out concurrent
-    * writers before giving up loudly. Time-based, not attempt-based: the
-    * fence refuses while ANY claim is in flight, so a single bulk
-    * ingest longer than the budget is the failure mode — and a fold is
-    * maintenance, always safe to retry later, so the budget errs long.
-    */
-  val FOLD_WAIT_MILLIS: Long = 10 * 60 * 1000L
-
-  /** The key under which a fold records ITS OWN published txid as a
-    * table property (via supersedeIf's dynProps rider, so provenance
-    * lands in the SAME commit as the fold): `fold.last/<family>/<tag>`.
-    * A serving tier reads these off the manifest to report which fold
-    * generation a stats body reflects — zero extra jobs.
-    */
-  private[graft] def foldLastProp(family: String, tag: String): String =
-    s"fold.last/$family/$tag"
-
-  /** `singlePartition`: the folded replacement is bounded by the store
-    * GEOMETRY (ungrouped families — ≤ k/(c+1)/d·w/b rows), so the
-    * supersede takes the single-partition write path (no range-sampling
-    * job) and the pre-write pin is dropped — the replacement is computed
-    * exactly once, inside the write job itself. Grouped folds
-    * (group-count-sized replacements) keep the adaptive exchange + pin.
-    */
-  private def foldStore(db: graft.store.Db, what: String,
-                        wildcards: Seq[String],
-                        waitMillis: Long = FOLD_WAIT_MILLIS,
-                        foldProp: Option[String] = None,
-                        singlePartition: Boolean = false)
-                       (stored: => DataFrame,
-                        project: DataFrame => DataFrame): Long = {
-    val deadline = System.nanoTime() + waitMillis * 1000000L
-    var attempt = 0
-    while (System.nanoTime() < deadline) {
-      val baseline = graft.store.Manifest.current(db.warehouse)
-      if (baseline.pending.nonEmpty) {
-        // a write is in flight — don't even price the sums read, just
-        // wait it out (publishes change the baseline; dead claims are
-        // vacuum's job)
-        attempt += 1
-        Thread.sleep(math.min(100L * attempt, 2000L))
-      } else {
-        // Some(-1) = nothing to fold, None = fence refused
-        val cur = stored
-        val res: Option[Long] =
-          if (singlePartition) {
-            // bounded-by-geometry replacement: one compute, inside the
-            // write job (no pin, no range-sampling job)
-            if (cur.isEmpty) Some(-1L)
-            else graft.store.TxWriter.supersedeIf(db, baseline, wildcards,
-              project(cur),
-              dynProps = tx => foldProp.map(_ -> tx.toString).toMap,
-              rangePartitions = Some(1))
-          } else {
-            // pin BEFORE the emptiness probe (guide §1.4): the probe
-            // executes the whole replacement plan anyway (aggregations
-            // consume all their input), so materialize once and probe
-            // the materialized blocks — one full compute instead of two
-            val folded = project(cur).transform(graft.core.Graft.pin)
-            if (folded.isEmpty) Some(-1L)
-            else graft.store.TxWriter.supersedeIf(db, baseline, wildcards,
-              folded,
-              dynProps = tx => foldProp.map(_ -> tx.toString).toMap)
-          }
-        res match {
-          case Some(tx) => return tx // -1 = nothing to fold
-          case None     => // a commit raced in (or is in flight) — refold
-            attempt += 1
-            Thread.sleep(math.min(100L * attempt, 2000L))
-        }
-      }
-    }
-    throw new IllegalStateException(
-      s"$what: could not fold within ${waitMillis / 1000} s of " +
-        "registration contention (a crashed writer's pending claim needs " +
-        "Compactor.vacuum)")
-  }
-
-  /** Collapses the per-batch history to one folded grid: range-delete
-    * the tag's cells, then rewrite the current sums at the reserved
-    * `ts = FOLD_TS` (write AFTER delete, so the fold's higher txid
-    * survives the marker — the [[Similarity.buildIndex]] rebuild-
-    * supersede pattern). Subsequent folds re-fold the fold: the sums
-    * read before the delete already include it. Bounds the store at
-    * d·w + d·w·(batches since last fold) rows; compaction purges the
-    * deleted history physically.
-    */
-  def foldCountMin(db: graft.store.Db, tag: String = "t",
-                   waitMillis: Long = FOLD_WAIT_MILLIS): Long =
-    foldStore(db, s"foldCountMin($tag)", Seq(cmPrefix(tag) + "%"),
-      waitMillis, foldProp = Some(foldLastProp("cm", tag)),
-      singlePartition = true)(
-      storedCountMin(db, tag),
-      _.select(
-        format_string(cmPrefix(tag) + "%d/%06d", col("sk_row"), col("bucket"))
-          .as("key"),
-        lit(FOLD_TS).as("ts"), col("sk_row"), col("bucket"), col("c")))
+    migrate(ByGroup, db, newW, tag, waitMillis)
 }

@@ -201,7 +201,7 @@ object Sketches {
     // partials relation is sketch-sized (≤ (c+1)·partitions rows) and
     // localCheckpointed so the two references to it below cannot re-run
     // the fold's corpus scan.
-    val partials = mgPartials(toks, c).transform(graft.core.Graft.pin)
+    val partials = mgPartials(toks, c).transform(graft.core.Graft.pin(_))
     val cand = mgCandidates(partials, c)
     val n = partials.agg(sum(col("nrows")).as("n"))
     toks.join(broadcast(cand), Seq("item"), "left_semi")
@@ -531,7 +531,7 @@ object Sketches {
     * derives quantile envelopes (token counts, score thresholds):
     * emits the bins/cum/rank CTE chain over a CTE `$src($vcol)` and
     * ends with `hth(qm, n, r, bin)`. Like the Scala side's `mgTruncate`
-    * and `foldStore`, keeping the algebra in one place means a rank-
+    * and `SketchStore.fold`, keeping the algebra in one place means a rank-
     * formula fix cannot silently miss a twin.
     */
   private[ops] def sqlHistRankCtes(src: String, vcol: String, qms: Seq[Int],

@@ -273,7 +273,7 @@ object TextAnalysis {
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .select(col("word"), spell.as("seq"), col("cnt"))
-      .transform(graft.core.Graft.pin) // one corpus scan; rounds run on the vocab
+      .transform(graft.core.Graft.pin(_)) // one corpus scan; rounds run on the vocab
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     for (rank <- 1 to nMerges) {
       val perRow = transform(array(split(col("seq"), " ")), w =>
@@ -300,7 +300,7 @@ object TextAnalysis {
         // bound the lazy plan at 2 replaces × 4 rounds between
         // materializations — a large nMerges must not accrete an
         // unboundedly deep expression tree over the vocab relation
-        if (rank % 4 == 0) vocab = vocab.transform(graft.core.Graft.pin)
+        if (rank % 4 == 0) vocab = vocab.transform(graft.core.Graft.pin(_))
       }
     }
     (merges.result(), vocab)

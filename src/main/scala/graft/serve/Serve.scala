@@ -160,7 +160,7 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
       } catch {
         case e: Throwable =>
           if (headersSent.get())
-            System.err.println(s"serve: mid-stream failure: $e")
+            graft.core.Graft.log.warn(s"serve: mid-stream failure: $e")
           else respond(ex, 500, s"error: ${e.getMessage}\n")
       } finally ex.close()
     }
@@ -416,8 +416,8 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
           // (StreamIngest counts consecutive failed cadence points and
           // resets on success): unfolded/uncompacted state grows
           // unbounded exactly when this stays > 0 — the field a health
-          // check polls instead of scraping the escalation warning off
-          // stderr. Persisted as a manifest property by the sink's
+          // check polls instead of tailing the escalation off the
+          // `graft` log. Persisted as a manifest property by the sink's
           // failure path, so a serving tier in ANOTHER process reports
           // the same streak (in-JVM fallback only when the manifest
           // itself is what's failing).
@@ -814,8 +814,8 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
         case "hist" =>
           val nQms = graft.ops.Sketches.HIST_QMS.size
           val rows = pick(
-              graft.ops.SketchStore.storedHistQuantilesByAt(db, snap,
-                tag = tag))
+              graft.ops.SketchStore.storedHistQuantilesBy(db, tag = tag,
+                at = Some(snap)))
             .select(col("grp"), col("qm"), col("n"), col("lo"), col("hi"))
             .orderBy("grp", "qm")
             .limit((maxGroups + 1) * nQms)
@@ -835,10 +835,10 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
           // one row per group — the limit is directly the group cap;
           // the claimed k binds once off the snapshot and serves both
           // the per-group exactness labels and the body's "k" field
-          val kClaim = graft.ops.SketchStore.storedKmvByKAt(snap, tag)
+          val kClaim =
+            graft.ops.SketchStore.storedKmvByK(db, tag, Some(snap))
           val rows = pick(
-              graft.ops.SketchStore.storedKmvEstimateByAt(db, snap,
-                tag = tag))
+              graft.ops.SketchStore.storedKmvEstimateBy(db, tag, Some(snap)))
             .select(col("grp"), col("n_sketch"), col("est_distinct"))
             .orderBy("grp")
             .limit(maxGroups + 1)
@@ -867,7 +867,7 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
           // inconsistency, sharper than the cross-store mixing single
           // responses tolerate (the branch-wide snapshot above).
           val masses = pick(
-              graft.ops.SketchStore.storedMgMassByAt(db, snap, tag))
+              graft.ops.SketchStore.storedMgMassBy(db, tag, Some(snap)))
             .orderBy("grp").limit(maxGroups + 1)
             .as[(String, Long)].collect().toSeq
           val truncated = masses.size > maxGroups
@@ -877,7 +877,7 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
             else {
               import org.apache.spark.sql.expressions.Window
               graft.ops.SketchStore
-                .heavyHittersByUnorderedAt(db, snap, tag = tag)
+                .heavyHittersByUnordered(db, tag, Some(snap))
                 .filter(col("grp").isin(sel.map(_._1): _*))
                 .withColumn("rk",
                   org.apache.spark.sql.functions.row_number()
@@ -900,7 +900,7 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
           }.mkString("[", ",", "]")
           (200,
             s"""{"tag":${jstr(tag)},"kind":"mg","c":${
-              graft.ops.SketchStore.storedMgByCAt(snap, tag)}""" +
+              graft.ops.SketchStore.storedMgByC(db, tag, Some(snap))}""" +
               s""","truncated":$truncated,"groups":$groups,$fresh}""" +
               "\n")
         case "cm" =>
@@ -917,7 +917,8 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
             return (400, "kind=cm needs items=tok1,tok2,...\n")
           if (items.size > 100)
             return (400, "too many items (cap 100)\n")
-          val grid = graft.ops.SketchStore.storedCountMinByAt(db, snap, tag)
+          val grid =
+            graft.ops.SketchStore.storedCountMinBy(db, tag, Some(snap))
           // the group listing is bounded by construction (distinct +
           // limit, group names only) — safe to run BEFORE the product
           // check, which then bounds against the ACTUAL selected group
@@ -941,14 +942,15 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
               s"$CM_PRODUCT_CAP): ${gsel.size}*${items.size} — lower " +
               "groups= or items=, or narrow with grp=\n")
           // the probe reads the stored grids' CLAIMED geometry off this
-          // same snapshot (SketchStore.probeStoredCountMinByAt) — a
+          // same snapshot (SketchStore.probeStoredCountMinBy at = snap) — a
           // grid registered at a non-default (d, w) probed at guessed
           // defaults would hash items into the wrong cells silently
           val est: Map[(String, String), Long] =
             if (gsel.isEmpty) Map.empty
-            else graft.ops.SketchStore.probeStoredCountMinByAt(db, snap,
+            else graft.ops.SketchStore.probeStoredCountMinBy(db,
                 gsel.flatMap(g => items.map(i => (g, i)))
-                  .toDF("grp", "item"), "grp", "item", tag)
+                  .toDF("grp", "item"), "grp", "item", tag,
+                Some(snap))
               .as[(String, String, Long)].collect()
               .map { case (g, i, e) => (g, i) -> e }.toMap
           val groups = gsel.map { g =>
@@ -958,7 +960,8 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
             s"""{"grp":${jstr(g)},"items":$iJson}"""
           }.mkString("[", ",", "]")
           (200, {
-            val (cd, cw) = graft.ops.SketchStore.storedCmByGridAt(snap, tag)
+            val (cd, cw) =
+              graft.ops.SketchStore.storedCmByGrid(db, tag, Some(snap))
             s"""{"tag":${jstr(tag)},"kind":"cm","d":$cd,"w":$cw""" +
               s""","truncated":$truncated,"groups":$groups,$fresh}""" +
               "\n"
@@ -994,16 +997,18 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     import scala.concurrent.duration._
     implicit val ec: scala.concurrent.ExecutionContext = fanout
     val distinctF = Future {
-      graft.ops.SketchStore.storedKmvEstimateAt(db, snap, tag)
+      graft.ops.SketchStore.storedKmvEstimate(db, tag, Some(snap))
         .select(col("n_sketch"), col("est_distinct"))
         .as[(Long, Long)].collect().headOption.getOrElse((0L, 0L))
     }
     val quantF = Future {
-      graft.ops.SketchStore.storedHistQuantilesAt(db, snap, tag = tag)
+      graft.ops.SketchStore.storedHistQuantiles(db, tag = tag,
+          at = Some(snap))
         .select(col("qm"), col("n"), col("lo"), col("hi"))
         .as[(Long, Long, Long, Long)].collect().toSeq
     }
-    val heavy = graft.ops.SketchStore.storedHeavyHittersAt(db, snap, tag)
+    val heavy =
+      graft.ops.SketchStore.storedHeavyHitters(db, tag, Some(snap))
       .limit(heavyK)
       .as[(String, Long, Long, Long)].collect().toSeq
     val (nSketch, estDistinct) = Await.result(distinctF, 600.seconds)
@@ -1012,7 +1017,7 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     // (heavy=0, or a tie-heavy truncation) needs the dedicated mass
     // read — never report an occupied store as mass 0
     val mgN = heavy.headOption.map(_._3).getOrElse(
-      graft.ops.SketchStore.storedMgMassAt(db, snap, tag)
+      graft.ops.SketchStore.storedMgMass(db, tag, Some(snap))
         .as[Long].collect().headOption.getOrElse(0L))
     val qJson = quants.map { case (qm, _, lo, hi) =>
       s"""{"qm":$qm,"lo":$lo,"hi":$hi}""" }.mkString("[", ",", "]")
@@ -1025,8 +1030,8 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     val freqJson = itemsReq match {
       case None | Some(Seq()) => ""
       case Some(items) =>
-        val est = graft.ops.SketchStore.probeStoredCountMinAt(db, snap,
-            items.toDF("t"), "t", tag)
+        val est = graft.ops.SketchStore.probeStoredCountMin(db,
+            items.toDF("t"), "t", tag, Some(snap))
           .as[(String, Long)].collect().toMap
         items.map(i =>
           s"""{"item":${jstr(i)},"est":${est.getOrElse(i, 0L)}}""")
@@ -1036,13 +1041,12 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     // the claimed geometries ride the body so a dashboard can read
     // capacity (k, c) next to the numbers it bounds — free manifest
     // fields off the same snapshot
+    val kmvK = graft.ops.SketchStore.storedKmvK(db, tag, Some(snap))
     (200,
       s"""{"tag":${jstr(tag)},"estDistinct":$estDistinct""" +
-        s""","kmvK":${graft.ops.SketchStore.storedKmvKAt(snap, tag)}""" +
-        s""","kmvExactBelowK":${
-          nSketch < graft.ops.SketchStore.storedKmvKAt(snap, tag)}""" +
+        s""","kmvK":$kmvK,"kmvExactBelowK":${nSketch < kmvK}""" +
         s""","histN":$histN,"quantiles":$qJson""" +
-        s""","mgC":${graft.ops.SketchStore.storedMgCAt(snap, tag)}""" +
+        s""","mgC":${graft.ops.SketchStore.storedMgC(db, tag, Some(snap))}""" +
         s""","mgN":$mgN,"heavy":$hJson$freqJson,$fresh}""" + "\n")
   }
 

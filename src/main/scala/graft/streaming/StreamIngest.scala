@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.ops.SketchStore
 import graft.store.{Db, Manifest, TxWriter}
+import org.apache.spark.sql.functions.col
 
 /** Structured-Streaming ingest into a graft warehouse.
   *
@@ -23,6 +25,7 @@ import graft.store.{Db, Manifest, TxWriter}
   * `src/create_tx.rs:180-264`).
   */
 object StreamIngest {
+  import graft.core.Graft.log
 
   /** Wire a streaming DataFrame (must contain `key: String`, `ts: Long`
     * nanos — e.g. the output of a text-protocol parse) into the warehouse.
@@ -211,36 +214,52 @@ object StreamIngest {
         ()
       }
 
-  /** Streaming sketch maintenance: each micro-batch's tokens fold into
-    * the warehouse-backed KMV + count-min + Misra–Gries stores as ONE
-    * transaction ([[graft.ops.SketchStore.registerSketches]] — the
-    * three families' rows union into a single write, so a micro-batch
-    * costs one claim + one publish instead of three of each, and the
-    * trio is atomic: no reader can observe a batch's counters without
-    * its minima). The replay cursor rides the publishing commit
-    * (batch visible ⟺ cursor advanced — no replay window), and the
-    * auto-fold is likewise ONE atomic supersede over all four key
-    * families ([[graft.ops.SketchStore.foldSketches]]).
+  /** One sketch sink: under the exactly-once batch-id guard, `register`
+    * commits the micro-batch with the replay cursor and the sink's
+    * cadence properties riding its own publishing commit (batch visible
+    * ⟺ cursor advanced: no replay window), then `fold` runs on every
+    * `foldEvery`-th batch and the store compacts on every
+    * `compactEvery`-th.
+    *
+    * @param foldEvery > 0 = auto-fold policy, so a year-long stream stays
+    *   bounded at sketch-size + foldEvery·sketch-size rows without a
+    *   manual maintenance call. Recorded as `fold.every/<sinkId>`. Folds
+    *   run AFTER the cursor advances: a crash between the two replays as
+    *   a skipped fold (caught up later), never as a re-registration of a
+    *   batch a fold already merged — which would double-count it.
+    * @param compactEvery > 0 = auto-compact policy ([[autoCompact]]),
+    *   recorded as `compact.every/<sinkId>` with `keep.versions/<sinkId>`.
     */
-  /** @param foldEvery > 0 = auto-fold policy: after every `foldEvery`-th
-    *   committed batch the sink folds its stores, so a year-long stream
-    *   never needs a manual maintenance call — the store stays bounded
-    *   at sketch-size + foldEvery·sketch-size rows instead of growing
-    *   one generation per batch forever. The policy is recorded as a
-    *   table property (`fold.every/<sinkId>`) in the same commit that
-    *   advances the cursor, so an operator can read the cadence off the
-    *   manifest. Folds run AFTER the cursor advances: a crash between
-    *   the two replays as a skipped fold (caught up `foldEvery` batches
-    *   later), never as a re-registration of a batch a fold already
-    *   merged — which would double-count it.
-    */
-  /** @param compactEvery > 0 = auto-compact policy, the other half of
-    *   the maintenance pair: after every `compactEvery`-th committed
-    *   batch the sink major-compacts its (sketch-sized) warehouse and
-    *   vacuums retired directories, so a year-long stream bounds BOTH
-    *   live rows (the fold) and transaction-directory count (the
-    *   compact) unattended. Recorded as `compact.every/<sinkId>` next
-    *   to the fold cadence.
+  private def sketchSink(db: Db, stream: DataFrame, tag: String,
+                         trigger: Trigger, sinkId: String, foldEvery: Int,
+                         compactEvery: Int, keepVersions: Int)(
+      register: (DataFrame, Long, Option[(String, Long)], Map[String, String])
+        => Long,
+      fold: (Db, String, Long) => Long): DataStreamWriter[Row] =
+    stream.writeStream
+      .trigger(trigger)
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val mft = Manifest.current(db.warehouse)
+        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
+          register(batch, batchId, Some((sinkId, batchId)),
+            foldEveryProps(sinkId, foldEvery, compactEvery, keepVersions))
+          if (shouldFold(batchId, foldEvery))
+            nonFatalFold(db)(fold(db, tag, AUTO_FOLD_WAIT_MILLIS))
+          autoCompact(db, batchId, compactEvery, keepVersions)
+        }
+        ()
+      }
+
+  /** Streaming sketch maintenance: each micro-batch's `elemCol` tokens
+    * fold into the KMV + count-min + Misra–Gries stores (plus the
+    * histogram store when `valueCol` names a numeric column) as ONE
+    * transaction ([[SketchStore.registerSketches]]); the auto-fold is one
+    * atomic supersede of every family ([[SketchStore.foldSketches]]).
+    * Every sketch sink takes the same policies: `foldEvery` > 0 folds on
+    * every n-th committed batch (`fold.every/<sinkId>`), `compactEvery`
+    * > 0 compacts, vacuums and prunes history to `keepVersions`
+    * (`compact.every/<sinkId>`, `keep.versions/<sinkId>`).
     */
   def sketchWriter(db: Db, stream: DataFrame, elemCol: String,
                    tag: String = "t",
@@ -250,38 +269,17 @@ object StreamIngest {
                    compactEvery: Int = 0,
                    keepVersions: Int = KEEP_VERSIONS)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mft = Manifest.current(db.warehouse)
-        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
-          graft.ops.SketchStore.registerSketches(db, batch,
-            org.apache.spark.sql.functions.col(elemCol), batchId, tag,
-            valueCol = valueCol.map(org.apache.spark.sql.functions.col),
-            cursor = Some((sinkId, batchId)),
-            sinkProps = foldEveryProps(sinkId, foldEvery, compactEvery,
-              keepVersions),
-            fuse = true) // single-writer sink: ONE manifest commit per batch
-          if (shouldFold(batchId, foldEvery)) nonFatalFold(db) {
-            graft.ops.SketchStore.foldSketches(db, tag,
-              waitMillis = AUTO_FOLD_WAIT_MILLIS)
-          }
-          autoCompact(db, batchId, compactEvery, keepVersions)
-        }
-        ()
-      }
+    sketchSink(db, stream, tag, trigger, sinkId, foldEvery, compactEvery,
+        keepVersions)((b, id, cur, props) =>
+      SketchStore.registerSketches(db, b, col(elemCol), id, tag,
+        valueCol = valueCol.map(col), cursor = cur, sinkProps = props,
+        fuse = true), SketchStore.foldSketches)
 
   /** Streaming quantile maintenance: each micro-batch's integral
-    * `valueCol` folds into the warehouse-backed histogram store
-    * ([[graft.ops.SketchStore.registerHist]]) as one ≤ grid-sized
-    * transaction. Registration keys its bin rows on the micro-batch id,
-    * so a replayed batch rewrites the same (key, ts) rows — idempotent
-    * under the sink's exactly-once batch-id guard like count-min. Kept
-    * a separate sink from [[sketchWriter]] because the element sketches
-    * consume a token stream while quantiles consume a numeric one
-    * (e.g. per-document token counts); the two can share a warehouse
-    * and a tag — distinct key prefixes.
+    * `valueCol` into the histogram store ([[SketchStore.registerHist]]).
+    * A separate sink from [[sketchWriter]] for streams whose values are
+    * not a column of the token stream (e.g. per-document token counts);
+    * the two can share a warehouse and a tag.
     */
   def histWriter(db: Db, stream: DataFrame, valueCol: String,
                  tag: String = "t",
@@ -290,32 +288,14 @@ object StreamIngest {
                  compactEvery: Int = 0,
                    keepVersions: Int = KEEP_VERSIONS)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mft = Manifest.current(db.warehouse)
-        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
-          graft.ops.SketchStore.registerHist(db, batch,
-            org.apache.spark.sql.functions.col(valueCol), batchId, tag,
-            cursor = Some((sinkId, batchId)),
-            sinkProps = foldEveryProps(sinkId, foldEvery, compactEvery,
-              keepVersions),
-            fuse = true) // single-writer sink: ONE manifest commit per batch
-          if (shouldFold(batchId, foldEvery))
-            nonFatalFold(db)(graft.ops.SketchStore.foldHist(db, tag,
-              waitMillis = AUTO_FOLD_WAIT_MILLIS))
-          autoCompact(db, batchId, compactEvery, keepVersions)
-        }
-        ()
-      }
+    sketchSink(db, stream, tag, trigger, sinkId, foldEvery, compactEvery,
+        keepVersions)((b, id, cur, props) =>
+      SketchStore.registerHist(db, b, col(valueCol), id, tag, cursor = cur,
+        sinkProps = props, fuse = true), SketchStore.foldHist)
 
-  /** Streaming PER-GROUP quantile maintenance: each micro-batch's
-    * (`grpCol`, `valueCol`) rows fold into the warehouse-backed GROUPED
-    * histogram store ([[graft.ops.SketchStore.registerHistBy]]) — the
-    * running per-source sequence-length envelopes `/_query/stats?by`
-    * serves. Same exactly-once batch-id guard, idempotent-replay rows,
-    * and `foldEvery` auto-fold policy as [[histWriter]].
+  /** Streaming per-group quantile maintenance
+    * ([[SketchStore.registerHistBy]]): the running per-source envelopes
+    * `/_query/stats?by` serves.
     */
   def histByWriter(db: Db, stream: DataFrame, grpCol: String,
                    valueCol: String, tag: String = "t",
@@ -324,33 +304,14 @@ object StreamIngest {
                    compactEvery: Int = 0,
                    keepVersions: Int = KEEP_VERSIONS)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mft = Manifest.current(db.warehouse)
-        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
-          graft.ops.SketchStore.registerHistBy(db, batch,
-            org.apache.spark.sql.functions.col(grpCol),
-            org.apache.spark.sql.functions.col(valueCol), batchId, tag,
-            cursor = Some((sinkId, batchId)),
-            sinkProps = foldEveryProps(sinkId, foldEvery, compactEvery,
-              keepVersions),
-            fuse = true) // single-writer sink: ONE manifest commit per batch
-          if (shouldFold(batchId, foldEvery))
-            nonFatalFold(db)(graft.ops.SketchStore.foldHistBy(db, tag,
-              waitMillis = AUTO_FOLD_WAIT_MILLIS))
-          autoCompact(db, batchId, compactEvery, keepVersions)
-        }
-        ()
-      }
+    sketchSink(db, stream, tag, trigger, sinkId, foldEvery, compactEvery,
+        keepVersions)((b, id, cur, props) =>
+      SketchStore.registerHistBy(db, b, col(grpCol), col(valueCol), id, tag,
+        cursor = cur, sinkProps = props, fuse = true), SketchStore.foldHistBy)
 
-  /** Streaming Misra–Gries maintenance on its own: the frequent-items
-    * store for a token stream that doesn't want the full
-    * [[sketchWriter]] trio. Registration keys its ≤ c+1 rows on the
-    * micro-batch id, so a replayed batch rewrites the same (key, ts)
-    * rows — idempotent under the sink's exactly-once batch-id guard,
-    * like count-min and hist. Same `foldEvery` auto-fold policy.
+  /** Streaming Misra–Gries maintenance on its own
+    * ([[SketchStore.registerMg]]), for a token stream that doesn't want
+    * the full [[sketchWriter]] trio.
     */
   def mgWriter(db: Db, stream: DataFrame, elemCol: String,
                tag: String = "t",
@@ -359,33 +320,14 @@ object StreamIngest {
                compactEvery: Int = 0,
                    keepVersions: Int = KEEP_VERSIONS)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mft = Manifest.current(db.warehouse)
-        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
-          graft.ops.SketchStore.registerMg(db, batch,
-            org.apache.spark.sql.functions.col(elemCol), batchId, tag,
-            cursor = Some((sinkId, batchId)),
-            sinkProps = foldEveryProps(sinkId, foldEvery, compactEvery,
-              keepVersions),
-            fuse = true) // single-writer sink: ONE manifest commit per batch
-          if (shouldFold(batchId, foldEvery))
-            nonFatalFold(db)(graft.ops.SketchStore.foldMg(db, tag,
-              waitMillis = AUTO_FOLD_WAIT_MILLIS))
-          autoCompact(db, batchId, compactEvery, keepVersions)
-        }
-        ()
-      }
+    sketchSink(db, stream, tag, trigger, sinkId, foldEvery, compactEvery,
+        keepVersions)((b, id, cur, props) =>
+      SketchStore.registerMg(db, b, col(elemCol), id, tag, cursor = cur,
+        sinkProps = props, fuse = true), SketchStore.foldMg)
 
-  /** Streaming PER-GROUP distinct-count maintenance: each micro-batch's
-    * (`grpCol`, `elemCol`) rows fold into the warehouse-backed GROUPED
-    * KMV store ([[graft.ops.SketchStore.registerKmvBy]]) — running
-    * per-source vocabulary estimates. Replay-idempotent by the union
-    * law (a group's minima land on the same (key, ts) rows), with the
-    * cursor riding the publishing commit like every sketch sink; same
-    * `foldEvery` auto-fold policy.
+  /** Streaming per-group distinct counts ([[SketchStore.registerKmvBy]]):
+    * running per-source vocabulary estimates; replay-idempotent by the
+    * union law.
     */
   def kmvByWriter(db: Db, stream: DataFrame, grpCol: String,
                   elemCol: String, tag: String = "t",
@@ -394,39 +336,13 @@ object StreamIngest {
                   compactEvery: Int = 0,
                    keepVersions: Int = KEEP_VERSIONS)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mft = Manifest.current(db.warehouse)
-        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
-          graft.ops.SketchStore.registerKmvBy(db, batch,
-            org.apache.spark.sql.functions.col(grpCol),
-            org.apache.spark.sql.functions.col(elemCol), tag,
-            cursor = Some((sinkId, batchId)),
-            sinkProps = foldEveryProps(sinkId, foldEvery, compactEvery,
-              keepVersions),
-            fuse = true) // single-writer sink: ONE manifest commit per batch
-          if (shouldFold(batchId, foldEvery))
-            nonFatalFold(db)(graft.ops.SketchStore.foldKmvBy(db, tag,
-              waitMillis = AUTO_FOLD_WAIT_MILLIS))
-          autoCompact(db, batchId, compactEvery, keepVersions)
-        }
-        ()
-      }
+    sketchSink(db, stream, tag, trigger, sinkId, foldEvery, compactEvery,
+        keepVersions)((b, _, cur, props) =>
+      SketchStore.registerKmvBy(db, b, col(grpCol), col(elemCol), tag,
+        cursor = cur, sinkProps = props, fuse = true), SketchStore.foldKmvBy)
 
-  /** The GROUPED trio sink — [[sketchWriter]] for per-group streams:
-    * each micro-batch's (`grpCol`, `elemCol`) rows fold into the
-    * grouped KMV AND grouped MG stores as ONE transaction
-    * ([[graft.ops.SketchStore.registerSketchesBy]]), with the cursor
-    * riding the publishing commit and a ONE-supersede auto-fold
-    * ([[graft.ops.SketchStore.foldSketchesBy]]). A stream that also
-    * carries a numeric column names it via `valueCol` and its grouped
-    * histogram rows ride the SAME transaction and grid claim — three
-    * grouped families for one claim + one publish per micro-batch,
-    * instead of paying a second [[histByWriter]] sink's commits. Same
-    * `foldEvery` / `compactEvery` policies (the fold supersedes all
-    * four grouped key families atomically).
+  /** The grouped [[sketchWriter]] ([[SketchStore.registerSketchesBy]],
+    * auto-fold [[SketchStore.foldSketchesBy]]).
     */
   def sketchByWriter(db: Db, stream: DataFrame, grpCol: String,
                      elemCol: String, tag: String = "t",
@@ -436,35 +352,14 @@ object StreamIngest {
                      compactEvery: Int = 0,
                    keepVersions: Int = KEEP_VERSIONS)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mft = Manifest.current(db.warehouse)
-        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
-          graft.ops.SketchStore.registerSketchesBy(db, batch,
-            org.apache.spark.sql.functions.col(grpCol),
-            org.apache.spark.sql.functions.col(elemCol), batchId, tag,
-            valueCol = valueCol.map(org.apache.spark.sql.functions.col),
-            cursor = Some((sinkId, batchId)),
-            sinkProps = foldEveryProps(sinkId, foldEvery, compactEvery,
-              keepVersions),
-            fuse = true) // single-writer sink: ONE manifest commit per batch
-          if (shouldFold(batchId, foldEvery))
-            nonFatalFold(db)(graft.ops.SketchStore.foldSketchesBy(db, tag,
-              waitMillis = AUTO_FOLD_WAIT_MILLIS))
-          autoCompact(db, batchId, compactEvery, keepVersions)
-        }
-        ()
-      }
+    sketchSink(db, stream, tag, trigger, sinkId, foldEvery, compactEvery,
+        keepVersions)((b, id, cur, props) =>
+      SketchStore.registerSketchesBy(db, b, col(grpCol), col(elemCol), id,
+        tag, valueCol = valueCol.map(col), cursor = cur, sinkProps = props,
+        fuse = true), SketchStore.foldSketchesBy)
 
-  /** Streaming PER-GROUP frequent-items maintenance: each micro-batch's
-    * (`grpCol`, `elemCol`) rows fold into the warehouse-backed GROUPED
-    * MG store ([[graft.ops.SketchStore.registerMgBy]]) — running
-    * per-source token watchlists. Registration keys its ≤ (c+1)·groups
-    * rows on the micro-batch id (replay-idempotent like the ungrouped
-    * sink), cursor rides the publishing commit, same `foldEvery`
-    * policy.
+  /** Streaming per-group frequent items ([[SketchStore.registerMgBy]]):
+    * running per-source token watchlists.
     */
   def mgByWriter(db: Db, stream: DataFrame, grpCol: String,
                  elemCol: String, tag: String = "t",
@@ -473,35 +368,14 @@ object StreamIngest {
                  compactEvery: Int = 0,
                    keepVersions: Int = KEEP_VERSIONS)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mft = Manifest.current(db.warehouse)
-        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
-          graft.ops.SketchStore.registerMgBy(db, batch,
-            org.apache.spark.sql.functions.col(grpCol),
-            org.apache.spark.sql.functions.col(elemCol), batchId, tag,
-            cursor = Some((sinkId, batchId)),
-            sinkProps = foldEveryProps(sinkId, foldEvery, compactEvery,
-              keepVersions),
-            fuse = true) // single-writer sink: ONE manifest commit per batch
-          if (shouldFold(batchId, foldEvery))
-            nonFatalFold(db)(graft.ops.SketchStore.foldMgBy(db, tag,
-              waitMillis = AUTO_FOLD_WAIT_MILLIS))
-          autoCompact(db, batchId, compactEvery, keepVersions)
-        }
-        ()
-      }
+    sketchSink(db, stream, tag, trigger, sinkId, foldEvery, compactEvery,
+        keepVersions)((b, id, cur, props) =>
+      SketchStore.registerMgBy(db, b, col(grpCol), col(elemCol), id, tag,
+        cursor = cur, sinkProps = props, fuse = true), SketchStore.foldMgBy)
 
-  /** Streaming PER-GROUP frequency-grid maintenance: each micro-batch's
-    * (`grpCol`, `elemCol`) rows fold into the warehouse-backed GROUPED
-    * count-min store ([[graft.ops.SketchStore.registerCountMinBy]]) —
-    * running per-source point-frequency probes for ANY item, the
-    * quadrant MG's heavy-item watchlists can't answer. Registration
-    * keys its ≤ d·w·groups cells on the micro-batch id
-    * (replay-idempotent like the ungrouped grid), cursor rides the
-    * publishing commit, same `foldEvery`/`compactEvery` policies.
+  /** Streaming per-group frequency grids
+    * ([[SketchStore.registerCountMinBy]]): point frequency of ANY item
+    * per source, the quadrant MG's watchlists can't answer.
     */
   def cmByWriter(db: Db, stream: DataFrame, grpCol: String,
                  elemCol: String, tag: String = "t",
@@ -510,26 +384,11 @@ object StreamIngest {
                  compactEvery: Int = 0,
                  keepVersions: Int = KEEP_VERSIONS)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mft = Manifest.current(db.warehouse)
-        if (batchId > mft.streamBatchFor(sinkId) && !batch.isEmpty) {
-          graft.ops.SketchStore.registerCountMinBy(db, batch,
-            org.apache.spark.sql.functions.col(grpCol),
-            org.apache.spark.sql.functions.col(elemCol), batchId, tag,
-            cursor = Some((sinkId, batchId)),
-            sinkProps = foldEveryProps(sinkId, foldEvery, compactEvery,
-              keepVersions),
-            fuse = true) // single-writer sink: ONE manifest commit per batch
-          if (shouldFold(batchId, foldEvery))
-            nonFatalFold(db)(graft.ops.SketchStore.foldCountMinBy(db, tag,
-              waitMillis = AUTO_FOLD_WAIT_MILLIS))
-          autoCompact(db, batchId, compactEvery, keepVersions)
-        }
-        ()
-      }
+    sketchSink(db, stream, tag, trigger, sinkId, foldEvery, compactEvery,
+        keepVersions)((b, id, cur, props) =>
+      SketchStore.registerCountMinBy(db, b, col(grpCol), col(elemCol), id,
+        tag, cursor = cur, sinkProps = props, fuse = true),
+      SketchStore.foldCountMinBy)
 
   /** The auto-fold / auto-compact cadences as table properties, ridden
     * into the registration's OWN publishing commit (one version, no
@@ -595,14 +454,12 @@ object StreamIngest {
                           keepVersions: Int = KEEP_VERSIONS): Unit =
     if (shouldFold(batchId, compactEvery)) nonFatalFold(db) {
       if (!graft.store.Compactor.tryMajor(db))
-        System.err.println(
-          "graft: auto-compact skipped: another compactor holds the lock")
+        log.warn("auto-compact skipped: another compactor holds the lock")
       else if (!graft.store.Compactor.tryVacuum(db))
         // vacuum is what clears crashed writers' stale pending claims
         // (the raised-fold-fence case) — a skip must be as loud as the
         // compact's
-        System.err.println(
-          "graft: auto-vacuum skipped: another compactor took the lock")
+        log.warn("auto-vacuum skipped: another compactor took the lock")
       // manifest-history prune rides the same cadence: folds bound the
       // live rows, compaction bounds the data directories, and this
       // bounds the LAST unbounded curve — one _manifest/v<seq>.json per
@@ -611,8 +468,7 @@ object StreamIngest {
       // operator retains (versions inside it stay readable by
       // `read --at-version`).
       else if (!graft.store.Compactor.tryPruneHistory(db, keepVersions))
-        System.err.println(
-          "graft: auto-prune skipped: another compactor took the lock")
+        log.warn("auto-prune skipped: another compactor took the lock")
     }
 
   /** Default manifest-history window the auto-maintenance prune keeps:
@@ -644,8 +500,8 @@ object StreamIngest {
     * drift, misconfigured tag, persistent filesystem error) is
     * distinguishable from transient contention: transient skips reset
     * on the next success, while `MAINT_ESCALATE` straight failures
-    * escalate to a loud warning carrying the streak — the signal a
-    * monitoring system tails for, because unfolded/uncompacted state
+    * escalate to an ERROR on the `graft` log carrying the streak — the
+    * signal a monitor tails for, because unfolded/uncompacted state
     * grows unbounded exactly when maintenance fails EVERY cadence
     * point. [[consecutiveMaintenanceFailures]] exposes the live streak.
     */
@@ -674,10 +530,10 @@ object StreamIngest {
             m.copy(props = m.props + (MAINT_STREAK_PROP -> streak.toString)))
           ()
         } catch { case scala.util.control.NonFatal(_) => () }
-        System.err.println(s"graft: auto-maintenance skipped: ${e.getMessage}")
+        log.warn(s"auto-maintenance skipped: ${e.getMessage}")
         if (streak >= MAINT_ESCALATE)
-          System.err.println(
-            s"graft: WARNING: auto-maintenance has failed $streak " +
+          log.error(
+            s"auto-maintenance has failed $streak " +
               s"consecutive cadence points on ${db.warehouse} — live rows " +
               "and transaction directories are growing unbounded; " +
               "investigate (schema drift? crashed writer's pending claim " +
@@ -708,8 +564,8 @@ object StreamIngest {
   val MAINT_STREAK_PROP = "maint.failStreak"
 
   /** The current consecutive auto-maintenance failure streak for a
-    * warehouse — the counter a health check polls instead of scraping
-    * stderr. Returns the MAX of the persisted manifest property (a
+    * warehouse — the counter a health check polls instead of tailing
+    * the `graft` log. Returns the MAX of the persisted manifest property (a
     * stat-cached read, so `_status` in a process other than the sink's
     * JVM reports the streak) and this JVM's live counter: when the
     * manifest itself is what's failing, the swallowed persist leaves

@@ -42,6 +42,22 @@ class PinSpec extends SparkSpec {
     }
   }
 
+  test("with a checkpoint dir, a lazy pin is written at once and " +
+      "survives losing its blocks") {
+    withCheckpointDir { dir =>
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val pinned = Graft.pin(spark.range(0, 1000).toDF("id")
+        .withColumn("v", col("id") * 3), eager = false)
+      assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+        .count() > 0, "a pin under a checkpoint dir must be written eagerly")
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id)) rdd.unpersist(blocking = true)
+      }
+      assert(pinned.agg(sum("v")).as[Long].head() == want)
+    }
+  }
+
   test("without a checkpoint dir, the same loss fails the consuming " +
       "action: local pins trade executor-loss tolerance for speed") {
     assert(!Graft.pinsReliably(spark))
