@@ -137,11 +137,12 @@ object Graft {
     * is the one switch Spark already owns. The former
     * `spark.graft.reuse.mode` key is retired and refuses loudly when set.
     *
-    * `eager` is Spark's own flag. `false` defers the local checkpoint to
-    * the frame's first action, for a frame whose consumers may never all
-    * run (Pipeline's branch materializations). With a checkpoint dir the
-    * pin is eager either way: a lazy reliable checkpoint recomputes the
-    * lineage in a job of its own after the first action.
+    * `eager` is Spark's own flag. `false` saves the materialization job
+    * of a local checkpoint: the first action that computes the frame
+    * writes its blocks (Pipeline's branch materializations, whose first
+    * consumer runs right away). With a checkpoint dir the pin is eager
+    * either way: a lazy reliable checkpoint recomputes the lineage in a
+    * job of its own after the first action.
     */
   def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
     if (df.sparkSession.conf.getOption(RetiredReuseMode).isDefined)

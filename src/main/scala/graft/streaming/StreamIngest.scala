@@ -217,9 +217,10 @@ object StreamIngest {
   /** One sketch sink: under the exactly-once batch-id guard, `register`
     * commits the micro-batch with the replay cursor and the sink's
     * cadence properties riding its own publishing commit (batch visible
-    * ⟺ cursor advanced: no replay window), then `fold` runs on every
-    * `foldEvery`-th batch and the store compacts on every
-    * `compactEvery`-th.
+    * ⟺ cursor advanced: no replay window) and `fuse = true` (the sink is
+    * the store's single writer: ONE manifest commit per batch), then
+    * `fold` runs on every `foldEvery`-th batch and the store compacts on
+    * every `compactEvery`-th.
     *
     * @param foldEvery > 0 = auto-fold policy, so a year-long stream stays
     *   bounded at sketch-size + foldEvery·sketch-size rows without a
