@@ -2,16 +2,18 @@ package graft.store
 
 import graft.SparkSpec
 import graft.series.SeriesOps
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** [[Db.Snapshot.get]] — the single-task point lookup over footer-selected
-  * files with driver-held delete markers — returns exactly what the general
-  * read pipeline returns for the key: `records` → key filter → time filter
-  * → `lastWins` → `applyDeletes` → (key, ts) order, row for row and in
-  * order, over generated warehouses.
+/** Every warehouse reader returns exactly what the reference composition
+  * returns: `records` → key filter → time filter → `lastWins` →
+  * `applyDeletes` → (key, ts) order, row for row and in order, over
+  * generated warehouses. [[Db.Snapshot.get]] (the single-task point lookup
+  * over footer-selected files with driver-held delete markers) is checked
+  * per key; `read`, `readMany`, `readInstants`, `tail` and a read after a
+  * minor and a major compaction per generated pattern.
   */
 class PointLookupSpec extends SparkSpec {
   import spark.implicits._
@@ -58,6 +60,13 @@ class PointLookupSpec extends SparkSpec {
     b <- Gen.option(tsGen)
   } yield (a, b)
 
+  /** Read patterns (only `%` is a wildcard): the whole store, prefixes
+    * with ASCII and non-ASCII bytes, an inner `%`, exact keys holding `_`
+    * and `%`, a suffix match.
+    */
+  private val patterns = Seq("%", "a%", "a%b", "a_b", "é%",
+    "\uD83D\uDE00%", "ab", "%b", "k%", "\uFF5E")
+
   private var nextV = 0L
 
   private def build(wh: String, bucketed: Boolean, ops: Seq[Op]): Db = {
@@ -80,12 +89,31 @@ class PointLookupSpec extends SparkSpec {
     * (key, ts) order.
     */
   private def pipeline(snap: Db#Snapshot, key: String, after: Option[Long],
-                       before: Option[Long]): DataFrame = {
+                       before: Option[Long]): DataFrame =
+    reference(snap, col("key") === key, after, before)
+
+  /** The same composition for any key predicate; `since` keeps only the
+    * data and marker transactions above it (the change feed's view).
+    */
+  private def reference(snap: Db#Snapshot, keep: Column, after: Option[Long],
+                        before: Option[Long], since: Long = -1L): DataFrame = {
     val filtered = SeriesOps.timeRange(
-      snap.records.filter(col("key") === key), after, before)
+      snap.records.filter(col("txid") > since && keep), after, before)
     val merged = SeriesOps.lastWins(filtered, Seq("key", "ts"), "txid")
-    SeriesOps.ordered(SeriesOps.applyDeletes(merged, snap.deletes)
+    SeriesOps.ordered(SeriesOps.applyDeletes(merged,
+        snap.deletes.filter(col("txid") > since))
       .drop("txid", "tbucket"))
+  }
+
+  /** Same columns, and the same rows: in order, or as a multiset. */
+  private def same(got: DataFrame, want: DataFrame, what: String,
+                   ordered: Boolean = true): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq,
+      s"$what: columns ${got.columns.toSeq} != ${want.columns.toSeq}")
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    def bag(rs: Seq[Row]) = rs.groupBy(identity).view.mapValues(_.size).toMap
+    if (ordered) assert(g == w, s"$what:\n got $g\nwant $w")
+    else assert(bag(g) == bag(w), s"$what (as a multiset):\n got $g\nwant $w")
   }
 
   private def check(db: Db, bounds: Seq[(Option[Long], Option[Long])],
@@ -160,5 +188,40 @@ class PointLookupSpec extends SparkSpec {
     check(second, Seq((None, None)), "after recreation")
     assert(second.snapshot().get("a").select("ts").as[Long].collect().toSeq ==
       Seq(7L))
+  }
+
+  test("read, readMany, readInstants, tail and compaction == the reference composition") {
+    for (s <- 1L to 4L) {
+      val (bucketed, ops) = sample(scenarioGen, 100 + s)
+      val db = build(tmpDir("graft-rdgen"), bucketed, ops)
+      val snap = db.snapshot()
+      val what = s"seed $s (bucketed=$bucketed, ops=$ops)"
+      val ps = sample(Gen.pick(3, patterns), s).toSeq
+      val (a, b) = sample(boundsGen, s)
+      def keep(p: String) = SeriesOps.keyPredicate(col("key"), p)
+      for (p <- ps; (x, y) <- Seq((None, None), (a, b)))
+        same(snap.read(p, x, y), reference(snap, keep(p), x, y),
+          s"$what read '$p' after $x before $y")
+      val many = ps.take(2 + (s % 2).toInt)
+      same(snap.readMany(many, a, b),
+        reference(snap, many.map(keep).reduce(_ || _), a, b),
+        s"$what readMany $many after $a before $b", ordered = false)
+      val instants = sample(Gen.listOfN(3, tsGen), s).distinct
+      same(snap.readInstants(instants, ps.head),
+        reference(snap, keep(ps.head) && col("ts").isin(instants: _*),
+          None, None), s"$what readInstants $instants '${ps.head}'")
+      val txids = snap.manifest.dataTxids ++ snap.manifest.deleteTxids
+      val since = sample(Gen.oneOf(-1L +: txids), s)
+      same(snap.tail(since, ps.head, a, b),
+        reference(snap, keep(ps.head), a, b, since),
+        s"$what tail since $since '${ps.head}' after $a before $b")
+      val whole = reference(snap, lit(true), None, None).collect().toSeq
+      Compactor.minor(db)
+      assert(db.snapshot().read().collect().toSeq == whole,
+        s"$what read after a minor compaction")
+      Compactor.major(db)
+      assert(db.snapshot().read().collect().toSeq == whole,
+        s"$what read after a major compaction")
+    }
   }
 }
