@@ -17,8 +17,8 @@ object StressBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
     val nKeys = args.lift(1).map(_.toLong).getOrElse(20000L)
-    // overwrite fraction for tx1 (0.01 = the light default; 0.5 = the
-    // overwrite-heavy workload for the lastWins A/B)
+    // overwrite fraction for tx1 (0.01 = the light default; 0.5 = an
+    // overwrite-heavy workload)
     val upsertFrac = args.lift(2).map(_.toDouble).getOrElse(0.01)
     val spark = Graft.localSession(
       Runtime.getRuntime.availableProcessors().min(32), 32)
@@ -44,13 +44,10 @@ object StressBench {
     timed(f"ingest tx1 (${upsertFrac * 100}%.0f%% upsert)")(
       TxWriter.write(db, gen((n * upsertFrac).toLong, 1)))
     TxWriter.delete(db, wildcard = "key-000001%") // 10 of nKeys keys
-    // lastWins A/B: one wide SortAggregate exchange (max_by struct) vs
-    // slim max(txid) agg + hash semi-join (two exchanges, no sort buffer)
-    val raw = db.snapshot().records
-    timed("merge max_by (default)")(
-      graft.series.SeriesOps.lastWins(raw, Seq("key", "ts"), "txid").count())
-    timed("merge semi-join (alt)")(
-      graft.series.SeriesOps.lastWinsSemi(raw, Seq("key", "ts"), "txid").count())
+    // last-wins alone (max_by struct SortAggregate); its semi-join
+    // alternative lost in both overwrite regimes (SCALE.md)
+    timed("merge max_by")(graft.series.SeriesOps.lastWins(
+      db.snapshot().records, Seq("key", "ts"), "txid").count())
     timed("full scan+merge+delete")(assert(db.read().count() > 0))
     timed("ordered dump")(
       db.read().write.mode("overwrite").parquet(s"$wh/dump"))

@@ -23,12 +23,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): every filter here is a sargable conjunction Catalyst
   * pushes into the Parquet scan; `lastWins` is a single hash-aggregate with
-  * map-side partial aggregation (no window/sort shuffle); `applyDeletes` is a
-  * broadcast nested-loop anti-join — correct because the delete-marker table
-  * is tiny by construction (one row per delete *operation*, not per deleted
-  * record), so it is always broadcastable. A point lookup whose markers are
-  * already on the driver uses [[dropDeleted]] instead: the same rule
-  * ([[deletedBy]]) as a filter, with no join and no broadcast job.
+  * map-side partial aggregation (no window/sort shuffle). Markers already on
+  * the driver apply through [[dropDeleted]]: the delete rule ([[deletedBy]])
+  * as a filter, with no join and no broadcast job. Markers that are not
+  * take `applyDeletes`, a broadcast nested-loop anti-join — correct because
+  * the delete-marker table is tiny by construction (one row per delete
+  * *operation*, not per deleted record), so it is always broadcastable.
   */
 object SeriesOps {
 
@@ -97,6 +97,9 @@ object SeriesOps {
     *
     * `tieBreak` columns break txid ties deterministically (the reference
     * cannot tie: one row per (key, ts) per tx).
+    *
+    * A slim `max(txid)` aggregation + left-semi join was measured worse in
+    * both overwrite regimes and deleted (SCALE.md, "lastWins A/B settled").
     */
   def lastWins(df: DataFrame, keyCols: Seq[String] = Seq("key", "ts"),
                txidCol: String = "txid",
@@ -108,23 +111,6 @@ object SeriesOps {
       .agg(winner)
       .select(keyCols.map(col) ++ payload.map(c => col(s"_w.${c.toString}").as(c.toString)): _*)
       .select(df.columns.map(col): _*) // restore original column order
-  }
-
-  /** Alternative last-wins formulation: a slim `max(txid)` aggregation
-    * (shuffle ships only the key columns + txid, with map-side partials)
-    * followed by a left-semi join back on (keyCols, txid). Two exchanges
-    * instead of [[lastWins]]'s one — but the max_by exchange carries the
-    * FULL payload in a struct buffer and plans as SortAggregate, so on a
-    * low-overwrite warehouse (partial agg collapses nothing) the wide
-    * sort-agg exchange can cost more than slim-agg + hash-semi-join.
-    * A/B'd in StressBench; numbers in SCALE.md. Assumes at most one row
-    * per (keyCols, txid), which the transaction writer guarantees.
-    */
-  def lastWinsSemi(df: DataFrame, keyCols: Seq[String] = Seq("key", "ts"),
-                   txidCol: String = "txid"): DataFrame = {
-    val winners = df.groupBy(keyCols.map(col): _*)
-      .agg(max(col(txidCol)).as(txidCol))
-    df.join(winners, keyCols :+ txidCol, "left_semi")
   }
 
   /** One delete marker's fields, as columns: a joined marker row in
@@ -153,6 +139,9 @@ object SeriesOps {
     * `(firstKey, lastKey /* "" = unbounded, exclusive */, t0 /* incl */,
     *   t1 /* excl */, wildcard, txid)`; the condition is [[deletedBy]].
     * The marker table is rows-per-operation small → broadcast theta join.
+    * The warehouse readers take this path only for a marker set the
+    * driver cache refuses (`Db.deleteRows`: an identity-less warehouse or
+    * an oversized set); held sets go through [[dropDeleted]].
     */
   def applyDeletes(records: DataFrame, deletes: DataFrame,
                    keyCol: String = "key", tsCol: String = "ts",
@@ -165,31 +154,36 @@ object SeriesOps {
     r.join(broadcast(d), cond, "left_anti")
   }
 
-  /** [[applyDeletes]] for ONE key's records against marker rows already
-    * on the driver (same schema, as `Row`s): a plain filter, so the
+  /** [[applyDeletes]] against marker rows already on the driver (same
+    * schema, as `Row`s), for records whose keys all lie in the UTF-8 byte
+    * range `[keyLo, keyHi)` (None = unbounded): a plain filter, so the
     * records keep their partitioning and the plan gets no join and no
-    * broadcast job. Only the markers whose key half of [[deletedBy]]
-    * holds for `key` enter the filter — decided here with Spark's own
-    * string order (`UTF8String` bytes) and LIKE, so the plan grows
-    * with the markers that cover the key, not with every marker. The
-    * filter itself re-applies the whole [[deletedBy]] rule per row, so it
-    * suppresses exactly the rows the anti-join would. A marker whose
-    * wildcard Spark cannot evaluate is kept and fails in the filter, as
-    * it would in the join.
+    * broadcast job. Every warehouse read with driver-held markers takes
+    * this path. Only the markers whose key range meets the records' range
+    * — and, for an `exactKey`, whose wildcard matches it — enter the
+    * filter, decided here with Spark's own string order (`UTF8String`
+    * bytes) and LIKE, so the plan grows with the markers that can cover
+    * the selection, not with every marker. The filter itself re-applies
+    * the whole [[deletedBy]] rule per row, so it suppresses exactly the
+    * rows the anti-join would. A marker whose wildcard Spark cannot
+    * evaluate is kept and fails in the filter, as it would in the join.
     */
-  def dropDeleted(records: DataFrame, markers: Seq[Row], key: String,
+  def dropDeleted(records: DataFrame, markers: Seq[Row],
+                  keyLo: Option[Array[Byte]], keyHi: Option[Array[Byte]],
+                  exactKey: Option[String] = None,
                   keyCol: String = "key", tsCol: String = "ts",
                   txidCol: String = "txid"): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Like, Literal}
     import org.apache.spark.unsafe.types.UTF8String
-    val k = UTF8String.fromString(key)
     def s(v: String) = UTF8String.fromString(v)
+    val (lo, hi) = (keyLo.map(UTF8String.fromBytes), keyHi.map(UTF8String.fromBytes))
     val covering = markers.filter { m =>
-      k.compareTo(s(m.getString(0))) >= 0 &&
-        (m.getString(1).isEmpty || k.compareTo(s(m.getString(1))) < 0) &&
-        (try Like(Literal(k), Literal(s(m.getString(4))), '\\')
-          .eval() == true
-        catch { case scala.util.control.NonFatal(_) => true })
+      hi.forall(s(m.getString(0)).compareTo(_) < 0) &&
+        (m.getString(1).isEmpty || lo.forall(s(m.getString(1)).compareTo(_) > 0)) &&
+        exactKey.forall(k =>
+          try Like(Literal(s(k)), Literal(s(m.getString(4))), '\\')
+            .eval() == true
+          catch { case scala.util.control.NonFatal(_) => true })
     }
     if (covering.isEmpty) records
     else {

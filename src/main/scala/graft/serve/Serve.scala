@@ -143,6 +143,8 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     snap
   }
 
+  private val requestSeq = new java.util.concurrent.atomic.AtomicLong(0)
+
   private val server = HttpServer.create(new java.net.InetSocketAddress(port), 0)
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
@@ -151,6 +153,11 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
       // the catch and mask the real error; log it and truncate instead
       val headersSent = new java.util.concurrent.atomic.AtomicBoolean(false)
       ex.setAttribute("headersSent", headersSent)
+      // the request's identity on every Spark job it runs, so jobs under
+      // concurrent clients can be told apart (the UI, listeners)
+      db.spark.sparkContext.setJobDescription(
+        s"${ex.getRequestMethod} ${ex.getRequestURI.getPath} " +
+          s"#${requestSeq.incrementAndGet()}")
       try {
         ex.getRequestMethod match {
           case "GET" => doGet(ex)
@@ -162,7 +169,7 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
           if (headersSent.get())
             graft.core.Graft.log.warn(s"serve: mid-stream failure: $e")
           else respond(ex, 500, s"error: ${e.getMessage}\n")
-      } finally ex.close()
+      } finally { db.spark.sparkContext.setJobDescription(null); ex.close() }
     }
   })
   private val nWorkers =
@@ -187,6 +194,18 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
         t.setDaemon(true)
         t
       }))
+
+  /** `body` on the fan-out pool, its jobs carrying the calling request's
+    * job description (a pool thread keeps whatever it last inherited).
+    */
+  private def branch[A](body: => A): scala.concurrent.Future[A] = {
+    val sc = db.spark.sparkContext
+    val desc = sc.getLocalProperty("spark.job.description")
+    scala.concurrent.Future {
+      sc.setJobDescription(desc)
+      try body finally sc.setJobDescription(null)
+    }(fanout)
+  }
 
   /** Ephemeral-port binding (port = 0) resolves here. */
   def boundPort: Int = server.getAddress.getPort
@@ -660,13 +679,13 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     // (halves the serial stage chain) and fuse the two bounded rank
     // lists driver-side (rrfFuseLocal == rrfFuse, spec-pinned): a
     // relational fusion would spend a whole job on <= 2*fetch rows
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration._
-    val lexF = Future {
+    val lexF = branch {
       graft.ops.Retrieval.bm25ProbeLiteral(db, Seq((-1L, terms)), fetch)
         .select(col("query_id"), col("doc_id"), col("rank"))
         .as[(Long, Long, Long)].collect().toSeq
-    }(fanout)
+    }
     val dense = graft.ops.Similarity
       .ivfPqProbePersisted(ann, qv, "vec_id", "embedding", fetch, m = m,
         dim = dim, nProbe = nProbe)
@@ -993,15 +1012,14 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
     // version/cursors/folds the body claims are the generation the data
     // actually came from.
     val snap = db.snapshot()
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration._
-    implicit val ec: scala.concurrent.ExecutionContext = fanout
-    val distinctF = Future {
+    val distinctF = branch {
       graft.ops.SketchStore.storedKmvEstimate(db, tag, Some(snap))
         .select(col("n_sketch"), col("est_distinct"))
         .as[(Long, Long)].collect().headOption.getOrElse((0L, 0L))
     }
-    val quantF = Future {
+    val quantF = branch {
       graft.ops.SketchStore.storedHistQuantiles(db, tag = tag,
           at = Some(snap))
         .select(col("qm"), col("n"), col("lo"), col("hi"))

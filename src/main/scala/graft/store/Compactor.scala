@@ -7,8 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.series.SeriesOps
-
 /** Compaction — folds transaction directories together, physically applying
   * last-writer-wins dedup and delete markers (sonnerie `compact`,
   * `src/main.rs:397-499`, purge logic `src/lib.rs:173-210`).
@@ -54,20 +52,15 @@ object Compactor {
     require(maxTxPerPass >= 2, "a pass must fold at least 2 transactions")
     var guard = 0
     while (db.snapshot().manifest.dataTxids.drop(1).size >= 2 && guard < 10000) {
-      compactChunk(db, maxTxPerPass, transform)
+      // one bounded pass folds the NEWEST `maxTxPerPass` non-base
+      // transactions: the output gets a fresh (highest) txid, so the
+      // folded set must be the precedence-topmost transactions — folding
+      // an older chunk would lift its records above unfolded newer ones
+      // and invert last-wins
+      compact(db, major = false, transform, limitTx = Some(maxTxPerPass))
       guard += 1
     }
   }
-
-  /** One bounded minor pass: fold the NEWEST `maxTxPerPass` non-base
-    * transactions. The folded output gets a fresh (highest) txid, so the
-    * folded set must be the precedence-topmost transactions — folding an
-    * older chunk would lift its records above unfolded newer ones and
-    * invert last-wins.
-    */
-  private def compactChunk(db: Db, maxTxPerPass: Int,
-                           transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit =
-    compact(db, major = false, transform, limitTx = Some(maxTxPerPass))
 
   /** Literal `--gegnum` parity (reference `src/main.rs:429-477`): dump the
     * whole database as text-protocol lines through an external shell
@@ -220,15 +213,9 @@ object Compactor {
     // (it may be purging deletes or applying a transform to a single tx)
     if (toCompact.isEmpty || (!major && toCompact.size < 2)) return
 
-    val dirs = toCompact.map(t => s"${db.dataDir}/txid=$t")
-    val records = db.spark.read
-      .option("basePath", db.dataDir).option("mergeSchema", "true")
-      .parquet(dirs: _*)
-
-    // Physically purge: delete anti-join (txid-aware) then last-wins dedup.
-    val purged = SeriesOps.applyDeletes(records, snap.deletes)
-    val merged = SeriesOps.lastWins(purged, Seq("key", "ts"), "txid").drop("txid")
-    val out = transform(merged)
+    // Physically purge: the readers' own merge (last-wins, then every
+    // marker of the snapshot), folded into one transaction
+    val out = transform(snap.fold(toCompact))
 
     // Write into a uniquely named tentative directory and atomically
     // rename into the claimed txid — no live directory is touched, no

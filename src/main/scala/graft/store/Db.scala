@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,15 +22,20 @@ import graft.series.SeriesOps
   * (the reference's per-key format strings, SURVEY §1.2) and are merged on
   * read (`mergeSchema`).
   *
+  * One read path, as in sonnerie: every reader of [[Db.Snapshot]] (`read`,
+  * `readMany`, `readInstants`, `get`, `tail`) and compaction's fold build
+  * their plan in one place — txid pruning by manifest stats → scan roots →
+  * key/time/`tbucket` filter → last-writer-wins → delete markers → drop
+  * `txid`/`tbucket` → output shape. They differ only in those inputs.
+  *
   * Scale: each transaction directory is written range-partitioned on `key`
   * and sorted `(key, ts)` within files, so Parquet row-group min/max stats
   * make key-range and wildcard-prefix reads prune to the few row groups that
   * can match — the distributed equivalent of sonnerie's segment binary search
   * (`src/segment_reader.rs:173-234`), with no driver-side index needed.
-  * Exact-key lookups ([[Db.Snapshot.get]]) go one step further: the driver
-  * caches each published transaction's file list and per-file footer key
-  * range ([[Db.txLayout]]), roots the scan at only the files whose range
-  * holds the key, and answers in one single-task Spark job.
+  * Exact-key lookups ([[Db.Snapshot.get]]) root the scan at only the files
+  * whose footer key range holds the key ([[Db.txLayout]]) and answer in one
+  * single-task Spark job.
   */
 final class Db(val spark: SparkSession, val warehouse: String) {
 
@@ -44,34 +49,32 @@ final class Db(val spark: SparkSession, val warehouse: String) {
     /** Union of all committed data transactions, with `txid` column. */
     def records: DataFrame = {
       require(!isEmpty, "empty warehouse")
-      readData(manifest.dataTxids)
+      readPaths(txDirs(manifest.dataTxids))
     }
-
-    /** Manifest-tracked schema makes planning O(1): no footer fetch per
-      * file (`mergeSchema` reads every footer — O(files) at warehouse
-      * scale). Partition columns (txid, tbucket) are appended by partition
-      * discovery. Falls back to mergeSchema when the manifest predates
-      * schema tracking or recorded a type conflict.
-      */
-    private def readData(txids: Seq[Long]): DataFrame =
-      readPaths(txids.map(t => s"$dataDir/txid=$t"))
 
     /** Parsed once per snapshot, not once per planned read. */
     private lazy val dataSchema: StructType =
       StructType.fromDDL(manifest.schemaDdl)
 
     /** Transaction directories, bucket directories or single data files
-      * under `data/`; partition columns come from the paths either way.
+      * under `data/`; partition columns (txid, tbucket) come from the
+      * paths either way. The manifest-tracked schema makes planning O(1):
+      * no footer fetch per file (`mergeSchema` reads every footer —
+      * O(files) at warehouse scale). Falls back to mergeSchema when the
+      * manifest predates schema tracking or recorded a type conflict, and
+      * uses it whenever `footers` asks for the files' own columns.
       */
-    private def readPaths(paths: Seq[String]): DataFrame = {
+    private def readPaths(paths: Seq[String],
+                          footers: Boolean = false): DataFrame = {
       val base = spark.read.option("basePath", dataDir)
-      if (manifest.schemaDdl.nonEmpty) base.schema(dataSchema).parquet(paths: _*)
-      else base.option("mergeSchema", "true").parquet(paths: _*)
+      if (manifest.schemaDdl.isEmpty || footers)
+        base.option("mergeSchema", "true").parquet(paths: _*)
+      else base.schema(dataSchema).parquet(paths: _*)
     }
 
     def deletes: DataFrame =
-      Db.deletesFrame(spark, warehouse, deleteDir, manifest.created,
-        manifest.deleteTxids)
+      if (manifest.deleteTxids.isEmpty) Db.emptyDeletes(spark)
+      else Db.markerFiles(spark, deleteDir, manifest.deleteTxids)
 
     /** Data txids whose manifest stats can overlap the request — the
       * reference's segment binary search at transaction granularity
@@ -81,51 +84,35 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * stats are conservatively kept.
       */
     def prunedDataTxids(pattern: String, after: Option[Long],
-                        before: Option[Long]): Vector[Long] = {
-      val w = graft.series.Wildcard(pattern)
-      // key bounds implied by the pattern: [lo, hi) in byte order
-      val lo: Option[Array[Byte]] =
-        if (w.prefix.isEmpty) None else Some(Db.utf8(w.prefix))
-      val hi: Option[Array[Byte]] =
-        if (w.isExact) Some(Db.utf8(w.pattern) :+ 0.toByte) // [k, k+0x00)
-        else if (w.prefix.isEmpty) None
-        else {
-          val b = Db.utf8(w.prefix)
-          var i = b.length - 1
-          while (i >= 0 && b(i) == -1) i -= 1
-          if (i < 0) None
-          else { val out = java.util.Arrays.copyOf(b, i + 1)
-                 out(i) = (out(i) + 1).toByte; Some(out) }
-        }
+                        before: Option[Long]): Vector[Long] =
+      pruned(Db.Keys.pattern(pattern), after, before)
+
+    private def pruned(keys: Db.Keys, after: Option[Long],
+                       before: Option[Long]): Vector[Long] =
       manifest.dataTxids.filter { t =>
         manifest.txStats.get(t).forall { st =>
-          val keyOk =
-            lo.forall(l => Db.compareBytes(Db.utf8(st.maxKey), l) >= 0) &&
-              hi.forall(h => Db.compareBytes(Db.utf8(st.minKey), h) < 0)
-          val timeOk =
+          keys.lo.forall(l => Db.compareBytes(Db.utf8(st.maxKey), l) >= 0) &&
+            keys.hi.forall(h => Db.compareBytes(Db.utf8(st.minKey), h) < 0) &&
             after.forall(a => st.maxTs >= a) &&
-              before.forall(b => st.minTs < b)
-          keyOk && timeOk
+            before.forall(b => st.minTs < b)
         }
       }
-    }
+
+    private def txDirs(txids: Seq[Long]): Seq[String] =
+      txids.map(t => s"$dataDir/txid=$t")
 
     /** The full sonnerie read pipeline: key wildcard (prefix-range
       * rewritten), `[t0, t1)` time filter, last-writer-wins across txids,
-      * delete-marker anti-join, (key, ts) ordered output — all lazily
-      * composed so Catalyst pushes the filters into every per-tx scan.
-      * Transactions whose manifest stats cannot overlap are skipped
-      * entirely ([[prunedDataTxids]]).
+      * delete markers, (key, ts) ordered output — all lazily composed so
+      * Catalyst pushes the filters into every per-tx scan. Transactions
+      * whose manifest stats cannot overlap are skipped entirely
+      * ([[prunedDataTxids]]).
       */
-    def read(
-        pattern: String = "%",
-        after: Option[Long] = None,
-        before: Option[Long] = None
-    ): DataFrame = {
-      val txids = prunedDataTxids(pattern, after, before)
-      if (txids.isEmpty) emptyResult()
-      else pipeline(
-        SeriesOps.keyFilter(readData(txids), pattern), after, before)
+    def read(pattern: String = "%", after: Option[Long] = None,
+             before: Option[Long] = None): DataFrame = {
+      val keys = Db.Keys.pattern(pattern)
+      plan(txDirs(pruned(keys, after, before)), keys, after, before,
+        Db.Shape.Ordered)
     }
 
     /** ONE read-pipeline pass over the UNION of several key patterns —
@@ -143,15 +130,10 @@ final class Db(val spark: SparkSession, val warehouse: String) {
     def readMany(patterns: Seq[String], after: Option[Long] = None,
                  before: Option[Long] = None): DataFrame = {
       require(patterns.nonEmpty, "readMany needs at least one pattern")
-      val txids = patterns.flatMap(p => prunedDataTxids(p, after, before))
-        .distinct.sorted
-      if (txids.isEmpty) emptyResult()
-      else {
-        val pred = patterns
-          .map(p => SeriesOps.keyPredicate(col("key"), p)).reduce(_ || _)
-        pipeline(readData(txids).filter(pred), after, before,
-          ordered = false)
-      }
+      val each = patterns.map(Db.Keys.pattern)
+      val txids = each.flatMap(pruned(_, after, before)).distinct.sorted
+      plan(txDirs(txids), Db.Keys.anyOf(each), after, before,
+        Db.Shape.Unordered)
     }
 
     /** Read exactly the given `ts` instants (one [[read]] pipeline pass
@@ -169,46 +151,33 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * that listing dominated the probe, measured 8 s steady on a 50k
       * corpus where the data itself scans in milliseconds.) Transactions
       * whose stats overlap no instant are skipped entirely, as in
-      * [[read]].
+      * [[read]]. `ordered = false` skips the global (key, ts) sort, for
+      * consumers that re-shuffle anyway (the ANN probe's rank window).
       */
     def readInstants(instants: Seq[Long], pattern: String = "%",
                      ordered: Boolean = true): DataFrame = {
       require(instants.nonEmpty, "readInstants needs at least one instant")
-      val lo = instants.min
-      val hi = instants.max + 1
-      val txids = prunedDataTxids(pattern, Some(lo), Some(hi))
-      if (txids.isEmpty) return emptyResult()
+      val keys = Db.Keys.pattern(pattern)
+      val txids = pruned(keys, Some(instants.min), Some(instants.max + 1))
       val w = manifest.timeBucket
       // the writer's bucket of each instant; only meaningful on a
       // time-bucketed warehouse (w > 0)
       lazy val neededBuckets = instants.map(Db.bucketOf(_, w)).distinct
-      val base =
-        if (w > 0) {
-          val dirs = for {
+      val (roots, inBuckets) =
+        if (w > 0) (for {
             t <- txids
             bs = Db.txLayout(spark, warehouse, dataDir, t, manifest.version,
               manifest.created).buckets
             b <- neededBuckets if bs.contains(b)
-          } yield s"$dataDir/txid=$t/tbucket=$b"
-          if (dirs.isEmpty) return emptyResult()
-          SeriesOps.keyFilter(readPaths(dirs), pattern)
-        } else SeriesOps.keyFilter(readData(txids), pattern)
-      val bucketed =
-        if (w > 0 && base.columns.contains("tbucket"))
+          } yield s"$dataDir/txid=$t/tbucket=$b",
           // belt-and-braces partition predicate on top of the direct
           // roots: keeps the scan's PartitionFilters explicit (asserted
-          // by PersistedIndexSpec) and correct even if a future caller
-          // bypasses the direct-path construction
-          base.filter(col("tbucket").isin(neededBuckets: _*))
-        else base
-      val filtered = bucketed.filter(col("ts").isin(instants: _*))
-      val merged = SeriesOps.lastWins(filtered, Seq("key", "ts"), "txid")
-      val visible = SeriesOps.applyDeletes(merged, deletes)
-        .drop("txid").drop("tbucket")
-      // ordered=false skips the global (key, ts) range-shuffle-sort —
-      // for consumers that re-shuffle anyway (the ANN probe's rank
-      // window), the sort is a wasted exchange over every matched row
-      if (ordered) SeriesOps.ordered(visible) else visible
+          // by PersistedIndexSpec)
+          col("tbucket").isin(neededBuckets: _*))
+        else (txDirs(txids), lit(true))
+      plan(roots, keys.copy(rows = keys.rows && inBuckets &&
+          col("ts").isin(instants: _*)), None, None,
+        if (ordered) Db.Shape.Ordered else Db.Shape.Unordered)
     }
 
     /** Zero-row result with the read pipeline's output shape. Must not go
@@ -218,10 +187,8 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       */
     private def emptyResult(): DataFrame = {
       val schema: StructType =
-        if (manifest.schemaDdl.nonEmpty)
-          StructType.fromDDL(manifest.schemaDdl) // excludes partition cols
-        else if (!isEmpty)
-          records.drop("txid").drop("tbucket").schema
+        if (manifest.schemaDdl.nonEmpty) dataSchema // excludes partition cols
+        else if (!isEmpty) records.drop("txid", "tbucket").schema
         else // nothing ever committed: the canonical series shape
           StructType(Seq(
             StructField("key", StringType, nullable = false),
@@ -243,11 +210,7 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       *    lookup opens about one file per live transaction, not all;
       *  - the key-filtered scan is coalesced to one partition, so neither
       *    last-wins nor the (key, ts) order needs an exchange (one key's
-      *    records; the parallel path for wide results stays [[read]]);
-      *  - delete markers come from the driver cache ([[Db.deleteRows]])
-      *    and apply as a filter ([[SeriesOps.dropDeleted]]) instead of a
-      *    broadcast join, whose build side is a job of its own; only a
-      *    marker set the cache refuses still takes the join.
+      *    records; the parallel path for wide results stays [[read]]).
       *
       * Measured and rejected, do not retry: answering from the driver
       * with no Spark job at all (read the few footer-selected files
@@ -258,45 +221,24 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * cores from the writers.
       */
     def get(key: String, after: Option[Long] = None, before: Option[Long] = None): DataFrame = {
-      // exact-match txid pruning by stats bounds (key may contain a
-      // literal '%', so no Wildcard parse here — direct range check)
-      val kb = Db.utf8(key)
-      val txids = manifest.dataTxids.filter { t =>
-        manifest.txStats.get(t).forall { st =>
-          Db.compareBytes(Db.utf8(st.maxKey), kb) >= 0 &&
-            Db.compareBytes(Db.utf8(st.minKey), kb) <= 0 &&
-            after.forall(a => st.maxTs >= a) &&
-            before.forall(b => st.minTs < b)
-        }
-      }
-      if (txids.isEmpty) return emptyResult()
-      val scan =
+      val keys = Db.Keys.exact(key)
+      val txids = pruned(keys, after, before)
+      val roots =
         // a manifest without a schema reads through mergeSchema, whose
         // columns depend on which footers it sees: keep whole directories
-        if (manifest.schemaDdl.isEmpty) readData(txids)
+        if (manifest.schemaDdl.isEmpty) txDirs(txids)
         else {
           val (lo, hi) = Db.bucketRange(manifest.timeBucket, after, before)
-          val files = for {
+          for {
             t <- txids
             layout = Db.txLayout(spark, warehouse, dataDir, t,
               manifest.version, manifest.created)
-            (f, keys) <- layout.files.zip(layout.fileKeys)
-            if keys.mayHold(kb) &&
+            (f, fk) <- layout.files.zip(layout.fileKeys)
+            if fk.mayHold(keys.lo.get) &&
               f.bucket.forall(b => lo.forall(b >= _) && hi.forall(b <= _))
           } yield f.path
-          if (files.isEmpty) return emptyResult()
-          readPaths(files)
         }
-      val one = SeriesOps.timeRange(scan.filter(col("key") === key),
-        after, before).coalesce(1)
-      val merged = SeriesOps.lastWins(one, Seq("key", "ts"), "txid")
-      val visible = Db.deleteRows(spark, warehouse, deleteDir,
-          manifest.created, manifest.deleteTxids) match {
-        case Some(markers) => SeriesOps.dropDeleted(merged, markers, key)
-        case None          => SeriesOps.applyDeletes(merged, deletes)
-      }
-      visible.drop("txid", "tbucket")
-        .sortWithinPartitions(col("key"), col("ts"))
+      plan(roots, keys, after, before, Db.Shape.Local)
     }
 
     /** One committed transaction's records, (key, ts) ordered — the
@@ -304,7 +246,7 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       */
     def transaction(txid: Long): DataFrame = {
       require(manifest.dataTxids.contains(txid), s"unknown txid $txid")
-      SeriesOps.ordered(readData(Seq(txid)).drop("txid").drop("tbucket"))
+      SeriesOps.ordered(readPaths(txDirs(Seq(txid))).drop("txid", "tbucket"))
     }
 
     /** Highest committed txid (data or delete) — the resume cursor for
@@ -328,40 +270,65 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * Each batch scans only the new transaction directories — cost is the
       * new data, never the warehouse.
       */
-    def tail(sinceTxid: Long, pattern: String = "%",
-             after: Option[Long] = None,
+    def tail(sinceTxid: Long, pattern: String = "%", after: Option[Long] = None,
              before: Option[Long] = None): DataFrame = {
-      val newData = manifest.dataTxids.filter(_ > sinceTxid)
-      if (newData.isEmpty) return emptyResult()
-      val recs = readData(newData)
-      val newDeletes = Db.deletesFrame(spark, warehouse, deleteDir,
-        manifest.created, manifest.deleteTxids.filter(_ > sinceTxid))
-      val filtered = SeriesOps.timeRange(
-        SeriesOps.keyFilter(recs, pattern), after, before)
-      val merged = SeriesOps.lastWins(filtered, Seq("key", "ts"), "txid")
-      val visible = SeriesOps.applyDeletes(merged, newDeletes)
-      SeriesOps.ordered(visible.drop("txid").drop("tbucket"))
+      val keys = Db.Keys.pattern(pattern)
+      plan(txDirs(pruned(keys, after, before).filter(_ > sinceTxid)), keys,
+        after, before, Db.Shape.Ordered,
+        manifest.deleteTxids.filter(_ > sinceTxid))
     }
 
-    private def pipeline(filtered0: DataFrame, after: Option[Long],
-                         before: Option[Long],
-                         ordered: Boolean = true): DataFrame = {
-      // time-bucketed warehouse: derive the partition-column predicate so
-      // time ranges prune whole tbucket= directories before any IO
-      val w = manifest.timeBucket
-      val bucketed =
-        if (w > 0 && filtered0.columns.contains("tbucket")) {
-          val (lo, hi) = Db.bucketRange(w, after, before)
-          val preds = lo.map(col("tbucket") >= _).toSeq ++
-            hi.map(col("tbucket") <= _).toSeq
-          preds.reduceOption(_ && _).fold(filtered0)(filtered0.filter)
-        } else filtered0
-      val filtered = SeriesOps.timeRange(bucketed, after, before)
-      val merged = SeriesOps.lastWins(filtered, Seq("key", "ts"), "txid")
-      val visible = SeriesOps.applyDeletes(merged, deletes)
-        .drop("txid").drop("tbucket")
-      if (ordered) SeriesOps.ordered(visible)
-      else visible
+    /** Compaction's merge of `txids`: last-wins and every marker of the
+      * snapshot applied, `txid` dropped, `tbucket` kept for the rewrite.
+      * Read through the footers (`mergeSchema`), so the fold holds exactly
+      * the columns its inputs hold.
+      */
+    private[store] def fold(txids: Seq[Long]): DataFrame =
+      plan(txDirs(txids), Db.Keys.all, None, None, Db.Shape.Fold)
+
+    /** THE read plan of every reader and of compaction: scan `roots`
+      * (transaction directories, `tbucket=` directories or single data
+      * files under `data/`) → the selection's row predicate, `[after,
+      * before)` and its `tbucket` range → last-writer-wins across txids →
+      * the markers of `markerTxids` → drop `txid`/`tbucket` → `shape`.
+      *
+      * One marker rule: a set [[Db.deleteRows]] holds on the driver is a
+      * filter ([[SeriesOps.dropDeleted]]) over only the markers whose key
+      * range can meet the selection's byte bounds; only a set the cache
+      * refuses (an identity-less warehouse, an oversized set) takes the
+      * broadcast anti-join over the marker files
+      * ([[SeriesOps.applyDeletes]]).
+      */
+    private def plan(roots: Seq[String], keys: Db.Keys, after: Option[Long],
+        before: Option[Long], shape: Db.Shape,
+        markerTxids: Seq[Long] = manifest.deleteTxids): DataFrame = {
+      if (roots.isEmpty) return emptyResult()
+      val scan = readPaths(roots, footers = shape == Db.Shape.Fold)
+      // time-bucketed warehouse: the partition-column predicate prunes
+      // whole tbucket= directories before any IO
+      val (lo, hi) = Db.bucketRange(manifest.timeBucket, after, before)
+      val inBuckets =
+        if (!scan.columns.contains("tbucket")) Nil
+        else lo.map(col("tbucket") >= _).toSeq ++ hi.map(col("tbucket") <= _)
+      val filtered = SeriesOps.timeRange(
+        (keys.rows +: inBuckets).foldLeft(scan)(_.filter(_)), after, before)
+      val merged = SeriesOps.lastWins(
+        if (shape == Db.Shape.Local) filtered.coalesce(1) else filtered,
+        Seq("key", "ts"), "txid")
+      val visible = Db.deleteRows(spark, warehouse, deleteDir,
+          manifest.created, markerTxids) match {
+        case Some(markers) =>
+          SeriesOps.dropDeleted(merged, markers, keys.lo, keys.hi, keys.exact)
+        case None => SeriesOps.applyDeletes(merged,
+          Db.markerFiles(spark, deleteDir, markerTxids))
+      }
+      val out = visible.drop("txid", "tbucket")
+      shape match {
+        case Db.Shape.Fold      => visible.drop("txid")
+        case Db.Shape.Ordered   => SeriesOps.ordered(out)
+        case Db.Shape.Local     => out.sortWithinPartitions(col("key"), col("ts"))
+        case Db.Shape.Unordered => out
+      }
     }
   }
 
@@ -392,6 +359,58 @@ object Db {
   private[store] def utf8(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
+  /** A reader's selection: its row predicate, and UTF-8 byte bounds
+    * `[lo, hi)` holding every key the predicate can pass (None =
+    * unbounded) — what transaction pruning and the marker pre-filter test.
+    * `exact` is the one key of an exact selection.
+    */
+  private[store] final case class Keys(rows: Column, lo: Option[Array[Byte]],
+      hi: Option[Array[Byte]], exact: Option[String] = None)
+
+  private[store] object Keys {
+    val all: Keys = Keys(lit(true), None, None)
+
+    /** A literal key, compared exactly (it may hold `%`): `[k, k + 0x00)`. */
+    def exact(k: String): Keys =
+      Keys(col("key") === k, Some(utf8(k)), Some(utf8(k) :+ 0.toByte), Some(k))
+
+    /** A sonnerie wildcard: bounded by its literal prefix and the prefix's
+      * byte successor.
+      */
+    def pattern(p: String): Keys = {
+      val w = graft.series.Wildcard(p)
+      if (w.isExact) exact(p)
+      else Keys(SeriesOps.keyPredicate(col("key"), p),
+        Some(utf8(w.prefix)).filter(_.nonEmpty),
+        graft.series.Wildcard.prefixSuccessor(w.prefix)
+          .map(_.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)))
+    }
+
+    /** Any of `ks`: the OR of their predicates, bounded by the lowest `lo`
+      * and the highest `hi`.
+      */
+    def anyOf(ks: Seq[Keys]): Keys = {
+      def hull(bs: Seq[Option[Array[Byte]]], sign: Int) =
+        Option.when(bs.forall(_.isDefined))(bs.flatten.reduce((a, b) =>
+          if (sign * compareBytes(a, b) <= 0) a else b))
+      if (ks.size == 1) ks.head
+      else Keys(ks.map(_.rows).reduce(_ || _), hull(ks.map(_.lo), 1),
+        hull(ks.map(_.hi), -1))
+    }
+  }
+
+  /** The output shape a [[Db.Snapshot]] read plan ends in. */
+  private[store] sealed trait Shape
+  private[store] object Shape {
+    /** global (key, ts) order: range exchange + sort */
+    case object Ordered extends Shape
+    /** one partition, (key, ts) ordered within it: no exchange at all */
+    case object Local extends Shape
+    case object Unordered extends Shape
+    /** compaction's input: unordered, `tbucket` kept for the rewrite */
+    case object Fold extends Shape
+  }
+
   /** The writer's time bucket of `ts` at width `w`: `ts - ts % w`, the
     * remainder taking the dividend's sign (Spark's `%`). So bucket `b > 0`
     * holds `[b, b + w)`, bucket 0 holds `(-w, w)` and a negative bucket
@@ -402,9 +421,9 @@ object Db {
   /** Inclusive bounds on the buckets that can hold an instant in
     * `[after, before)`: [[bucketOf]] is monotone in `ts`, so they run
     * from `after`'s bucket to the bucket of the last instant before
-    * `before`. The one pruning rule of every reader: `get` tests each
-    * file's bucket against it, `read` and `readMany` turn it into their
-    * `tbucket` partition predicate. No bounds when the warehouse is not
+    * `before`. The read plan of every reader turns it into its `tbucket`
+    * partition predicate, and `get` also tests each file's bucket against
+    * it when choosing its scan roots. No bounds when the warehouse is not
     * time-bucketed (`w = 0`).
     */
   private[store] def bucketRange(w: Long, after: Option[Long],
@@ -571,13 +590,6 @@ object Db {
       if (old != null && old.created == created) old else list())
   }
 
-  /** A transaction's `tbucket=` values ([[TxLayout.buckets]]). */
-  private[store] def txBuckets(spark: SparkSession, warehouse: String,
-                               dataDir: String, txid: Long,
-                               manifestVersion: Long)
-      : java.util.Set[java.lang.Long] =
-    txLayout(spark, warehouse, dataDir, txid, manifestVersion).buckets
-
   val deleteSchema: StructType = StructType(Seq(
     StructField("firstKey", StringType, nullable = false),
     StructField("lastKey", StringType, nullable = false), // "" = unbounded
@@ -597,43 +609,37 @@ object Db {
     * (identity-less legacy manifests skip the cache). Bounded: a txid-set
     * key holds one Row per marker; a set above [[DeletesCacheMaxRows]]
     * (ops count, not data) is remembered as uncacheable (`None`) and
-    * stays on the parquet path.
+    * stays on the parquet path (a store with that many UNCOMPACTED delete
+    * operations wants a major compaction).
     *
-    * What the cache saves: reading the marker files (a parquet scan job)
-    * once per executed plan, and — for point lookups, which apply the
-    * rows as a filter ([[SeriesOps.dropDeleted]]) — the broadcast too.
-    * What it does NOT save: [[deletesFrame]] hands the rows to the
-    * broadcast anti-join of [[Db.Snapshot.read]]/`readMany` as a
-    * `LocalRelation`, and on Spark 4.1 broadcasting that still runs a
-    * job: `BroadcastExchangeExec` collects its child through
-    * `SparkPlan.executeCollectIterator`, which `LocalTableScanExec` does
-    * not override, so the build is a job with one task per marker row.
+    * What the cache saves: every reader applies held rows as a filter
+    * ([[SeriesOps.dropDeleted]]), so after the one collect job a plan
+    * neither scans the marker files nor broadcasts them (a broadcast of
+    * even a local relation is a job of its own on Spark 4.1:
+    * `BroadcastExchangeExec` collects its child through
+    * `SparkPlan.executeCollectIterator`).
     */
   private val deletesCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String, Seq[Long]), Option[Array[org.apache.spark.sql.Row]]]()
 
-  /** Marker sets handed to [[deletesFrame]] once already — the second
-    * request of the same set is the collect-and-cache trigger, so a set
-    * read exactly once (the common one-shot query) never pays a collect
-    * job it will not amortize: first use is lazy (the marker scan runs
-    * inside the query, exactly the pre-cache cost), the second use's
-    * collect replaces that scan, and every later use reads no files.
+  /** Marker-row count past which a delete set is not held and every read
+    * takes the anti-join over the marker files: the measured crossover of
+    * the held-marker filter. A `%` read of a 2-tx, 440k-row warehouse on 4
+    * cores, plan + execution, median ms, filter / anti-join: 1 marker
+    * 1608 / 1464, 4: 1324 / 1311, 8: 1290 / 1323, 10: 1748 / 1594,
+    * 12: 1565 / 1684, 14: 1589 / 1911, 16: 7369 / 1464, 32: 10779 / 1672,
+    * 64: 17293 / 2380, 1024: 46829 / 17849. Past ~15 markers the OR of
+    * literal predicates outgrows the JIT's method-size limit and the
+    * filter runs interpreted; 12 leaves room for the key and time
+    * predicates compiled into the same method. (Was 65536.)
     */
-  private val deletesSeen =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[
-      (String, String, Seq[Long])]()
-
-  /** Marker-row count past which a delete set stays on the parquet path
-    * (a store with this many UNCOMPACTED delete operations needs vacuum,
-    * not a bigger driver).
-    */
-  private val DeletesCacheMaxRows = 65536
+  private val DeletesCacheMaxRows = 12
 
   /** Explicit schema: markers have ONE fixed shape (writeDeleteMarker), so
     * the reader must not pay a footer schema-inference job per plan.
     */
-  private def markerFiles(spark: SparkSession, deleteDir: String,
-                          txids: Seq[Long]): DataFrame =
+  private[store] def markerFiles(spark: SparkSession, deleteDir: String,
+                                 txids: Seq[Long]): DataFrame =
     spark.read.schema(deleteSchema).option("basePath", deleteDir)
       .parquet(txids.map(t => s"$deleteDir/txid=$t"): _*)
       // partition-column discovery may type txid as INT; the cached
@@ -642,22 +648,19 @@ object Db {
         col(f).cast(deleteSchemaWithTxid(f).dataType)): _*)
 
   /** The marker rows of `txids` (schema `deleteSchema` + `txid`) from the
-    * driver cache, collected now on a miss — or, with `eager = false`,
-    * only on the set's second request. `None` when the rows are not held:
-    * an identity-less warehouse, an oversized set, or a lazy first use.
+    * driver cache, collected now on a miss. `None` when the rows are not
+    * held: an identity-less warehouse or an oversized set.
     */
   private[store] def deleteRows(spark: SparkSession, warehouse: String,
                                 deleteDir: String, created: String,
-                                txids: Seq[Long], eager: Boolean = true)
+                                txids: Seq[Long])
       : Option[Array[org.apache.spark.sql.Row]] = {
     if (txids.isEmpty) return Some(Array.empty[org.apache.spark.sql.Row])
-    if (created.isEmpty) return None
-    if (deletesCache.size > 16384) { deletesCache.clear(); deletesSeen.clear() }
+    // every marker transaction holds at least one row
+    if (created.isEmpty || txids.size > DeletesCacheMaxRows) return None
+    if (deletesCache.size > 16384) deletesCache.clear()
     val key = (warehouse, created, txids)
-    val hit = deletesCache.get(key)
-    if (hit != null) hit
-    else if (!eager && deletesSeen.add(key)) None
-    else {
+    Option(deletesCache.get(key)).getOrElse {
       val collected = markerFiles(spark, deleteDir, txids).collect()
       val rows =
         if (collected.length > DeletesCacheMaxRows) None else Some(collected)
@@ -665,21 +668,6 @@ object Db {
       rows
     }
   }
-
-  /** Delete markers as a DataFrame for the broadcast anti-join: the cached
-    * rows as a local relation ([[deleteRows]], lazy on first use), else
-    * the marker files.
-    */
-  private[store] def deletesFrame(spark: SparkSession, warehouse: String,
-                                  deleteDir: String, created: String,
-                                  txids: Seq[Long]): DataFrame =
-    if (txids.isEmpty) emptyDeletes(spark)
-    else deleteRows(spark, warehouse, deleteDir, created, txids,
-        eager = false) match {
-      case Some(rows) => spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), deleteSchemaWithTxid)
-      case None => markerFiles(spark, deleteDir, txids)
-    }
 
   def emptyDeletes(spark: SparkSession): DataFrame =
     spark.createDataFrame(

@@ -652,12 +652,7 @@ object TxWriter {
     }
     val dataTx = markerTx + 1
     try {
-      val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
-      wildcards.foreach(w => rows.add(Row("", "", t0, t1, w)))
-      db.spark.createDataFrame(rows, Db.deleteSchema)
-        .coalesce(1)
-        .write.mode(SaveMode.ErrorIfExists)
-        .parquet(s"${db.deleteDir}/txid=$markerTx")
+      writeMarkerFile(db, markerTx, wildcards.map(Row("", "", t0, t1, _)))
       val written = writeDataDir(db, replacement, tmp,
         baseline.timeBucket, baseline.bucketMajor, rangePartitions)
       // same bucket-explosion guard as [[write]]: a supersede that mints
@@ -868,16 +863,19 @@ object TxWriter {
       writeDeleteMarker(db, granted, firstKey, lastKey, t0, t1, wildcards))
   }
 
+  /** One marker transaction's rows (`Db.deleteSchema`), as one file. */
+  private def writeMarkerFile(db: Db, txid: Long, markers: Seq[Row]): Unit =
+    db.spark.createDataFrame(java.util.Arrays.asList(markers: _*),
+        Db.deleteSchema).coalesce(1)
+      .write.mode(SaveMode.ErrorIfExists)
+      .parquet(s"${db.deleteDir}/txid=$txid")
+
   private def writeDeleteMarker(db: Db, txid: Long, firstKey: String,
                                 lastKey: String, t0: Long, t1: Long,
                                 wildcards: Seq[String]): Long =
     try {
-      val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
-      wildcards.foreach(w => rows.add(Row(firstKey, lastKey, t0, t1, w)))
-      db.spark.createDataFrame(rows, Db.deleteSchema)
-        .coalesce(1)
-        .write.mode(SaveMode.ErrorIfExists)
-        .parquet(s"${db.deleteDir}/txid=$txid")
+      writeMarkerFile(db, txid,
+        wildcards.map(Row(firstKey, lastKey, t0, t1, _)))
       Manifest.update(db.warehouse) { m =>
         requirePending(m, txid)
         m.copy(deleteTxids = m.deleteTxids :+ txid,

@@ -546,4 +546,44 @@ class PlanHygieneSpec extends SparkSpec {
     val over = jobs.filter { case (op, n) => n > atMost(op) }
     assert(over.isEmpty, s"more jobs than pinned: $over (all: $jobs)")
   }
+
+  test("cached delete markers are a filter on wildcard reads and readMany: " +
+      "no broadcast join, one job fewer") {
+    import spark.implicits._
+    val db = graft.store.Db(spark,
+      java.nio.file.Files.createTempDirectory("graft-planmarkers").toString)
+    graft.store.TxWriter.write(db,
+      (1 to 300).map(i => (f"k$i%03d", i.toLong, i.toLong))
+        .toDF("key", "ts", "v"))
+    graft.store.TxWriter.write(db,
+      Seq(("k042", 42L, 420L), ("k150", 43L, 430L)).toDF("key", "ts", "v"))
+    graft.store.TxWriter.delete(db, firstKey = "k010", lastKey = "k020")
+    graft.store.TxWriter.delete(db, wildcard = "k1%", t0 = 0L, t1 = 140L)
+    val snap = db.snapshot()
+    // a point lookup puts the snapshot's marker rows in the driver cache
+    snap.get("k042").collect()
+    def joins(r: Ran) = r.plans.flatMap(qe => nodes(qe.executedPlan))
+      .count(_.isInstanceOf[
+        org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec])
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    val read = ran { rows = snap.read("k%").collect().toSeq }
+    var many = Seq.empty[org.apache.spark.sql.Row]
+    val readMany = ran { many = snap.readMany(Seq("k0%", "k1%")).collect().toSeq }
+    assert(joins(read) == 0 && joins(readMany) == 0,
+      s"cached markers joined: read ${joins(read)}, readMany ${joins(readMany)}")
+    // with the markers' broadcast anti-join (the build side a job of its
+    // own even over the cached rows) the read ran 5 jobs and readMany 3
+    assert(read.jobs == 4, s"wildcard read ran ${read.jobs} jobs")
+    assert(readMany.jobs == 2, s"readMany ran ${readMany.jobs} jobs")
+    assert(rows.size == 300 - 10 - 40)
+    // a legacy manifest (no warehouse identity) cannot use the cache: it
+    // still answers through the anti-join, with the same rows
+    val legacy = db.Snapshot(snap.manifest.copy(created = ""))
+    val viaJoin = legacy.read("k%")
+    assert(nodes(viaJoin.queryExecution.executedPlan).exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]))
+    assert(viaJoin.collect().toSeq == rows)
+    assert(legacy.readMany(Seq("k0%", "k1%")).collect().toSeq.sortBy(_.toString) ==
+      many.sortBy(_.toString))
+  }
 }

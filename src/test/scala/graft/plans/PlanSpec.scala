@@ -77,15 +77,6 @@ class PlanSpec extends SparkSpec {
     assert(phys.contains("partial_max_by"), s"no partial aggregation:\n$phys")
   }
 
-  test("lastWinsSemi is value-equivalent to lastWins (measured-worse alt)") {
-    val recs = db.snapshot().records
-    val a = SeriesOps.lastWins(recs, Seq("key", "ts"), "txid")
-      .select("key", "ts", "txid").collect().toSet
-    val b = SeriesOps.lastWinsSemi(recs, Seq("key", "ts"), "txid")
-      .select("key", "ts", "txid").collect().toSet
-    assert(a == b)
-  }
-
   test("delete anti-join broadcasts the marker side") {
     val deletes = Seq(("a", "z", 0L, 100L, "%", 99L))
       .toDF("firstKey", "lastKey", "t0", "t1", "wildcard", "txid")

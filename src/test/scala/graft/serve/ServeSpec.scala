@@ -1147,4 +1147,51 @@ class ServeSpec extends SparkSpec {
       assert(all.linesIterator.size == 8, s"got:\n$all")
     } finally srv.stop()
   }
+
+  test("concurrent GETs of different keys run their jobs under their own " +
+      "request's description") {
+    val db = Db(spark, tmpDir("graft-serve-desc"))
+    val srv = new Serve(db).start()
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description"))) match {
+          case Some("serve-desc-drain") => drained.countDown()
+          case Some(d)                  => descs.add(d)
+          case None                     => descs.add("<none>")
+        }
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      assert(http("PUT", s"$base/", Some("ka 1 u 1\nkb 2 u 2\n"))._1 == 201)
+      spark.sparkContext.addSparkListener(listener)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val gets = Seq("ka", "kb").map(k => pool.submit(
+        (() => { go.await(); http("GET", s"$base/$k") })
+          : java.util.concurrent.Callable[(Int, String)]))
+      go.countDown()
+      assert(gets.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)) ==
+        Seq((200, "ka\t1\t1\n"), (200, "kb\t2\t2\n")))
+      // the listener bus is FIFO: once this job's start arrives, every
+      // job the GETs ran has been seen
+      spark.sparkContext.setJobDescription("serve-desc-drain")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      // (a delayed start event of the PUT may still reach the listener)
+      val seen = descs.asScala.toSeq.distinct.filterNot(_.startsWith("PUT "))
+      assert(seen.size == 2, s"job descriptions: $seen")
+      assert(seen.exists(_.matches("GET /ka #\\d+")) &&
+        seen.exists(_.matches("GET /kb #\\d+")), s"job descriptions: $seen")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      pool.shutdown()
+      srv.stop()
+    }
+  }
 }

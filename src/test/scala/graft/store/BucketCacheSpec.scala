@@ -24,7 +24,7 @@ class BucketCacheSpec extends SparkSpec {
   }
 
   private def buckets(db: Db, txid: Long, version: Long) =
-    Db.txBuckets(spark, db.warehouse, db.dataDir, txid, version)
+    Db.txLayout(spark, db.warehouse, db.dataDir, txid, version).buckets
 
   test("time travel keeps the listing cache; recreation purges it") {
     val wh = freshWarehouse()
