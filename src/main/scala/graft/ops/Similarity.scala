@@ -1819,7 +1819,7 @@ object Similarity {
     * whose cell assignment changes between builds (new corpus → new
     * centroids) would leave its old (key, oldCell) row visible alongside
     * the new one. The range delete suppresses exactly the lower txids
-    * ([[graft.series.SeriesOps.applyDeletes]]), so a probe sees one build,
+    * ([[graft.series.SeriesOps.deletedBy]]), so a probe sees one build,
     * never a mix; the superseded rows are physically purged at compaction.
     * PersistedIndexSpec asserts the supersede.
     *

@@ -631,7 +631,7 @@ object Db {
     * 64: 17293 / 2380, 1024: 46829 / 17849. Past ~15 markers the OR of
     * literal predicates outgrows the JIT's method-size limit and the
     * filter runs interpreted; 12 leaves room for the key and time
-    * predicates compiled into the same method. (Was 65536.)
+    * predicates compiled into the same method.
     */
   private val DeletesCacheMaxRows = 12
 

@@ -818,7 +818,7 @@ object TxWriter {
 
   /** [[deleteIf]] for SEVERAL wildcards as ONE marker transaction (one
     * conditional claim, one txid, one marker file with a row per
-    * wildcard — [[graft.series.SeriesOps.applyDeletes]] applies each row
+    * wildcard — [[graft.series.SeriesOps.deletedBy]] applies each row
     * independently). The fence a fold over a MULTI-prefix store needs
     * ([[graft.ops.SketchStore.foldMg]]: candidate rows + the mass row):
     * two separate deleteIf calls would leave the store half-deleted when
