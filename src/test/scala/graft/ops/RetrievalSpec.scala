@@ -243,6 +243,24 @@ class RetrievalSpec extends SparkSpec {
     assert(got == Set(1L), s"stale postings survived the rebuild: $got")
   }
 
+  test("index rebuild is one commit: no manifest version it creates reads " +
+      "an empty index") {
+    val db = graft.store.Db(spark,
+      java.nio.file.Files.createTempDirectory("graft-bm25one").toString)
+    Retrieval.buildBm25Index(db,
+      Seq(0L -> "gone term", 1L -> "kept term").toDF("doc_id", "text"),
+      "doc_id", "text")
+    val before = graft.store.Manifest.versions(db.warehouse).max
+    Retrieval.buildBm25Index(db,
+      Seq(1L -> "kept term").toDF("doc_id", "text"), "doc_id", "text")
+    val created = graft.store.Manifest.versions(db.warehouse).filter(_ > before)
+    assert(created.nonEmpty)
+    created.foreach { v =>
+      assert(!db.snapshotAt(v).read("p/%").isEmpty,
+        s"version $v (of ${created.mkString(",")}) reads no postings")
+    }
+  }
+
   test("index publish is atomic: every snapshot sees postings and lengths together") {
     val db = graft.store.Db(spark,
       java.nio.file.Files.createTempDirectory("graft-bm25atomic").toString)
