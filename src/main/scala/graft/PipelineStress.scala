@@ -33,7 +33,7 @@ object PipelineStress {
             i => concat(lit("w"), pmod(hash(col("base"), i), lit(997)))),
           array(concat(lit("t"), pmod(hash(col("doc_id")), lit(9973)))))
       ).as("text"))
-      .localCheckpoint(true) // materialize: time operators, not generation
+      .transform(Graft.pin(_)) // materialize: time operators, not generation
 
     // GC + block-manager telemetry per stage: a stage that is slow because
     // the JVM is collecting (or the block manager is full of superseded
@@ -233,7 +233,7 @@ object PipelineStress {
           concat(lit("w"), pmod(hash(col("id"), lit(11)), lit(997))),
           concat(lit("t"), pmod(hash(col("id"), lit(13)), lit(9973))),
           concat(lit("w"), pmod(hash(col("id"), lit(17)), lit(997)))
-        ).as("qtext")).localCheckpoint(true)
+        ).as("qtext")).transform(Graft.pin(_))
       timed("bm25 batch 10k literal")(
         graft.ops.Retrieval.bm25ProbeIndex(bmDb, batchQs, 10).count())
       timed("bm25 batch 10k relational")(
@@ -246,7 +246,7 @@ object PipelineStress {
       val q1k = Seq(0L ->
         ((0 until 500).map(i => s"w$i") ++
           (0 until 500).map(i => s"t${i * 19 % 9973}")).mkString(" "))
-        .toDF("query_id", "qtext").localCheckpoint(true)
+        .toDF("query_id", "qtext").transform(Graft.pin(_))
       timed("bm25 probe 1kterm literal")(
         graft.ops.Retrieval.bm25ProbeIndex(bmDb, q1k, 10).count())
       timed("bm25 probe 1kterm relational")(
@@ -329,7 +329,7 @@ object PipelineStress {
       .unionByName(spark.range(n + 10000, n + 12500).select(
         col("id").as("doc_id"),
         concat(lit("fresh "), col("id").cast("string")).as("text")))
-      .localCheckpoint(true)
+      .transform(Graft.pin(_))
     timed("incr probe (5k batch)") {
       // a probe against an empty store is a passthrough — a filtered run
       // that skipped the register stage must fail loudly, not print a
@@ -428,7 +428,7 @@ object PipelineStress {
                   lit(997))))),
             array(concat(lit("t"), pmod(hash(col("doc_id")), lit(9973)))))
         ).as("text"))
-      .localCheckpoint(true)
+      .transform(Graft.pin(_))
     timed("e2e corpus->shards") {
       graft.ops.Pipeline.corpusToShards(edocs,
         edocs.filter(col("doc_id") % math.max(1L, n / 1000) === 0),
@@ -453,7 +453,7 @@ object PipelineStress {
       transform(sequence(lit(0), lit(63)), i =>
         (pmod(hash(col("id"), i), lit(1000)).cast("float") / 1000f) - 0.5f)
         .as("embedding"))
-      .localCheckpoint(true)
+      .transform(Graft.pin(_))
     timed("pq adc top10 (5 probes)")(
       graft.ops.Similarity.pqAdcKnn(embs,
         embs.filter(col("vec_id") < 5), "vec_id", "embedding", 10).count())
@@ -469,7 +469,7 @@ object PipelineStress {
       val db = graft.store.Db(spark,
         java.nio.file.Files.createTempDirectory("graft-folder").toString)
       val vals = spark.range(2000L).select((col("id") % 300).as("v"))
-        .localCheckpoint(true)
+        .transform(Graft.pin(_))
       timed("hist register 365 batches") {
         (0 until 365).foreach(b =>
           SketchStore.registerHist(db, vals, col("v"), batchId = b.toLong))
@@ -496,7 +496,7 @@ object PipelineStress {
       val nGroups = math.max(1L, n / 10)
       val gvals = spark.range(n).select(
         concat(lit("g"), pmod(hash(col("id")), lit(nGroups))).as("g"),
-        (col("id") % 500).as("v")).localCheckpoint(true)
+        (col("id") % 500).as("v")).transform(Graft.pin(_))
       timed(s"grouped hist register (${nGroups} grps)") {
         SketchStore.registerHistBy(gdb, gvals, col("g"), col("v"),
           batchId = 0L)
@@ -517,7 +517,7 @@ object PipelineStress {
         when(col("id") % 4 === 0,
             concat(lit("hot"), pmod(hash(col("id")), lit(nGroups))))
           .otherwise(concat(lit("t"), col("id") % 5000)).as("t"))
-        .localCheckpoint(true)
+        .transform(Graft.pin(_))
       timed(s"grouped mg register (${nGroups} grps)") {
         SketchStore.registerMgBy(mdb, mvals, col("g"), col("t"),
           batchId = 0L)
@@ -551,7 +551,7 @@ object PipelineStress {
       // that matters. 50 micro-batches each way, same token stream.
       val toks = spark.range(2000L)
         .select(concat(lit("w"), col("id") % 500).as("t"))
-        .localCheckpoint(true)
+        .transform(Graft.pin(_))
       val db3 = graft.store.Db(spark,
         java.nio.file.Files.createTempDirectory("graft-trio3").toString)
       timed("trio 50 batches, 3-tx way") {
@@ -617,8 +617,8 @@ object PipelineStress {
         when(col("id") % 4 === 0,
             concat(lit("hot"), pmod(hash(col("id")), lit(nGroups))))
           .otherwise(concat(lit("t"), col("id") % 5000)).as("t"),
-        (col("id") % 500).as("v")).localCheckpoint(true)
-      val gday = gseed.limit(2000).localCheckpoint(true)
+        (col("id") % 500).as("v")).transform(Graft.pin(_))
+      val gday = gseed.limit(2000).transform(Graft.pin(_))
       timed(s"gtrio: year@${nGroups}g, maint/30") {
         (0 until 365).foreach { b =>
           SketchStore.registerSketchesBy(gt,
@@ -725,7 +725,7 @@ object PipelineStress {
         graft.store.Compactor.tryPruneHistory(ddb, keep = 100)
         ()
       }
-      val dProbe = docs.filter(col("doc_id") < 5000).localCheckpoint(true)
+      val dProbe = docs.filter(col("doc_id") < 5000).transform(Graft.pin(_))
       timed(s"dedupyear: seed($seedN) + 30 ingests") {
         IncrementalDedup.registerBatch(ddb,
           docs.filter(col("doc_id") < seedN), "doc_id", "text",
@@ -817,7 +817,7 @@ object PipelineStress {
         import spark.implicits._
         val idDf = ids.toDF("qid")
         corpusAt(b).join(idDf, col("vec_id") === col("qid")).drop("qid")
-          .localCheckpoint(true)
+          .transform(Graft.pin(_))
       }
       val earlyIds = (0L until 24L).map(_ * 37L % seedN) ++
         (0 until 24).map(i => seedN + (i.toLong * 211L) % (30L * dayN))
@@ -830,7 +830,7 @@ object PipelineStress {
       def exactFor(q: DataFrame, qKey: Long, b: Int): DataFrame =
         exactCache.getOrElseUpdate((qKey, b),
           Similarity.bruteForceKnn(corpusAt(b), q,
-            "vec_id", "embedding", 10).localCheckpoint(true))
+            "vec_id", "embedding", 10).transform(Graft.pin(_)))
       def recallAt(name: String, q: DataFrame, qKey: Long, b: Int,
                    nProbe: Int = 1): Double = {
         val exact = exactFor(q, qKey, b)
@@ -1051,7 +1051,7 @@ object PipelineStress {
         import spark.implicits._
         val idDf = ids.toDF("qid")
         corpusAt(b).join(idDf, col("vec_id") === col("qid")).drop("qid")
-          .localCheckpoint(true)
+          .transform(Graft.pin(_))
       }
       val seedIds = (0L until 48L).map(_ * 37L % seedN)
       val exactCache =
@@ -1059,7 +1059,7 @@ object PipelineStress {
       def exactFor(q: DataFrame, qKey: Long, b: Int): DataFrame =
         exactCache.getOrElseUpdate((qKey, b),
           Similarity.bruteForceKnn(corpusAt(b), q,
-            "vec_id", "embedding", 10).localCheckpoint(true))
+            "vec_id", "embedding", 10).transform(Graft.pin(_)))
       def recallAt(name: String, q: DataFrame, qKey: Long, b: Int,
                    nProbe: Int = 1): Double = {
         val exact = exactFor(q, qKey, b)

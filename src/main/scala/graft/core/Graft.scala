@@ -49,6 +49,8 @@ object Graft {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.LikePrefixRangeRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.LikePrefixRangeRule
+    // the warehouse's sorted-run merge operator (every Db installs it too)
+    graft.store.SortedRunMerge.install(spark)
     // native expressions for SQL users (Column API uses them directly);
     // register only once — re-registering logs a WARN per call
     def registerOnce(name: String,

@@ -159,7 +159,22 @@ object Retrieval {
                          textCol: String, v2: Boolean,
                          cursor: Option[(String, Long)] = None,
                          sinkProps: Map[String, String] = Map.empty,
-                         fuse: Boolean = false): Long = {
+                         fuse: Boolean = false): Long =
+    // the layout property rides IN the publishing commit — atomic with
+    // the rows becoming visible, so no reader can ever observe the flag
+    // without the layout (or crash-strand a stale flag)
+    graft.store.TxWriter.write(db, indexRows(docs, idCol, textCol, v2),
+      props = layoutProps(v2) ++ sinkProps, streamCursor = cursor,
+      fuse = fuse)
+
+  private def layoutProps(v2: Boolean): Map[String, String] =
+    if (v2) Map(LayoutProp -> "2") else Map.empty
+
+  /** One batch's index rows — postings, document lengths and (v2) the
+    * corpus-stat partial — pinned.
+    */
+  private def indexRows(docs: DataFrame, idCol: String, textCol: String,
+                        v2: Boolean): DataFrame = {
     val toks = graft.core.Graft.rebalance(docs)
       .select(col(idCol).cast("long").as("doc_id"),
         explode(split(col(textCol), " ")).as("term"))
@@ -200,34 +215,25 @@ object Retrieval {
     // (guide §5: cache when an intermediate is consumed twice and recomputing
     // costs more than holding it — here the pinned frame is exactly the
     // batch's index-rows, bytes the write materializes anyway)
-    val pinned = graft.core.Graft.pin(all)
-    // the layout property rides IN the publishing commit — atomic with
-    // the rows becoming visible, so no reader can ever observe the flag
-    // without the layout (or crash-strand a stale flag)
-    graft.store.TxWriter.write(db, pinned,
-      props = (if (v2) Map(LayoutProp -> "2")
-               else Map.empty[String, String]) ++ sinkProps,
-      streamCursor = cursor, fuse = fuse)
+    graft.core.Graft.pin(all)
   }
 
-  /** Materializes the full index. A REBUILD (non-empty warehouse) first
-    * drops the index keyspace with delete markers scoped to its
-    * prefixes — last-wins alone would leave stale postings for
-    * documents the new corpus no longer contains (the
-    * [[Similarity.buildIndex]] rebuild-supersede pattern; other stores
-    * sharing the warehouse are untouched).
+  /** Materializes the full index. A REBUILD (non-empty warehouse)
+    * supersedes the index keyspace: delete markers scoped to its prefixes
+    * and the new rows publish in ONE manifest commit
+    * ([[graft.store.TxWriter.supersede]], the [[Similarity.buildIndex]]
+    * rebuild pattern), so last-wins cannot leave stale postings for
+    * documents the new corpus no longer contains, no snapshot sees the
+    * index deleted but not yet replaced, and other stores sharing the
+    * warehouse are untouched.
     */
   def buildBm25Index(db: graft.store.Db, docs: DataFrame, idCol: String,
-                     textCol: String): Long = {
-    if (db.snapshot().manifest.dataTxids.nonEmpty)
-      // ONE marker transaction covering all three index prefixes (was
-      // three separate delete txs: 3 claims + 3 marker writes + 3
-      // publishes for one logical drop, plus two windows in which the
-      // keyspace was only partially deleted)
-      graft.store.TxWriter.deleteMany(db, Seq("p/%", "pd/%", "ps/%"),
-        t0 = Long.MinValue, t1 = Long.MaxValue)
-    writeBatch(db, docs, idCol, textCol, v2 = true)
-  }
+                     textCol: String): Long =
+    if (db.snapshot().manifest.dataTxids.isEmpty)
+      writeBatch(db, docs, idCol, textCol, v2 = true)
+    else graft.store.TxWriter.supersede(db, Seq("p/%", "pd/%", "ps/%"),
+      indexRows(docs, idCol, textCol, v2 = true), "BM25 index rebuild",
+      props = layoutProps(v2 = true))
 
   /** Incremental maintenance — the FAISS-`add` analogue for the lexical
     * side: append a batch of NEW documents' postings and lengths (cost

@@ -1909,52 +1909,16 @@ object Similarity {
     if (db.snapshot().manifest.dataTxids.isEmpty)
       graft.store.TxWriter.write(db, replacement,
         timeBucketNanos = Some(1L), bucketMajor = true, props = indexProps)
-    else {
+    else
       // ATOMIC rebuild, scoped to the INDEX keyspace (v/ codes, c/
       // centroids, b/ codebook, f/ flags — a warehouse can hold other
       // data alongside the index without the rebuild logically deleting
       // it): the supersede publishes the markers AND the new index in
-      // ONE manifest commit, so a probe snapshotting mid-rebuild sees
-      // either the old generation whole or the new one — never a
-      // deleted-but-unreplaced window (pre-r17 this was four marker
-      // transactions followed by the write). Fenced: a concurrent
-      // append voids the claim and the rebuild retries over the moved
-      // state; live-serving retrains stay correct under ingest.
-      var attempt = 0
-      var done = -1L
-      while (done < 0) {
-        attempt += 1
-        val baseline = graft.store.Manifest.current(db.warehouse)
-        graft.store.TxWriter.supersedeIf(db, baseline,
-            Seq("v/%", "c/%", "b/%", "f/%"), replacement,
-            t0 = Long.MinValue, t1 = Long.MaxValue,
-            props = indexProps) match {
-          case Some(tx) => done = tx
-          case None =>
-            if (attempt >= 60) {
-              // distinguish the two refusal causes — they have opposite
-              // remedies: a STALE pending claim (crashed writer) needs
-              // Compactor.vacuum to clear, while live contention needs
-              // the ingest paused. The old delete-then-write rebuild
-              // proceeded under a stale claim; the atomic supersede
-              // must not silently prescribe the wrong fix for it.
-              val pend = graft.store.Manifest.current(db.warehouse).pending
-              if (pend.nonEmpty) throw new IllegalStateException(
-                s"index rebuild blocked by pending txid claim(s) " +
-                  s"${pend.keys.toSeq.sorted.mkString(",")} — a crashed " +
-                  "writer's claim raises the supersede fence; run " +
-                  "Compactor.vacuum past the grace window to clear it, " +
-                  "then retry the rebuild")
-              throw new IllegalStateException(
-                "index rebuild lost the supersede fence 60 times — a " +
-                  "writer is committing continuously; pause ingest or " +
-                  "rebuild into a twin warehouse")
-            }
-            Thread.sleep(math.min(100L * attempt, 2000L))
-        }
-      }
-      done
-    }
+      // ONE manifest commit (pre-r17 this was four marker transactions
+      // followed by the write). Fenced and retried, so live-serving
+      // retrains stay correct under ingest.
+      graft.store.TxWriter.supersede(db, Seq("v/%", "c/%", "b/%", "f/%"),
+        replacement, "index rebuild", props = indexProps)
   }
 
   /** Per-cell occupancy of the persisted index — the observability the

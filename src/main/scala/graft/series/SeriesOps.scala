@@ -23,12 +23,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): every filter here is a sargable conjunction Catalyst
   * pushes into the Parquet scan; `lastWins` is a single hash-aggregate with
-  * map-side partial aggregation (no window/sort shuffle). Markers already on
-  * the driver apply through [[dropDeleted]]: the delete rule ([[deletedBy]])
-  * as a filter, with no join and no broadcast job. Markers that are not
-  * take `applyDeletes`, a broadcast nested-loop anti-join — correct because
-  * the delete-marker table is tiny by construction (one row per delete
-  * *operation*, not per deleted record), so it is always broadcastable.
+  * map-side partial aggregation (no window/sort shuffle). The warehouse
+  * reads `lastWins` and the markers through the sorted-run merge
+  * (`graft.store.SortedRunMerge`), which applies [[deletedBy]] in its
+  * tasks; these operators remain for frames that are not warehouse files,
+  * for time-bucketed warehouses, and as the specs' reference. There, a
+  * small held marker set applies through [[dropDeleted]] (a filter, no
+  * join, no broadcast job) and any other through `applyDeletes`, a
+  * broadcast nested-loop anti-join — correct because the delete-marker
+  * table is tiny by construction (one row per delete *operation*, not per
+  * deleted record), so it is always broadcastable.
   */
 object SeriesOps {
 
@@ -114,13 +118,20 @@ object SeriesOps {
   }
 
   /** One delete marker's fields, as columns: a joined marker row in
-    * [[applyDeletes]], one driver-held marker's literals in
-    * [[dropDeleted]].
+    * [[applyDeletes]], one driver-held marker's literals ([[Marker.of]])
+    * in [[dropDeleted]] and in the store's sorted-run merge.
     */
   final case class Marker(firstKey: Column, lastKey: Column, t0: Column,
                           t1: Column, wildcard: Column, txid: Column)
 
-  /** THE delete rule, defined once for both marker paths: marker `m`
+  object Marker {
+    /** A held marker row (the `applyDeletes` marker schema) as literals. */
+    def of(m: Row): Marker =
+      Marker(lit(m.getString(0)), lit(m.getString(1)), lit(m.getLong(2)),
+        lit(m.getLong(3)), lit(m.getString(4)), lit(m.getLong(5)))
+  }
+
+  /** THE delete rule, defined once for every marker path: marker `m`
     * suppresses a record iff the marker is a *later* transaction and
     * covers the record's key and instant — `key ∈ [firstKey, lastKey)`
     * (`lastKey = ""` unbounded), `key LIKE wildcard`, `ts ∈ [t0, t1)`.
@@ -139,9 +150,10 @@ object SeriesOps {
     * `(firstKey, lastKey /* "" = unbounded, exclusive */, t0 /* incl */,
     *   t1 /* excl */, wildcard, txid)`; the condition is [[deletedBy]].
     * The marker table is rows-per-operation small → broadcast theta join.
-    * The warehouse readers take this path only for a marker set the
-    * driver cache refuses (`Db.deleteRows`: an identity-less warehouse or
-    * an oversized set); held sets go through [[dropDeleted]].
+    * The warehouse readers take this path only for a marker set they do
+    * not hold on the driver (`Db.deleteRows`: an identity-less warehouse
+    * or a set past its row budget), or a large held set on a
+    * time-bucketed warehouse (`Db.MarkerFilterMaxRows`).
     */
   def applyDeletes(records: DataFrame, deletes: DataFrame,
                    keyCol: String = "key", tsCol: String = "ts",
@@ -154,49 +166,92 @@ object SeriesOps {
     r.join(broadcast(d), cond, "left_anti")
   }
 
-  /** [[applyDeletes]] against marker rows already on the driver (same
-    * schema, as `Row`s), for records whose keys all lie in the UTF-8 byte
-    * range `[keyLo, keyHi)` (None = unbounded): a plain filter, so the
-    * records keep their partitioning and the plan gets no join and no
-    * broadcast job. Every warehouse read with driver-held markers takes
-    * this path. Only the markers whose key range meets the records' range
-    * — and, for an `exactKey`, whose wildcard matches it — enter the
-    * filter, decided here with Spark's own string order (`UTF8String`
-    * bytes) and LIKE, so the plan grows with the markers that can cover
-    * the selection, not with every marker. The filter itself re-applies
-    * the whole [[deletedBy]] rule per row, so it suppresses exactly the
-    * rows the anti-join would. A marker whose wildcard Spark cannot
-    * evaluate is kept and fails in the filter, as it would in the join.
+  /** The UTF-8 key range `[lo, hi)` (hi None = unbounded) outside which
+    * marker `m` (the [[applyDeletes]] marker schema, as a `Row`) deletes
+    * nothing: its `[firstKey, lastKey)` narrowed by the literal prefix of
+    * its LIKE wildcard, and to one key when the wildcard has no `%` or
+    * `_`. A wildcard Spark would refuse (a `\` before another character)
+    * narrows nothing, so the rule still runs and fails as it would.
+    */
+  def markerKeys(m: Row): (Array[Byte], Option[Array[Byte]]) = {
+    val w = m.getString(4)
+    val prefix = new StringBuilder
+    var i = 0
+    var exact = true
+    while (i < w.length && exact) {
+      w.charAt(i) match {
+        case '%' | '_' => exact = false
+        case '\\' if i + 1 < w.length && "%_\\".indexOf(w.charAt(i + 1)) >= 0 =>
+          prefix += w.charAt(i + 1)
+          i += 2
+        case '\\' => prefix.clear(); exact = false
+        case c => prefix += c; i += 1
+      }
+    }
+    // a prefix cut inside a surrogate pair bounds by the whole character
+    if (!exact && prefix.nonEmpty && prefix.last.isHighSurrogate)
+      prefix.setLength(prefix.length - 1)
+    def utf8(v: String) = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def max(a: Array[Byte], b: Array[Byte]) =
+      if (java.util.Arrays.compareUnsigned(a, b) >= 0) a else b
+    val p = utf8(prefix.toString)
+    val pHi =
+      if (exact) Some(p :+ 0.toByte)
+      else Wildcard.prefixSuccessor(prefix.toString)
+        .map(_.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    val last = Option(m.getString(1)).filter(_.nonEmpty).map(utf8)
+    val hi = (last.toSeq ++ pHi).reduceOption((a, b) =>
+      if (java.util.Arrays.compareUnsigned(a, b) <= 0) a else b)
+    (max(utf8(m.getString(0)), p), hi)
+  }
+
+  /** The held markers (the [[applyDeletes]] marker schema, as `Row`s)
+    * that can suppress a record whose key lies in the UTF-8 byte range
+    * `[keyLo, keyHi)` (None = unbounded): those whose [[markerKeys]] meet
+    * it, and for an `exactKey` whose wildcard matches it with Spark's own
+    * LIKE. A marker whose wildcard Spark cannot evaluate is kept, so it
+    * fails where the rule is applied, as it would in the join.
+    */
+  def covering(markers: Seq[Row], keyLo: Option[Array[Byte]],
+               keyHi: Option[Array[Byte]],
+               exactKey: Option[String] = None): Seq[Row] = {
+    import org.apache.spark.sql.catalyst.expressions.{Like, Literal}
+    import org.apache.spark.unsafe.types.UTF8String
+    def s(v: String) = UTF8String.fromString(v)
+    def below(a: Array[Byte], b: Array[Byte]) =
+      java.util.Arrays.compareUnsigned(a, b) < 0
+    markers.filter { m =>
+      val (lo, hi) = markerKeys(m)
+      keyHi.forall(below(lo, _)) && hi.forall(h => keyLo.forall(below(_, h))) &&
+        exactKey.forall(k =>
+          try Like(Literal(s(k)), Literal(s(m.getString(4))), '\\')
+            .eval() == true
+          catch { case scala.util.control.NonFatal(_) => true })
+    }
+  }
+
+  /** [[applyDeletes]] against marker rows already on the driver, for
+    * records whose keys all lie in `[keyLo, keyHi)`: a plain filter, so
+    * the records keep their partitioning and the plan gets no join and no
+    * broadcast job. Only the [[covering]] markers enter the filter, so the
+    * plan grows with the markers that can cover the selection, not with
+    * every marker. The filter re-applies the whole [[deletedBy]] rule per
+    * row, so it suppresses exactly the rows the anti-join would. The
+    * literals compile into the stage's one generated method, so a caller
+    * keeps the marker count small (`Db.MarkerFilterMaxRows`).
     */
   def dropDeleted(records: DataFrame, markers: Seq[Row],
                   keyLo: Option[Array[Byte]], keyHi: Option[Array[Byte]],
                   exactKey: Option[String] = None,
                   keyCol: String = "key", tsCol: String = "ts",
                   txidCol: String = "txid"): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Like, Literal}
-    import org.apache.spark.unsafe.types.UTF8String
-    def s(v: String) = UTF8String.fromString(v)
-    val (lo, hi) = (keyLo.map(UTF8String.fromBytes), keyHi.map(UTF8String.fromBytes))
-    val covering = markers.filter { m =>
-      hi.forall(s(m.getString(0)).compareTo(_) < 0) &&
-        (m.getString(1).isEmpty || lo.forall(s(m.getString(1)).compareTo(_) > 0)) &&
-        exactKey.forall(k =>
-          try Like(Literal(s(k)), Literal(s(m.getString(4))), '\\')
-            .eval() == true
-          catch { case scala.util.control.NonFatal(_) => true })
-    }
-    if (covering.isEmpty) records
-    else {
+    val hits = covering(markers, keyLo, keyHi, exactKey).map { m =>
       // a null (key, ts, txid) never matches the join's condition, so it
       // must not drop the row here either
-      val hits = covering.map { m =>
-        coalesce(deletedBy(col(keyCol), col(tsCol), col(txidCol),
-          Marker(lit(m.getString(0)), lit(m.getString(1)), lit(m.getLong(2)),
-            lit(m.getLong(3)), lit(m.getString(4)), lit(m.getLong(5)))),
-          lit(false))
-      }
-      records.filter(!balancedOr(hits))
+      coalesce(deletedBy(col(keyCol), col(tsCol), col(txidCol), Marker.of(m)),
+        lit(false))
     }
+    if (hits.isEmpty) records else records.filter(!balancedOr(hits))
   }
 
   /** OR of many predicates as a balanced tree: a left fold over thousands

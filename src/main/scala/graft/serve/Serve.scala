@@ -485,8 +485,10 @@ final class Serve(db: Db, port: Int = 0, snapshotTtlMillis: Long = 10000,
       }
     }
     val snap = snapshot()
-    // an exact key is one Spark job with one task (Snapshot.get); a
-    // wildcard is the parallel read pipeline with its (key, ts) sort
+    // both are the warehouse's sorted-run merge: an exact key is one
+    // Spark job with one task (Snapshot.get); a wildcard is one task per
+    // key range, already (key, ts)-ordered, so the printer below streams
+    // it with no exchange (toLocalIterator runs one job per range)
     val df = if (w.isExact) snap.get(w.pattern) else snap.read(pattern)
     val lines = TextIngest.print(db.spark, TextIngest.asRecords(df),
       tsMode = if (human) TextIngest.TsHuman else TextIngest.TsNanos)

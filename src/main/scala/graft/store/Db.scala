@@ -24,20 +24,26 @@ import graft.series.SeriesOps
   *
   * One read path, as in sonnerie: every reader of [[Db.Snapshot]] (`read`,
   * `readMany`, `readInstants`, `get`, `tail`) and compaction's fold build
-  * their plan in one place — txid pruning by manifest stats → scan roots →
-  * key/time/`tbucket` filter → last-writer-wins → delete markers → drop
-  * `txid`/`tbucket` → output shape. They differ only in those inputs.
+  * their plan in one place — txid pruning by manifest stats → the
+  * sorted-run merge ([[SortedRunMerge]]: the transactions' (key, ts)-sorted
+  * files merged newest-first, last writer wins, held delete markers dropped
+  * in its tasks) → key/time filter → output shape. They differ only in
+  * those inputs. Time-bucketed warehouses and marker sets the driver does
+  * not hold keep a Catalyst pipeline (scan → `lastWins` aggregate →
+  * markers → sort); `Snapshot.plan` says why.
   *
   * Scale: each transaction directory is written range-partitioned on `key`
   * and sorted `(key, ts)` within files, so Parquet row-group min/max stats
   * make key-range and wildcard-prefix reads prune to the few row groups that
   * can match — the distributed equivalent of sonnerie's segment binary search
-  * (`src/segment_reader.rs:173-234`), with no driver-side index needed.
-  * Exact-key lookups ([[Db.Snapshot.get]]) root the scan at only the files
-  * whose footer key range holds the key ([[Db.txLayout]]) and answer in one
-  * single-task Spark job.
+  * (`src/segment_reader.rs:173-234`); the footers are read once per file
+  * and cached ([[Db.txLayout]]). The merge cuts a selection into key ranges
+  * at those row-group bounds, one task each, and its output is already
+  * (key, ts)-ordered, so no read shuffles. An exact-key lookup
+  * ([[Db.Snapshot.get]]) is one range: one single-task Spark job.
   */
 final class Db(val spark: SparkSession, val warehouse: String) {
+  SortedRunMerge.install(spark)
 
   def dataDir = s"$warehouse/data"
   def deleteDir = s"$warehouse/deletes"
@@ -111,8 +117,8 @@ final class Db(val spark: SparkSession, val warehouse: String) {
     def read(pattern: String = "%", after: Option[Long] = None,
              before: Option[Long] = None): DataFrame = {
       val keys = Db.Keys.pattern(pattern)
-      plan(txDirs(pruned(keys, after, before)), keys, after, before,
-        Db.Shape.Ordered)
+      plan(pruned(keys, after, before), keys, after, before,
+        Db.Shape.Ordered)()
     }
 
     /** ONE read-pipeline pass over the UNION of several key patterns —
@@ -132,8 +138,8 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       require(patterns.nonEmpty, "readMany needs at least one pattern")
       val each = patterns.map(Db.Keys.pattern)
       val txids = each.flatMap(pruned(_, after, before)).distinct.sorted
-      plan(txDirs(txids), Db.Keys.anyOf(each), after, before,
-        Db.Shape.Unordered)
+      plan(txids, Db.Keys.anyOf(each), after, before,
+        Db.Shape.Unordered)()
     }
 
     /** Read exactly the given `ts` instants (one [[read]] pipeline pass
@@ -163,21 +169,21 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       // the writer's bucket of each instant; only meaningful on a
       // time-bucketed warehouse (w > 0)
       lazy val neededBuckets = instants.map(Db.bucketOf(_, w)).distinct
-      val (roots, inBuckets) =
-        if (w > 0) (for {
-            t <- txids
-            bs = Db.txLayout(spark, warehouse, dataDir, t, manifest.version,
-              manifest.created).buckets
-            b <- neededBuckets if bs.contains(b)
-          } yield s"$dataDir/txid=$t/tbucket=$b",
-          // belt-and-braces partition predicate on top of the direct
-          // roots: keeps the scan's PartitionFilters explicit (asserted
-          // by PersistedIndexSpec)
-          col("tbucket").isin(neededBuckets: _*))
-        else (txDirs(txids), lit(true))
-      plan(roots, keys.copy(rows = keys.rows && inBuckets &&
+      // belt-and-braces partition predicate on top of the direct bucket
+      // roots: keeps the scan's PartitionFilters explicit (asserted by
+      // PersistedIndexSpec)
+      val inBuckets =
+        if (w > 0) col("tbucket").isin(neededBuckets: _*) else lit(true)
+      plan(txids, keys.copy(rows = keys.rows && inBuckets &&
           col("ts").isin(instants: _*)), None, None,
-        if (ordered) Db.Shape.Ordered else Db.Shape.Unordered)
+        if (ordered) Db.Shape.Ordered else Db.Shape.Unordered)(
+        if (w > 0) for {
+          t <- txids
+          bs = Db.txLayout(spark, warehouse, dataDir, t, manifest.version,
+            manifest.created).buckets
+          b <- neededBuckets if bs.contains(b)
+        } yield s"$dataDir/txid=$t/tbucket=$b"
+        else txDirs(txids))
     }
 
     /** Zero-row result with the read pipeline's output shape. Must not go
@@ -205,12 +211,13 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * Row-identical to [[read]] of the same key, planned as ONE Spark job
       * with ONE task:
       *  - transactions are pruned by their manifest key/time bounds, then
-      *    the scan is rooted at only the files whose footer key range
-      *    holds the key ([[Db.txLayout]], cached per transaction), so a
-      *    lookup opens about one file per live transaction, not all;
-      *  - the key-filtered scan is coalesced to one partition, so neither
-      *    last-wins nor the (key, ts) order needs an exchange (one key's
-      *    records; the parallel path for wide results stays [[read]]).
+      *    the merge reads only the files with a row group whose footer key
+      *    range holds the key ([[Db.txLayout]], cached per transaction), so
+      *    a lookup opens about one file per live transaction, not all;
+      *  - an exact key's range holds no cut, so the merge is one task whose
+      *    output is already (key, ts)-ordered: no exchange, no sort. On the
+      *    Catalyst pipeline (`plan`) the key-filtered scan is coalesced to
+      *    one partition for the same effect.
       *
       * Measured and rejected, do not retry: answering from the driver
       * with no Spark job at all (read the few footer-selected files
@@ -223,7 +230,7 @@ final class Db(val spark: SparkSession, val warehouse: String) {
     def get(key: String, after: Option[Long] = None, before: Option[Long] = None): DataFrame = {
       val keys = Db.Keys.exact(key)
       val txids = pruned(keys, after, before)
-      val roots =
+      plan(txids, keys, after, before, Db.Shape.Local)(
         // a manifest without a schema reads through mergeSchema, whose
         // columns depend on which footers it sees: keep whole directories
         if (manifest.schemaDdl.isEmpty) txDirs(txids)
@@ -237,8 +244,7 @@ final class Db(val spark: SparkSession, val warehouse: String) {
             if fk.mayHold(keys.lo.get) &&
               f.bucket.forall(b => lo.forall(b >= _) && hi.forall(b <= _))
           } yield f.path
-        }
-      plan(roots, keys, after, before, Db.Shape.Local)
+        })
     }
 
     /** One committed transaction's records, (key, ts) ordered — the
@@ -273,9 +279,9 @@ final class Db(val spark: SparkSession, val warehouse: String) {
     def tail(sinceTxid: Long, pattern: String = "%", after: Option[Long] = None,
              before: Option[Long] = None): DataFrame = {
       val keys = Db.Keys.pattern(pattern)
-      plan(txDirs(pruned(keys, after, before).filter(_ > sinceTxid)), keys,
+      plan(pruned(keys, after, before).filter(_ > sinceTxid), keys,
         after, before, Db.Shape.Ordered,
-        manifest.deleteTxids.filter(_ > sinceTxid))
+        manifest.deleteTxids.filter(_ > sinceTxid))()
     }
 
     /** Compaction's merge of `txids`: last-wins and every marker of the
@@ -284,24 +290,78 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       * the columns its inputs hold.
       */
     private[store] def fold(txids: Seq[Long]): DataFrame =
-      plan(txDirs(txids), Db.Keys.all, None, None, Db.Shape.Fold)
+      plan(txids, Db.Keys.all, None, None, Db.Shape.Fold)()
 
-    /** THE read plan of every reader and of compaction: scan `roots`
-      * (transaction directories, `tbucket=` directories or single data
-      * files under `data/`) → the selection's row predicate, `[after,
-      * before)` and its `tbucket` range → last-writer-wins across txids →
-      * the markers of `markerTxids` → drop `txid`/`tbucket` → `shape`.
+    /** THE read plan of every reader and of compaction: the records of
+      * `txids` → the selection's row predicate and `[after, before)` →
+      * last-writer-wins across txids → the markers of `markerTxids` →
+      * without `txid`/`tbucket` → `shape`.
       *
-      * One marker rule: a set [[Db.deleteRows]] holds on the driver is a
-      * filter ([[SeriesOps.dropDeleted]]) over only the markers whose key
-      * range can meet the selection's byte bounds; only a set the cache
-      * refuses (an identity-less warehouse, an oversized set) takes the
+      * The merge is the sorted-run merge ([[SortedRunMerge]]): it reads
+      * the files of `txids` whose row groups can meet the selection's key
+      * bounds, merges them in key order and drops the held markers
+      * ([[Db.deleteRows]]) in its tasks; the row predicate stays a filter
+      * above it and pushes its key and time bounds into its reads. Its
+      * output is already (key, ts)-ordered and range-partitioned by key,
+      * so no shape adds an exchange.
+      *
+      * The Catalyst pipeline ([[catalystPlan]]) stays for the two inputs
+      * the merge cannot take, both known before planning:
+      *  - a time-bucketed manifest: its writer sorts bucket-major layouts
+      *    by (tbucket, key, ts) and partitions the others by `tbucket=`
+      *    directory, so its files are not shown to be (key, ts)-sorted;
+      *  - a marker set [[Db.deleteRows]] does not hold (an identity-less
+      *    warehouse, a set past the cache's row budget), which only the
+      *    anti-join over the marker files can apply.
+      */
+    private def plan(txids: Seq[Long], keys: Db.Keys, after: Option[Long],
+        before: Option[Long], shape: Db.Shape,
+        markerTxids: Seq[Long] = manifest.deleteTxids)(
+        roots: => Seq[String] = txDirs(txids)): DataFrame = {
+      if (txids.isEmpty) return emptyResult()
+      val held = Db.deleteRows(spark, warehouse, deleteDir, manifest.created,
+        markerTxids)
+      held match {
+        case Some(markers) if manifest.timeBucket == 0 =>
+          val footers = shape == Db.Shape.Fold || manifest.schemaDdl.isEmpty
+          val runs = for {
+            t <- txids
+            layout = Db.txLayout(spark, warehouse, dataDir, t,
+              manifest.version, manifest.created)
+            (f, fk) <- layout.files.zip(layout.fileKeys)
+          } yield (MergeRun(f.path, f.length, t), fk)
+          // fold and schema-less manifests take the merge of the files'
+          // own footer schemas, as `mergeSchema` would
+          val schema =
+            if (!footers) dataSchema
+            else runs.map(_._2.schema).reduceOption(
+              org.apache.spark.sql.graftbridge.Plans.mergeSchemas)
+              .getOrElse(dataSchema)
+          val merged = SortedRunMerge.read(spark, schema, runs, keys.lo,
+            keys.hi, SeriesOps.covering(markers, keys.lo, keys.hi, keys.exact))
+          val visible = SeriesOps.timeRange(merged.filter(keys.rows), after,
+            before)
+          shape match {
+            case Db.Shape.Ordered | Db.Shape.Local => SeriesOps.ordered(visible)
+            case Db.Shape.Unordered | Db.Shape.Fold => visible
+          }
+        case _ => catalystPlan(roots, keys, after, before, shape, held,
+          markerTxids)
+      }
+    }
+
+    /** The read plan as a Catalyst pipeline over a Parquet scan of `roots`
+      * (transaction directories, `tbucket=` directories or single data
+      * files under `data/`): filter → `SeriesOps.lastWins` aggregate →
+      * markers → order. Held markers up to [[Db.MarkerFilterMaxRows]] are
+      * a filter ([[SeriesOps.dropDeleted]]); any other set takes the
       * broadcast anti-join over the marker files
       * ([[SeriesOps.applyDeletes]]).
       */
-    private def plan(roots: Seq[String], keys: Db.Keys, after: Option[Long],
-        before: Option[Long], shape: Db.Shape,
-        markerTxids: Seq[Long] = manifest.deleteTxids): DataFrame = {
+    private def catalystPlan(roots: Seq[String], keys: Db.Keys,
+        after: Option[Long], before: Option[Long], shape: Db.Shape,
+        held: Option[Array[org.apache.spark.sql.Row]],
+        markerTxids: Seq[Long]): DataFrame = {
       if (roots.isEmpty) return emptyResult()
       val scan = readPaths(roots, footers = shape == Db.Shape.Fold)
       // time-bucketed warehouse: the partition-column predicate prunes
@@ -315,11 +375,10 @@ final class Db(val spark: SparkSession, val warehouse: String) {
       val merged = SeriesOps.lastWins(
         if (shape == Db.Shape.Local) filtered.coalesce(1) else filtered,
         Seq("key", "ts"), "txid")
-      val visible = Db.deleteRows(spark, warehouse, deleteDir,
-          manifest.created, markerTxids) match {
-        case Some(markers) =>
+      val visible = held match {
+        case Some(markers) if markers.length <= Db.MarkerFilterMaxRows =>
           SeriesOps.dropDeleted(merged, markers, keys.lo, keys.hi, keys.exact)
-        case None => SeriesOps.applyDeletes(merged,
+        case _ => SeriesOps.applyDeletes(merged,
           Db.markerFiles(spark, deleteDir, markerTxids))
       }
       val out = visible.drop("txid", "tbucket")
@@ -436,30 +495,44 @@ object Db {
   private[store] def compareBytes(a: Array[Byte], b: Array[Byte]): Int =
     java.util.Arrays.compareUnsigned(a, b)
 
-  /** One data file of a transaction; `bucket` is its `tbucket=` value on a
-    * time-bucketed warehouse.
+  /** One data file of a transaction: its path, its length from the
+    * listing, and on a time-bucketed warehouse its `tbucket=` value.
     */
-  private[store] final case class TxFile(path: String, bucket: Option[Long])
+  private[store] final case class TxFile(path: String, bucket: Option[Long],
+                                         length: Long)
 
-  /** The `key` range a data file's Parquet footer records, inclusive, in
-    * UTF-8 bytes. `lo == null` means some row group carries no usable
-    * statistics, so the file may hold any key.
+  /** One row group's `key` range, inclusive, in UTF-8 bytes, and its
+    * compressed size. `lo == null` means the group carries no usable
+    * statistics, so it may hold any key.
     */
-  private[store] final case class FileKeys(rows: Long, lo: Array[Byte],
-                                           hi: Array[Byte]) {
-    def mayHold(key: Array[Byte]): Boolean =
+  private[store] final case class KeyGroup(rows: Long, bytes: Long,
+                                           lo: Array[Byte], hi: Array[Byte]) {
+    /** Whether the group can hold a key in `[from, until)`. */
+    def meets(from: Option[Array[Byte]], until: Option[Array[Byte]]): Boolean =
       rows > 0 && (lo == null ||
-        (compareBytes(lo, key) <= 0 && compareBytes(key, hi) <= 0))
+        (until.forall(compareBytes(lo, _) < 0) &&
+          from.forall(compareBytes(hi, _) >= 0)))
+  }
+
+  /** What a data file's Parquet footer records: each row group's `key`
+    * range and size, and the file's own Spark schema.
+    */
+  private[store] final case class FileKeys(groups: Vector[KeyGroup],
+                                           schema: StructType) {
+    def mayHold(key: Array[Byte]): Boolean =
+      groups.exists(_.meets(Some(key), Some(key :+ 0.toByte)))
   }
 
   /** One published data transaction's physical layout, read from storage
     * once per driver and then shared by every reader:
     *  - `buckets`: its `tbucket=` directory names, from ONE readdir (what
     *    [[Db.Snapshot.readInstants]] roots bucket probes at);
-    *  - `files` and `fileKeys`: every data file and its footer key range
-    *    (what [[Db.Snapshot.get]] roots point lookups at). Listed on first
-    *    use, so bucket probes over thousands of cells never list or open
-    *    the files, and footers are read once per file, not per lookup.
+    *  - `files` and `fileKeys`: every data file with its length and its
+    *    footer (what the sorted-run merge plans its ranges from, and
+    *    what [[Db.Snapshot.get]] roots point lookups at on a bucketed
+    *    warehouse). Listed on first use, so bucket probes over thousands
+    *    of cells never list or open the files, and footers are read once
+    *    per file, not per read.
     */
   private[store] final class TxLayout(val created: String, dir: String,
                                       fs: org.apache.hadoop.fs.FileSystem) {
@@ -485,8 +558,9 @@ object Db {
         val b = Some(n.stripPrefix("tbucket=").toLong)
         fs.listStatus(st.getPath).toVector
           .filter(f => f.isFile && isData(f.getPath.getName))
-          .map(f => TxFile(f.getPath.toString, b))
-      } else if (st.isFile && isData(n)) Vector(TxFile(st.getPath.toString, None))
+          .map(f => TxFile(f.getPath.toString, b, f.getLen))
+      } else if (st.isFile && isData(n))
+        Vector(TxFile(st.getPath.toString, None, st.getLen))
       else Vector.empty
     }
 
@@ -494,27 +568,26 @@ object Db {
 
     private def footerKeys(file: String): FileKeys = {
       import scala.jdk.CollectionConverters._
+      val p = new org.apache.hadoop.fs.Path(file)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file), fs.getConf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, fs.getConf))
       try {
-        var rows = 0L
-        var lo: Array[Byte] = null
-        var hi: Array[Byte] = null
-        var known = true
-        reader.getFooter.getBlocks.asScala.foreach { rg =>
-          rows += rg.getRowCount
+        val footer = reader.getFooter
+        val groups = footer.getBlocks.asScala.toVector.map { rg =>
           val st = rg.getColumns.asScala
             .find(_.getPath.toDotString == "key").map(_.getStatistics)
             .orNull
-          if (st == null || !st.hasNonNullValue) known = known && rg.getRowCount == 0
-          else {
-            val (a, b) = (st.getMinBytes, st.getMaxBytes)
-            if (lo == null || compareBytes(a, lo) < 0) lo = a
-            if (hi == null || compareBytes(b, hi) > 0) hi = b
-          }
+          if (st == null || !st.hasNonNullValue)
+            KeyGroup(rg.getRowCount, rg.getCompressedSize, null, null)
+          else KeyGroup(rg.getRowCount, rg.getCompressedSize,
+            st.getMinBytes, st.getMaxBytes)
         }
-        if (known) FileKeys(rows, lo, hi) else FileKeys(rows, null, null)
+        FileKeys(groups, org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat.readSchemaFromFooter(
+            new org.apache.parquet.hadoop.Footer(p, footer),
+            new org.apache.spark.sql.execution.datasources.parquet
+              .ParquetToSparkSchemaConverter(
+                org.apache.spark.sql.internal.SQLConf.get)))
       } finally reader.close()
     }
   }
@@ -612,28 +685,36 @@ object Db {
     * stays on the parquet path (a store with that many UNCOMPACTED delete
     * operations wants a major compaction).
     *
-    * What the cache saves: every reader applies held rows as a filter
-    * ([[SeriesOps.dropDeleted]]), so after the one collect job a plan
-    * neither scans the marker files nor broadcasts them (a broadcast of
-    * even a local relation is a job of its own on Spark 4.1:
+    * What the cache saves: the sorted-run merge drops held rows in its
+    * tasks, and the time-bucketed readers apply a small held set as a
+    * filter ([[SeriesOps.dropDeleted]]), so after the one collect job a
+    * plan neither scans the marker files nor broadcasts them (a broadcast
+    * of even a local relation is a job of its own on Spark 4.1:
     * `BroadcastExchangeExec` collects its child through
     * `SparkPlan.executeCollectIterator`).
     */
   private val deletesCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String, Seq[Long]), Option[Array[org.apache.spark.sql.Row]]]()
 
-  /** Marker-row count past which a delete set is not held and every read
-    * takes the anti-join over the marker files: the measured crossover of
-    * the held-marker filter. A `%` read of a 2-tx, 440k-row warehouse on 4
-    * cores, plan + execution, median ms, filter / anti-join: 1 marker
-    * 1608 / 1464, 4: 1324 / 1311, 8: 1290 / 1323, 10: 1748 / 1594,
-    * 12: 1565 / 1684, 14: 1589 / 1911, 16: 7369 / 1464, 32: 10779 / 1672,
-    * 64: 17293 / 2380, 1024: 46829 / 17849. Past ~15 markers the OR of
-    * literal predicates outgrows the JIT's method-size limit and the
-    * filter runs interpreted; 12 leaves room for the key and time
-    * predicates compiled into the same method.
+  /** The row budget of one held marker set. */
+  private val DeletesCacheMaxRows = 65536
+
+  /** Held marker rows past which a time-bucketed read (the Catalyst
+    * pipeline, [[Db.Snapshot]]'s `catalystPlan`) takes the anti-join
+    * over the marker files instead of [[SeriesOps.dropDeleted]]'s filter:
+    * the measured crossover of that filter. A `%` read of a 2-tx,
+    * 440k-row warehouse on 4 cores, plan + execution, median ms, filter /
+    * anti-join: 1 marker 1608 / 1464, 4: 1324 / 1311, 8: 1290 / 1323,
+    * 10: 1748 / 1594, 12: 1565 / 1684, 14: 1589 / 1911, 16: 7369 / 1464,
+    * 32: 10779 / 1672, 64: 17293 / 2380, 1024: 46829 / 17849. Past ~15
+    * markers the OR of literal predicates outgrows the JIT's method-size
+    * limit and the filter runs interpreted; 12 leaves room for the key
+    * and time predicates compiled into the same method. An `exists`
+    * lambda over a literal marker array did not help. The sorted-run
+    * merge has no such cliff: it evaluates one small predicate per marker
+    * in a loop, so it takes every held set.
     */
-  private val DeletesCacheMaxRows = 12
+  private[store] val MarkerFilterMaxRows = 12
 
   /** Explicit schema: markers have ONE fixed shape (writeDeleteMarker), so
     * the reader must not pay a footer schema-inference job per plan.
@@ -649,7 +730,7 @@ object Db {
 
   /** The marker rows of `txids` (schema `deleteSchema` + `txid`) from the
     * driver cache, collected now on a miss. `None` when the rows are not
-    * held: an identity-less warehouse or an oversized set.
+    * held: an identity-less warehouse or a set past [[DeletesCacheMaxRows]].
     */
   private[store] def deleteRows(spark: SparkSession, warehouse: String,
                                 deleteDir: String, created: String,

@@ -716,6 +716,45 @@ object TxWriter {
 
   private final class SupersedeAborted extends RuntimeException
 
+  /** [[supersedeIf]] against the current manifest, retried while the
+    * fence refuses: a rebuild (`what` names it in the errors) that
+    * replaces every record of `wildcards` with `replacement` in ONE
+    * manifest commit, so a snapshot taken mid-rebuild sees either the old
+    * generation whole or the new one, never a deleted-but-unreplaced
+    * window. A concurrent append voids the claim and the rebuild retries
+    * over the moved state. After 60 refusals it fails, naming which of
+    * the two causes holds — they have opposite remedies: a STALE pending
+    * claim (crashed writer) needs [[Compactor.vacuum]] to clear, live
+    * contention needs the ingest paused. Returns the replacement's txid.
+    */
+  def supersede(db: Db, wildcards: Seq[String], replacement: DataFrame,
+                what: String, props: Map[String, String] = Map.empty): Long = {
+    var attempt = 0
+    while (true) {
+      attempt += 1
+      supersedeIf(db, Manifest.current(db.warehouse), wildcards, replacement,
+          props = props) match {
+        case Some(tx) => return tx
+        case None =>
+          if (attempt >= 60) {
+            val pend = Manifest.current(db.warehouse).pending
+            if (pend.nonEmpty) throw new IllegalStateException(
+              s"$what blocked by pending txid claim(s) " +
+                s"${pend.keys.toSeq.sorted.mkString(",")} — a crashed " +
+                "writer's claim raises the supersede fence; run " +
+                "Compactor.vacuum past the grace window to clear it, " +
+                "then retry the rebuild")
+            throw new IllegalStateException(
+              s"$what lost the supersede fence 60 times — a " +
+                "writer is committing continuously; pause ingest or " +
+                "rebuild into a twin warehouse")
+          }
+          Thread.sleep(math.min(100L * attempt, 2000L))
+      }
+    }
+    -1L // unreachable
+  }
+
   /** Conditionally claim `n` adjacent txids in one commit (registered
     * pending); None when `ok` fails or any other claim is in flight.
     * `tmpNames` maps a claim OFFSET (0-based) to the tentative

@@ -572,9 +572,12 @@ class PlanHygieneSpec extends SparkSpec {
     assert(joins(read) == 0 && joins(readMany) == 0,
       s"cached markers joined: read ${joins(read)}, readMany ${joins(readMany)}")
     // with the markers' broadcast anti-join (the build side a job of its
-    // own even over the cached rows) the read ran 5 jobs and readMany 3
-    assert(read.jobs == 4, s"wildcard read ran ${read.jobs} jobs")
-    assert(readMany.jobs == 2, s"readMany ran ${readMany.jobs} jobs")
+    // own even over the cached rows) the read ran 5 jobs and readMany 3;
+    // with them as a filter over the Catalyst pipeline (its last-wins
+    // exchange and the read's range sort) 4 and 2; the sorted-run merge
+    // needs no exchange, so each is its one result job
+    assert(read.jobs == 1, s"wildcard read ran ${read.jobs} jobs")
+    assert(readMany.jobs == 1, s"readMany ran ${readMany.jobs} jobs")
     assert(rows.size == 300 - 10 - 40)
     // a legacy manifest (no warehouse identity) cannot use the cache: it
     // still answers through the anti-join, with the same rows
@@ -585,5 +588,49 @@ class PlanHygieneSpec extends SparkSpec {
     assert(viaJoin.collect().toSeq == rows)
     assert(legacy.readMany(Seq("k0%", "k1%")).collect().toSeq.sortBy(_.toString) ==
       many.sortBy(_.toString))
+  }
+
+  test("64 held marker rows: a get is one job with no exchange and no join, " +
+      "and a % read drops exactly what applyDeletes drops") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.series.SeriesOps
+    val db = graft.store.Db(spark,
+      java.nio.file.Files.createTempDirectory("graft-plan64").toString)
+    graft.store.TxWriter.write(db,
+      (1 to 600).map(i => (f"k$i%04d", (i % 50).toLong, i.toLong))
+        .toDF("key", "ts", "v"))
+    graft.store.TxWriter.write(db,
+      (1 to 600 by 7).map(i => (f"k$i%04d", (i % 50).toLong, -i.toLong))
+        .toDF("key", "ts", "v"))
+    // 64 marker rows in four transactions: prefix wildcards over time
+    // windows, an inner wildcard, key ranges, and a re-insert after them
+    for (w <- 0 until 4)
+      graft.store.TxWriter.deleteMany(db,
+        (0 until 16).map(i => if (i == 15) s"k%${w}1" else f"k0${w * 16 + i}%02d%%"),
+        firstKey = if (w == 3) "k0300" else "",
+        t0 = (w * 10).toLong, t1 = (w * 10 + 15).toLong)
+    graft.store.TxWriter.write(db,
+      Seq(("k0042", 42L, 4242L), ("k0130", 30L, 1300L)).toDF("key", "ts", "v"))
+    val snap = db.snapshot()
+    val markerRows = snap.deletes.count()
+    assert(markerRows == 64)
+    // the first lookup puts the marker rows in the driver cache
+    snap.get("k0042").collect()
+    var got = Seq.empty[org.apache.spark.sql.Row]
+    val get = ran { got = snap.get("k0130").collect().toSeq }
+    assert(get.jobs == 1, s"point lookup ran ${get.jobs} jobs")
+    val ops = get.plans.flatMap(qe => nodes(qe.executedPlan))
+    assert(!ops.exists(_.nodeName.contains("Exchange")) &&
+      !ops.exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]),
+      s"point lookup plans:\n${get.plans.map(_.executedPlan).mkString("\n")}")
+    assert(got.map(_.getAs[Long]("v")).contains(1300L))
+    val reference = SeriesOps.ordered(SeriesOps.applyDeletes(
+      SeriesOps.lastWins(snap.records, Seq("key", "ts"), "txid"),
+      snap.deletes).drop("txid", "tbucket"))
+    val want = reference.collect().toSeq
+    assert(want.size < 600, "the markers delete something")
+    assert(snap.read("%").collect().toSeq == want)
   }
 }

@@ -224,4 +224,67 @@ class PointLookupSpec extends SparkSpec {
         s"$what read after a major compaction")
     }
   }
+
+  /** Wider warehouses for the merge's key ranges: more keys, each put
+    * split into several range-partitioned files (a key with many
+    * instants can straddle two files of one transaction), every scenario
+    * ending with a marker and then a re-insert that adds a column.
+    */
+  private val wideKeys = keys ++ (0 until 24).map(i => f"m$i%02d") ++
+    Seq("n%x", "n_y", "ü", "日本", "\uD83D\uDE01z")
+  private val widePut: Gen[Put] = for {
+    n <- Gen.choose(30, 90)
+    rows <- Gen.listOfN(n, Gen.zip(Gen.oneOf(wideKeys), tsGen))
+    files <- Gen.choose(2, 4)
+    extra <- Gen.frequency(3 -> false, 1 -> true)
+  } yield Put(rows.distinct, Some(files), extra)
+  private val wideDel: Gen[Del] = for {
+    d <- delGen
+    w <- Gen.frequency(3 -> Gen.const(d.wildcard),
+      1 -> Gen.oneOf("m1%", "n\\%x", "n\\_y", "m_3", "日%"))
+  } yield d.copy(wildcard = w)
+  private val wideGen: Gen[Seq[Op]] = for {
+    first <- widePut
+    n <- Gen.choose(3, 5)
+    rest <- Gen.listOfN(n, Gen.frequency(3 -> widePut, 2 -> wideDel))
+    del <- wideDel
+    last <- widePut
+  } yield (first.copy(extraColumn = false) +: rest) :+ del :+
+    last.copy(extraColumn = true)
+
+  test("the sorted-run merge over several key ranges == the reference composition") {
+    val prior = spark.conf.get("spark.sql.files.openCostInBytes")
+    // a range must hold one file-open's worth of bytes: at one byte the
+    // merge cuts these small warehouses into as many ranges as cores
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try for (s <- 1L to 3L) {
+      val ops = sample(wideGen, 300 + s)
+      val db = build(tmpDir("graft-ptwide"), bucketed = false, ops)
+      val snap = db.snapshot()
+      val what = s"seed $s (ops=$ops)"
+      val all = snap.read()
+      val whole = reference(snap, lit(true), None, None)
+      same(all, whole, s"$what read '%'")
+      val ranges = new org.apache.spark.sql.execution.adaptive
+          .AdaptiveSparkPlanHelper {}.collect(all.queryExecution.executedPlan) {
+        case m: SortedRunMergeExec => m.spec.ranges.size
+      }
+      assert(ranges.exists(_ > 1), s"$what: one range (${ranges})")
+      assert(all.columns.contains("w"), s"$what: the added column")
+      val (a, b) = sample(boundsGen, s)
+      for (p <- patterns ++ Seq("m%", "m1%", "n%", "日%"); (x, y) <- Seq((None, None), (a, b)))
+        same(snap.read(p, x, y), reference(snap, SeriesOps.keyPredicate(col("key"), p), x, y),
+          s"$what read '$p' after $x before $y")
+      for (k <- sample(Gen.pick(6, wideKeys), s).toSeq)
+        same(snap.get(k, a, b), pipeline(snap, k, a, b), s"$what get '$k' after $a before $b")
+      val many = Seq("m%", "a%", "n%")
+      same(snap.readMany(many, a, b),
+        reference(snap, many.map(p => SeriesOps.keyPredicate(col("key"), p))
+          .reduce(_ || _), a, b), s"$what readMany $many", ordered = false)
+      val wholeRows = whole.collect().toSeq
+      Compactor.minor(db)
+      assert(db.snapshot().read().collect().toSeq == wholeRows,
+        s"$what read after a minor compaction")
+    } finally spark.conf.set("spark.sql.files.openCostInBytes", prior)
+  }
 }

@@ -29,7 +29,14 @@ where its time window makes that exact:
   engine frame is the server's `doPut` or `TxWriter` is that PUT's.
 
 `GET` and `GET wildcard` requests overlap each other under concurrent
-clients, so for them the tool prints only the count and p50 wall.
+clients, so the table prints only their count and p50 wall. A loaded
+exact `GET` gets a job where exactly one single-task job from the
+server's `doGet` starts and ends inside the request: a request that ran
+a job holds its own job, so a second one inside it would be ambiguous. A
+line under the table gives those GETs' count, p50 wall, p50 wall before
+the job, p50 job wall and p50 task ms. (A result-cache hit runs no job,
+so a hit that happens to hold another request's job is misattributed;
+the report's `serve.cache_hit_ratio` bounds how often.)
 """
 import json
 import sys
@@ -37,6 +44,7 @@ from collections import defaultdict
 
 
 PUT_SITES = ("$$doPut(", "graft.store.TxWriter$")
+GET_SITE = "$$doGet("
 
 # serve verbs whose jobs the tool can attribute exactly (see above)
 EXACT = {
@@ -83,6 +91,21 @@ def attribute(spans, jobs):
             by_span[s["id"]] += [j for j in free if fits(j)
                                  and s["start_ms"] <= j["start_ms"] <= s["end_ms"]]
     return by_span
+
+
+def loaded_gets(spans, jobs, stages):
+    """Map exact-GET span id -> its job, where exactly one untagged
+    single-task doGet job starts and ends inside the request."""
+    single = [j for j in jobs.values() if not j["span"] and GET_SITE in j["site"]
+              and sum(st["tasks"] for st in stages.get(j["id"], [])) == 1]
+    out = {}
+    for s in spans.values():
+        if s["layer"] == "serve" and s["name"] == "GET":
+            mine = [j for j in single
+                    if s["start_ms"] <= j["start_ms"] and j["end_ms"] <= s["end_ms"]]
+            if len(mine) == 1:
+                out[s["id"]] = mine[0]
+    return out
 
 
 def task_ms(js, stages):
@@ -132,6 +155,15 @@ def report(path):
                     jwall.append(sum(j["end_ms"] - j["start_ms"] for j in js))
             print(f"  {name:<14}{len(ss):>5}{wall:>10.0f}{p50(pre):>13.0f}"
                   f"{p50(njobs):>10.1f}{p50(jwall):>14.0f}{p50(tms):>13.0f}")
+        gets = loaded_gets(spans, jobs, stages)
+        if verbs.get("GET"):
+            ss = [spans[i] for i in gets]
+            print(f"  loaded GET, one doGet job attributed: {len(ss)} of "
+                  f"{len(verbs['GET'])}, p50 wall "
+                  f"{p50([s['end_ms'] - s['start_ms'] for s in ss]):.0f}, "
+                  f"pre-job {p50([gets[s['id']]['start_ms'] - s['start_ms'] for s in ss]):.0f}, "
+                  f"job wall {p50([gets[s['id']]['end_ms'] - gets[s['id']]['start_ms'] for s in ss]):.0f}, "
+                  f"task ms {p50([task_ms([gets[s['id']]], stages) for s in ss]):.0f}")
 
     ops = sorted((s for s in spans.values() if s["layer"] == "ops"),
                  key=lambda s: s["start_ms"])
